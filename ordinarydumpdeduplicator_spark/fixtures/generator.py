@@ -298,11 +298,6 @@ def make_corpus(
     return pdf, golden
 
 
-def images_pdf_public(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Strip generator-only columns -> the engine-facing input table."""
-    return pdf[IMAGE_COLS].copy()
-
-
 def spark_images_df(
     spark,
     n: int,

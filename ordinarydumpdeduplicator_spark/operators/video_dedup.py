@@ -47,7 +47,6 @@ from .segment_dedup import (
     band_slices as _band_slices,
     segment_band_rows,
     segment_dedup_report,
-    segment_near_pairs,
     tier_precedence,
 )
 
@@ -135,27 +134,6 @@ def frame_band_rows(fps: DataFrame, bands: int = 4) -> DataFrame:
     segment_dedup.segment_band_rows."""
     return segment_band_rows(
         fps, bands=bands, id_col="video_id", hashes_col="frame_hashes"
-    )
-
-
-def video_near_pairs(
-    fps: DataFrame,
-    bands: int = 4,
-    max_hamming: int = 6,
-    min_match_frac: float = 0.5,
-    bucket_cap: int = 64,
-) -> DataFrame:
-    """Fingerprints -> verified near-dup pairs
-    (src, dst, match_frac, capped), src < dst — see
-    segment_dedup.segment_near_pairs."""
-    return segment_near_pairs(
-        fps,
-        bands=bands,
-        max_hamming=max_hamming,
-        min_match_frac=min_match_frac,
-        bucket_cap=bucket_cap,
-        id_col="video_id",
-        hashes_col="frame_hashes",
     )
 
 

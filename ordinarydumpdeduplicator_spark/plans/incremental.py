@@ -192,8 +192,6 @@ def incremental_caption_run(
     bucket_cap: int = 256,
     jaccard_threshold: float = 0.5,
     captions_resolver=None,
-    reps_resolver=None,
-    bands_resolver=None,
 ) -> dict:
     """One incremental batch of the caption near-dup pipeline.
 
@@ -214,21 +212,16 @@ def incremental_caption_run(
     that case. Candidates are eagerly materialized first so the
     resolver sees a concrete id set; extra rows the resolver returns
     are ignored (the verify join is by id).
-    reps_resolver / bands_resolver: same contract for the rep index
-    (called with the batch's distinct ``caption_sha`` frame; must
-    return (caption_sha, rep) covering AT LEAST the index's rows for
-    those shas) and the band index (called with the new reps' distinct
-    ``(band, key)`` frame; must return (id, band, key) covering at
-    least the index rows under those keys). Because a bloom-backed
-    resolver has no false negatives, a sha/key it omits is genuinely
-    absent from the index, so the left join / semi join downstream
-    behave exactly as with the full frames; extra (superset) rows are
-    filtered by those same joins. Used only when the corresponding
-    ``state`` frame is present — the first-batch path is unchanged.
     state: previous batch's return value, or None for the first batch:
       reps    (caption_sha, rep)   exact-caption representative index
       bands   (id, band, key)      LSH band index (reps only)
       assign  (image_id, cluster_id) current assignments
+    ``reps``/``bands`` may be pruned views that cover AT LEAST the index
+    rows under the batch's shas and band keys (a bloom-pruned read has no
+    false negatives): the left join / semi join below drop every other
+    row, so a pruned view behaves exactly like the full index (the
+    returned cumulative ``reps``/``bands`` then cover only that view;
+    ``new_reps``/``new_bands`` are the deltas to persist).
 
     Matches the batch pipeline exactly while no bucket crosses the cap
     (tests pin equality with a full recompute on sub-cap corpora):
@@ -261,16 +254,7 @@ def incremental_caption_run(
         F.any_value("bands").alias("bands"),
     )
     if prev_reps is not None:
-        if reps_resolver is not None:
-            # materialize the (batch-sized) sha groups so the resolver
-            # probe and the join below share one computation
-            batch_groups = batch_groups.localCheckpoint(eager=True)
-            rep_lookup = reps_resolver(
-                batch_groups.select("caption_sha")
-            )
-        else:
-            rep_lookup = prev_reps
-        joined = batch_groups.join(rep_lookup, "caption_sha", "left")
+        joined = batch_groups.join(prev_reps, "caption_sha", "left")
         resolved = joined.select(
             "caption_sha",
             F.coalesce("rep", "batch_rep").alias("rep"),
@@ -297,20 +281,8 @@ def incremental_caption_run(
     new_rep_feats = resolved.filter("is_new_rep").select(
         F.col("rep").alias("image_id"), "bands"
     )
-    if prev_bands is not None and bands_resolver is not None:
-        # the band index is only ever consulted for the NEW reps' band
-        # keys; materialize them once and let the resolver serve a
-        # key-pruned view (resolved is already checkpointed above)
-        new_keys = (
-            new_rep_feats.filter(F.col("bands").isNotNull())
-            .select(F.posexplode("bands").alias("band", "key"))
-            .distinct()
-        )
-        band_lookup = bands_resolver(new_keys)
-    else:
-        band_lookup = prev_bands
     cands, new_band_rows = incremental_caption_candidates(
-        new_rep_feats, band_lookup, bucket_cap=bucket_cap
+        new_rep_feats, prev_bands, bucket_cap=bucket_cap
     )
     if captions_resolver is not None:
         # materialize the (candidate-sized) pair set so the resolver
@@ -331,7 +303,10 @@ def incremental_caption_run(
         caps,
         jaccard_threshold=jaccard_threshold,
     ).select("src", "dst")
-    new_edges = star.unionByName(near)
+    # two consumers (the clustering's edge collect and its touched /
+    # untouched split): materialize once, or each re-runs the star join
+    # and the verify UDF
+    new_edges = star.unionByName(near).localCheckpoint()
     assign = (
         incremental_clusters(prev_assign, new_edges)
         if prev_assign is not None

@@ -45,9 +45,3 @@ def load_iceberg(spark: SparkSession, table: str) -> DataFrame:
         )
     return spark.read.format("iceberg").load(table)
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(t)

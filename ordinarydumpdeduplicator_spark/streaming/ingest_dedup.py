@@ -50,6 +50,7 @@ from ..operators.bloom_dedup import (
 )
 from ..operators.text_dedup import normalized_text
 from .near_dup import (
+    BLOOMS_SCHEMA,
     _committed_epochs,
     compact_epoch_dirs,
     write_row_epoch,
@@ -57,9 +58,6 @@ from .near_dup import (
 
 DOCS_SCHEMA = "doc_id long, text string"
 KEYS_SCHEMA = "content_sha string, shard int"
-BLOOMS_SCHEMA = (
-    "shard int, bits binary, n_shards int, bits_per_shard int, k_hashes int"
-)
 
 
 def compact_ingest_keys(spark: SparkSession, state_dir: str) -> int:

@@ -120,7 +120,9 @@ from ..operators.segment_dedup import (
     segment_novelty,
 )
 from .near_dup import (
+    BLOOMS_SCHEMA,
     _committed_epochs,
+    _tree_bytes,
     compact_epoch_dirs,
     write_row_epoch,
 )
@@ -134,9 +136,6 @@ METRICS_SCHEMA = (
     "n_batch_dup long, n_novel long"
 )
 KEYS_SCHEMA = "key string, shard int, ref_id string"
-BLOOMS_SCHEMA = (
-    "shard int, bits binary, n_shards int, bits_per_shard int, k_hashes int"
-)
 MEDIA_N_SHARDS = 32
 _REF_SHARD = "__ref_shard"
 
@@ -264,20 +263,6 @@ def _with_shard(keys: DataFrame, n_shards: int) -> DataFrame:
         keys.select("key").distinct(), "key", n_shards
     ).select(F.col("__key").alias("key"), "shard")
     return keys.join(hashed, "key").select("key", "shard", "ref_id")
-
-
-def _tree_bytes(dirs: list[str]) -> int:
-    """Total on-disk bytes under the given dirs (pure os-stat walk) —
-    the auto-prune policy's input."""
-    total = 0
-    for d in dirs:
-        for root, _, files in os.walk(d):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    return total
 
 
 def _latest_snapshot(base: str, below: int | None = None):

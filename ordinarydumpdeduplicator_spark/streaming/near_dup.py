@@ -23,6 +23,11 @@ MERGE by cluster_id — sources/merge.py):
     bands/epoch=N/     (id, band, key)          LSH band index delta
     assign/epoch=N/    (image_id, cluster_id)   FULL snapshot; superseded
                                                 epochs pruned after commit
+    blooms/epoch=N/    (shard, bits, ...)       bloom over the rep and band
+                                                keys; once pruning engages,
+                                                ONE probe per batch over its
+                                                sha and band keys picks the
+                                                index shards to read
 
 Replay safety — EVERY write is keyed by the stream's epoch id and uses
 mode("overwrite") on that epoch's own directory, so a crashed batch that
@@ -60,6 +65,7 @@ from pyspark.sql import functions as F
 from ..operators.bloom_dedup import (
     DEFAULT_BITS_PER_SHARD,
     DEFAULT_K_HASHES,
+    _check_params,
 )
 from ..operators.features import extract_features
 from ..plans.incremental import incremental_caption_run
@@ -136,6 +142,13 @@ def _tree_bytes(dirs: list[str]) -> int:
     return total
 
 
+def _check_n_shards(n_shards: int) -> None:
+    if not (0 < n_shards <= 256 and n_shards & (n_shards - 1) == 0):
+        raise ValueError(
+            f"n_shards must be a power of two <= 256, got {n_shards}"
+        )
+
+
 def _shard_of(key, n_shards: int = STATE_SHARDS):
     """Bloom shard of a key column as a pure JVM expression: the
     bloom's h1 is the little-endian int64 of the md5 digest, so
@@ -143,7 +156,7 @@ def _shard_of(key, n_shards: int = STATE_SHARDS):
     two hex chars of md5(key). Byte-equal to bloom_dedup._keyed's
     pandas hashing (pinned by test_jvm_shard_expression_matches_bloom_
     hashing); only power-of-two counts <= 256 are supported here."""
-    assert n_shards <= 256 and (n_shards & (n_shards - 1)) == 0
+    _check_n_shards(n_shards)
     return (
         F.conv(F.substring(F.md5(key), 1, 2), 16, 10).cast("int")
         % F.lit(n_shards)
@@ -169,17 +182,33 @@ def _hit_shards_for(probes: DataFrame, blooms_df: DataFrame,
     flags = _probe_flags(
         probes, blooms_df, "key", n_shards, bits_per_shard, k_hashes,
         validate=False,
-    ).persist()
-    try:
-        return [
-            r.shard
-            for r in flags.filter("might_contain")
-            .select("shard")
-            .distinct()
-            .collect()
-        ]
-    finally:
-        flags.unpersist()
+    )
+    return [
+        r.shard
+        for r in flags.filter("might_contain")
+        .select("shard")
+        .distinct()
+        .collect()
+    ]
+
+
+def _index_frame(spark: SparkSession, schema: str, dirs: list[str],
+                 hit: list[int] | None) -> DataFrame | None:
+    """An index store's epoch dirs as one frame: all of it when ``hit``
+    is None, else only the bloom-hit shards' row groups (plus legacy
+    NULL-shard rows) — and no read at all when nothing hit."""
+    if not dirs:
+        return None
+    if hit is None:
+        return spark.read.schema(schema).parquet(*dirs)
+    if not hit:
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.schema(f"{schema}, {_STATE_SHARD} int")
+        .parquet(*dirs)
+        .filter(F.col(_STATE_SHARD).isin(hit) | F.col(_STATE_SHARD).isNull())
+        .drop(_STATE_SHARD)
+    )
 
 
 def write_row_epoch(path: str, row: dict) -> None:
@@ -396,35 +425,38 @@ def stream_near_dup_clusters(
     reads of the rep and band index stores once they exceed
     ``prune_min_state_bytes`` on disk; True forces it, False forces
     full-frame state reads (the pre-pruning behavior, kept for parity
-    testing). When engaged, a batch consults the rep index only for
-    its own caption shas' bloom-hit shards and the band index only for
-    the new reps' band keys' hit shards — a batch of entirely novel
+    testing). When engaged, a batch makes ONE bloom probe over its own
+    ``s:<caption_sha>`` and ``b:<band>:<key>`` keys and reads both
+    index stores only at the hit shards — a batch of entirely novel
     captions reads ZERO index rows. The bloom snapshot
     (``blooms/epoch=N``, latest prior retained as replay insurance) is
     built lazily at first engagement from the stores themselves (sha
     and band keys ARE the stores' own columns — no separate key store
     needed) and kept fresh every batch once it exists, in any mode.
 
+    ``n_shards`` must be a power of two <= 256 (ValueError otherwise).
+
     Returns the StreamingQuery; after it finishes (availableNow) read the
     current assignments with ``load_assignments(spark, state_dir)`` —
     NOT the bare root path: pruning retains the latest prior snapshot as
     replay insurance, so two epochs coexist on disk."""
+    _check_n_shards(n_shards)
+    _check_params(n_shards, bits_per_shard, k_hashes)
     captions_path = os.path.join(state_dir, "captions")
     reps_path = os.path.join(state_dir, "reps")
     bands_path = os.path.join(state_dir, "bands")
     assign_path = os.path.join(state_dir, "assign")
     blooms_path = os.path.join(state_dir, "blooms")
-    # cross-batch cache of committed-epoch listings + the loaded bloom
-    # snapshot (append-only below the current epoch within a run; a
+    # cross-batch cache of committed-epoch listings + the bloom snapshot
+    # path (append-only below the current epoch within a run; a
     # replay/restart misses the cache and re-lists from disk)
     cache: dict = {"next": None}
 
-    def _state_for(s: SparkSession, batch_id: int):
+    def _state_for(batch_id: int):
         if cache.get("next") == batch_id:
             return (
                 cache["cap"], cache["reps"], cache["bands"],
-                cache["blooms_df"], cache["bloom_snap"],
-                cache["state_bytes"],
+                cache["bloom_snap"], cache["state_bytes"],
             )
         cap = [p for _, p in _committed_epochs(captions_path, batch_id)]
         reps_dirs = [
@@ -434,70 +466,19 @@ def stream_near_dup_clusters(
             p for _, p in _committed_epochs(bands_path, batch_id)
         ]
         snaps = _committed_epochs(blooms_path, batch_id)
-        snap = snaps[-1][1] if snaps else None
-        blooms_df = (
-            s.read.schema(BLOOMS_SCHEMA).parquet(snap).persist()
-            if snap is not None
-            else None
-        )
         return (
-            cap, reps_dirs, bands_dirs, blooms_df, snap,
+            cap, reps_dirs, bands_dirs, snaps[-1][1] if snaps else None,
             _tree_bytes(reps_dirs + bands_dirs),
         )
-
-    def _reps_resolver(s, reps_dirs, blooms_df):
-        def resolve(shas: DataFrame) -> DataFrame:
-            probes = (
-                shas.filter(F.col("caption_sha").isNotNull())
-                .select(_rep_key(F.col("caption_sha")).alias("key"))
-                .distinct()
-            )
-            hit = _hit_shards_for(
-                probes, blooms_df, n_shards, bits_per_shard, k_hashes
-            )
-            if not hit:
-                return s.createDataFrame([], REPS_SCHEMA)
-            return (
-                s.read.schema(f"{REPS_SCHEMA}, {_STATE_SHARD} int")
-                .parquet(*reps_dirs)
-                .filter(
-                    F.col(_STATE_SHARD).isin(hit)
-                    | F.col(_STATE_SHARD).isNull()
-                )
-                .select("caption_sha", "rep")
-            )
-
-        return resolve
-
-    def _bands_resolver(s, bands_dirs, blooms_df):
-        def resolve(keys: DataFrame) -> DataFrame:
-            probes = keys.select(
-                _band_key(F.col("band"), F.col("key")).alias("key")
-            ).distinct()
-            hit = _hit_shards_for(
-                probes, blooms_df, n_shards, bits_per_shard, k_hashes
-            )
-            if not hit:
-                return s.createDataFrame([], BANDS_SCHEMA)
-            return (
-                s.read.schema(f"{BANDS_SCHEMA}, {_STATE_SHARD} int")
-                .parquet(*bands_dirs)
-                .filter(
-                    F.col(_STATE_SHARD).isin(hit)
-                    | F.col(_STATE_SHARD).isNull()
-                )
-                .select("id", "band", "key")
-            )
-
-        return resolve
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.bloom_dedup import bloom_merge, bloom_shards
 
         s = batch_df.sparkSession
         epoch = f"epoch={batch_id}"
-        (cap_prior, reps_dirs, bands_dirs, blooms_df, bloom_snap,
-         state_bytes) = _state_for(s, batch_id)
+        cap_prior, reps_dirs, bands_dirs, bloom_snap, state_bytes = (
+            _state_for(batch_id)
+        )
         use_prune = (
             prune_state
             if prune_state is not None
@@ -521,58 +502,70 @@ def stream_near_dup_clusters(
         # one — fetched per candidate endpoint through the pruned
         # resolver, never as a corpus-wide join
         caption_dirs = cap_prior + [os.path.join(captions_path, epoch)]
-        reps = (
-            s.read.schema(REPS_SCHEMA).parquet(*reps_dirs)
-            if reps_dirs
-            else None
-        )
-        bands = (
-            s.read.schema(BANDS_SCHEMA).parquet(*bands_dirs)
-            if bands_dirs
-            else None
-        )
-        assign_epochs = _committed_epochs(assign_path, batch_id)
-        assign = (
-            s.read.schema(ASSIGN_SCHEMA).parquet(assign_epochs[-1][1])
-            if assign_epochs
-            else None
-        )
-        # each state component stands on its own: gating the whole dict on
-        # one component would throw away a loadable reps/bands index when
-        # another is missing (e.g. a snapshot dir lost to storage issues)
-        # and re-emit duplicate first-seen reps
-        state = (
-            dict(reps=reps, bands=bands, assign=assign)
-            if any(x is not None for x in (reps, bands, assign))
-            else None
-        )
-        # index-pruned state reads only when engaged AND a snapshot
-        # exists (first engagement on a legacy store full-scans once
-        # while the snapshot is built below); the full frames above
-        # stay LAZY — nothing executes them when the resolvers serve
-        pruned = use_prune and blooms_df is not None
-        out = incremental_caption_run(
-            extract_features(batch_df),
-            None,
-            state,
-            bucket_cap=bucket_cap,
-            jaccard_threshold=jaccard_threshold,
-            captions_resolver=pruned_caption_resolver(s, caption_dirs),
-            reps_resolver=(
-                _reps_resolver(s, reps_dirs, blooms_df)
-                if pruned and reps_dirs
+        # the decode UDF runs once: the probe keys, the sha groups and
+        # the caption-exact star edges all read this frame
+        feats = extract_features(batch_df).persist()
+        try:
+            # index-pruned state reads only when engaged AND a snapshot
+            # exists (first engagement on a legacy store full-scans once
+            # while the snapshot is built below). One probe covers both
+            # stores: every new rep is a batch row, so the batch's sha
+            # and band keys are a superset of what the run looks up
+            hit = None
+            if use_prune and bloom_snap is not None and (
+                reps_dirs or bands_dirs
+            ):
+                f = feats.filter(
+                    F.col("caption_sha").isNotNull()
+                    & F.col("bands").isNotNull()
+                )
+                probes = f.select(
+                    _rep_key(F.col("caption_sha")).alias("key")
+                ).unionByName(
+                    f.select(F.posexplode("bands")).select(
+                        _band_key(F.col("pos"), F.col("col")).alias("key")
+                    )
+                )
+                hit = _hit_shards_for(
+                    probes,
+                    s.read.schema(BLOOMS_SCHEMA).parquet(bloom_snap),
+                    n_shards, bits_per_shard, k_hashes,
+                )
+
+            reps = _index_frame(s, REPS_SCHEMA, reps_dirs, hit)
+            bands = _index_frame(s, BANDS_SCHEMA, bands_dirs, hit)
+            assign_epochs = _committed_epochs(assign_path, batch_id)
+            assign = (
+                s.read.schema(ASSIGN_SCHEMA).parquet(assign_epochs[-1][1])
+                if assign_epochs
                 else None
-            ),
-            bands_resolver=(
-                _bands_resolver(s, bands_dirs, blooms_df)
-                if pruned and bands_dirs
+            )
+            # each state component stands on its own: gating the whole
+            # dict on one component would throw away a loadable
+            # reps/bands index when another is missing (e.g. a snapshot
+            # dir lost to storage issues) and re-emit duplicate
+            # first-seen reps
+            state = (
+                dict(reps=reps, bands=bands, assign=assign)
+                if any(x is not None for x in (reps, bands, assign))
                 else None
-            ),
-        )
+            )
+            out = incremental_caption_run(
+                feats,
+                None,
+                state,
+                bucket_cap=bucket_cap,
+                jaccard_threshold=jaccard_threshold,
+                captions_resolver=pruned_caption_resolver(s, caption_dirs),
+            )
+        finally:
+            feats.unpersist()
         # outputs are localCheckpoint-materialized inside the run, so the
         # writes below cannot invalidate what they were computed from;
         # rep/band deltas are written key-shard-clustered so the pruned
         # reads above serve future batches with row-group pruning
+        new_reps_dir = os.path.join(reps_path, epoch)
+        new_bands_dir = os.path.join(bands_path, epoch)
         (
             out["new_reps"]
             .withColumn(
@@ -582,7 +575,7 @@ def stream_near_dup_clusters(
             .repartition(_STATE_SHARD)
             .sortWithinPartitions(_STATE_SHARD)
             .write.mode("overwrite")
-            .parquet(os.path.join(reps_path, epoch))
+            .parquet(new_reps_dir)
         )
         (
             out["new_bands"]
@@ -595,72 +588,50 @@ def stream_near_dup_clusters(
             .repartition(_STATE_SHARD)
             .sortWithinPartitions(_STATE_SHARD)
             .write.mode("overwrite")
-            .parquet(os.path.join(bands_path, epoch))
+            .parquet(new_bands_dir)
         )
         out["assign"].write.mode("overwrite").parquet(
             os.path.join(assign_path, epoch)
         )
         # bloom maintenance: deferred until pruning engages; once a
         # snapshot exists it is kept fresh every batch in every mode (a
-        # stale snapshot would hide index rows from future probes)
-        new_snap, new_blooms_df = bloom_snap, blooms_df
-        if use_prune or blooms_df is not None:
-            rep_delta_keys = (
+        # stale snapshot would hide index rows from future probes). The
+        # first engagement keys the WHOLE stores (their own columns ARE
+        # the keys), later batches only this epoch's deltas
+        new_snap = bloom_snap
+        if use_prune or bloom_snap is not None:
+            keys = (
                 s.read.schema(REPS_SCHEMA)
-                .parquet(os.path.join(reps_path, epoch))
+                .parquet(*([] if bloom_snap else reps_dirs), new_reps_dir)
                 .select(_rep_key(F.col("caption_sha")).alias("key"))
-            )
-            band_delta_keys = (
-                s.read.schema(BANDS_SCHEMA)
-                .parquet(os.path.join(bands_path, epoch))
-                .select(
-                    _band_key(F.col("band"), F.col("key")).alias("key")
-                )
-            )
-            if blooms_df is None:
-                # first engagement: the stores' own columns ARE the
-                # keys — one pass over reps+bands (this epoch included)
-                rep_delta_keys = (
-                    s.read.schema(REPS_SCHEMA)
-                    .parquet(
-                        *(reps_dirs + [os.path.join(reps_path, epoch)])
-                    )
-                    .select(_rep_key(F.col("caption_sha")).alias("key"))
-                )
-                band_delta_keys = (
+                .unionByName(
                     s.read.schema(BANDS_SCHEMA)
                     .parquet(
-                        *(bands_dirs + [os.path.join(bands_path, epoch)])
+                        *([] if bloom_snap else bands_dirs), new_bands_dir
                     )
                     .select(
-                        _band_key(F.col("band"), F.col("key")).alias(
-                            "key"
-                        )
+                        _band_key(F.col("band"), F.col("key")).alias("key")
                     )
                 )
+            )
             delta = bloom_shards(
-                rep_delta_keys.unionByName(band_delta_keys).distinct(),
+                keys.distinct(),
                 "key",
                 n_shards=n_shards,
                 bits_per_shard=bits_per_shard,
                 k_hashes=k_hashes,
             )
             merged = (
-                bloom_merge(blooms_df, delta)
-                if blooms_df is not None
+                bloom_merge(
+                    s.read.schema(BLOOMS_SCHEMA).parquet(bloom_snap), delta
+                )
+                if bloom_snap is not None
                 else delta
             )
-            merged.write.mode("overwrite").parquet(
-                os.path.join(blooms_path, epoch)
-            )
+            new_snap = os.path.join(blooms_path, epoch)
+            merged.write.mode("overwrite").parquet(new_snap)
             for _, p in _committed_epochs(blooms_path, batch_id)[:-1]:
                 shutil.rmtree(p, ignore_errors=True)
-            if blooms_df is not None:
-                blooms_df.unpersist()
-            new_snap = os.path.join(blooms_path, epoch)
-            new_blooms_df = (
-                s.read.schema(BLOOMS_SCHEMA).parquet(new_snap).persist()
-            )
         # prune superseded snapshots, KEEPING the latest one below this
         # epoch: "this epoch's parquet committed" is weaker than "the
         # stream checkpoint committed this batch" — if the process dies
@@ -671,14 +642,11 @@ def stream_near_dup_clusters(
         # assignment). Steady state keeps exactly two snapshots.
         for _, p in assign_epochs[:-1]:
             shutil.rmtree(p, ignore_errors=True)
-        new_reps_dir = os.path.join(reps_path, epoch)
-        new_bands_dir = os.path.join(bands_path, epoch)
         cache.update(
             next=batch_id + 1,
             cap=caption_dirs,
             reps=reps_dirs + [new_reps_dir],
             bands=bands_dirs + [new_bands_dir],
-            blooms_df=new_blooms_df,
             bloom_snap=new_snap,
             state_bytes=state_bytes
             + _tree_bytes([new_reps_dir, new_bands_dir]),

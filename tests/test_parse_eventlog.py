@@ -1,0 +1,66 @@
+"""tools/parse_eventlog.py reads both event-log layouts: a single file
+and a rolling-log ``eventlog_v2_<app-id>/`` directory, whose
+``events_<n>_*`` parts must be read in numeric order of ``<n>``."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+TOOL = os.path.join(
+    os.path.dirname(__file__), os.pardir, "tools", "parse_eventlog.py"
+)
+
+
+def _write(path, events):
+    with open(path, "w") as f:
+        for ev in events:
+            f.write(json.dumps(ev) + "\n")
+
+
+def _job_start(jid, t, name):
+    return {
+        "Event": "SparkListenerJobStart", "Job ID": jid,
+        "Submission Time": t,
+        "Stage Infos": [{"Stage ID": jid, "Stage Name": name}],
+    }
+
+
+def _run(path):
+    return subprocess.run(
+        [sys.executable, TOOL, str(path)],
+        check=True, capture_output=True, text=True,
+    ).stdout
+
+
+def test_rolling_dir_and_single_file(tmp_path):
+    app = [
+        {"Event": "SparkListenerApplicationStart", "Timestamp": 1000},
+        _job_start(0, 2000, "collect at a"),
+    ]
+    mid = [
+        {"Event": "SparkListenerJobEnd", "Job ID": 0,
+         "Completion Time": 2500},
+        _job_start(1, 5000, "save at b"),
+    ]
+    end = [
+        {"Event": "SparkListenerJobEnd", "Job ID": 1,
+         "Completion Time": 6000},
+    ]
+    d = tmp_path / "eventlog_v2_local-1"
+    d.mkdir()
+    # events_10 sorts before events_2 lexically: a lexical read would
+    # see job 1 end before it starts
+    _write(d / "events_1_local-1", app)
+    _write(d / "events_2_local-1", mid)
+    _write(d / "events_10_local-1", end)
+    (d / "appstatus_local-1").touch()
+    out = _run(d)
+    assert "dur     1.0s save at b" in out, out
+    assert "total inter-job gap: 3.5s" in out, out
+
+    single = tmp_path / "local-1"
+    _write(single, app + mid + end)
+    assert _run(single) == out

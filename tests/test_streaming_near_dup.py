@@ -297,3 +297,77 @@ def test_pruned_state_novel_batch_reads_zero_index_rows(
     assert _assign_dict(load_assignments(spark, state)) == _assign_dict(
         load_assignments(spark, state2)
     )
+
+
+def test_bad_n_shards_raises_before_query_starts(spark, tmp_path):
+    """A shard count the JVM shard expression cannot serve is rejected
+    at call time — not by an assertion inside the running query."""
+    import pytest
+
+    inp = str(tmp_path / "in")
+    os.makedirs(inp, exist_ok=True)
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(ValueError, match="n_shards"):
+        stream_near_dup_clusters(
+            spark, inp, str(tmp_path / "state"), str(tmp_path / "ck"),
+            n_shards=48,
+        )
+    assert {q.id for q in spark.streams.active} == active
+
+
+def test_caption_stream_leaves_no_cached_frames(spark, tiny_corpus,
+                                                tmp_path):
+    """No persisted frame (decoded features, bloom snapshot, probe
+    flags) outlives the batch that made it."""
+    pdf, _ = tiny_corpus
+    inp = str(tmp_path / "in")
+    state = str(tmp_path / "state")
+    ck = str(tmp_path / "ck")
+    os.makedirs(inp, exist_ok=True)
+    spark.catalog.clearCache()
+    for lo, hi in ((0, 80), (80, 120), (120, 160)):
+        to_spark_images(spark, pdf.iloc[lo:hi]).coalesce(1).write.mode(
+            "append"
+        ).parquet(inp)
+        stream_near_dup_clusters(
+            spark, inp, state, ck, prune_state=True
+        ).awaitTermination()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_pruned_state_exact_copy_batch_matches_full_scan(
+    spark, tiny_corpus, tmp_path
+):
+    """A batch made only of exact-caption copies of indexed images adds
+    no new rep, yet its band keys hit the bloom: the single probe reads
+    band shards a per-new-rep probe would skip, and the verdicts must
+    still equal the full-scan path. Each wave decodes its source once
+    (plus the captions write), never once per consumer."""
+    pdf, _ = tiny_corpus
+    first = pdf.iloc[:120]
+    copies = pdf.iloc[:60].copy()
+    copies["image_id"] = copies["image_id"] + "_copy"
+    results = {}
+    for mode in (True, False):
+        inp = str(tmp_path / f"in_{mode}")
+        state = str(tmp_path / f"state_{mode}")
+        ck = str(tmp_path / f"ck_{mode}")
+        os.makedirs(inp, exist_ok=True)
+        for wave in (first, copies):
+            to_spark_images(spark, wave).coalesce(1).write.mode(
+                "append"
+            ).parquet(inp)
+            q = stream_near_dup_clusters(
+                spark, inp, state, ck, prune_state=mode
+            )
+            q.awaitTermination()
+            n_in = sum(p["numInputRows"] for p in q.recentProgress)
+            assert len(wave) <= n_in <= 2 * len(wave), (mode, n_in)
+        results[mode] = _assign_dict(load_assignments(spark, state))
+    assert results[True] == results[False]
+    # every copy joined its original's cluster (captionless rows are in
+    # no cluster, copy and original alike)
+    got = results[True]
+    assert any(i in got for i in copies["image_id"])
+    for i in copies["image_id"]:
+        assert got.get(i) == got.get(i[: -len("_copy")])
