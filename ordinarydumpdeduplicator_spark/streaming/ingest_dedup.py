@@ -2,19 +2,16 @@
 deduplicated against everything already ingested, with a bloom index so
 steady-state batches never shuffle the full history.
 
-State layout (all epoch-keyed like streaming/near_dup.py — every write
-overwrites its own ``epoch=<batch_id>`` directory, loaders read only
-committed epochs STRICTLY BELOW the current one, so Structured
-Streaming's replay of a crashed batch heals partial state):
+State layout (epoch-keyed; every store follows the replay protocol of
+streaming/state_store.py):
 
     new/epoch=N/     rows of the batch that were NEW at ingest time
                      (first occurrence wins; within-batch duplicates
                      collapse to the lowest doc_id) — the stream output
     keys/epoch=N/    the content keys those rows introduced (delta)
-    blooms/epoch=N/  FULL merged bloom-shards snapshot after batch N;
-                     superseded snapshots pruned, latest prior retained
-                     as replay insurance (same protocol as near_dup's
-                     assignment snapshots)
+    blooms/epoch=N/  FULL merged bloom-shards snapshot after batch N
+                     (a state_store snapshot store)
+    metrics/epoch=N/ per-batch accounting (load_ingest_metrics)
 
 Per batch the work is: probe the batch's distinct keys against the bloom
 snapshot (cogroup; the flags frame is persisted for the batch and
@@ -35,7 +32,6 @@ restartable and distributed.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -44,15 +40,22 @@ from ..operators.bloom_dedup import (
     DEFAULT_BITS_PER_SHARD,
     DEFAULT_K_HASHES,
     _probe_flags,
-    bloom_merge,
     bloom_shards,
     incremental_new_docs,
 )
 from ..operators.text_dedup import normalized_text
-from .near_dup import (
-    BLOOMS_SCHEMA,
-    _committed_epochs,
+from .state_store import (
+    EpochCache,
+    check_stream_params,
     compact_epoch_dirs,
+    hit_shards,
+    key_shard,
+    latest_epoch,
+    load_epochs,
+    merge_and_rotate,
+    probe,
+    read_shards,
+    write_clustered,
     write_row_epoch,
 )
 
@@ -82,18 +85,12 @@ def load_ingest_metrics(
     n_in == n_null_key + n_batch_dup + n_history_dup + n_new
     (every arriving row is attributed to exactly one outcome; NULL-text
     rows pass through as their own bucket, never deduplicable)."""
-    epochs = _committed_epochs(os.path.join(state_dir, "metrics"))
-    if not epochs:
-        return None
-    return spark.read.parquet(*[p for _, p in epochs])
+    return load_epochs(spark, os.path.join(state_dir, "metrics"), None)
 
 
 def load_new_docs(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """All rows ever emitted as new, across committed epochs."""
-    epochs = _committed_epochs(os.path.join(state_dir, "new"))
-    if not epochs:
-        return None
-    return spark.read.parquet(*[p for _, p in epochs])
+    return load_epochs(spark, os.path.join(state_dir, "new"), None)
 
 
 def stream_ingest_dedup(
@@ -111,45 +108,13 @@ def stream_ingest_dedup(
     """Start the streaming ingest-dedup query over a parquet document
     stream (``doc_id``, ``text``). Returns the StreamingQuery; read the
     deduplicated corpus with ``load_new_docs(spark, state_dir)``."""
+    params = (n_shards, bits_per_shard, k_hashes)
+    check_stream_params(*params)
     new_path = os.path.join(state_dir, "new")
     keys_path = os.path.join(state_dir, "keys")
     blooms_path = os.path.join(state_dir, "blooms")
     metrics_path = os.path.join(state_dir, "metrics")
-    # cross-batch cache: the committed key-store listing and the loaded
-    # (persisted) bloom snapshot for the EXPECTED next batch id — the
-    # state below the current epoch is append-only within a run, so
-    # after batch N commits, batch N+1's state is batch N's plus the
-    # epoch-N dirs. A restart or replay misses the cache (batch id !=
-    # expected) and re-lists from disk, leaving the replay contract
-    # untouched; the fixed per-batch listing/snapshot-read cost no
-    # longer grows with the number of past batches.
-    cache: dict = {"next": None}
-
-    def _state_for(s: SparkSession, batch_id: int):
-        if cache.get("next") == batch_id:
-            return cache["key_dirs"], cache["blooms_df"], True
-        key_dirs = [p for _, p in _committed_epochs(keys_path, batch_id)]
-        bloom_epochs = _committed_epochs(blooms_path, batch_id)
-        if bloom_epochs:
-            blooms = (
-                s.read.schema(BLOOMS_SCHEMA)
-                .parquet(bloom_epochs[-1][1])
-                .persist()
-            )
-            return key_dirs, blooms, True
-        history = (
-            s.read.schema(KEYS_SCHEMA).parquet(*key_dirs)
-            if key_dirs
-            else s.createDataFrame([], KEYS_SCHEMA)
-        )
-        blooms = bloom_shards(
-            history.select("content_sha"),
-            "content_sha",
-            n_shards=n_shards,
-            bits_per_shard=bits_per_shard,
-            k_hashes=k_hashes,
-        ).persist()
-        return key_dirs, blooms, False
+    cache = EpochCache(state_dir, "keys")
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -171,49 +136,39 @@ def stream_ingest_dedup(
             keyed.filter(F.col("content_sha").isNull())
         )
 
-        key_dirs, blooms, from_snapshot = _state_for(s, batch_id)
-        history = (
-            s.read.schema(KEYS_SCHEMA).parquet(*key_dirs)
-            if key_dirs
-            else s.createDataFrame([], KEYS_SCHEMA)
-        )
+        key_dirs = cache.at(batch_id)["keys"]
+        bloom_snap = latest_epoch(blooms_path, batch_id)
+        if bloom_snap is not None:
+            flags = probe(batch_first, bloom_snap, "content_sha", params)
+        else:
+            # no snapshot yet (fresh or legacy store): probe a bloom
+            # built inline from the key history
+            history = read_shards(
+                s, "content_sha string", key_dirs, "shard", None
+            )
+            flags = _probe_flags(
+                batch_first,
+                bloom_shards(history, "content_sha", *params),
+                "content_sha",
+                *params,
+                validate=False,
+            )
         # ONE probe per batch: persist the flags, unpersist after writes
-        flags = _probe_flags(
-            batch_first, blooms, "content_sha",
-            n_shards, bits_per_shard, k_hashes,
-            validate=from_snapshot,
-        ).persist()
+        flags = flags.persist()
         try:
-            hit_shards = [
-                r.shard
-                for r in flags.filter("might_contain")
-                .select("shard")
-                .distinct()
-                .collect()
-            ]
-            # literal predicate -> parquet row-group pruning on the
-            # shard-clustered key store; a miss-only batch reads nothing
-            pruned = (
-                history.filter(F.col("shard").isin(hit_shards))
-                if hit_shards
-                else history.limit(0)
+            # only the bloom-hit shards of the key store are read; a
+            # miss-only batch reads nothing
+            pruned = read_shards(
+                s, "content_sha string", key_dirs, "shard", hit_shards(flags)
             )
             new = incremental_new_docs(
-                pruned,
-                batch_first,
-                "content_sha",
-                n_shards=n_shards,
-                bits_per_shard=bits_per_shard,
-                k_hashes=k_hashes,
-                blooms=blooms,
-                flags=flags,
+                pruned, batch_first, "content_sha", *params, flags=flags
             )
             new.write.mode("overwrite").parquet(
                 os.path.join(new_path, epoch)
             )
             # derive the key delta from what was WRITTEN (the later
-            # writes cannot disagree with it); shard comes from the
-            # persisted flags — no re-hash
+            # writes cannot disagree with it)
             written = s.read.parquet(os.path.join(new_path, epoch))
             # per-batch accounting (the streaming analogue of the
             # curation funnel's per-stage counters; north rule's metrics
@@ -253,50 +208,27 @@ def stream_ingest_dedup(
                     "n_new": int(w_stats.n_nonnull),
                 },
             )
-            new_keys = (
+            write_clustered(
                 written.select("content_sha")
                 .filter(F.col("content_sha").isNotNull())
-                .distinct()
-                .join(flags.select("content_sha", "shard"), "content_sha")
+                .distinct(),
+                os.path.join(keys_path, epoch),
+                "shard",
+                key_shard(F.col("content_sha"), n_shards),
             )
-            # clustered by shard so the next wave's IN-predicate prunes
-            # row groups (directory-partition by shard at real scale)
-            new_keys.repartition("shard").sortWithinPartitions(
-                "shard"
-            ).write.mode("overwrite").parquet(os.path.join(keys_path, epoch))
-            delta = bloom_shards(
-                s.read.schema(KEYS_SCHEMA)
-                .parquet(os.path.join(keys_path, epoch))
-                .select("content_sha"),
-                "content_sha",
-                n_shards=n_shards,
-                bits_per_shard=bits_per_shard,
-                k_hashes=k_hashes,
+            # the first snapshot keys the WHOLE store (empty history on
+            # a fresh store), later ones only this epoch's delta
+            keys = s.read.schema(KEYS_SCHEMA).parquet(
+                *([] if bloom_snap else key_dirs),
+                os.path.join(keys_path, epoch),
             )
-            # unconditional merge: when no snapshot existed the blooms
-            # frame was built inline from history (empty on a true
-            # first batch, where the merge degenerates to the delta),
-            # so history bits are preserved in every branch
-            merged = bloom_merge(blooms, delta)
-            merged.write.mode("overwrite").parquet(
-                os.path.join(blooms_path, epoch)
+            merge_and_rotate(
+                s, blooms_path, batch_id, bloom_snap,
+                keys.select("content_sha"), "content_sha", params,
             )
         finally:
             flags.unpersist()
-        # prune superseded snapshots KEEPING the latest prior one: the
-        # stream checkpoint may not have committed this batch yet, and a
-        # replay must still find a snapshot below it to resume from
-        for _, p in _committed_epochs(blooms_path, batch_id)[:-1]:
-            shutil.rmtree(p, ignore_errors=True)
-        # roll the cross-batch cache forward to the expected next batch
-        blooms.unpersist()
-        cache.update(
-            next=batch_id + 1,
-            key_dirs=key_dirs + [os.path.join(keys_path, epoch)],
-            blooms_df=s.read.schema(BLOOMS_SCHEMA)
-            .parquet(os.path.join(blooms_path, epoch))
-            .persist(),
-        )
+        cache.advance(batch_id, "keys")
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:

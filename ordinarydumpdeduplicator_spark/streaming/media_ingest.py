@@ -4,10 +4,8 @@ against everything already ingested — the media twin of
 streaming/ingest_dedup.py (text), built on the modality-agnostic segment
 core (operators/segment_dedup.py).
 
-State layout (epoch-keyed like every other streaming state dir: each
-write overwrites its own ``epoch=<batch_id>`` directory; loaders read
-only committed epochs STRICTLY BELOW the current one, so a replayed
-crashed batch heals its own partial state):
+State layout (epoch-keyed; every store follows the replay protocol of
+streaming/state_store.py):
 
     fps/epoch=N/       fingerprint DELTAS — all members of batch-N NOVEL
                        clusters, re-keyed to their cluster canonical id
@@ -18,7 +16,7 @@ crashed batch heals its own partial state):
                        already-indexed content adds nothing, so the index
                        grows with DISTINCT content, not ingest volume).
                        Rows carry an internal ``__ref_shard`` column
-                       (pmod(xxhash64(id), n_shards)) and are written
+                       (the id shard, state_store.id_shard) and are written
                        clustered by it, so a batch's scan with a
                        ``__ref_shard IN (...)`` literal prunes row
                        groups; readers using the public fp_schema never
@@ -32,9 +30,7 @@ crashed batch heals its own partial state):
                        ``shard IN (<bloom-hit shards>)`` read prunes
                        row groups (the text ingest key-store shape).
     blooms/epoch=N/    FULL merged bloom snapshot over all index keys
-                       after batch N; superseded snapshots pruned,
-                       latest prior retained as replay insurance (the
-                       text twin's protocol).
+                       after batch N (a state_store snapshot store).
     verdicts/epoch=N/  one row per batch item:
                        (id, outcome, match_ref_id, match_frac,
                         batch_canonical_id)
@@ -83,15 +79,6 @@ ref_dup batch member but not the reference directly is classified via
 its CLUSTER (batch_dup), which is exactly what a full batch re-run of
 segment_dedup_report would conclude.
 
-Within one stream run the committed-epoch listings and the loaded
-bloom snapshot are CACHED across batches (the state below the current
-epoch is append-only by construction, so after batch N commits, batch
-N+1's listing is batch N's plus the epoch-N dirs) — the fixed
-per-batch cost of re-listing and re-reading state does not grow with
-the number of past batches. The cache is keyed by the expected next
-batch id; a replayed or restarted batch misses it and re-lists from
-disk, so the replay contract is untouched.
-
 The reference's analogue is the one-at-a-time ``HashSet`` membership
 check during a rescan (DataControllerSimple.cs) — this is that check for
 content identity under re-encoding, made restartable and distributed.
@@ -100,30 +87,34 @@ content identity under re-encoding, made restartable and distributed.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.bloom_dedup import (
-    DEFAULT_BITS_PER_SHARD,
-    DEFAULT_K_HASHES,
-    _keyed,
-    _probe_flags,
-    bloom_merge,
-    bloom_shards,
-)
+from ..operators.bloom_dedup import DEFAULT_BITS_PER_SHARD, DEFAULT_K_HASHES
 from ..operators.connected_components import connected_components
 from ..operators.segment_dedup import (
     segment_band_rows,
     segment_edges,
     segment_novelty,
 )
-from .near_dup import (
-    BLOOMS_SCHEMA,
+from .state_store import (
+    EpochCache,
     _committed_epochs,
-    _tree_bytes,
+    _hit_candidates,
+    check_stream_params,
     compact_epoch_dirs,
+    engaged,
+    epoch_dirs,
+    hit_shards,
+    id_shard,
+    key_shard,
+    latest_epoch,
+    load_epochs,
+    merge_and_rotate,
+    probe,
+    read_shards,
+    write_clustered,
     write_row_epoch,
 )
 
@@ -144,12 +135,11 @@ def load_media_verdicts(
     spark: SparkSession, state_dir: str, id_col: str = "video_id"
 ) -> DataFrame | None:
     """All committed per-item verdicts across epochs."""
-    epochs = _committed_epochs(os.path.join(state_dir, "verdicts"))
-    if not epochs:
-        return None
-    return spark.read.schema(
-        VERDICTS_SCHEMA.format(id_col=id_col)
-    ).parquet(*[p for _, p in epochs])
+    return load_epochs(
+        spark,
+        os.path.join(state_dir, "verdicts"),
+        VERDICTS_SCHEMA.format(id_col=id_col),
+    )
 
 
 def load_reference_fps(
@@ -158,20 +148,14 @@ def load_reference_fps(
     """The deduplicated fingerprint index (union of committed deltas).
     The internal ``__ref_shard`` clustering column is invisible here —
     parquet columns absent from the requested schema are not read."""
-    epochs = _committed_epochs(os.path.join(state_dir, "fps"))
-    if not epochs:
-        return None
-    return spark.read.schema(fp_schema).parquet(*[p for _, p in epochs])
+    return load_epochs(spark, os.path.join(state_dir, "fps"), fp_schema)
 
 
 def load_media_metrics(
     spark: SparkSession, state_dir: str
 ) -> DataFrame | None:
-    epochs = _committed_epochs(os.path.join(state_dir, "metrics"))
-    if not epochs:
-        return None
-    return spark.read.schema(METRICS_SCHEMA).parquet(
-        *[p for _, p in epochs]
+    return load_epochs(
+        spark, os.path.join(state_dir, "metrics"), METRICS_SCHEMA
     )
 
 
@@ -196,7 +180,7 @@ def compact_media_index(
     clusters), so the merge is a plain union — no dedup pass.
 
     Swap is the manifest-guarded two-rename pattern of
-    near_dup.compact_epoch_dirs (crash anywhere is healed by the
+    state_store.compact_epoch_dirs (crash anywhere is healed by the
     loader); run it only while the stream is stopped — it is offline
     maintenance, like sinks.compact_stage. Returns the number of
     fingerprint epoch dirs merged (0 = nothing to do)."""
@@ -237,67 +221,57 @@ def _probe_keys(
     return band_keys.unionByName(sha_keys).distinct()
 
 
-def _with_shard(keys: DataFrame, n_shards: int) -> DataFrame:
-    """Attach the bloom shard of each key (the same md5-derived shard
-    the probe uses, so store clustering and probe pruning cannot
-    drift) -> (key, shard, ref_id).
-
-    For power-of-two shard counts <= 256 the shard is a pure JVM
-    expression: the bloom's h1 is the little-endian int64 of the first
-    md5 digest bytes, so h1 mod 2^k (k <= 8) depends only on the FIRST
-    digest byte — the first two hex chars of md5(key). Pinned against
-    the pandas hashing path in tests/test_media_index_pruning.py; other
-    shard counts fall back to that path."""
-    if n_shards <= 256 and (n_shards & (n_shards - 1)) == 0:
-        return keys.select(
-            "key",
-            (
-                F.conv(F.substring(F.md5("key"), 1, 2), 16, 10).cast(
-                    "int"
-                )
-                % F.lit(n_shards)
-            ).alias("shard"),
-            "ref_id",
-        )
-    hashed = _keyed(
-        keys.select("key").distinct(), "key", n_shards
-    ).select(F.col("__key").alias("key"), "shard")
-    return keys.join(hashed, "key").select("key", "shard", "ref_id")
-
-
-def _latest_snapshot(base: str, below: int | None = None):
-    epochs = _committed_epochs(base, below)
-    return epochs[-1][1] if epochs else None
-
-
-def _hit_candidates(
+def _reference_fps(
     spark: SparkSession,
+    batch_fps: DataFrame,
+    fp_schema: str,
+    fps_dirs: list[str],
     keys_dirs: list[str],
-    flags: DataFrame,
-    hit_shards: list[int],
-    n_shards: int,
-) -> DataFrame:
-    """Candidate reference ids reachable from the bloom-hit probe keys:
-    the key store is read under a ``shard IN (<hit shards>)`` literal —
-    parquet row-group stats prune everything outside the hit shards
-    (each delta is written shard-clustered for exactly this) — then
-    equi-joined to the hit keys. Each id carries its fingerprint-store
-    shard (pmod(xxhash64(id), n_shards), recomputed — never stored, so
-    it cannot drift)."""
-    store = (
-        spark.read.schema(KEYS_SCHEMA)
-        .parquet(*keys_dirs)
-        .filter(F.col("shard").isin(hit_shards))
-    )
-    return (
-        store.join(flags.filter("might_contain").select("key"), "key")
-        .select("ref_id")
-        .distinct()
-        .withColumn(
-            _REF_SHARD,
-            F.pmod(F.xxhash64("ref_id"), F.lit(n_shards)).cast("int"),
+    snapshot: str | None,
+    id_col: str,
+    hashes_col: str,
+    bands: int,
+    params: tuple[int, int, int],
+) -> DataFrame | None:
+    """``prune_reference_fps`` over given listings: None when nothing
+    is indexed, the full index when there is no bloom ``snapshot``,
+    else the batch-pruned view."""
+    if not fps_dirs:
+        return None
+    if snapshot is None:
+        return spark.read.schema(fp_schema).parquet(*fps_dirs)
+    flags = probe(
+        _probe_keys(batch_fps, id_col, hashes_col, bands),
+        snapshot, "key", params,
+    ).persist()
+    try:
+        hit = hit_shards(flags)
+        if not hit or not keys_dirs:
+            return None  # miss-only batch: no index scan at all
+        # eager localCheckpoint: the candidate id set is tiny (bounded
+        # by index rows sharing a key with the batch) and feeds the
+        # shard collect AND the semi-join below — without the cut,
+        # every downstream action on the pruned ref would re-run the
+        # whole bloom probe and key-store scan
+        cands = _hit_candidates(
+            spark, keys_dirs, flags, hit, params[0]
+        ).localCheckpoint(eager=True)
+        ref_shards = [
+            r[_REF_SHARD]
+            for r in cands.select(_REF_SHARD).distinct().collect()
+        ]
+        if not ref_shards:
+            return None  # bloom false positives only: nothing reachable
+        # second literal predicate -> row-group pruning on the
+        # id-shard-clustered fingerprint store, refined by the
+        # candidate semi-join
+        return read_shards(
+            spark, fp_schema, fps_dirs, _REF_SHARD, ref_shards
+        ).join(
+            cands.select(F.col("ref_id").alias(id_col)), id_col, "left_semi"
         )
-    )
+    finally:
+        flags.unpersist()
 
 
 def prune_reference_fps(
@@ -312,9 +286,6 @@ def prune_reference_fps(
     bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
     k_hashes: int = DEFAULT_K_HASHES,
     below: int | None = None,
-    fps_dirs: list[str] | None = None,
-    keys_dirs: list[str] | None = None,
-    blooms_df: DataFrame | None = None,
 ) -> DataFrame | None:
     """The batch-pruned view of the reference fingerprint index: only
     rows reachable from this batch's probe keys. Returns None when the
@@ -328,86 +299,28 @@ def prune_reference_fps(
     key-store shard), so downstream bucket-cap counts, min-id
     witnesses and verify results equal the full-scan path's.
 
-    ``fps_dirs``/``keys_dirs``/``blooms_df`` let a caller that already
-    holds the committed listings / loaded snapshot (the streaming
-    cache) skip the re-list and re-read; ``below`` bounds the listing
-    for replay safety when they are not provided. Returns the FULL
-    index (legacy fallback) when no bloom snapshot exists yet."""
-    if fps_dirs is None:
-        fps_dirs = [
-            p
-            for _, p in _committed_epochs(
-                os.path.join(state_dir, "fps"), below
-            )
-        ]
-    if not fps_dirs:
-        return None
-    if blooms_df is None:
-        snap = _latest_snapshot(os.path.join(state_dir, "blooms"), below)
-        if snap is None:
-            # legacy state (no probe index yet): full scan
-            return spark.read.schema(fp_schema).parquet(*fps_dirs)
-        blooms_df = spark.read.schema(BLOOMS_SCHEMA).parquet(snap)
-    if keys_dirs is None:
-        keys_dirs = [
-            p
-            for _, p in _committed_epochs(
-                os.path.join(state_dir, "keys"), below
-            )
-        ]
-    probes = _probe_keys(batch_fps, id_col, hashes_col, bands)
-    # validate=True: the snapshot is a persisted table (a probe
-    # configured differently from the build would silently emit
-    # duplicates as novel); the check reads one row of a 32-row frame
-    flags = _probe_flags(
-        probes, blooms_df, "key", n_shards, bits_per_shard, k_hashes,
-        validate=True,
-    ).persist()
-    try:
-        hit_shards = [
-            r.shard
-            for r in flags.filter("might_contain")
-            .select("shard")
-            .distinct()
-            .collect()
-        ]
-        if not hit_shards or not keys_dirs:
-            return None  # miss-only batch: no index scan at all
-        # eager localCheckpoint: the candidate id set is tiny (bounded
-        # by index rows sharing a key with the batch) and feeds the
-        # shard collect AND the semi-join below — without the cut,
-        # every downstream action on the pruned ref would re-run the
-        # whole bloom probe and key-store scan
-        cands = _hit_candidates(
-            spark, keys_dirs, flags, hit_shards, n_shards
-        ).localCheckpoint(eager=True)
-        ref_shards = [
-            r[_REF_SHARD]
-            for r in cands.select(_REF_SHARD).distinct().collect()
-        ]
-        if not ref_shards:
-            return None  # bloom false positives only: nothing reachable
-        # second literal predicate -> row-group pruning on the
-        # id-shard-clustered fingerprint store; legacy epochs
-        # written without the column read as NULL and are never
-        # pruned (the isNull escape hatch), only refined by the
-        # candidate semi-join
-        return (
-            spark.read.schema(f"{fp_schema}, {_REF_SHARD} int")
-            .parquet(*fps_dirs)
-            .filter(
-                F.col(_REF_SHARD).isin(ref_shards)
-                | F.col(_REF_SHARD).isNull()
-            )
-            .join(
-                cands.select(F.col("ref_id").alias(id_col)),
-                id_col,
-                "left_semi",
-            )
-            .drop(_REF_SHARD)
-        )
-    finally:
-        flags.unpersist()
+    ``below`` bounds every listing to epochs strictly below it (a
+    stream batch passes its own id). Without it the listings stop at
+    the newest epoch whose probe keys committed: an fps epoch whose
+    keys twin did not (a crash between the two writes) is not covered
+    by the key store, so the prune could not see its rows. Returns
+    the FULL index (legacy fallback) when no bloom snapshot exists
+    yet."""
+    if below is None:
+        keys = _committed_epochs(os.path.join(state_dir, "keys"))
+        below = keys[-1][0] + 1 if keys else None
+    return _reference_fps(
+        spark,
+        batch_fps,
+        fp_schema,
+        epoch_dirs(os.path.join(state_dir, "fps"), below),
+        epoch_dirs(os.path.join(state_dir, "keys"), below),
+        latest_epoch(os.path.join(state_dir, "blooms"), below),
+        id_col,
+        hashes_col,
+        bands,
+        (n_shards, bits_per_shard, k_hashes),
+    )
 
 
 def stream_media_novelty(
@@ -451,38 +364,14 @@ def stream_media_novelty(
     content), so the modes are freely interchangeable on one state
     dir. Returns the StreamingQuery; read results with
     load_media_verdicts / load_reference_fps / load_media_metrics."""
+    params = (n_shards, bits_per_shard, k_hashes)
+    check_stream_params(*params)
     fps_path = os.path.join(state_dir, "fps")
     keys_path = os.path.join(state_dir, "keys")
     blooms_path = os.path.join(state_dir, "blooms")
     verdicts_path = os.path.join(state_dir, "verdicts")
     metrics_path = os.path.join(state_dir, "metrics")
-    # cross-batch cache: committed listings + loaded bloom snapshot for
-    # the EXPECTED next batch id; anything else (restart, replay)
-    # misses and re-lists from disk
-    cache: dict = {"next": None}
-
-    def _state_for(s: SparkSession, batch_id: int):
-        if cache.get("next") == batch_id:
-            return (
-                cache["fps_dirs"],
-                cache["keys_dirs"],
-                cache["blooms_df"],
-                cache["bloom_snap"],
-                cache["fps_bytes"],
-            )
-        fps_dirs = [
-            p for _, p in _committed_epochs(fps_path, batch_id)
-        ]
-        keys_dirs = [
-            p for _, p in _committed_epochs(keys_path, batch_id)
-        ]
-        snap = _latest_snapshot(blooms_path, batch_id)
-        blooms_df = (
-            s.read.schema(BLOOMS_SCHEMA).parquet(snap).persist()
-            if snap is not None
-            else None
-        )
-        return fps_dirs, keys_dirs, blooms_df, snap, _tree_bytes(fps_dirs)
+    cache = EpochCache(state_dir, "fps", "keys")
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -490,38 +379,19 @@ def stream_media_novelty(
         # ONE decode pass; the skinny fingerprint frame feeds novelty,
         # the edge families, and the delta write — persist it
         fps_b = fingerprint_fn(batch_df).persist()
-        fps_dirs, keys_dirs, blooms_df, bloom_snap, fps_bytes = (
-            _state_for(s, batch_id)
-        )
-        use_prune = (
-            prune_index
-            if prune_index is not None
-            else fps_bytes >= prune_min_index_bytes
+        dirs = cache.at(batch_id)
+        fps_dirs, keys_dirs = dirs["fps"], dirs["keys"]
+        bloom_snap = latest_epoch(blooms_path, batch_id)
+        use_prune = engaged(
+            prune_index, cache.nbytes("fps"), prune_min_index_bytes
         )
         try:
-            if use_prune:
-                ref = prune_reference_fps(
-                    s,
-                    state_dir,
-                    fps_b,
-                    fp_schema,
-                    id_col=id_col,
-                    hashes_col=hashes_col,
-                    bands=bands,
-                    n_shards=n_shards,
-                    bits_per_shard=bits_per_shard,
-                    k_hashes=k_hashes,
-                    below=batch_id,
-                    fps_dirs=fps_dirs,
-                    keys_dirs=keys_dirs,
-                    blooms_df=blooms_df,
-                )
-            else:
-                ref = (
-                    s.read.schema(fp_schema).parquet(*fps_dirs)
-                    if fps_dirs
-                    else None
-                )
+            # without a probe the index is read whole
+            ref = _reference_fps(
+                s, fps_b, fp_schema, fps_dirs, keys_dirs,
+                bloom_snap if use_prune else None,
+                id_col, hashes_col, bands, params,
+            )
             if ref is not None:
                 near = segment_novelty(
                     fps_b,
@@ -671,15 +541,7 @@ def stream_media_novelty(
                 # byte-unchanged, so skip all three writes (epoch gaps
                 # are fine — loaders list what exists, and a replayed
                 # batch recomputes the same deterministic outcome).
-                # The cache rolls forward with the state untouched.
-                cache.update(
-                    next=batch_id + 1,
-                    fps_dirs=fps_dirs,
-                    keys_dirs=keys_dirs,
-                    blooms_df=blooms_df,
-                    bloom_snap=bloom_snap,
-                    fps_bytes=fps_bytes,
-                )
+                cache.advance(batch_id)
                 return
             # fingerprint delta: EVERY member of a novel cluster,
             # re-keyed to the cluster canonical id — so the index's
@@ -696,23 +558,14 @@ def stream_media_novelty(
                 written.join(novel_canon, "batch_canonical_id")
                 .select(id_col, "batch_canonical_id")
             )
-            (
+            write_clustered(
                 fps_b.join(members, id_col)
                 .withColumn(id_col, F.col("batch_canonical_id"))
                 .drop("batch_canonical_id")
-                .dropDuplicates()
-                .withColumn(
-                    _REF_SHARD,
-                    F.pmod(F.xxhash64(id_col), F.lit(n_shards)).cast(
-                        "int"
-                    ),
-                )
-                # clustered so future batches' IN-predicate prunes
-                # row groups (directory-partition at real scale)
-                .repartition(_REF_SHARD)
-                .sortWithinPartitions(_REF_SHARD)
-                .write.mode("overwrite")
-                .parquet(os.path.join(fps_path, epoch))
+                .dropDuplicates(),
+                os.path.join(fps_path, epoch),
+                _REF_SHARD,
+                id_shard(F.col(id_col), n_shards),
             )
             fps_delta = s.read.schema(
                 f"{fp_schema}, {_REF_SHARD} int"
@@ -729,73 +582,30 @@ def stream_media_novelty(
                 delta_keys = delta_keys.unionByName(
                     _probe_keys(legacy, id_col, hashes_col, bands)
                 )
-            _with_shard(delta_keys, n_shards).repartition(
-                "shard"
-            ).sortWithinPartitions("shard").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(keys_path, epoch))
+            write_clustered(
+                delta_keys,
+                os.path.join(keys_path, epoch),
+                "shard",
+                key_shard(F.col("key"), n_shards),
+            )
             # bloom maintenance is DEFERRED until pruning engages: the
             # snapshot is derivable from the key store, so an
             # auto-policy stream below the size threshold pays no bloom
             # jobs at all. Once a snapshot exists it is kept fresh
             # every indexing batch regardless of mode — a stale
             # snapshot would under-approximate the key set and emit
-            # true duplicates as novel.
-            new_snap, new_blooms_df = bloom_snap, blooms_df
-            if use_prune or blooms_df is not None:
-                if blooms_df is not None:
-                    keys_written = s.read.schema(KEYS_SCHEMA).parquet(
-                        os.path.join(keys_path, epoch)
-                    )
-                    merged = bloom_merge(
-                        blooms_df,
-                        bloom_shards(
-                            keys_written.select("key").distinct(),
-                            "key",
-                            n_shards=n_shards,
-                            bits_per_shard=bits_per_shard,
-                            k_hashes=k_hashes,
-                        ),
-                    )
-                else:
-                    # first engagement: one pass over the WHOLE key
-                    # store (this epoch included)
-                    all_keys = s.read.schema(KEYS_SCHEMA).parquet(
-                        *(keys_dirs + [os.path.join(keys_path, epoch)])
-                    )
-                    merged = bloom_shards(
-                        all_keys.select("key").distinct(),
-                        "key",
-                        n_shards=n_shards,
-                        bits_per_shard=bits_per_shard,
-                        k_hashes=k_hashes,
-                    )
-                merged.write.mode("overwrite").parquet(
-                    os.path.join(blooms_path, epoch)
+            # true duplicates as novel. The first engagement keys the
+            # WHOLE key store (this epoch included).
+            if use_prune or bloom_snap is not None:
+                keys = s.read.schema(KEYS_SCHEMA).parquet(
+                    *([] if bloom_snap else keys_dirs),
+                    os.path.join(keys_path, epoch),
                 )
-                # prune superseded bloom snapshots KEEPING the latest
-                # prior one: the stream checkpoint may not have
-                # committed this batch yet, and a replay must still
-                # find a snapshot below it to resume from
-                for _, p in _committed_epochs(blooms_path, batch_id)[:-1]:
-                    shutil.rmtree(p, ignore_errors=True)
-                if blooms_df is not None:
-                    blooms_df.unpersist()
-                new_snap = os.path.join(blooms_path, epoch)
-                new_blooms_df = (
-                    s.read.schema(BLOOMS_SCHEMA).parquet(new_snap).persist()
+                merge_and_rotate(
+                    s, blooms_path, batch_id, bloom_snap,
+                    keys.select("key").distinct(), "key", params,
                 )
-            # roll the cross-batch cache forward: next batch's state is
-            # this batch's plus the epoch dirs just committed
-            new_fps_dir = os.path.join(fps_path, epoch)
-            cache.update(
-                next=batch_id + 1,
-                fps_dirs=fps_dirs + [new_fps_dir],
-                keys_dirs=keys_dirs + [os.path.join(keys_path, epoch)],
-                blooms_df=new_blooms_df,
-                bloom_snap=new_snap,
-                fps_bytes=fps_bytes + _tree_bytes([new_fps_dir]),
-            )
+            cache.advance(batch_id, "fps", "keys")
         finally:
             fps_b.unpersist()
 

@@ -1,0 +1,511 @@
+"""Epoch-keyed parquet state shared by the stateful streams
+(streaming/near_dup.py, media_ingest.py, ingest_dedup.py): epoch
+listing and loading, crash-safe compaction, shard-clustered writes and
+pruned reads, the bloom snapshot lifecycle and the prune policy. Each
+stream's docstring describes its own store layout.
+
+Replay protocol — EVERY write is keyed by the stream's epoch id and
+uses mode("overwrite") on that epoch's own directory
+(``<store>/epoch=<batch_id>``), so a crashed batch that Structured
+Streaming replays (same epoch id) rewrites exactly its own state and
+nothing else:
+
+- a crash mid-write leaves a partial ``epoch=N`` dir; loaders read only
+  committed (``_SUCCESS``-marked) epochs STRICTLY BELOW the current
+  epoch id, so partials of the replayed batch are invisible;
+- a crash between two stores' writes cannot strand an index: the
+  replay overwrites every epoch dir of the batch together;
+- snapshot stores (bloom snapshots, the caption assignment) hold one
+  FULL snapshot per epoch; superseded snapshots are deleted only after
+  the current one is written, and the LATEST prior snapshot is always
+  kept — a parquet-committed epoch is not yet checkpoint-committed, so
+  a crash in that gap replays the batch and the replay must find the
+  previous snapshot to resume from (steady state keeps two on disk).
+
+The state dir and the stream checkpoint dir form one unit — restarting
+with a fresh checkpoint against an existing state dir (or vice versa)
+breaks the epoch alignment this protocol relies on.
+
+Within one query the committed listings of the append-only stores are
+cached across batches (``EpochCache``): the state below the current
+epoch only grows by the dirs each batch writes, so the per-batch
+listing cost does not grow with history. The cache is keyed by the
+expected next batch id; a replayed or restarted batch misses it and
+re-lists from disk, so the replay contract is untouched. Bloom
+snapshots cross batches as a PATH, read where they are used — never a
+persisted frame that could outlive its query.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import re
+import shutil
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..operators.bloom_dedup import (
+    _check_params,
+    _probe_flags,
+    bloom_merge,
+    bloom_shards,
+)
+
+_EPOCH_RE = re.compile(r"^epoch=(\d+)$")
+_MANIFEST = "_COMPACT_MANIFEST"
+_TMP_SUFFIX = ".compacting"
+_PRE_SUFFIX = ".pre_compact"
+BLOOMS_SCHEMA = (
+    "shard int, bits binary, n_shards int, bits_per_shard int, k_hashes int"
+)
+
+
+def epoch_path(base: str, batch_id: int) -> str:
+    return os.path.join(base, f"epoch={batch_id}")
+
+
+def _tree_bytes(dirs: list[str]) -> int:
+    """Total on-disk bytes under the given dirs (pure os-stat walk) —
+    the auto-prune policy's input."""
+    total = 0
+    for d in dirs:
+        for root, _, files in os.walk(d):
+            for f in files:
+                try:
+                    total += os.path.getsize(os.path.join(root, f))
+                except OSError:
+                    pass
+    return total
+
+
+def write_row_epoch(path: str, row: dict) -> None:
+    """Write a ONE-ROW epoch dir (per-batch accounting metrics) with
+    pyarrow on the driver — no Spark job. Measured: the
+    createDataFrame -> coalesce(1) -> write path costs ~3.5 s per
+    micro-batch of pure scheduling for a single literal row, the
+    single largest slice of the fixed per-batch streaming cost; this
+    is a few milliseconds. Python ints map to int64, matching the
+    loaders' ``long`` schemas; the dir is replaced wholesale
+    (epoch-overwrite replay semantics) and ``_SUCCESS``-marked so
+    ``_committed_epochs`` treats it exactly like a Spark-written
+    epoch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(
+        pa.table({k: [v] for k, v in row.items()}),
+        os.path.join(path, "part-00000.parquet"),
+    )
+    with open(os.path.join(path, "_SUCCESS"), "w"):
+        pass
+
+
+def _finish_compaction_cleanup(base: str, lo: str) -> None:
+    """Post-swap cleanup, driven by the manifest the swap left inside
+    ``lo``: remove the merged-away epoch dirs, the ``.pre_compact``
+    backup, then the manifest itself (the "compaction done" marker).
+    Every step is idempotent, so a crash anywhere inside this function
+    is healed by simply running it again."""
+    man = os.path.join(lo, _MANIFEST)
+    with open(man) as f:
+        merged = json.load(f)["merged"]
+    lo_name = os.path.basename(lo)
+    for name in merged:
+        if name != lo_name:
+            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+    shutil.rmtree(lo + _PRE_SUFFIX, ignore_errors=True)
+    os.remove(man)
+
+
+def recover_compaction(base: str) -> None:
+    """Heal any state a crashed ``compact_epoch_dirs`` left behind.
+    Idempotent, pure os-ops (no Spark). The swap protocol's crash
+    windows and their recoveries:
+
+    - crash before ``rename(lo, pre)``: ``lo`` intact, a stray
+      ``.compacting`` dir -> delete the stray;
+    - crash between the two renames: ``lo`` missing, ``.pre_compact``
+      holds the old data, ``.compacting`` holds the committed merge ->
+      roll FORWARD (rename ``.compacting`` -> ``lo``) when its
+      ``_SUCCESS`` exists, else roll BACK (rename ``.pre_compact`` ->
+      ``lo``); either way the loader sees exactly one complete ``lo``;
+    - crash during cleanup: ``lo`` is the merged data and still carries
+      the manifest -> re-run the cleanup (delete merged-away epochs,
+      the backup, the manifest).
+
+    Every os-op tolerates a CONCURRENT healer having gotten there
+    first (two loaders racing after a crash): a rename whose source
+    vanished or whose destination appeared is that exact situation,
+    and the post-condition it wanted already holds — skip and
+    continue."""
+    if not os.path.isdir(base):
+        return
+    for d in os.listdir(base):
+        if not d.endswith(_PRE_SUFFIX):
+            continue
+        lo = os.path.join(base, d[: -len(_PRE_SUFFIX)])
+        pre = os.path.join(base, d)
+        tmp = lo + _TMP_SUFFIX
+        if not os.path.isdir(lo):
+            try:
+                if os.path.isdir(tmp) and os.path.exists(
+                    os.path.join(tmp, "_SUCCESS")
+                ):
+                    os.rename(tmp, lo)  # merge committed: roll forward
+                else:
+                    os.rename(pre, lo)  # merge incomplete: roll back
+                    shutil.rmtree(tmp, ignore_errors=True)
+            except OSError:
+                if not os.path.isdir(lo):
+                    raise  # not a concurrent heal: surface it
+    for d in os.listdir(base):
+        p = os.path.join(base, d)
+        if d.endswith(_TMP_SUFFIX) or d.endswith(_PRE_SUFFIX):
+            # lo exists in every remaining case (handled above), so any
+            # leftover swap dir is junk from a pre-rename crash or an
+            # interrupted cleanup
+            shutil.rmtree(p, ignore_errors=True)
+        elif _EPOCH_RE.match(d) and os.path.exists(
+            os.path.join(p, _MANIFEST)
+        ):
+            try:
+                _finish_compaction_cleanup(base, p)
+            except FileNotFoundError:
+                pass  # a concurrent healer finished the cleanup
+
+
+def _committed_epochs(base: str, below: int | None = None) -> list[tuple[int, str]]:
+    """(epoch, path) of committed epoch dirs, ascending; optionally only
+    epochs strictly below ``below`` (excludes a replayed batch's partials).
+
+    Only dirs whose name is exactly ``epoch=<int>`` count — a crashed
+    compaction's ``epoch=N.compacting`` / ``epoch=N.pre_compact``
+    leftovers must not brick the parse. When such leftovers (or an
+    epoch still carrying a compaction manifest) are present the store
+    may be mid-swap, so the loader HEALS it first via
+    ``recover_compaction`` — reading around the leftovers could
+    silently drop the merged rows (the old ``lo`` dir is absent in the
+    between-renames window) or double-read them (cleanup window)."""
+    if not os.path.isdir(base):
+        return []
+    names = os.listdir(base)
+    if any(
+        d.endswith(_TMP_SUFFIX) or d.endswith(_PRE_SUFFIX) for d in names
+    ) or any(
+        os.path.exists(os.path.join(base, d, _MANIFEST))
+        for d in names
+        if _EPOCH_RE.match(d)
+    ):
+        recover_compaction(base)
+        names = os.listdir(base)
+    out = []
+    for d in names:
+        m = _EPOCH_RE.match(d)
+        if not m:
+            continue
+        e = int(m.group(1))
+        if below is not None and e >= below:
+            continue
+        p = os.path.join(base, d)
+        if os.path.exists(os.path.join(p, "_SUCCESS")):
+            out.append((e, p))
+    return sorted(out)
+
+
+def epoch_dirs(base: str, below: int | None = None) -> list[str]:
+    """Paths of the committed epochs of ``base`` (strictly below
+    ``below`` when given), ascending."""
+    return [p for _, p in _committed_epochs(base, below)]
+
+
+def latest_epoch(base: str, below: int | None = None) -> str | None:
+    """The newest committed epoch of a snapshot store, or None."""
+    dirs = epoch_dirs(base, below)
+    return dirs[-1] if dirs else None
+
+
+def load_epochs(
+    spark: SparkSession, base: str, schema: str | None, latest: bool = False
+) -> DataFrame | None:
+    """Every committed epoch of a store as one frame (only the newest
+    with ``latest``, for snapshot stores); None before the first
+    commit. ``schema=None`` infers it from the files."""
+    dirs = epoch_dirs(base)
+    if not dirs:
+        return None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*(dirs[-1:] if latest else dirs))
+
+
+def compact_epoch_dirs(
+    spark: SparkSession,
+    base: str,
+    schema: str,
+    cluster_by: list[str] | None = None,
+) -> int:
+    """Merge all committed epoch DELTA dirs except the newest into the
+    oldest — the small-files fix for any strictly-below epoch store
+    (media fingerprint index, ingest key store): a month of
+    micro-batches otherwise reads thousands of tiny parquet files per
+    batch. The newest epoch stays untouched because it is the only one
+    a crash-replayed batch may overwrite; merged rows land in the
+    LOWEST epoch dir so every future batch id still loads them.
+    Offline maintenance (run while the stream is stopped); swap is the
+    compact_stage two-rename pattern, made crash-safe by a manifest:
+    the merged dir carries a ``_COMPACT_MANIFEST`` listing the epoch
+    dirs it absorbed (an underscore file, invisible to parquet
+    readers), so a crash in ANY window — before the renames, between
+    them, or mid-cleanup — is healed deterministically by
+    ``recover_compaction`` (which both this function and the epoch
+    loader invoke on entry). ``cluster_by`` re-clusters the
+    merged rows (repartition + sortWithinPartitions) so a store whose
+    per-epoch files were written clustered — e.g. the ingest key store,
+    shard-clustered for IN-predicate row-group pruning — keeps that
+    property through compaction. Returns epochs merged (0 = no-op;
+    needs >= 3 committed epochs)."""
+    recover_compaction(base)
+    epochs = _committed_epochs(base)
+    if len(epochs) <= 2:
+        return 0
+    merge = epochs[:-1]
+    lo = merge[0][1]
+    union = spark.read.schema(schema).parquet(*[p for _, p in merge])
+    if cluster_by:
+        union = union.repartition(*cluster_by).sortWithinPartitions(
+            *cluster_by
+        )
+    tmp = lo + _TMP_SUFFIX
+    shutil.rmtree(tmp, ignore_errors=True)
+    union.write.mode("overwrite").parquet(tmp)
+    with open(os.path.join(tmp, _MANIFEST), "w") as f:
+        json.dump({"merged": [os.path.basename(p) for _, p in merge]}, f)
+    pre = lo + _PRE_SUFFIX
+    shutil.rmtree(pre, ignore_errors=True)
+    os.rename(lo, pre)
+    os.rename(tmp, lo)
+    _finish_compaction_cleanup(base, lo)
+    return len(merge)
+
+
+def _check_n_shards(n_shards: int) -> None:
+    if not (0 < n_shards <= 256 and n_shards & (n_shards - 1) == 0):
+        raise ValueError(
+            f"n_shards must be a power of two <= 256, got {n_shards}"
+        )
+
+
+def check_stream_params(
+    n_shards: int, bits_per_shard: int, k_hashes: int
+) -> None:
+    """Reject stream parameters the state store cannot serve, before a
+    query starts: ``n_shards`` must be a power of two <= 256 (the JVM
+    key-shard expression), plus the bloom's own parameter checks."""
+    _check_n_shards(n_shards)
+    _check_params(n_shards, bits_per_shard, k_hashes)
+
+
+def key_shard(key: Column, n_shards: int) -> Column:
+    """Bloom shard of a key column as a pure JVM expression: the
+    bloom's h1 is the little-endian int64 of the md5 digest, so
+    h1 mod 2^k (k <= 8) is the FIRST digest byte mod 2^k — the first
+    two hex chars of md5(key). Byte-equal to bloom_dedup._keyed's
+    pandas hashing (pinned by test_jvm_shard_expression_matches_bloom_
+    hashing), so key-store clustering and probe pruning cannot drift."""
+    _check_n_shards(n_shards)
+    return (
+        F.conv(F.substring(F.md5(key), 1, 2), 16, 10).cast("int")
+        % F.lit(n_shards)
+    )
+
+
+def id_shard(id_col: Column, n_shards: int) -> Column:
+    """Shard of a row id (id-clustered stores: captions, media
+    fingerprints) — recomputed from the id, never stored apart from
+    the clustering column, so it cannot drift."""
+    return F.pmod(F.xxhash64(id_col), F.lit(n_shards)).cast("int")
+
+
+def write_clustered(
+    df: DataFrame, path: str, shard_col: str, shard: Column
+) -> None:
+    """Overwrite ``path`` with ``df`` plus ``shard_col = shard``,
+    clustered by it: each shard's rows are contiguous, so a read with a
+    pushed ``shard_col IN (...)`` literal prunes row groups
+    (directory-partition by shard at real scale)."""
+    (
+        df.withColumn(shard_col, shard)
+        .repartition(shard_col)
+        .sortWithinPartitions(shard_col)
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+
+
+def read_shards(
+    spark: SparkSession,
+    schema: str,
+    dirs: list[str],
+    shard_col: str,
+    shards: list[int] | None,
+) -> DataFrame:
+    """A shard-clustered store's ``dirs`` as one ``schema`` frame: all
+    of it when ``shards`` is None, else only those shards' row groups
+    via a pushed IN literal — rows of epochs written before the
+    clustering column existed read as NULL shard and are kept (the
+    legacy escape hatch) — and no read at all when nothing is
+    requested."""
+    if not dirs or shards == []:
+        return spark.createDataFrame([], schema)
+    df = spark.read.schema(f"{schema}, {shard_col} int").parquet(*dirs)
+    if shards is not None:
+        df = df.filter(
+            F.col(shard_col).isin(shards) | F.col(shard_col).isNull()
+        )
+    return df.drop(shard_col)
+
+
+def _check_snapshot(path: str, params: tuple[int, int, int]) -> None:
+    """Fail LOUDLY when a bloom snapshot was built with other
+    parameters than the probe's (keys would hash to positions the
+    build never set, and true duplicates would read as new). Reads the
+    n_shards-row parameter columns on the driver — no Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = ["n_shards", "bits_per_shard", "k_hashes"]
+    t = pq.read_table(
+        path, columns=cols, schema=pa.schema([(c, pa.int32()) for c in cols])
+    )
+    got = set(zip(*(c.to_pylist() for c in t.columns)))
+    if got - {tuple(params)}:
+        raise ValueError(
+            f"bloom parameter mismatch: snapshot {path} built with "
+            f"(n_shards, bits_per_shard, k_hashes)={sorted(got)}, "
+            f"probe uses {tuple(params)}"
+        )
+
+
+def probe(
+    probes: DataFrame,
+    snapshot: str,
+    key_col: str,
+    params: tuple[int, int, int],
+) -> DataFrame:
+    """Probe flags (key_col, shard, might_contain) of the distinct
+    ``key_col`` values against the bloom snapshot at ``snapshot``."""
+    _check_snapshot(snapshot, params)
+    blooms = probes.sparkSession.read.schema(BLOOMS_SCHEMA).parquet(snapshot)
+    return _probe_flags(probes, blooms, key_col, *params, validate=False)
+
+
+def hit_shards(flags: DataFrame) -> list[int]:
+    """Shards where at least one probe key might be indexed (empty =
+    nothing probed can be in the index, bloom false negatives being
+    impossible)."""
+    return [
+        r.shard
+        for r in flags.filter("might_contain")
+        .select("shard")
+        .distinct()
+        .collect()
+    ]
+
+
+def _hit_candidates(
+    spark: SparkSession,
+    keys_dirs: list[str],
+    flags: DataFrame,
+    hit: list[int],
+    n_shards: int,
+) -> DataFrame:
+    """Candidate ids reachable from the bloom-hit probe keys through a
+    shard-clustered (key, shard, ref_id) key store: the store is read
+    at the hit shards only, then equi-joined to the hit keys. Each id
+    carries its id shard as ``__ref_shard``."""
+    return (
+        read_shards(spark, "key string, ref_id string", keys_dirs, "shard", hit)
+        .join(flags.filter("might_contain").select("key"), "key")
+        .select("ref_id")
+        .distinct()
+        .withColumn("__ref_shard", id_shard(F.col("ref_id"), n_shards))
+    )
+
+
+def rotate(base: str, batch_id: int) -> None:
+    """Delete every snapshot below ``batch_id`` except the newest one:
+    the stream checkpoint may not have committed this batch yet, and a
+    replay must still find a snapshot below it to resume from (with
+    none, it would re-run as a first batch and lose all prior state)."""
+    for p in epoch_dirs(base, batch_id)[:-1]:
+        shutil.rmtree(p, ignore_errors=True)
+
+
+def merge_and_rotate(
+    spark: SparkSession,
+    base: str,
+    batch_id: int,
+    snapshot: str | None,
+    keys: DataFrame,
+    key_col: str,
+    params: tuple[int, int, int],
+) -> None:
+    """Write the bloom snapshot of this epoch — the prior ``snapshot``
+    OR-merged with a bloom over ``keys`` (the caller passes the epoch's
+    key delta, or the WHOLE key set when no snapshot exists yet) — then
+    ``rotate``."""
+    merged = bloom_shards(keys, key_col, *params)
+    if snapshot is not None:
+        merged = bloom_merge(
+            spark.read.schema(BLOOMS_SCHEMA).parquet(snapshot), merged
+        )
+    merged.write.mode("overwrite").parquet(epoch_path(base, batch_id))
+    rotate(base, batch_id)
+
+
+def engaged(force: bool | None, nbytes: int, threshold: int) -> bool:
+    """The prune policy: ``force`` when set, else whether the index has
+    reached ``threshold`` bytes on disk — below it a full scan is
+    cheaper than the probe's fixed cost."""
+    return force if force is not None else nbytes >= threshold
+
+
+class EpochCache:
+    """One query's committed listings of its append-only stores, keyed
+    by the expected next batch id (see the module docstring)."""
+
+    def __init__(self, state_dir: str, *stores: str):
+        self._paths = {s: os.path.join(state_dir, s) for s in stores}
+        self._next: int | None = None
+        self._dirs: dict[str, list[str]] = {}
+        self._bytes: dict[str, int] = {}
+
+    def at(self, batch_id: int) -> dict[str, list[str]]:
+        """Committed dirs strictly below ``batch_id``, per store."""
+        if self._next != batch_id:
+            self._dirs = {
+                s: epoch_dirs(p, batch_id) for s, p in self._paths.items()
+            }
+            self._bytes = {}
+            self._next = batch_id
+        return self._dirs
+
+    def nbytes(self, *stores: str) -> int:
+        """On-disk bytes of the listed stores' committed dirs."""
+        for s in stores:
+            if s not in self._bytes:
+                self._bytes[s] = _tree_bytes(self._dirs[s])
+        return sum(self._bytes[s] for s in stores)
+
+    def advance(self, batch_id: int, *written: str) -> None:
+        """Roll past a finished batch: its listing plus the epoch dirs
+        it committed to the ``written`` stores."""
+        for s in written:
+            d = epoch_path(self._paths[s], batch_id)
+            self._dirs[s] = self._dirs[s] + [d]
+            if s in self._bytes:
+                self._bytes[s] += _tree_bytes([d])
+        self._next = batch_id + 1

@@ -1,4 +1,4 @@
-"""Crash-safety of the epoch-store compaction swap (streaming/near_dup
+"""Crash-safety of the epoch-store compaction swap (streaming/state_store
 .compact_epoch_dirs): every interrupt window — before the renames,
 between them, mid-cleanup — must be healed by recover_compaction, which
 the epoch loader itself invokes, so a stream restarted over a crashed
@@ -13,7 +13,7 @@ import shutil
 
 import pytest
 
-from ordinarydumpdeduplicator_spark.streaming import near_dup as nd
+from ordinarydumpdeduplicator_spark.streaming import state_store as nd
 
 SCHEMA = "id long, val string"
 

@@ -136,7 +136,7 @@ def test_keys_store_scan_carries_shard_in_literal(spark, tmp_path):
     """The key-store read inside the probe is filtered by the bloom-hit
     shard list as a pushed IN literal — row-group stats prune the
     non-hit shards of the shard-clustered store."""
-    from ordinarydumpdeduplicator_spark.streaming.media_ingest import (
+    from ordinarydumpdeduplicator_spark.streaming.state_store import (
         _hit_candidates,
     )
 
@@ -196,12 +196,14 @@ def test_pruned_verdicts_match_full_scan(spark, tmp_path):
 
 
 def test_jvm_shard_expression_matches_bloom_hashing(spark):
-    """The power-of-two shard fast path (first md5 byte mod 2^k) must
+    """The JVM key-shard expression (first md5 byte mod 2^k) must
     agree with the bloom's pandas hashing (h1 % n_shards) for every
     key — a drift would route keys to shards the probe never reads."""
+    import pytest
+
     from ordinarydumpdeduplicator_spark.operators.bloom_dedup import _keyed
-    from ordinarydumpdeduplicator_spark.streaming.media_ingest import (
-        _with_shard,
+    from ordinarydumpdeduplicator_spark.streaming.state_store import (
+        key_shard,
     )
 
     keys = spark.createDataFrame(
@@ -212,38 +214,18 @@ def test_jvm_shard_expression_matches_bloom_hashing(spark):
     for n_shards in (8, 32, 256):
         fast = {
             r["key"]: r["shard"]
-            for r in _with_shard(keys, n_shards).collect()
-        }
-        slow = {
-            r["__key"]: r["shard"]
-            for r in _keyed(keys.select("key"), "key", n_shards).collect()
-        }
-        assert fast == slow, n_shards
-    # a non-power-of-two count falls back to the pandas path
-    fb = {
-        r["key"]: r["shard"] for r in _with_shard(keys, 12).collect()
-    }
-    slow12 = {
-        r["__key"]: r["shard"]
-        for r in _keyed(keys.select("key"), "key", 12).collect()
-    }
-    assert fb == slow12
-
-    # the caption-stream twin of the same expression
-    from ordinarydumpdeduplicator_spark.streaming.near_dup import _shard_of
-
-    for n_shards in (8, 32, 256):
-        nd = {
-            r["key"]: r["shard"]
             for r in keys.select(
-                "key", _shard_of(F.col("key"), n_shards).alias("shard")
+                "key", key_shard(F.col("key"), n_shards).alias("shard")
             ).collect()
         }
         slow = {
             r["__key"]: r["shard"]
             for r in _keyed(keys.select("key"), "key", n_shards).collect()
         }
-        assert nd == slow, n_shards
+        assert fast == slow, n_shards
+    # a non-power-of-two count has no JVM expression: rejected
+    with pytest.raises(ValueError, match="n_shards"):
+        key_shard(F.col("key"), 12)
 
 
 def test_legacy_state_migrates_to_pruned_index(spark, tmp_path):
@@ -361,3 +343,28 @@ def test_prune_modes_interchangeable_on_one_state_dir(spark, tmp_path):
     assert v["d"] == ("ref_dup", "c")
     assert v["e"] == ("ref_dup", "a")
     assert v["f"][0] == "novel"
+
+
+def test_offline_prune_stops_at_newest_committed_keys_epoch(spark, tmp_path):
+    """Without ``below``, an fps epoch whose probe-key twin never
+    committed (a crash between the two writes) is left out of every
+    listing: the offline call answers exactly like ``below`` set to
+    that epoch."""
+    inp, state, ck = (str(tmp_path / d) for d in ("in", "state", "ck"))
+    os.makedirs(inp, exist_ok=True)
+    _write_wave(spark, inp, [("a", _avi("x"))])
+    _run_once(spark, inp, state, ck, prune=False)
+    _write_wave(spark, inp, [("c", _avi("y"))])
+    _run_once(spark, inp, state, ck, prune=False)
+    os.remove(os.path.join(state, "keys", "epoch=1", "_SUCCESS"))
+
+    batch = _fps_frame(spark, [("m", _avi("y", fps=25))])
+
+    def ids(below):
+        ref = prune_reference_fps(
+            spark, state, batch, VIDEO_FP_SCHEMA,
+            id_col="video_id", hashes_col="frame_hashes", below=below,
+        )
+        return sorted(r["video_id"] for r in ref.collect())
+
+    assert ids(None) == ids(1) == ["a"]

@@ -185,7 +185,7 @@ def test_compact_ingest_keys(spark, tmp_path):
     keys_dir = os.path.join(state, "keys")
 
     def key_set():
-        from ordinarydumpdeduplicator_spark.streaming.near_dup import (
+        from ordinarydumpdeduplicator_spark.streaming.state_store import (
             _committed_epochs,
         )
 

@@ -299,42 +299,6 @@ def test_pruned_state_novel_batch_reads_zero_index_rows(
     )
 
 
-def test_bad_n_shards_raises_before_query_starts(spark, tmp_path):
-    """A shard count the JVM shard expression cannot serve is rejected
-    at call time — not by an assertion inside the running query."""
-    import pytest
-
-    inp = str(tmp_path / "in")
-    os.makedirs(inp, exist_ok=True)
-    active = {q.id for q in spark.streams.active}
-    with pytest.raises(ValueError, match="n_shards"):
-        stream_near_dup_clusters(
-            spark, inp, str(tmp_path / "state"), str(tmp_path / "ck"),
-            n_shards=48,
-        )
-    assert {q.id for q in spark.streams.active} == active
-
-
-def test_caption_stream_leaves_no_cached_frames(spark, tiny_corpus,
-                                                tmp_path):
-    """No persisted frame (decoded features, bloom snapshot, probe
-    flags) outlives the batch that made it."""
-    pdf, _ = tiny_corpus
-    inp = str(tmp_path / "in")
-    state = str(tmp_path / "state")
-    ck = str(tmp_path / "ck")
-    os.makedirs(inp, exist_ok=True)
-    spark.catalog.clearCache()
-    for lo, hi in ((0, 80), (80, 120), (120, 160)):
-        to_spark_images(spark, pdf.iloc[lo:hi]).coalesce(1).write.mode(
-            "append"
-        ).parquet(inp)
-        stream_near_dup_clusters(
-            spark, inp, state, ck, prune_state=True
-        ).awaitTermination()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
 def test_pruned_state_exact_copy_batch_matches_full_scan(
     spark, tiny_corpus, tmp_path
 ):

@@ -1,0 +1,145 @@
+"""Contracts every stateful stream gets from streaming/state_store.py:
+bad parameters are rejected before a query starts, and no persisted
+frame (decoded batch, bloom snapshot, probe flags) outlives a query."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from ordinarydumpdeduplicator_spark.fixtures import codecs
+from ordinarydumpdeduplicator_spark.fixtures.generator import (
+    _make_pixels,
+    _rng,
+)
+from ordinarydumpdeduplicator_spark.operators.video_dedup import (
+    VIDEO_FP_SCHEMA,
+    video_fingerprints,
+)
+from ordinarydumpdeduplicator_spark.streaming.ingest_dedup import (
+    stream_ingest_dedup,
+)
+from ordinarydumpdeduplicator_spark.streaming.media_ingest import (
+    stream_media_novelty,
+)
+from ordinarydumpdeduplicator_spark.streaming.near_dup import (
+    stream_near_dup_clusters,
+)
+from tests.conftest import to_spark_images
+
+MEDIA_SCHEMA = "video_id string, bytes binary"
+DOCS_SCHEMA = "doc_id long, text string"
+
+
+def _avi(unit: str, fps: int = 10) -> bytes:
+    frames = [_make_pixels(_rng(3, "sst", unit, i), 32, 24) for i in range(8)]
+    return codecs.encode_avi_rgb(frames, fps=fps)
+
+
+def _start(stream: str, spark, inp: str, state: str, ck: str, **kw):
+    if stream == "caption":
+        return stream_near_dup_clusters(spark, inp, state, ck, **kw)
+    if stream == "media":
+        return stream_media_novelty(
+            spark, inp, state, ck,
+            fingerprint_fn=video_fingerprints,
+            input_schema=MEDIA_SCHEMA,
+            fp_schema=VIDEO_FP_SCHEMA,
+            **kw,
+        )
+    return stream_ingest_dedup(spark, inp, state, ck, **kw)
+
+
+@pytest.mark.parametrize("bad", [{"n_shards": 48}, {"bits_per_shard": 12}],
+                         ids=["n_shards", "bits_per_shard"])
+@pytest.mark.parametrize("stream", ["caption", "media", "ingest"])
+def test_bad_params_raise_before_query_starts(spark, tmp_path, stream,
+                                              bad):
+    """A shard count the JVM shard expression cannot serve, or a bloom
+    geometry the bloom rejects, fails at call time — not inside the
+    running query (or never, while pruning has not engaged)."""
+    inp = str(tmp_path / "in")
+    os.makedirs(inp, exist_ok=True)
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(ValueError, match=next(iter(bad))):
+        _start(stream, spark, inp, str(tmp_path / "state"),
+               str(tmp_path / "ck"), **bad)
+    assert {q.id for q in spark.streams.active} == active
+
+
+@pytest.mark.parametrize("stream", ["caption", "media", "ingest"])
+def test_stream_leaves_no_cached_frames(spark, tiny_corpus, tmp_path,
+                                        stream):
+    """No persisted frame (decoded batch, bloom snapshot, probe flags)
+    outlives the batch that made it, over three queries on one state
+    dir with the bloom snapshot probed from the second on."""
+    pdf, _ = tiny_corpus
+    if stream == "caption":
+        waves = [
+            to_spark_images(spark, pdf.iloc[lo:hi])
+            for lo, hi in ((0, 80), (80, 120), (120, 160))
+        ]
+        prune = {"prune_state": True}
+    elif stream == "media":
+        waves = [
+            spark.createDataFrame(rows, MEDIA_SCHEMA)
+            for rows in (
+                [("a", _avi("x")), ("c", _avi("y"))],
+                [("b", _avi("x", fps=25)), ("d", _avi("z"))],
+                [("e", _avi("y", fps=30)), ("f", _avi("w"))],
+            )
+        ]
+        prune = {"prune_index": True}
+    else:
+        waves = [
+            spark.createDataFrame(
+                [(w * 100 + i, f"text {i % 7 + 3 * w}") for i in range(20)],
+                DOCS_SCHEMA,
+            )
+            for w in range(3)
+        ]
+        prune = {}
+    inp = str(tmp_path / "in")
+    state = str(tmp_path / "state")
+    ck = str(tmp_path / "ck")
+    os.makedirs(inp, exist_ok=True)
+    spark.catalog.clearCache()
+    for wave in waves:
+        wave.coalesce(1).write.mode("append").parquet(inp)
+        _start(stream, spark, inp, state, ck, **prune).awaitTermination()
+    assert os.path.isdir(os.path.join(state, "blooms"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("stream", ["caption", "media", "ingest"])
+def test_restart_with_other_bloom_geometry_fails_loudly(spark, tiny_corpus,
+                                                        tmp_path, stream):
+    """A snapshot built with one bloom geometry is never probed with
+    another (keys would test bits the build never set, and duplicates
+    would pass as new): the batch fails with a parameter mismatch."""
+    pdf, _ = tiny_corpus
+    if stream == "caption":
+        waves = [to_spark_images(spark, pdf.iloc[lo:hi])
+                 for lo, hi in ((0, 60), (60, 90))]
+        prune = {"prune_state": True}
+    elif stream == "media":
+        waves = [spark.createDataFrame(rows, MEDIA_SCHEMA)
+                 for rows in ([("a", _avi("x"))], [("b", _avi("x", fps=25))])]
+        prune = {"prune_index": True}
+    else:
+        waves = [spark.createDataFrame([(w, "same text")], DOCS_SCHEMA)
+                 for w in range(2)]
+        prune = {}
+    inp = str(tmp_path / "in")
+    state = str(tmp_path / "state")
+    ck = str(tmp_path / "ck")
+    os.makedirs(inp, exist_ok=True)
+    waves[0].coalesce(1).write.mode("append").parquet(inp)
+    _start(stream, spark, inp, state, ck, bits_per_shard=1 << 12,
+           **prune).awaitTermination()
+    waves[1].coalesce(1).write.mode("append").parquet(inp)
+    q = _start(stream, spark, inp, state, ck, bits_per_shard=1 << 13,
+               **prune)
+    with pytest.raises(Exception, match="bloom parameter mismatch"):
+        q.awaitTermination()
