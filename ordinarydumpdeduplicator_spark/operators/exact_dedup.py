@@ -15,18 +15,32 @@ list would OOM, so the cluster id IS the min member id and membership
 stays row-wise) and NO sort: a window formulation would sort every row by
 the 64-char sha after the exchange, while the aggregate gets map-side
 partial combine. tests/test_plans.py pins the no-sort plan shape.
+
+The pipeline runs every exact-key family through ONE such aggregate,
+``key_groups``: each feature row becomes at most four ``(kind, key)``
+entries — the byte key (size, sha), the pixel key (w_actual, h_actual,
+pixel_sha), the normalized-caption key and the exact-phash key — and one
+``groupBy(kind, key)`` plus one join back yields the star edges of all four
+families and the caption/phash representatives that feed LSH banding
+(operators/lsh.py). ``exact_clusters``/``exact_edges``/``pixel_exact_edges``
+stay as the single-family reference implementations the tests compare it
+with.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _is_readable() -> Column:
+    return (F.col("size") >= 0) & F.col("sha").isNotNull()
 
 
 def readable(features: DataFrame) -> DataFrame:
     """P2/P3: drop Broken-sentinel rows (size<0 / missing sha) exactly as
     the reference's `blobInfo.Size >= 0` guard (DataControllerSimple.cs:265)."""
-    return features.filter((F.col("size") >= 0) & F.col("sha").isNotNull())
+    return features.filter(_is_readable())
 
 
 def exact_clusters(features: DataFrame, require_dupes: bool = True) -> DataFrame:
@@ -98,3 +112,103 @@ def pixel_exact_edges(features: DataFrame) -> DataFrame:
             F.lit("pixel_exact").alias("kind"),
         )
     )
+
+
+def _key_entry(kind: str, guard: Column, *parts: str, bands: Column | None = None) -> Column:
+    """One ``(kind, key, bands)`` entry, NULL where the family's guard fails.
+    The key parts are joined with ':'. Every part is non-null under its
+    guard and every part but the last is an integer, so the string key is
+    injective within a kind."""
+    key = F.concat_ws(":", *(F.col(p).cast("string") for p in parts))
+    return F.when(
+        guard,
+        F.struct(
+            F.lit(kind).alias("kind"),
+            key.alias("key"),
+            (bands if bands is not None else F.lit(None).cast("array<bigint>")).alias(
+                "bands"
+            ),
+        ),
+    )
+
+
+def key_groups(features: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Every exact-key family through ONE aggregate.
+
+    Returns ``(star, caption_reps, phash_reps)``:
+
+    - ``star`` (src, dst, kind): member -> min-member edges of every group
+      with more than one member, ``kind`` one of exact / pixel_exact /
+      caption_exact / phash_exact — the union of exact_edges,
+      pixel_exact_edges and the two LSH pre-grouping stars.
+    - ``caption_reps`` (id, bands): one row per distinct caption_sha, the
+      min member with its LSH band keys (identical captions carry
+      identical bands, so any_value is exact).
+    - ``phash_reps`` (id, phash): one row per distinct phash_v.
+
+    Each family keeps its own guard: readable bytes for ``exact``, a
+    decoded pixel buffer for ``pixel_exact``, a non-empty caption for
+    ``caption_exact`` (caption_sha and bands are null together), a decoded
+    phash for ``phash_exact``. Plan shape as exact_clusters: one exchange
+    on (kind, key) feeds the aggregate and the join probe side, so four
+    families cost one shuffle instead of four aggregate-and-join chains
+    (and the jobs each chain submits)."""
+    decoded = F.col("w_actual").isNotNull() & F.col("h_actual").isNotNull()
+    entries = (
+        # the star filter below implies a non-null id on the probe side;
+        # stating it here too keeps the aggregate side's plan identical,
+        # so both sides read ONE reused exchange
+        features.filter(F.col("image_id").isNotNull())
+        .select(
+            "image_id",
+            F.explode(
+                F.array(
+                    _key_entry("exact", _is_readable(), "size", "sha"),
+                    _key_entry(
+                        "pixel_exact",
+                        F.col("pixel_sha").isNotNull() & decoded,
+                        "w_actual",
+                        "h_actual",
+                        "pixel_sha",
+                    ),
+                    _key_entry(
+                        "caption_exact",
+                        F.col("caption_sha").isNotNull() & F.col("bands").isNotNull(),
+                        "caption_sha",
+                        bands=F.col("bands"),
+                    ),
+                    _key_entry(
+                        "phash_exact", F.col("phash_v").isNotNull(), "phash_v"
+                    ),
+                )
+            ).alias("e"),
+        )
+        .filter(F.col("e").isNotNull())
+        .select("image_id", "e.*")
+        .repartition("kind", "key")
+    )
+    groups = entries.groupBy("kind", "key").agg(
+        F.min("image_id").alias("mn"),
+        F.count(F.lit(1)).alias("n"),
+        F.any_value("bands").alias("bands"),
+    )
+    star = (
+        entries.select("image_id", "kind", "key")
+        .join(
+            groups.filter(F.col("n") > 1).select("kind", "key", "mn").hint("shuffle_hash"),
+            ["kind", "key"],
+        )
+        .filter(F.col("image_id") != F.col("mn"))
+        .select(
+            F.col("mn").alias("src"),
+            F.col("image_id").alias("dst"),
+            "kind",
+        )
+    )
+    caption_reps = groups.filter(F.col("kind") == "caption_exact").select(
+        F.col("mn").alias("id"), "bands"
+    )
+    phash_reps = groups.filter(F.col("kind") == "phash_exact").select(
+        F.col("mn").alias("id"), F.col("key").cast("bigint").alias("phash")
+    )
+    return star, caption_reps, phash_reps

@@ -11,7 +11,13 @@ reference's all-empty-files mega-group (Common/BlobInfo.cs:49-51):
    representative BEFORE banding, with linear star edges recording the
    collapsed clique. A 10^9-row hot caption ("photo") therefore contributes
    ONE representative to the LSH join instead of a quadratic mega-band —
-   skew is removed at the source, not salted around.
+   skew is removed at the source, not salted around. The fused chain
+   (``combined_candidates``, and the pipeline's edges stage) takes both
+   representative sets and both star families from the one key-group
+   aggregate shared with the byte and pixel keys
+   (operators/exact_dedup.key_groups); ``caption_representatives`` /
+   ``phash_representatives`` are the single-family versions behind
+   ``caption_candidates`` / ``phash_candidates``.
 2. **Bucket caps**: any remaining band bucket larger than ``bucket_cap``
    emits star edges (member -> bucket-min) instead of all pairs, and the
    overflow is observable in the returned stats frame (capped, not silent —
@@ -37,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .exact_dedup import key_groups
 
 
 DEFAULT_BUCKET_CAP = 256
@@ -232,6 +240,9 @@ def phash_representatives(features: DataFrame) -> tuple[DataFrame, DataFrame]:
     return reps, star
 
 
+PHASH_BAND_MODES = ("c2x16", "b8x8")
+
+
 def _block16(col, k: int):
     return F.shiftright(col, 16 * k).bitwiseAND(F.lit(0xFFFF))
 
@@ -295,12 +306,13 @@ def phash_candidates(
 PHASH_BAND_OFFSET = 64
 
 
-def combined_candidates(
-    features: DataFrame,
+def rep_candidates(
+    caption_reps: DataFrame,
+    phash_reps: DataFrame,
     phash_mode: str = "c2x16",
     bucket_cap: int = DEFAULT_BUCKET_CAP,
     materialize: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> DataFrame:
     """Both candidate families through ONE banding chain.
 
     Band rows of the caption MinHash family (band ids < 64) and the phash
@@ -315,14 +327,12 @@ def combined_candidates(
     executor counts (BENCH/BASELINE.md) and removes the need to overlap
     two chains with driver-side threads.
 
-    Returns (pairs, caption_star, phash_star) where pairs has columns
-    (src, dst, capped, from_caption, from_phash)."""
-    cap_reps, cap_star = caption_representatives(features)
-    ph_reps, ph_star = phash_representatives(features)
-    banded = caption_band_rows(cap_reps).unionByName(
-        phash_band_rows(ph_reps, phash_mode, band_offset=PHASH_BAND_OFFSET)
+    (caption reps (id, bands), phash reps (id, phash)) -> pairs with
+    columns (src, dst, capped, from_caption, from_phash)."""
+    banded = caption_band_rows(caption_reps).unionByName(
+        phash_band_rows(phash_reps, phash_mode, band_offset=PHASH_BAND_OFFSET)
     )
-    pairs = pairs_from_buckets(
+    return pairs_from_buckets(
         banded,
         bucket_cap=bucket_cap,
         materialize=materialize,
@@ -334,4 +344,26 @@ def combined_candidates(
         (F.col("min_band") < PHASH_BAND_OFFSET).alias("from_caption"),
         (F.col("max_band") >= PHASH_BAND_OFFSET).alias("from_phash"),
     )
-    return pairs, cap_star, ph_star
+
+
+def combined_candidates(
+    features: DataFrame,
+    phash_mode: str = "c2x16",
+    bucket_cap: int = DEFAULT_BUCKET_CAP,
+    materialize: bool = True,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Both candidate families from features: the representatives come
+    from the one key-group aggregate (exact_dedup.key_groups), the pairs
+    from ``rep_candidates``.
+
+    Returns (pairs, caption_star, phash_star) where pairs has columns
+    (src, dst, capped, from_caption, from_phash)."""
+    star, cap_reps, ph_reps = key_groups(features)
+    pairs = rep_candidates(
+        cap_reps, ph_reps, phash_mode, bucket_cap=bucket_cap, materialize=materialize
+    )
+    return (
+        pairs,
+        star.filter(F.col("kind") == "caption_exact"),
+        star.filter(F.col("kind") == "phash_exact"),
+    )

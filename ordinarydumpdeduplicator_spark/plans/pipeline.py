@@ -11,9 +11,18 @@ metrics row per stage (rows_out, wall seconds) — the north rule's
 the same writes target Iceberg tables (sources/catalog.py gates the
 format on classpath; sources/merge.py renders the row-level commits).
 
+Stage plumbing costs the write job and nothing more: the row count and the
+per-file ``_lineage.json`` come from the parquet FOOTERS of the files just
+written (one directory listing, no Spark job, no re-scan of the output),
+and the stage is read back with the written frame's schema, so no
+schema-inference job runs either. A resume checks every file's footer row
+count against the lineage record.
+
 Stages:
     features   one pass over `bytes` -> compact features (operators/features)
-    edges      exact star edges + LSH candidates + verification
+    edges      one key-group aggregate for the four exact-key star families
+               (operators/exact_dedup.key_groups) + LSH candidates from its
+               representatives + verification
     cc         connected components fixpoint
     clusters   final assignment incl. singletons + report frames
 """
@@ -25,13 +34,15 @@ import os
 import time
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.connected_components import connected_components
-from ..operators.exact_dedup import exact_edges, pixel_exact_edges, readable
+from ..operators.exact_dedup import key_groups, readable
 from ..operators.features import extract_features
-from ..operators.lsh import combined_candidates
+from ..operators.lsh import PHASH_BAND_MODES, rep_candidates
 from ..operators.verify import verify_caption_pairs, verify_phash_pairs
 
 
@@ -46,10 +57,43 @@ class PipelineConfig:
     metrics: list[dict] = field(default_factory=list)
 
 
+def _check_config(cfg: PipelineConfig) -> None:
+    """Reject bad parameters before any stage runs — an unknown band mode
+    would otherwise surface only after the features stage has decoded
+    every image and written its checkpoint."""
+    if cfg.phash_band_mode not in PHASH_BAND_MODES:
+        raise ValueError(
+            f"phash_band_mode must be one of {PHASH_BAND_MODES}, "
+            f"got {cfg.phash_band_mode!r}"
+        )
+    if cfg.bucket_cap < 2:
+        raise ValueError(f"bucket_cap must be >= 2, got {cfg.bucket_cap}")
+    if not 0 <= cfg.hamming_threshold <= 64:
+        raise ValueError(
+            f"hamming_threshold must be in [0, 64], got {cfg.hamming_threshold}"
+        )
+    if not 0 <= cfg.jaccard_threshold <= 1:
+        raise ValueError(
+            f"jaccard_threshold must be in [0, 1], got {cfg.jaccard_threshold}"
+        )
+
+
+def _partition_rows(path: str) -> dict[str, int]:
+    """Row count of every parquet part file in a stage directory, read
+    from the file footers: one listing and one footer read per file, no
+    Spark job."""
+    return {
+        fn: pq.read_metadata(os.path.join(path, fn)).num_rows
+        for fn in sorted(os.listdir(path))
+        if fn.endswith(".parquet") and not fn.startswith((".", "_"))
+    }
+
+
 class NearDupPipeline:
     def __init__(self, spark: SparkSession, config: PipelineConfig | None = None):
         self.spark = spark
         self.cfg = config or PipelineConfig()
+        _check_config(self.cfg)
 
     # ------------------------------------------------------------ plumbing
 
@@ -65,16 +109,20 @@ class NearDupPipeline:
         t0 = time.time()
         if path is not None:
             if os.path.exists(os.path.join(path, "_SUCCESS")):
+                # verify BEFORE the read: schema inference already opens a
+                # part file, and a damaged one must fail as a lineage error
+                n_files = self._verify_partition_lineage(stage, path)
                 df = self.spark.read.parquet(path)
                 self._record(stage, "resumed", None, time.time() - t0)
-                self._verify_partition_lineage(stage, path)
+                if n_files is not None:
+                    self.cfg.metrics[-1].update(n_files=n_files, lineage_verified=True)
                 return df
             df = build()
             df.write.mode("overwrite").parquet(path)
-            out = self.spark.read.parquet(path)
-            self._record(stage, "complete", out.count(), time.time() - t0)
-            self._write_partition_lineage(stage, path, out)
-            return out
+            per_file = _partition_rows(path)
+            self._record(stage, "complete", sum(per_file.values()), time.time() - t0)
+            self._write_partition_lineage(stage, path, per_file)
+            return self.spark.read.schema(df.schema).parquet(path)
         # cache-less mode: localCheckpoint, not cache() — the stage output
         # is materialized eagerly with its lineage CUT, and evicted blocks
         # spill to disk instead of silently RECOMPUTING the stage (for
@@ -87,58 +135,58 @@ class NearDupPipeline:
         self._record(stage, "complete", df.count(), time.time() - t0)
         return df
 
-    def _write_partition_lineage(self, stage: str, path: str, out: DataFrame) -> None:
+    def _write_partition_lineage(
+        self, stage: str, path: str, per_file: dict[str, int]
+    ) -> None:
         """Per-PARTITION lineage of the persisted stage (north rule): one
-        row per output parquet file with its row count, written as
+        row per output parquet file with its footer row count, written as
         ``_lineage.json`` inside the stage directory (the leading
         underscore hides it from Spark's parquet reader, like
         ``_SUCCESS``). A resume can verify each partition file it reads
         back against this record, and skew in the persisted stage is
-        observable per-file rather than only as a stage total."""
-        per_file = {
-            os.path.basename(r["file"]): r["rows"]
-            for r in out.groupBy(F.input_file_name().alias("file"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        }
-        # enumerate the directory too: zero-row partition files carry no
-        # rows for the aggregate but are still part of the stage layout
-        rec = sorted(
-            (
-                dict(file=fn, rows=per_file.get(fn, 0))
-                for fn in os.listdir(path)
-                if fn.endswith(".parquet") and not fn.startswith((".", "_"))
-            ),
-            key=lambda d: d["file"],
-        )
+        observable per-file rather than only as a stage total. Zero-row
+        part files are listed too: they are part of the stage layout."""
+        rec = [dict(file=fn, rows=n) for fn, n in per_file.items()]
         with open(os.path.join(path, "_lineage.json"), "w") as f:
             json.dump(dict(stage=stage, run_id=self.cfg.run_id, files=rec), f, indent=2)
         self.cfg.metrics[-1].update(
             n_files=len(rec),
-            max_file_rows=max((d["rows"] for d in rec), default=0),
+            max_file_rows=max(per_file.values(), default=0),
         )
 
-    def _verify_partition_lineage(self, stage: str, path: str) -> None:
+    def _verify_partition_lineage(self, stage: str, path: str) -> int | None:
         """On resume, check the stage directory still holds exactly the
-        partition files the lineage recorded — a truncated/partial copy
-        fails fast instead of silently resuming from missing partitions."""
+        partition files the lineage recorded, each with its recorded row
+        count (from the footer) — a truncated, partial or replaced copy
+        fails fast instead of silently resuming from wrong partitions.
+        Returns the verified file count (None: no lineage record)."""
         lin_path = os.path.join(path, "_lineage.json")
         if not os.path.exists(lin_path):
-            return  # stage predates lineage records; nothing to verify
+            return None  # stage predates lineage records; nothing to verify
         with open(lin_path) as f:
             lin = json.load(f)
-        expected = {d["file"] for d in lin["files"]}
-        actual = {
-            fn for fn in os.listdir(path)
-            if fn.endswith(".parquet") and not fn.startswith((".", "_"))
-        }
-        if expected != actual:
+        expected = {d["file"]: d["rows"] for d in lin["files"]}
+        try:
+            actual = _partition_rows(path)
+        except (OSError, pa.ArrowException) as e:
+            raise RuntimeError(
+                f"stage '{stage}' resume: a partition footer is unreadable, "
+                f"cannot check it against lineage ({e})"
+            ) from e
+        if expected.keys() != actual.keys():
             raise RuntimeError(
                 f"stage '{stage}' resume: partition files on disk do not "
-                f"match lineage (missing={sorted(expected - actual)[:5]}, "
-                f"unexpected={sorted(actual - expected)[:5]})"
+                f"match lineage (missing={sorted(expected.keys() - actual.keys())[:5]}, "
+                f"unexpected={sorted(actual.keys() - expected.keys())[:5]})"
             )
-        self.cfg.metrics[-1].update(n_files=len(actual), lineage_verified=True)
+        changed = sorted(fn for fn in expected if expected[fn] != actual[fn])
+        if changed:
+            raise RuntimeError(
+                f"stage '{stage}' resume: partition row counts do not match "
+                f"lineage ({[(fn, expected[fn], actual[fn]) for fn in changed[:5]]} "
+                f"as (file, recorded, on disk))"
+            )
+        return len(actual)
 
     def _record(self, stage: str, status: str, rows, wall: float) -> None:
         self.cfg.metrics.append(
@@ -166,10 +214,14 @@ class NearDupPipeline:
 
     def edges(self, images: DataFrame, features: DataFrame) -> DataFrame:
         def build() -> DataFrame:
-            ex = exact_edges(features)
-            px = pixel_exact_edges(features)
+            # ONE aggregate over (kind, key) gives the star edges of all
+            # four exact-key families (byte, pixel, caption, phash) and the
+            # caption/phash representatives the banding chain needs
+            # (operators/exact_dedup.key_groups) — one shuffle and its jobs
+            # instead of four aggregate-and-join chains.
+            star, cap_reps, ph_reps = key_groups(features)
             # BOTH candidate families run through one fused banding chain
-            # (operators/lsh.combined_candidates): one band-row union, one
+            # (operators/lsh.rep_candidates): one band-row union, one
             # bucket-stats aggregate, one materialization, one pair
             # self-join. Warm-JVM wall matches two serial per-family
             # chains (12.5s vs 13.0s at 4x2 executors / 320k rows) while
@@ -179,8 +231,9 @@ class NearDupPipeline:
             # fusing JVM shuffles with Python UDF stages double-books
             # every core with a task thread AND a Python worker (measured
             # ~2.4x edges wall).
-            pairs, cap_star, ph_star = combined_candidates(
-                features,
+            pairs = rep_candidates(
+                cap_reps,
+                ph_reps,
                 phash_mode=self.cfg.phash_band_mode,
                 bucket_cap=self.cfg.bucket_cap,
             )
@@ -188,11 +241,11 @@ class NearDupPipeline:
             # without the checkpoint each filter re-runs the pair
             # self-join. eager=False keeps the driver moving — the
             # candidate chain materializes INSIDE the stage's one write
-            # job, overlapping with the exact/pixel branches instead of
-            # blocking them behind a separate checkpoint job (the
-            # BlockManager's per-partition get-or-compute lock still
-            # guarantees the subtree computes once even with both verify
-            # branches pulling it concurrently)
+            # job, overlapping with the star branch instead of blocking
+            # it behind a separate checkpoint job (the BlockManager's
+            # per-partition get-or-compute lock still guarantees the
+            # subtree computes once even with both verify branches
+            # pulling it concurrently)
             pairs = pairs.localCheckpoint(eager=False)
             cap_near = verify_caption_pairs(
                 pairs.filter("from_caption").select("src", "dst"),
@@ -204,19 +257,14 @@ class NearDupPipeline:
                 features,
                 hamming_threshold=self.cfg.hamming_threshold,
             )
-            return (
-                ex.unionByName(px)
-                .unionByName(cap_star)
-                .unionByName(ph_star)
-                .unionByName(cap_near)
-                .unionByName(ph_near)
-            )
+            return star.unionByName(cap_near).unionByName(ph_near)
 
         return self._stage("edges", build)
 
     def components(self, edges: DataFrame) -> DataFrame:
         cc_stats: dict = {}
-        # the edges stage just counted its output — hand the count to the
+        # the edges stage already knows its row count (parquet footers, or
+        # the cache-less count) — hand it to the
         # small-graph cutover so it costs zero extra jobs (on resume the
         # stage row carries no count and cc falls back to its own precount)
         edge_rows = next(

@@ -171,6 +171,31 @@ def test_partition_lineage_written_and_verified(spark, tiny_images, tmp_path):
             _os.path.join(feat_dir, victim + ".bak"), _os.path.join(feat_dir, victim)
         )
 
+    # ...and when a same-named partition file was replaced by one with
+    # another row count (here: 1 row of the same schema)
+    import pyarrow.parquet as pq
+
+    with open(_os.path.join(feat_dir, "_lineage.json")) as f:
+        recorded = {d["file"]: d["rows"] for d in _json.load(f)["files"]}
+    victim = next(fn for fn, n in sorted(recorded.items()) if n > 1)
+    victim_path = _os.path.join(feat_dir, victim)
+    with open(victim_path, "rb") as f:
+        original = f.read()
+    pq.write_table(pq.read_table(victim_path).slice(0, 1), victim_path)
+    try:
+        cfg4 = PipelineConfig(checkpoint_dir=str(tmp_path), run_id="r1")
+        with pytest.raises(RuntimeError, match="lineage"):
+            NearDupPipeline(spark, cfg4).run(tiny_images)
+        # ...or truncated so that its footer is gone
+        with open(victim_path, "wb") as f:
+            f.write(original[: len(original) // 2])
+        cfg5 = PipelineConfig(checkpoint_dir=str(tmp_path), run_id="r1")
+        with pytest.raises(RuntimeError, match="lineage"):
+            NearDupPipeline(spark, cfg5).run(tiny_images)
+    finally:
+        with open(victim_path, "wb") as f:
+            f.write(original)
+
 
 def test_empty_input(spark):
     from ordinarydumpdeduplicator_spark.plans.pipeline import (
@@ -239,6 +264,95 @@ def test_combined_candidates_match_per_family(spark, small_images):
     assert {tuple(r) for r in pstar.collect()} == {
         tuple(r) for r in ph_star.collect()
     }
+
+    # the one key-group aggregate == the four per-family chains: star
+    # edges of all four kinds, and the representatives LSH bands
+    from ordinarydumpdeduplicator_spark.operators.exact_dedup import (
+        exact_edges,
+        key_groups,
+        pixel_exact_edges,
+    )
+    from ordinarydumpdeduplicator_spark.operators.lsh import (
+        caption_representatives,
+        phash_representatives,
+    )
+
+    star, kg_cap_reps, kg_ph_reps = key_groups(feats)
+    per_family = (
+        exact_edges(feats)
+        .unionByName(pixel_exact_edges(feats))
+        .unionByName(cap_star)
+        .unionByName(ph_star)
+    )
+    star_rows = [tuple(r) for r in star.select("src", "dst", "kind").collect()]
+    assert len(star_rows) == len(set(star_rows))
+    assert set(star_rows) == {
+        tuple(r) for r in per_family.select("src", "dst", "kind").collect()
+    }
+    assert {kind for _, _, kind in star_rows} == {
+        "exact", "pixel_exact", "caption_exact", "phash_exact"
+    }
+
+    def reps(df, col):
+        return {
+            (r.id, tuple(r[col]) if col == "bands" else r[col])
+            for r in df.select("id", col).collect()
+        }
+
+    assert reps(kg_cap_reps, "bands") == reps(
+        caption_representatives(feats)[0], "bands"
+    )
+    assert reps(kg_ph_reps, "phash") == reps(
+        phash_representatives(feats)[0], "phash"
+    )
+
+
+@pytest.mark.parametrize(
+    "field,bad",
+    [
+        ("phash_band_mode", "c4x16"),
+        ("bucket_cap", 1),
+        ("hamming_threshold", -1),
+        ("hamming_threshold", 65),
+        ("jaccard_threshold", -0.1),
+        ("jaccard_threshold", 1.5),
+    ],
+)
+def test_bad_config_raises_before_any_stage(spark, tiny_images, tmp_path, field, bad):
+    """A bad parameter fails at the API boundary, before the features
+    stage decodes anything or writes a checkpoint."""
+    import os as _os
+
+    ck = str(tmp_path / "ck")
+    cfg = PipelineConfig(checkpoint_dir=ck, run_id="r1", **{field: bad})
+    with pytest.raises(ValueError, match=field):
+        NearDupPipeline(spark, cfg).run(tiny_images)
+    assert not _os.path.exists(ck)
+
+
+# jobs of one checkpointed pass over tiny_images (all four stages); the
+# stage plumbing reads counts and lineage from parquet footers, and the
+# edges stage runs one key-group aggregate for the four exact-key families
+CHECKPOINTED_PASS_JOB_BUDGET = 17
+
+
+def test_checkpointed_pass_job_budget(spark, tiny_images, tmp_path):
+    """Regression guard on the fixed per-job cost of a pass: a stage that
+    goes back to re-scanning its output (counts, lineage, schema
+    inference) or an edge family that grows its own aggregate chain
+    shows up here as extra Spark jobs."""
+    sc = spark.sparkContext
+    group = f"job-budget-{tmp_path.name}"
+    cfg = PipelineConfig(checkpoint_dir=str(tmp_path), run_id="r1")
+    sc.setJobGroup(group, "checkpointed pass job budget")
+    try:
+        NearDupPipeline(spark, cfg).run(tiny_images)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert {m["status"] for m in cfg.metrics} == {"complete"}
+    assert n_jobs <= CHECKPOINTED_PASS_JOB_BUDGET, n_jobs
 
 
 def test_cc_precount_skipped_via_edge_count_hint(spark, tiny_images):

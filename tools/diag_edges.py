@@ -31,7 +31,7 @@ def main() -> None:
     from ordinarydumpdeduplicator_spark.operators.connected_components import (
         connected_components,
     )
-    from ordinarydumpdeduplicator_spark.operators.exact_dedup import exact_edges
+    from ordinarydumpdeduplicator_spark.operators.exact_dedup import key_groups
     from ordinarydumpdeduplicator_spark.operators.features import extract_features
     from ordinarydumpdeduplicator_spark.operators.lsh import (
         caption_candidates,
@@ -61,7 +61,12 @@ def main() -> None:
     feats = timed(
         "features", lambda: extract_features(images).localCheckpoint()
     )
-    ex = timed("exact_edges", lambda: exact_edges(feats).localCheckpoint())
+    # the pipeline's one key-group aggregate: star edges of all four
+    # exact-key families plus the caption/phash representatives
+    ex, _, _ = timed(
+        "key_groups",
+        lambda: [df.localCheckpoint() for df in key_groups(feats)],
+    )
     cap = timed(
         "caption_candidates",
         lambda: caption_candidates(feats)[0].localCheckpoint(),
@@ -102,7 +107,7 @@ def main() -> None:
     union = timed(
         "union_cache_count",
         lambda: capv.unionByName(phv)
-        .unionByName(ex.withColumnRenamed("kind", "kind"))
+        .unionByName(ex)
         .cache(),
     )
     t["n_edges"] = timed("union_count_action", lambda: union.count())
