@@ -33,8 +33,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+_READABLE = "size >= 0 AND sha IS NOT NULL"
+
+
 def _is_readable() -> Column:
-    return (F.col("size") >= 0) & F.col("sha").isNotNull()
+    return F.expr(_READABLE)
 
 
 def readable(features: DataFrame) -> DataFrame:
@@ -114,22 +117,41 @@ def pixel_exact_edges(features: DataFrame) -> DataFrame:
     )
 
 
-def _key_entry(kind: str, guard: Column, *parts: str, bands: Column | None = None) -> Column:
-    """One ``(kind, key, bands)`` entry, NULL where the family's guard fails.
-    The key parts are joined with ':'. Every part is non-null under its
-    guard and every part but the last is an integer, so the string key is
-    injective within a kind."""
-    key = F.concat_ws(":", *(F.col(p).cast("string") for p in parts))
-    return F.when(
-        guard,
-        F.struct(
-            F.lit(kind).alias("kind"),
-            key.alias("key"),
-            (bands if bands is not None else F.lit(None).cast("array<bigint>")).alias(
-                "bands"
-            ),
-        ),
+def _key_entry(
+    kind: str, guard: str, *parts: str, bands: str = "CAST(NULL AS ARRAY<BIGINT>)"
+) -> str:
+    """One ``(kind, key, bands)`` entry as SQL, NULL where the family's
+    guard fails. The key parts are joined with ':'. Every part is non-null
+    under its guard and every part but the last is an integer, so the
+    string key is injective within a kind."""
+    key = ", ".join(f"CAST({p} AS STRING)" for p in parts)
+    return (
+        f"CASE WHEN {guard} THEN named_struct("
+        f"'kind', '{kind}', 'key', concat_ws(':', {key}), 'bands', {bands}) END"
     )
+
+
+# Each family's guard: readable bytes, a decoded pixel buffer, a non-empty
+# caption (caption_sha and bands are null together), a decoded phash.
+_KEY_ENTRIES = ", ".join(
+    (
+        _key_entry("exact", _READABLE, "size", "sha"),
+        _key_entry(
+            "pixel_exact",
+            "pixel_sha IS NOT NULL AND w_actual IS NOT NULL AND h_actual IS NOT NULL",
+            "w_actual",
+            "h_actual",
+            "pixel_sha",
+        ),
+        _key_entry(
+            "caption_exact",
+            "caption_sha IS NOT NULL AND bands IS NOT NULL",
+            "caption_sha",
+            bands="bands",
+        ),
+        _key_entry("phash_exact", "phash_v IS NOT NULL", "phash_v"),
+    )
+)
 
 
 def key_groups(features: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -152,63 +174,38 @@ def key_groups(features: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     phash for ``phash_exact``. Plan shape as exact_clusters: one exchange
     on (kind, key) feeds the aggregate and the join probe side, so four
     families cost one shuffle instead of four aggregate-and-join chains
-    (and the jobs each chain submits)."""
-    decoded = F.col("w_actual").isNotNull() & F.col("h_actual").isNotNull()
+    (and the jobs each chain submits).
+
+    The expressions are SQL strings: the entry array is one call into the
+    JVM parser, not a few hundred py4j round trips for Column calls."""
     entries = (
         # the star filter below implies a non-null id on the probe side;
         # stating it here too keeps the aggregate side's plan identical,
         # so both sides read ONE reused exchange
-        features.filter(F.col("image_id").isNotNull())
-        .select(
-            "image_id",
-            F.explode(
-                F.array(
-                    _key_entry("exact", _is_readable(), "size", "sha"),
-                    _key_entry(
-                        "pixel_exact",
-                        F.col("pixel_sha").isNotNull() & decoded,
-                        "w_actual",
-                        "h_actual",
-                        "pixel_sha",
-                    ),
-                    _key_entry(
-                        "caption_exact",
-                        F.col("caption_sha").isNotNull() & F.col("bands").isNotNull(),
-                        "caption_sha",
-                        bands=F.col("bands"),
-                    ),
-                    _key_entry(
-                        "phash_exact", F.col("phash_v").isNotNull(), "phash_v"
-                    ),
-                )
-            ).alias("e"),
-        )
-        .filter(F.col("e").isNotNull())
-        .select("image_id", "e.*")
+        features.filter("image_id IS NOT NULL")
+        .selectExpr("image_id", f"explode(array({_KEY_ENTRIES})) AS e")
+        .filter("e IS NOT NULL")
+        .selectExpr("image_id", "e.*")
         .repartition("kind", "key")
     )
     groups = entries.groupBy("kind", "key").agg(
-        F.min("image_id").alias("mn"),
-        F.count(F.lit(1)).alias("n"),
-        F.any_value("bands").alias("bands"),
+        F.expr("min(image_id) AS mn"),
+        F.expr("count(1) AS n"),
+        F.expr("any_value(bands) AS bands"),
     )
     star = (
         entries.select("image_id", "kind", "key")
         .join(
-            groups.filter(F.col("n") > 1).select("kind", "key", "mn").hint("shuffle_hash"),
+            groups.filter("n > 1").select("kind", "key", "mn").hint("shuffle_hash"),
             ["kind", "key"],
         )
-        .filter(F.col("image_id") != F.col("mn"))
-        .select(
-            F.col("mn").alias("src"),
-            F.col("image_id").alias("dst"),
-            "kind",
-        )
+        .filter("image_id != mn")
+        .selectExpr("mn AS src", "image_id AS dst", "kind")
     )
-    caption_reps = groups.filter(F.col("kind") == "caption_exact").select(
-        F.col("mn").alias("id"), "bands"
+    caption_reps = groups.filter("kind = 'caption_exact'").selectExpr(
+        "mn AS id", "bands"
     )
-    phash_reps = groups.filter(F.col("kind") == "phash_exact").select(
-        F.col("mn").alias("id"), F.col("key").cast("bigint").alias("phash")
+    phash_reps = groups.filter("kind = 'phash_exact'").selectExpr(
+        "mn AS id", "CAST(key AS BIGINT) AS phash"
     )
     return star, caption_reps, phash_reps

@@ -94,11 +94,11 @@ def pairs_from_buckets(
     consumer — measured 3x wall on the edges stage at 160k rows. On a
     cluster the equivalent is a persisted stage table (plans/pipeline.py
     checkpoints whole stages the same way)."""
-    rows = banded.select(F.col(id_col).alias("id"), "band", "key")
+    rows = banded.selectExpr(f"`{id_col}` AS id", "band", "key")
     stats = (
         rows.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("id").alias("mn"))
-        .filter(F.col("n") >= 2)
+        .agg(F.expr("count(1) AS n"), F.expr("min(id) AS mn"))
+        .filter("n >= 2")
     )
     b = rows.join(stats, ["band", "key"])
     if materialize:
@@ -115,7 +115,7 @@ def pairs_from_buckets(
         # the downstream pairs frame — with pairs also lazy, everything
         # lands in one job and eagerness only adds a barrier.
         b = b.localCheckpoint(eager=False)
-    small = b.filter(F.col("n") <= bucket_cap).select("id", "band", "key")
+    small = b.filter(f"n <= {int(bucket_cap)}").select("id", "band", "key")
     # SHUFFLE_HASH hint: the checkpointed bucket frame carries no size
     # stats, so Catalyst happily BROADCASTS tens of millions of band rows
     # (single-threaded driver hash-relation build — measured 40s flat at
@@ -125,33 +125,19 @@ def pairs_from_buckets(
     a, c = small.alias("a"), small.hint("shuffle_hash").alias("b")
     p_small = (
         a.join(c, ["band", "key"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("src"),
-            F.col("b.id").alias("dst"),
-            F.lit(False).alias("capped"),
-            F.col("band"),
-        )
+        .where("a.id < b.id")
+        .selectExpr("a.id AS src", "b.id AS dst", "false AS capped", "band")
     )
-    p_big = (
-        b.filter((F.col("n") > bucket_cap) & (F.col("id") != F.col("mn")))
-        .select(
-            F.col("mn").alias("src"),
-            F.col("id").alias("dst"),
-            F.lit(True).alias("capped"),
-            F.col("band"),
-        )
+    p_big = b.filter(f"n > {int(bucket_cap)} AND id != mn").selectExpr(
+        "mn AS src", "id AS dst", "true AS capped", "band"
     )
-    aggs = [F.max("capped").alias("capped")]
+    aggs = [F.expr("max(capped) AS capped")]
     if with_band_range:
         # which band ids produced the pair — lets a caller that unioned
         # several banding FAMILIES into one frame (disjoint band-id
         # ranges, see combined_candidates) route each pair to its
         # family-specific verification without a per-family join chain
-        aggs += [
-            F.min("band").alias("min_band"),
-            F.max("band").alias("max_band"),
-        ]
+        aggs += [F.expr("min(band) AS min_band"), F.expr("max(band) AS max_band")]
     return (
         p_small.unionByName(p_big).groupBy("src", "dst").agg(*aggs)
     )
@@ -202,7 +188,7 @@ def caption_band_rows(reps: DataFrame) -> DataFrame:
     (functions/minhash.band_keys_from_mins) — per-row JVM slice hashing
     here was measured at ~8s per evaluation on 17M band rows; the explode
     of a ready array is negligible."""
-    return reps.select("id", F.posexplode("bands").alias("band", "key"))
+    return reps.selectExpr("id", "posexplode(bands) AS (band, key)")
 
 
 def caption_candidates(
@@ -243,8 +229,8 @@ def phash_representatives(features: DataFrame) -> tuple[DataFrame, DataFrame]:
 PHASH_BAND_MODES = ("c2x16", "b8x8")
 
 
-def _block16(col, k: int):
-    return F.shiftright(col, 16 * k).bitwiseAND(F.lit(0xFFFF))
+def _block16(col: str, k: int) -> str:
+    return f"(shiftright({col}, {16 * k}) & 65535)"
 
 
 def phash_band_rows(
@@ -260,29 +246,26 @@ def phash_band_rows(
     band_offset shifts the band ids into a range disjoint from the
     caption MinHash bands so both families can share ONE banded frame
     (combined_candidates)."""
-    p = F.col("phash")
+    # SQL strings: the entry array is one parser call on the JVM, not a
+    # few hundred py4j round trips for Column calls
     if mode == "c2x16":
         combos = [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)]
         entries = [
-            F.struct(
-                F.lit(band_offset + ci).alias("band"),
-                (_block16(p, i) * F.lit(65536) + _block16(p, j)).alias("key"),
-            )
+            f"named_struct('band', {band_offset + ci}, 'key', "
+            f"{_block16('phash', i)} * 65536 + {_block16('phash', j)})"
             for ci, (i, j) in enumerate(combos)
         ]
     elif mode == "b8x8":
         entries = [
-            F.struct(
-                F.lit(band_offset + k).alias("band"),
-                F.shiftright(p, 8 * k).bitwiseAND(F.lit(0xFF)).cast("long").alias("key"),
-            )
+            f"named_struct('band', {band_offset + k}, 'key', "
+            f"CAST(shiftright(phash, {8 * k}) & 255 AS BIGINT))"
             for k in range(8)
         ]
     else:
         raise ValueError(f"unknown phash band mode: {mode}")
-    return reps.select(
-        "id", F.explode(F.array(*entries)).alias("e")
-    ).select("id", F.col("e.band").alias("band"), F.col("e.key").alias("key"))
+    return reps.selectExpr(
+        "id", f"explode(array({', '.join(entries)})) AS e"
+    ).selectExpr("id", "e.band AS band", "e.key AS key")
 
 
 def phash_candidates(
@@ -337,12 +320,12 @@ def rep_candidates(
         bucket_cap=bucket_cap,
         materialize=materialize,
         with_band_range=True,
-    ).select(
+    ).selectExpr(
         "src",
         "dst",
         "capped",
-        (F.col("min_band") < PHASH_BAND_OFFSET).alias("from_caption"),
-        (F.col("max_band") >= PHASH_BAND_OFFSET).alias("from_phash"),
+        f"min_band < {PHASH_BAND_OFFSET} AS from_caption",
+        f"max_band >= {PHASH_BAND_OFFSET} AS from_phash",
     )
 
 

@@ -286,6 +286,11 @@ def tier_drift(
     )
 
 
+def _sql_str(s: str) -> str:
+    """A SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 # Image-pipeline edge kinds in precedence order (strongest identity first):
 # byte-identical file, identical decoded pixels, identical caption text,
 # identical pHash sketch, verified pixel near-dup, verified caption
@@ -320,30 +325,28 @@ def tier_attribution(
     AQE can broadcast whenever the dup set is small."""
     # unknown kinds (a future edge family, or an edges checkpoint from a
     # newer run) rank BELOW every known tier as 'other' — array_position
-    # returns 0 for them and element_at(_, 0) would throw
-    labels = F.array(*[F.lit(k) for k in precedence + ["other"]])
-    pos = F.array_position(labels, F.col("kind"))
-    idx = F.when(pos > 0, pos).otherwise(F.lit(len(precedence) + 1))
+    # returns 0 for them and element_at(_, 0) would throw. SQL strings:
+    # one parser call per projection instead of py4j round trips for a
+    # Column per label.
+    labels = "array(" + ", ".join(_sql_str(k) for k in precedence + ["other"]) + ")"
+    pos = f"array_position({labels}, kind)"
+    idx = f"CASE WHEN {pos} > 0 THEN {pos} ELSE {len(precedence) + 1} END AS p"
+    col = f"`{id_col}`"
     touched = (
-        edges.select(F.col("src").alias(id_col), idx.alias("p"))
-        .unionByName(edges.select(F.col("dst").alias(id_col), idx.alias("p")))
+        edges.selectExpr(f"src AS {col}", idx)
+        .unionByName(edges.selectExpr(f"dst AS {col}", idx))
         .groupBy(id_col)
-        .agg(F.min("p").alias("p"))
-        .select(
-            id_col,
-            F.element_at(labels, F.col("p").cast("int")).alias("_tier"),
-        )
+        .agg(F.expr("min(p) AS p"))
+        .selectExpr(col, f"element_at({labels}, CAST(p AS INT)) AS _tier")
     )
     # `touched` is edge-endpoint-sized; shuffle_hash avoids Catalyst's
     # stats-blind SortMergeJoin (which sorts the corpus side), and AQE
     # still upgrades to broadcast at runtime when the dup set is small
-    return clusters.join(touched.hint("shuffle_hash"), id_col, "left").select(
-        id_col,
+    return clusters.join(touched.hint("shuffle_hash"), id_col, "left").selectExpr(
+        col,
         "cluster_id",
-        F.when(~F.col("is_dup"), F.lit("unique"))
-        .when(F.col(id_col) == F.col("cluster_id"), F.lit("canonical"))
-        .otherwise(F.coalesce("_tier", F.lit("unique")))
-        .alias("tier"),
+        f"CASE WHEN NOT is_dup THEN 'unique' WHEN {col} = cluster_id THEN 'canonical' "
+        "ELSE coalesce(_tier, 'unique') END AS tier",
     )
 
 
@@ -392,40 +395,35 @@ def modality_agreement(clusters: DataFrame, edges: DataFrame) -> DataFrame:
 
     Reference analogue: none (the reference has one evidence kind —
     byte hash); beyond-reference multimodal surface, SURVEY §2.12."""
-    fam = F.create_map(
-        *[F.lit(x) for kv in MODALITY_OF_KIND.items() for x in kv]
-    )[F.col("kind")]
-    halves = edges.select(
-        F.col("src").alias("image_id"), fam.alias("fam")
-    ).unionByName(
-        edges.select(F.col("dst").alias("image_id"), fam.alias("fam"))
+    fam = (
+        "map("
+        + ", ".join(_sql_str(x) for kv in MODALITY_OF_KIND.items() for x in kv)
+        + ")[kind] AS fam"
+    )
+    halves = edges.selectExpr("src AS image_id", fam).unionByName(
+        edges.selectExpr("dst AS image_id", fam)
     )
     touched = halves.groupBy("image_id").agg(
-        F.max(F.col("fam") == "file").alias("has_file"),
-        F.max(F.col("fam") == "image").alias("has_image"),
-        F.max(F.col("fam") == "caption").alias("has_caption"),
+        F.expr("max(fam = 'file') AS has_file"),
+        F.expr("max(fam = 'image') AS has_image"),
+        F.expr("max(fam = 'caption') AS has_caption"),
+    )
+    file, image, caption = (
+        f"coalesce(has_{m}, false)" for m in ("file", "image", "caption")
     )
     agreement = (
-        F.when(~F.col("is_dup"), F.lit("unique"))
-        .when(F.coalesce("has_file", F.lit(False)), F.lit("file"))
-        .when(
-            F.coalesce("has_image", F.lit(False))
-            & F.coalesce("has_caption", F.lit(False)),
-            F.lit("both"),
-        )
-        .when(F.coalesce("has_image", F.lit(False)), F.lit("image_only"))
-        .when(
-            F.coalesce("has_caption", F.lit(False)), F.lit("caption_only")
-        )
-        .otherwise(F.lit("other"))
+        f"CASE WHEN NOT is_dup THEN 'unique' WHEN {file} THEN 'file' "
+        f"WHEN {image} AND {caption} THEN 'both' "
+        f"WHEN {image} THEN 'image_only' WHEN {caption} THEN 'caption_only' "
+        "ELSE 'other' END AS agreement"
     )
-    return clusters.join(touched, "image_id", "left").select(
+    return clusters.join(touched, "image_id", "left").selectExpr(
         "image_id",
         "cluster_id",
-        F.coalesce("has_file", F.lit(False)).alias("has_file"),
-        F.coalesce("has_image", F.lit(False)).alias("has_image"),
-        F.coalesce("has_caption", F.lit(False)).alias("has_caption"),
-        agreement.alias("agreement"),
+        f"{file} AS has_file",
+        f"{image} AS has_image",
+        f"{caption} AS has_caption",
+        agreement,
     )
 
 

@@ -30,24 +30,22 @@ LCS_RATIO = 0.6
 HAMMING_THRESHOLD = 8
 
 
+def _double(x: float) -> str:
+    """A SQL DOUBLE literal (a bare ``0.5`` parses as DECIMAL)."""
+    return f"{float(x)!r}D"
+
+
 def verify_phash_pairs(
     pairs: DataFrame, features: DataFrame, hamming_threshold: int = HAMMING_THRESHOLD
 ) -> DataFrame:
     """pairs(src,dst) + features(image_id, phash_v) -> verified edges."""
-    ph = features.select(
-        F.col("image_id"), F.col("phash_v")
+    return (
+        pairs.join(features.selectExpr("image_id AS src", "phash_v AS ph_a"), "src")
+        .join(features.selectExpr("image_id AS dst", "phash_v AS ph_b"), "dst")
+        .withColumn("hamming", F.expr("bit_count(ph_a ^ ph_b)"))
+        .filter(f"hamming <= {_double(hamming_threshold)}")
+        .selectExpr("src", "dst", "'image_near' AS kind")
     )
-    out = (
-        pairs.join(ph.withColumnRenamed("image_id", "src").withColumnRenamed("phash_v", "ph_a"), "src")
-        .join(ph.withColumnRenamed("image_id", "dst").withColumnRenamed("phash_v", "ph_b"), "dst")
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))),
-        )
-        .filter(F.col("hamming") <= hamming_threshold)
-        .select("src", "dst", F.lit("image_near").alias("kind"))
-    )
-    return out
 
 
 def verify_caption_pairs(
@@ -64,36 +62,18 @@ def verify_caption_pairs(
     count, all of it one task running LCS). Explicitly repartition the
     pairs across the cluster before the UDF stage: the shuffle is a few MB,
     the unlocked parallelism is the entire verify cost."""
-    caps = images.select("image_id", "caption")
     n_parts = pairs.sparkSession.sparkContext.defaultParallelism
     joined = (
         pairs.repartition(n_parts, "src", "dst")
-        .join(
-            caps.withColumnRenamed("image_id", "src").withColumnRenamed(
-                "caption", "cap_a"
-            ),
-            "src",
-        )
-        .join(
-            caps.withColumnRenamed("image_id", "dst").withColumnRenamed(
-                "caption", "cap_b"
-            ),
-            "dst",
-        )
+        .join(images.selectExpr("image_id AS src", "caption AS cap_a"), "src")
+        .join(images.selectExpr("image_id AS dst", "caption AS cap_b"), "dst")
         .withColumn("jaccard", jaccard_udf("cap_a", "cap_b"))
         .withColumn("lcs_len", lcs_udf("cap_a", "cap_b"))
         .withColumn(
             "lcs_ratio",
-            F.col("lcs_len")
-            / F.greatest(
-                F.least(F.length("cap_a"), F.length("cap_b")), F.lit(1)
-            ),
+            F.expr("lcs_len / greatest(least(length(cap_a), length(cap_b)), 1)"),
         )
     )
-    return (
-        joined.filter(
-            (F.col("jaccard") >= jaccard_threshold)
-            | (F.col("lcs_ratio") >= lcs_ratio)
-        )
-        .select("src", "dst", F.lit("caption_near").alias("kind"))
-    )
+    return joined.filter(
+        f"jaccard >= {_double(jaccard_threshold)} OR lcs_ratio >= {_double(lcs_ratio)}"
+    ).selectExpr("src", "dst", "'caption_near' AS kind")

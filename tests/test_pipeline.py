@@ -232,6 +232,35 @@ def test_undecodable_and_missing_payloads(spark):
     assert cl.filter("is_dup").count() == 0
 
 
+def test_verify_thresholds_render_as_numeric_sql(spark):
+    """The verify filters are SQL strings: int and float thresholds both
+    compare numerically, inclusive at the bound."""
+    from ordinarydumpdeduplicator_spark.operators.verify import (
+        verify_caption_pairs,
+        verify_phash_pairs,
+    )
+
+    pairs = spark.createDataFrame([("a", "b"), ("a", "c")], "src string, dst string")
+    feats = spark.createDataFrame(
+        [("a", 0), ("b", 1), ("c", 7)], "image_id string, phash_v bigint"
+    )  # hamming a-b = 1, a-c = 3
+
+    def near(df):
+        return sorted((r.src, r.dst, r.kind) for r in df.collect())
+
+    assert near(verify_phash_pairs(pairs, feats, 0)) == []
+    assert near(verify_phash_pairs(pairs, feats, 1)) == [("a", "b", "image_near")]
+    assert near(verify_phash_pairs(pairs, feats, 2.5)) == [("a", "b", "image_near")]
+    assert len(near(verify_phash_pairs(pairs, feats, 3))) == 2
+    caps = spark.createDataFrame(
+        [("a", "red fox jumps high"), ("b", "red fox jumps high"), ("c", "blue sky")],
+        "image_id string, caption string",
+    )
+    assert near(verify_caption_pairs(pairs, caps, jaccard_threshold=1, lcs_ratio=1)) == [
+        ("a", "b", "caption_near")
+    ]
+
+
 def test_combined_candidates_match_per_family(spark, small_images):
     """The fused banding chain (one band-row union, one bucket pass) must
     produce exactly the per-family candidate pair sets, with correct

@@ -419,3 +419,23 @@ def test_embedding_dup_pairs_guard(spark):
         embedding_dup_pairs(df, max_rows=100).count()
     # cap disabled -> runs (101 identical unit vectors => all pairs)
     assert embedding_dup_pairs(df, max_rows=0).count() == 101 * 100 // 2
+
+
+def test_tier_attribution_quotes_labels_and_id_column(spark):
+    """The attribution projections are SQL strings: precedence labels with
+    a quote or a backslash and an id column whose name needs backquotes
+    come through unchanged."""
+    from ordinarydumpdeduplicator_spark.operators.tiers import tier_attribution
+
+    clusters = spark.createDataFrame(
+        [("a", "a", True), ("b", "a", True), ("c", "a", True), ("d", "d", False)],
+        "`seg id` string, cluster_id string, is_dup boolean",
+    )
+    edges = spark.createDataFrame(
+        [("a", "b", "it's"), ("a", "c", "back\\slash")],
+        "src string, dst string, kind string",
+    )
+    out = tier_attribution(clusters, edges, ["it's", "back\\slash"], id_col="seg id")
+    assert out.columns == ["seg id", "cluster_id", "tier"]
+    rows = {r["seg id"]: r.tier for r in out.collect()}
+    assert rows == {"a": "canonical", "b": "it's", "c": "back\\slash", "d": "unique"}
