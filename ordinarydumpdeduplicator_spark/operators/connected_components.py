@@ -38,13 +38,12 @@ def _canon(edges: DataFrame, n_part: int | None = None) -> DataFrame:
     return out.distinct()
 
 
-def _large_star(edges: DataFrame, n_part: int | None = None) -> DataFrame:
+def _large_star(edges: DataFrame, n_part: int) -> DataFrame:
     """For each node u: attach strictly-larger neighbors to m = min(N(u) ∪ u)."""
     sym = edges.select("u", "v").union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if n_part is not None:
-        # one explicit exchange on u, REUSED by both the aggregate and the
-        # join below (identical exchange subtree -> ReusedExchange)
-        sym = sym.repartition(n_part, "u")
+    # one explicit exchange on u, REUSED by both the aggregate and the
+    # join below (identical exchange subtree -> ReusedExchange)
+    sym = sym.repartition(n_part, "u")
     m = (
         sym.groupBy("u")
         .agg(F.least(F.min("v"), F.first("u")).alias("m"))
@@ -56,14 +55,12 @@ def _large_star(edges: DataFrame, n_part: int | None = None) -> DataFrame:
     )
 
 
-def _small_star(edges: DataFrame, n_part: int | None = None) -> DataFrame:
+def _small_star(edges: DataFrame, n_part: int) -> DataFrame:
     """For each node u (over edges directed larger->smaller): attach all
     smaller-or-equal neighbors and u itself to m = min(N(u) ∪ u)."""
     directed = edges.select(
         F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    )
-    if n_part is not None:
-        directed = directed.repartition(n_part, "u")
+    ).repartition(n_part, "u")
     m = directed.groupBy("u").agg(F.min("v").alias("m"))
     joined = directed.join(m, "u")
     out = joined.select(F.col("v").alias("src"), F.col("m").alias("dst")).union(
@@ -73,6 +70,7 @@ def _small_star(edges: DataFrame, n_part: int | None = None) -> DataFrame:
 
 
 DRIVER_EDGE_THRESHOLD = 2_000_000
+MAX_ROUNDS = 50  # O(log^2 n) rounds converge far below this
 
 
 def _driver_union_find(
@@ -147,8 +145,6 @@ def _uf_from_pandas(
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 50,
-    checkpoint: bool = True,
     stats: dict | None = None,
     driver_threshold: int = DRIVER_EDGE_THRESHOLD,
     n_edges_hint: int | None = None,
@@ -188,7 +184,7 @@ def connected_components(
     the hint is an upper bound on proper canonical edges (self-loops and
     duplicates only shrink it), so the cutover stays conservative."""
     spark = edges.sparkSession
-    if checkpoint and driver_threshold > 0:
+    if driver_threshold > 0:
         # Cheap pre-check on the RAW (non-deduplicated) edge frame: a
         # map-only count and, below threshold, a map-only collect — the
         # small-graph path then never pays the _canon shuffle +
@@ -224,19 +220,15 @@ def connected_components(
                 edges.sparkSession, probe, stats,
                 collect_sec=_time.time() - t_pre,
             )
-    e = _canon(edges)
-    if checkpoint:
-        e = e.localCheckpoint(eager=False)
-    n_edges = e.count() if checkpoint else None  # also materializes the cut
-    if n_edges is not None and 0 < n_edges <= driver_threshold:
+    e = _canon(edges).localCheckpoint(eager=False)
+    n_edges = e.count()  # also materializes the cut
+    if 0 < n_edges <= driver_threshold:
         return _driver_union_find(e, n_edges, stats)
-    loop_p = None
-    if n_edges is not None:
-        cap = max(4, spark.sparkContext.defaultParallelism)
-        loop_p = int(max(4, min(n_edges // 200_000 + 1, cap)))
+    cap = max(4, spark.sparkContext.defaultParallelism)
+    loop_p = int(max(4, min(n_edges // 200_000 + 1, cap)))
     prev_sig = None
     rounds = 0
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         rounds += 1
         # ONE distinct per round: small-star re-canonicalizes directions
         # itself (greatest/least), so the large-star output can flow in
@@ -246,11 +238,10 @@ def connected_components(
         e = _canon(_small_star(_large_star(e, loop_p).select(
             F.col("src").alias("u"), F.col("dst").alias("v")
         ), loop_p), loop_p)
-        if checkpoint:
-            # lazy: the signature aggregation below is the ONE action
-            # per round — it materializes the checkpoint as a side
-            # effect (two jobs per round measured ~40% of fixpoint wall)
-            e = e.localCheckpoint(eager=False)
+        # lazy: the signature aggregation below is the ONE action per
+        # round — it materializes the checkpoint as a side effect (two
+        # jobs per round measured ~40% of fixpoint wall)
+        e = e.localCheckpoint(eager=False)
         # fixpoint: the edge set is stable — order-insensitive signature
         # via count + bit_xor of row hashes (xor is overflow-free under
         # ANSI mode and collision-safe here: edges are distinct rows)
@@ -264,7 +255,7 @@ def connected_components(
         prev_sig = cur_sig
     else:
         raise RuntimeError(
-            f"connected_components: no fixpoint in {max_iter} rounds"
+            f"connected_components: no fixpoint in {MAX_ROUNDS} rounds"
         )
     if stats is not None:
         stats.update(
@@ -310,7 +301,6 @@ def numeric_min_components(edges: DataFrame, out_id: str = "id") -> DataFrame:
 def incremental_clusters(
     prev_assign: DataFrame,
     new_edges: DataFrame,
-    driver_threshold: int = DRIVER_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Re-cluster ONLY the components touched by ``new_edges``.
 
@@ -346,8 +336,7 @@ def incremental_clusters(
         F.col("cluster_id").alias("src"), F.col("image_id").alias("dst")
     ).filter(F.col("src") != F.col("dst"))
     sub = connected_components(
-        new_edges.select("src", "dst").unionByName(star_edges),
-        driver_threshold=driver_threshold,
+        new_edges.select("src", "dst").unionByName(star_edges)
     )
     untouched = prev_assign.join(
         F.broadcast(affected), "cluster_id", "left_anti"

@@ -8,13 +8,15 @@ Reproduces ``DataControllerSimple.GetDuplicates``
     -> group by content key (size, sha)     (O1, :252-285)
     -> HAVING count > 1                     (O2, :288-301)
 
-expressed as a hash-aggregate over the content key plus an equi-join back
+expressed as an aggregate over the content key plus an equi-join back
 to the rows — no collect_list of members (the reference builds
 `BlobInfo -> set<File>` dictionaries; at 10^12 rows a per-group member
 list would OOM, so the cluster id IS the min member id and membership
-stays row-wise) and NO sort: a window formulation would sort every row by
-the 64-char sha after the exchange, while the aggregate gets map-side
-partial combine. tests/test_plans.py pins the no-sort plan shape.
+stays row-wise) and no window: the aggregate combines map side before
+the exchange, a window would shuffle every row. Spark 4.1 plans ``min``
+over the string id as a SortAggregate, so the group keys are sorted
+within each partition on both sides of the exchange.
+tests/test_plans.py pins that no ``bytes`` column enters the exchange.
 
 The pipeline runs every exact-key family through ONE such aggregate,
 ``key_groups``: each feature row becomes at most four ``(kind, key)``
@@ -53,11 +55,12 @@ def exact_clusters(features: DataFrame, require_dupes: bool = True) -> DataFrame
     require_dupes (HAVING n>1) singletons are dropped — duplicate groups
     only, as GetDuplicates returns (DataControllerSimple.cs:288-301).
 
-    Plan shape: hash-aggregate group stats + equi-join back, instead of a
-    window — a window would SORT every row by the 64-char sha string after
-    the exchange. The explicit repartition on the content key feeds both
-    the aggregate and the join probe side from ONE exchange (scan + sha
-    run once); shuffle_hash keeps the join sort-free."""
+    Plan shape: aggregate group stats + equi-join back, instead of a
+    window — the aggregate combines map side (a SortAggregate in Spark
+    4.1, ``min`` over a string id). The explicit repartition on the
+    content key feeds both the aggregate and the join probe side from ONE
+    exchange (scan + sha run once); shuffle_hash keeps the join
+    sort-free."""
     rows = readable(features).select("image_id", "size", "sha").repartition(
         "size", "sha"
     )
@@ -96,7 +99,7 @@ def pixel_exact_edges(features: DataFrame) -> DataFrame:
     encoder metadata. No reference analogue — the reference only ever
     hashes raw bytes (Common/FsUtils.cs:39-54); for an image corpus the
     pixel identity is the operationally useful exact key. Same
-    hash-agg + equi-join shape as exact_clusters (no sort on the key)."""
+    aggregate + equi-join shape as exact_clusters."""
     rows = features.filter(F.col("pixel_sha").isNotNull()).select(
         "image_id", "w_actual", "h_actual", "pixel_sha"
     ).repartition("w_actual", "h_actual", "pixel_sha")

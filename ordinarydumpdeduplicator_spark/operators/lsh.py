@@ -50,6 +50,17 @@ from .exact_dedup import key_groups
 DEFAULT_BUCKET_CAP = 256
 
 
+def check_caption_params(bucket_cap: int, jaccard_threshold: float) -> None:
+    """Reject caption near-dup parameters no run can serve — the batch
+    pipeline and the caption stream both call this before any work."""
+    if bucket_cap < 2:
+        raise ValueError(f"bucket_cap must be >= 2, got {bucket_cap}")
+    if not 0 <= jaccard_threshold <= 1:
+        raise ValueError(
+            f"jaccard_threshold must be in [0, 1], got {jaccard_threshold}"
+        )
+
+
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Small-input guard for expensive Arrow-UDF stages.
 
@@ -102,18 +113,15 @@ def pairs_from_buckets(
     )
     b = rows.join(stats, ["band", "key"])
     if materialize:
-        # LAZY cut: the checkpoint still guarantees b's subtree computes
-        # once for its three consumers (the BlockManager's per-partition
-        # get-or-compute lock dedupes concurrent pulls within the first
-        # consuming job), but the driver is not blocked on a separate
-        # materialization job — b computes INSIDE whichever job consumes
-        # the pairs first, overlapping with that job's other branches.
-        # Measured at 320k rows / 4x2 executors (full edges stage, warm):
-        # eager 16.2s, lazy 15.5s, no checkpoint at all 21.6s (the 3
-        # consumers recompute the band DAG). An earlier eager-vs-lazy gap
-        # (34s vs 11s on 17M band rows) predates the lazy checkpoint of
-        # the downstream pairs frame — with pairs also lazy, everything
-        # lands in one job and eagerness only adds a barrier.
+        # the checkpoint guarantees b's subtree computes once for its
+        # three consumers (the BlockManager's per-partition
+        # get-or-compute lock dedupes concurrent pulls). Under AQE the
+        # call runs every shuffle stage of b's subtree right here, as its
+        # own SQL execution; eager=False only defers the final,
+        # shuffle-free stage to the first consuming job. Measured at
+        # 320k rows / 4x2 executors (full edges stage, warm): eager
+        # 16.2s, lazy 15.5s, no checkpoint at all 21.6s (the 3 consumers
+        # recompute the band DAG).
         b = b.localCheckpoint(eager=False)
     small = b.filter(f"n <= {int(bucket_cap)}").select("id", "band", "key")
     # SHUFFLE_HASH hint: the checkpointed bucket frame carries no size

@@ -42,7 +42,11 @@ from pyspark.sql import functions as F
 from ..operators.connected_components import connected_components
 from ..operators.exact_dedup import key_groups, readable
 from ..operators.features import extract_features
-from ..operators.lsh import PHASH_BAND_MODES, rep_candidates
+from ..operators.lsh import (
+    PHASH_BAND_MODES,
+    check_caption_params,
+    rep_candidates,
+)
 from ..operators.verify import verify_caption_pairs, verify_phash_pairs
 
 
@@ -66,15 +70,10 @@ def _check_config(cfg: PipelineConfig) -> None:
             f"phash_band_mode must be one of {PHASH_BAND_MODES}, "
             f"got {cfg.phash_band_mode!r}"
         )
-    if cfg.bucket_cap < 2:
-        raise ValueError(f"bucket_cap must be >= 2, got {cfg.bucket_cap}")
+    check_caption_params(cfg.bucket_cap, cfg.jaccard_threshold)
     if not 0 <= cfg.hamming_threshold <= 64:
         raise ValueError(
             f"hamming_threshold must be in [0, 64], got {cfg.hamming_threshold}"
-        )
-    if not 0 <= cfg.jaccard_threshold <= 1:
-        raise ValueError(
-            f"jaccard_threshold must be in [0, 1], got {cfg.jaccard_threshold}"
         )
 
 
@@ -237,15 +236,16 @@ class NearDupPipeline:
                 phash_mode=self.cfg.phash_band_mode,
                 bucket_cap=self.cfg.bucket_cap,
             )
-            # lazy cut: the pairs frame feeds two family filters below;
+            # cut: the pairs frame feeds two family filters below;
             # without the checkpoint each filter re-runs the pair
-            # self-join. eager=False keeps the driver moving — the
-            # candidate chain materializes INSIDE the stage's one write
-            # job, overlapping with the star branch instead of blocking
-            # it behind a separate checkpoint job (the BlockManager's
-            # per-partition get-or-compute lock still guarantees the
-            # subtree computes once even with both verify branches
-            # pulling it concurrently)
+            # self-join. Under AQE the call itself runs every shuffle
+            # stage of the candidate chain, as its own SQL execution
+            # (so the edges stage is three serial executions: the bucket
+            # frame in pairs_from_buckets, this one, then the write).
+            # eager=False only defers the final, shuffle-free stage to
+            # the write job (the BlockManager's per-partition
+            # get-or-compute lock still computes it once with both
+            # verify branches pulling it)
             pairs = pairs.localCheckpoint(eager=False)
             cap_near = verify_caption_pairs(
                 pairs.filter("from_caption").select("src", "dst"),

@@ -45,15 +45,13 @@ from ..operators.bloom_dedup import (
 )
 from ..operators.text_dedup import normalized_text
 from .state_store import (
+    BloomIndex,
     EpochCache,
     check_stream_params,
     compact_epoch_dirs,
     hit_shards,
     key_shard,
-    latest_epoch,
     load_epochs,
-    merge_and_rotate,
-    probe,
     read_shards,
     write_clustered,
     write_row_epoch,
@@ -61,6 +59,12 @@ from .state_store import (
 
 DOCS_SCHEMA = "doc_id long, text string"
 KEYS_SCHEMA = "content_sha string, shard int"
+
+
+def _index_keys(s: SparkSession, dirs: dict[str, list[str]]) -> DataFrame:
+    """Bloom keys of the content-key store."""
+    keys = s.read.schema(KEYS_SCHEMA).parquet(*dirs["keys"])
+    return keys.select(F.col("content_sha").alias("key"))
 
 
 def compact_ingest_keys(spark: SparkSession, state_dir: str) -> int:
@@ -112,9 +116,11 @@ def stream_ingest_dedup(
     check_stream_params(*params)
     new_path = os.path.join(state_dir, "new")
     keys_path = os.path.join(state_dir, "keys")
-    blooms_path = os.path.join(state_dir, "blooms")
     metrics_path = os.path.join(state_dir, "metrics")
     cache = EpochCache(state_dir, "keys")
+    # threshold 0: the stream is always engaged, so every batch keeps a
+    # snapshot fresh (the first one keys the whole store)
+    bloom = BloomIndex(state_dir, params)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -137,12 +143,12 @@ def stream_ingest_dedup(
         )
 
         key_dirs = cache.at(batch_id)["keys"]
-        bloom_snap = latest_epoch(blooms_path, batch_id)
-        if bloom_snap is not None:
-            flags = probe(batch_first, bloom_snap, "content_sha", params)
-        else:
+        bloom.at(batch_id)
+        flags = bloom.flags(batch_first, "content_sha")
+        if flags is None:
             # no snapshot yet (fresh or legacy store): probe a bloom
-            # built inline from the key history
+            # built inline from the key history — the anti-join and
+            # n_distinct below need flags either way
             history = read_shards(
                 s, "content_sha string", key_dirs, "shard", None
             )
@@ -216,16 +222,7 @@ def stream_ingest_dedup(
                 "shard",
                 key_shard(F.col("content_sha"), n_shards),
             )
-            # the first snapshot keys the WHOLE store (empty history on
-            # a fresh store), later ones only this epoch's delta
-            keys = s.read.schema(KEYS_SCHEMA).parquet(
-                *([] if bloom_snap else key_dirs),
-                os.path.join(keys_path, epoch),
-            )
-            merge_and_rotate(
-                s, blooms_path, batch_id, bloom_snap,
-                keys.select("content_sha"), "content_sha", params,
-            )
+            bloom.refresh(s, batch_id, {"keys": key_dirs}, _index_keys)
         finally:
             flags.unpersist()
         cache.advance(batch_id, "keys")

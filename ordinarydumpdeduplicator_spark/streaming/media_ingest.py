@@ -30,7 +30,8 @@ streaming/state_store.py):
                        ``shard IN (<bloom-hit shards>)`` read prunes
                        row groups (the text ingest key-store shape).
     blooms/epoch=N/    FULL merged bloom snapshot over all index keys
-                       after batch N (a state_store snapshot store).
+                       after batch N, from the prune policy's first
+                       engagement on (state_store.BloomIndex).
     verdicts/epoch=N/  one row per batch item:
                        (id, outcome, match_ref_id, match_frac,
                         batch_canonical_id)
@@ -39,13 +40,13 @@ streaming/state_store.py):
                                + n_novel
 
 Per batch: ONE decode pass (the modality's mapInPandas fingerprint
-function — payload bytes never shuffle), then the index is probed the
-way the text twin probes its key store: the batch's band-slice and sha
-keys go through the sharded bloom (cogrouped Arrow probe); a miss-only
-batch READS ZERO INDEX ROWS (no fps or keys scan at all); a hit batch
-reads only the bloom-hit shards of the key store, resolves candidate
-reference ids, and scans only those ids' ``__ref_shard`` row groups of
-the fingerprint store. The pruned reference subset provably contains
+function — payload bytes never shuffle), then, once the prune policy
+engages, the index is probed the way the text twin probes its key
+store: the batch's band-slice and sha keys go through the sharded
+bloom (cogrouped Arrow probe); a miss-only batch READS ZERO INDEX ROWS
+(no fps or keys scan at all); a hit batch reads only the bloom-hit
+shards of the key store, resolves candidate reference ids, and scans
+only those ids' ``__ref_shard`` row groups of the fingerprint store. The pruned reference subset provably contains
 every member of every band bucket the batch touches (a row holding a
 hit key is, by construction of the key store, in a hit shard), so
 bucket-cap counts, min-id witnesses, verification and therefore
@@ -99,21 +100,20 @@ from ..operators.segment_dedup import (
     segment_novelty,
 )
 from .state_store import (
+    BloomIndex,
     EpochCache,
     _committed_epochs,
     _hit_candidates,
+    band_key,
     check_stream_params,
     compact_epoch_dirs,
-    engaged,
     epoch_dirs,
     hit_shards,
     id_shard,
     key_shard,
-    latest_epoch,
     load_epochs,
-    merge_and_rotate,
-    probe,
     read_shards,
+    sha_key,
     write_clustered,
     write_row_epoch,
 )
@@ -209,16 +209,20 @@ def _probe_keys(
     band_keys = segment_band_rows(
         fps, bands=bands, id_col=id_col, hashes_col=hashes_col
     ).select(
-        F.concat_ws(":", F.lit("b"), F.col("band"), F.col("key")).alias(
-            "key"
-        ),
+        band_key(F.col("band"), F.col("key")).alias("key"),
         F.col(id_col).alias("ref_id"),
     )
     sha_keys = fps.filter(F.col("file_sha").isNotNull()).select(
-        F.concat(F.lit("s:"), F.col("file_sha")).alias("key"),
+        sha_key(F.col("file_sha")).alias("key"),
         F.col(id_col).alias("ref_id"),
     )
     return band_keys.unionByName(sha_keys).distinct()
+
+
+def _index_keys(s: SparkSession, dirs: dict[str, list[str]]) -> DataFrame:
+    """Bloom keys of the probe-key store."""
+    keys = s.read.schema(KEYS_SCHEMA).parquet(*dirs["keys"])
+    return keys.select("key").distinct()
 
 
 def _reference_fps(
@@ -227,23 +231,21 @@ def _reference_fps(
     fp_schema: str,
     fps_dirs: list[str],
     keys_dirs: list[str],
-    snapshot: str | None,
+    bloom: BloomIndex,
     id_col: str,
     hashes_col: str,
     bands: int,
-    params: tuple[int, int, int],
+    n_shards: int,
 ) -> DataFrame | None:
     """``prune_reference_fps`` over given listings: None when nothing
-    is indexed, the full index when there is no bloom ``snapshot``,
+    is indexed, the full index when ``bloom`` gives no probe flags,
     else the batch-pruned view."""
     if not fps_dirs:
         return None
-    if snapshot is None:
+    flags = bloom.flags(_probe_keys(batch_fps, id_col, hashes_col, bands))
+    if flags is None:
         return spark.read.schema(fp_schema).parquet(*fps_dirs)
-    flags = probe(
-        _probe_keys(batch_fps, id_col, hashes_col, bands),
-        snapshot, "key", params,
-    ).persist()
+    flags = flags.persist()
     try:
         hit = hit_shards(flags)
         if not hit or not keys_dirs:
@@ -254,7 +256,7 @@ def _reference_fps(
         # every downstream action on the pruned ref would re-run the
         # whole bloom probe and key-store scan
         cands = _hit_candidates(
-            spark, keys_dirs, flags, hit, params[0]
+            spark, keys_dirs, flags, hit, n_shards
         ).localCheckpoint(eager=True)
         ref_shards = [
             r[_REF_SHARD]
@@ -309,17 +311,19 @@ def prune_reference_fps(
     if below is None:
         keys = _committed_epochs(os.path.join(state_dir, "keys"))
         below = keys[-1][0] + 1 if keys else None
+    bloom = BloomIndex(state_dir, (n_shards, bits_per_shard, k_hashes))
+    bloom.at(below)
     return _reference_fps(
         spark,
         batch_fps,
         fp_schema,
         epoch_dirs(os.path.join(state_dir, "fps"), below),
         epoch_dirs(os.path.join(state_dir, "keys"), below),
-        latest_epoch(os.path.join(state_dir, "blooms"), below),
+        bloom,
         id_col,
         hashes_col,
         bands,
-        (n_shards, bits_per_shard, k_hashes),
+        n_shards,
     )
 
 
@@ -341,7 +345,6 @@ def stream_media_novelty(
     ref_bucket_cap: int = 1024,
     batch_bucket_cap: int = 64,
     max_files_per_trigger: int | None = None,
-    prune_index: bool | None = None,
     prune_min_index_bytes: int = 64 << 20,
     n_shards: int = MEDIA_N_SHARDS,
     bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
@@ -353,25 +356,24 @@ def stream_media_novelty(
     audio_fingerprints, image_region_fingerprints — any producer of
     (id, status, file_sha, ..., <hashes_col>)).
 
-    ``prune_index``: None (default) engages the bloom-probed index
-    prune only once the fingerprint store exceeds
-    ``prune_min_index_bytes`` on disk — below that a full scan is
-    cheaper than the probe's fixed cost (measured: ~3 s/batch at a
+    The bloom-probed index prune engages once the fingerprint store
+    reaches ``prune_min_index_bytes`` on disk — below that a full scan
+    is cheaper than the probe's fixed cost (measured: ~3 s/batch at a
     toy index), above it the probe cost is flat while the full scan
-    grows with the index. True forces pruning (the tests' mode),
-    False forces full scans. The probe-key/bloom index is maintained
-    in every mode (and only on batches that actually index novel
-    content), so the modes are freely interchangeable on one state
-    dir. Returns the StreamingQuery; read results with
+    grows with the index. 0 engages from the first batch, ``1 << 60``
+    keeps full scans. The probe-key store is maintained on every
+    indexing batch and the bloom snapshot from first engagement on
+    (state_store.BloomIndex), so a state dir can be resumed under any
+    threshold. Returns the StreamingQuery; read results with
     load_media_verdicts / load_reference_fps / load_media_metrics."""
     params = (n_shards, bits_per_shard, k_hashes)
     check_stream_params(*params)
     fps_path = os.path.join(state_dir, "fps")
     keys_path = os.path.join(state_dir, "keys")
-    blooms_path = os.path.join(state_dir, "blooms")
     verdicts_path = os.path.join(state_dir, "verdicts")
     metrics_path = os.path.join(state_dir, "metrics")
     cache = EpochCache(state_dir, "fps", "keys")
+    bloom = BloomIndex(state_dir, params, prune_min_index_bytes)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -381,16 +383,11 @@ def stream_media_novelty(
         fps_b = fingerprint_fn(batch_df).persist()
         dirs = cache.at(batch_id)
         fps_dirs, keys_dirs = dirs["fps"], dirs["keys"]
-        bloom_snap = latest_epoch(blooms_path, batch_id)
-        use_prune = engaged(
-            prune_index, cache.nbytes("fps"), prune_min_index_bytes
-        )
+        bloom.at(batch_id, cache.nbytes("fps"))
         try:
-            # without a probe the index is read whole
             ref = _reference_fps(
-                s, fps_b, fp_schema, fps_dirs, keys_dirs,
-                bloom_snap if use_prune else None,
-                id_col, hashes_col, bands, params,
+                s, fps_b, fp_schema, fps_dirs, keys_dirs, bloom,
+                id_col, hashes_col, bands, n_shards,
             )
             if ref is not None:
                 near = segment_novelty(
@@ -588,23 +585,7 @@ def stream_media_novelty(
                 "shard",
                 key_shard(F.col("key"), n_shards),
             )
-            # bloom maintenance is DEFERRED until pruning engages: the
-            # snapshot is derivable from the key store, so an
-            # auto-policy stream below the size threshold pays no bloom
-            # jobs at all. Once a snapshot exists it is kept fresh
-            # every indexing batch regardless of mode — a stale
-            # snapshot would under-approximate the key set and emit
-            # true duplicates as novel. The first engagement keys the
-            # WHOLE key store (this epoch included).
-            if use_prune or bloom_snap is not None:
-                keys = s.read.schema(KEYS_SCHEMA).parquet(
-                    *([] if bloom_snap else keys_dirs),
-                    os.path.join(keys_path, epoch),
-                )
-                merge_and_rotate(
-                    s, blooms_path, batch_id, bloom_snap,
-                    keys.select("key").distinct(), "key", params,
-                )
+            bloom.refresh(s, batch_id, {"keys": keys_dirs}, _index_keys)
             cache.advance(batch_id, "fps", "keys")
         finally:
             fps_b.unpersist()

@@ -43,22 +43,23 @@ from pyspark.sql import functions as F
 
 from ..operators.bloom_dedup import DEFAULT_BITS_PER_SHARD, DEFAULT_K_HASHES
 from ..operators.features import extract_features
+from ..operators.lsh import check_caption_params
 from ..plans.incremental import incremental_caption_run
 from .inspection import read_image_stream
 from .state_store import (
+    BloomIndex,
     EpochCache,
+    band_key,
     check_stream_params,
-    engaged,
     epoch_path,
     hit_shards,
     id_shard,
     key_shard,
     latest_epoch,
     load_epochs,
-    merge_and_rotate,
-    probe,
     read_shards,
     rotate,
+    sha_key,
     write_clustered,
 )
 
@@ -101,12 +102,20 @@ def pruned_caption_resolver(spark: SparkSession, caption_dirs: list[str]):
     return resolve
 
 
-def _rep_key(sha):
-    return F.concat(F.lit("s:"), sha)
-
-
-def _band_key(band, key):
-    return F.concat_ws(":", F.lit("b"), band, key)
+def _index_keys(s: SparkSession, dirs: dict[str, list[str]]) -> DataFrame:
+    """Bloom keys of the rep and band stores: their own columns ARE the
+    keys, so no separate key store is needed."""
+    return (
+        s.read.schema(REPS_SCHEMA)
+        .parquet(*dirs["reps"])
+        .select(sha_key(F.col("caption_sha")).alias("key"))
+        .unionByName(
+            s.read.schema(BANDS_SCHEMA)
+            .parquet(*dirs["bands"])
+            .select(band_key(F.col("band"), F.col("key")).alias("key"))
+        )
+        .distinct()
+    )
 
 
 def load_assignments(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -124,7 +133,6 @@ def stream_near_dup_clusters(
     available_now: bool = True,
     bucket_cap: int = 256,
     jaccard_threshold: float = 0.5,
-    prune_state: bool | None = None,
     prune_min_state_bytes: int = 64 << 20,
     n_shards: int = STATE_SHARDS,
     bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
@@ -132,20 +140,20 @@ def stream_near_dup_clusters(
 ):
     """Start the streaming near-dup clustering query.
 
-    ``prune_state``: None (default) engages bloom-probed, shard-pruned
-    reads of the rep and band index stores once they exceed
-    ``prune_min_state_bytes`` on disk; True forces it, False forces
-    full-frame state reads (the pre-pruning behavior, kept for parity
-    testing). When engaged, a batch makes ONE bloom probe over its own
+    Bloom-probed, shard-pruned reads of the rep and band index stores
+    engage once they reach ``prune_min_state_bytes`` on disk (0 engages
+    from the first batch; ``1 << 60`` keeps full-frame state reads).
+    When engaged, a batch makes ONE bloom probe over its own
     ``s:<caption_sha>`` and ``b:<band>:<key>`` keys and reads both
     index stores only at the hit shards — a batch of entirely novel
     captions reads ZERO index rows. The bloom snapshot
     (``blooms/epoch=N``, latest prior retained as replay insurance) is
-    built lazily at first engagement from the stores themselves (sha
-    and band keys ARE the stores' own columns — no separate key store
-    needed) and kept fresh every batch once it exists, in any mode.
+    built at first engagement from the stores themselves and kept
+    fresh every batch once it exists (state_store.BloomIndex).
 
-    ``n_shards`` must be a power of two <= 256 (ValueError otherwise).
+    Bad parameters raise ValueError before the query starts:
+    ``bucket_cap`` < 2, ``jaccard_threshold`` outside [0, 1], or an
+    ``n_shards`` that is not a power of two <= 256.
 
     Returns the StreamingQuery; after it finishes (availableNow) read the
     current assignments with ``load_assignments(spark, state_dir)`` —
@@ -153,21 +161,19 @@ def stream_near_dup_clusters(
     replay insurance, so two epochs coexist on disk."""
     params = (n_shards, bits_per_shard, k_hashes)
     check_stream_params(*params)
+    check_caption_params(bucket_cap, jaccard_threshold)
     captions_path = os.path.join(state_dir, "captions")
     reps_path = os.path.join(state_dir, "reps")
     bands_path = os.path.join(state_dir, "bands")
     assign_path = os.path.join(state_dir, "assign")
-    blooms_path = os.path.join(state_dir, "blooms")
     cache = EpochCache(state_dir, "captions", "reps", "bands")
+    bloom = BloomIndex(state_dir, params, prune_min_state_bytes)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         dirs = cache.at(batch_id)
         reps_dirs, bands_dirs = dirs["reps"], dirs["bands"]
-        bloom_snap = latest_epoch(blooms_path, batch_id)
-        use_prune = engaged(
-            prune_state, cache.nbytes("reps", "bands"), prune_min_state_bytes
-        )
+        bloom.at(batch_id, cache.nbytes("reps", "bands"))
         # captions are written id-shard-clustered so the verify stage's
         # endpoint fetches prune row groups (pruned_caption_resolver)
         write_clustered(
@@ -184,27 +190,20 @@ def stream_near_dup_clusters(
         # the caption-exact star edges all read this frame
         feats = extract_features(batch_df).persist()
         try:
-            # index-pruned state reads only when engaged AND a snapshot
-            # exists (first engagement on a legacy store full-scans once
-            # while the snapshot is built below). One probe covers both
-            # stores: every new rep is a batch row, so the batch's sha
-            # and band keys are a superset of what the run looks up
-            hit = None
-            if use_prune and bloom_snap is not None and (
-                reps_dirs or bands_dirs
-            ):
-                f = feats.filter(
-                    F.col("caption_sha").isNotNull()
-                    & F.col("bands").isNotNull()
-                )
-                probes = f.select(
-                    _rep_key(F.col("caption_sha")).alias("key")
-                ).unionByName(
+            # one probe covers both stores: every new rep is a batch
+            # row, so the batch's sha and band keys are a superset of
+            # what the run looks up (no flags: the stores are read whole)
+            f = feats.filter(
+                F.col("caption_sha").isNotNull() & F.col("bands").isNotNull()
+            )
+            flags = bloom.flags(
+                f.select(sha_key(F.col("caption_sha")).alias("key")).unionByName(
                     f.select(F.posexplode("bands")).select(
-                        _band_key(F.col("pos"), F.col("col")).alias("key")
+                        band_key(F.col("pos"), F.col("col")).alias("key")
                     )
                 )
-                hit = hit_shards(probe(probes, bloom_snap, "key", params))
+            )
+            hit = None if flags is None else hit_shards(flags)
 
             reps = (
                 read_shards(s, REPS_SCHEMA, reps_dirs, _SHARD, hit)
@@ -250,39 +249,18 @@ def stream_near_dup_clusters(
         new_bands_dir = epoch_path(bands_path, batch_id)
         write_clustered(
             out["new_reps"], new_reps_dir, _SHARD,
-            key_shard(_rep_key(F.col("caption_sha")), n_shards),
+            key_shard(sha_key(F.col("caption_sha")), n_shards),
         )
         write_clustered(
             out["new_bands"], new_bands_dir, _SHARD,
-            key_shard(_band_key(F.col("band"), F.col("key")), n_shards),
+            key_shard(band_key(F.col("band"), F.col("key")), n_shards),
         )
         out["assign"].write.mode("overwrite").parquet(
             epoch_path(assign_path, batch_id)
         )
-        # bloom maintenance: deferred until pruning engages; once a
-        # snapshot exists it is kept fresh every batch in every mode (a
-        # stale snapshot would hide index rows from future probes). The
-        # first engagement keys the WHOLE stores (their own columns ARE
-        # the keys), later batches only this epoch's deltas
-        if use_prune or bloom_snap is not None:
-            keys = (
-                s.read.schema(REPS_SCHEMA)
-                .parquet(*([] if bloom_snap else reps_dirs), new_reps_dir)
-                .select(_rep_key(F.col("caption_sha")).alias("key"))
-                .unionByName(
-                    s.read.schema(BANDS_SCHEMA)
-                    .parquet(
-                        *([] if bloom_snap else bands_dirs), new_bands_dir
-                    )
-                    .select(
-                        _band_key(F.col("band"), F.col("key")).alias("key")
-                    )
-                )
-            )
-            merge_and_rotate(
-                s, blooms_path, batch_id, bloom_snap, keys.distinct(), "key",
-                params,
-            )
+        bloom.refresh(
+            s, batch_id, {"reps": reps_dirs, "bands": bands_dirs}, _index_keys
+        )
         rotate(assign_path, batch_id)
         cache.advance(batch_id, "captions", "reps", "bands")
 

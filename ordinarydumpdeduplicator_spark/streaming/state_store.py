@@ -33,7 +33,8 @@ listing cost does not grow with history. The cache is keyed by the
 expected next batch id; a replayed or restarted batch misses it and
 re-lists from disk, so the replay contract is untouched. Bloom
 snapshots cross batches as a PATH, read where they are used — never a
-persisted frame that could outlive its query.
+persisted frame that could outlive its query; ``BloomIndex`` holds
+their whole lifecycle (prune policy, probe, refresh and rotation).
 """
 
 from __future__ import annotations
@@ -42,6 +43,7 @@ import json
 import os
 import re
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -322,6 +324,18 @@ def key_shard(key: Column, n_shards: int) -> Column:
     )
 
 
+def sha_key(sha: Column) -> Column:
+    """Index key of a content hash, ``s:<sha>``. With ``band_key`` this
+    is the one spelling of the keys that the blooms, the key-shard
+    clustering and the key stores share."""
+    return F.concat(F.lit("s:"), sha)
+
+
+def band_key(band: Column, key: Column) -> Column:
+    """Index key of an LSH band slice, ``b:<band>:<key>``."""
+    return F.concat_ws(":", F.lit("b"), band, key)
+
+
 def id_shard(id_col: Column, n_shards: int) -> Column:
     """Shard of a row id (id-clustered stores: captions, media
     fingerprints) — recomputed from the id, never stored apart from
@@ -389,19 +403,6 @@ def _check_snapshot(path: str, params: tuple[int, int, int]) -> None:
         )
 
 
-def probe(
-    probes: DataFrame,
-    snapshot: str,
-    key_col: str,
-    params: tuple[int, int, int],
-) -> DataFrame:
-    """Probe flags (key_col, shard, might_contain) of the distinct
-    ``key_col`` values against the bloom snapshot at ``snapshot``."""
-    _check_snapshot(snapshot, params)
-    blooms = probes.sparkSession.read.schema(BLOOMS_SCHEMA).parquet(snapshot)
-    return _probe_flags(probes, blooms, key_col, *params, validate=False)
-
-
 def hit_shards(flags: DataFrame) -> list[int]:
     """Shards where at least one probe key might be indexed (empty =
     nothing probed can be in the index, bloom false negatives being
@@ -444,35 +445,6 @@ def rotate(base: str, batch_id: int) -> None:
         shutil.rmtree(p, ignore_errors=True)
 
 
-def merge_and_rotate(
-    spark: SparkSession,
-    base: str,
-    batch_id: int,
-    snapshot: str | None,
-    keys: DataFrame,
-    key_col: str,
-    params: tuple[int, int, int],
-) -> None:
-    """Write the bloom snapshot of this epoch — the prior ``snapshot``
-    OR-merged with a bloom over ``keys`` (the caller passes the epoch's
-    key delta, or the WHOLE key set when no snapshot exists yet) — then
-    ``rotate``."""
-    merged = bloom_shards(keys, key_col, *params)
-    if snapshot is not None:
-        merged = bloom_merge(
-            spark.read.schema(BLOOMS_SCHEMA).parquet(snapshot), merged
-        )
-    merged.write.mode("overwrite").parquet(epoch_path(base, batch_id))
-    rotate(base, batch_id)
-
-
-def engaged(force: bool | None, nbytes: int, threshold: int) -> bool:
-    """The prune policy: ``force`` when set, else whether the index has
-    reached ``threshold`` bytes on disk — below it a full scan is
-    cheaper than the probe's fixed cost."""
-    return force if force is not None else nbytes >= threshold
-
-
 class EpochCache:
     """One query's committed listings of its append-only stores, keyed
     by the expected next batch id (see the module docstring)."""
@@ -509,3 +481,76 @@ class EpochCache:
             if s in self._bytes:
                 self._bytes[s] += _tree_bytes([d])
         self._next = batch_id + 1
+
+
+class BloomIndex:
+    """One query's bloom index over its key stores: the snapshot store
+    ``<state_dir>/blooms``, the prune policy, the probe and the refresh.
+
+    The policy engages once the index reaches ``threshold`` bytes on
+    disk; below it a full scan is cheaper than the probe's fixed cost
+    (0 engages always). Bloom maintenance waits for the first
+    engagement: the snapshot is derivable from the key stores, so a
+    stream below the threshold pays no bloom jobs. Once a snapshot
+    exists it is refreshed every batch whatever the policy says; a
+    stale snapshot would hide index rows from later probes."""
+
+    def __init__(
+        self, state_dir: str, params: tuple[int, int, int], threshold: int = 0
+    ):
+        self._state_dir = state_dir
+        self._path = os.path.join(state_dir, "blooms")
+        self._params = params
+        self._threshold = threshold
+        self.snapshot: str | None = None
+        self.engaged = False
+
+    def at(self, batch_id: int | None, nbytes: int = 0) -> None:
+        """Start a batch: the latest snapshot strictly below
+        ``batch_id`` (the newest when None), and the policy's verdict
+        on an index of ``nbytes`` bytes."""
+        self.snapshot = latest_epoch(self._path, batch_id)
+        self.engaged = nbytes >= self._threshold
+
+    def flags(self, probes: DataFrame, key_col: str = "key") -> DataFrame | None:
+        """Probe flags (key_col, shard, might_contain) of the distinct
+        ``key_col`` values of ``probes``; None, meaning "read the whole
+        store", unless the policy engaged and a snapshot exists."""
+        if not self.engaged or self.snapshot is None:
+            return None
+        _check_snapshot(self.snapshot, self._params)
+        blooms = probes.sparkSession.read.schema(BLOOMS_SCHEMA).parquet(
+            self.snapshot
+        )
+        return _probe_flags(
+            probes, blooms, key_col, *self._params, validate=False
+        )
+
+    def refresh(
+        self,
+        spark: SparkSession,
+        batch_id: int,
+        listed: dict[str, list[str]],
+        keys: Callable[[SparkSession, dict[str, list[str]]], DataFrame],
+    ) -> None:
+        """After the batch's key-store writes, write its snapshot and
+        ``rotate``. ``listed`` holds the key stores' committed dirs
+        below the batch; ``keys(spark, dirs)`` turns such dirs into a
+        frame of index keys, column ``key``. At first engagement the
+        bloom keys the whole stores plus this epoch; after that only
+        this epoch, OR-merged into the prior snapshot."""
+        if self.snapshot is None and not self.engaged:
+            return
+        dirs = {
+            store: ([] if self.snapshot else d)
+            + [epoch_path(os.path.join(self._state_dir, store), batch_id)]
+            for store, d in listed.items()
+        }
+        merged = bloom_shards(keys(spark, dirs), "key", *self._params)
+        if self.snapshot is not None:
+            merged = bloom_merge(
+                spark.read.schema(BLOOMS_SCHEMA).parquet(self.snapshot),
+                merged,
+            )
+        merged.write.mode("overwrite").parquet(epoch_path(self._path, batch_id))
+        rotate(self._path, batch_id)

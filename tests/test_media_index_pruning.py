@@ -56,7 +56,7 @@ def _run_once(spark, inp, state, ck, prune=True):
         id_col="video_id",
         hashes_col="frame_hashes",
         prefix="frame",
-        prune_index=prune,
+        prune_min_index_bytes=0 if prune else 1 << 60,
     )
     q.awaitTermination()
 
@@ -275,45 +275,6 @@ def test_legacy_state_migrates_to_pruned_index(spark, tmp_path):
         )
         is None
     )
-
-
-def test_auto_policy_engages_by_index_size(spark, tmp_path):
-    """prune_index=None engages pruning exactly when the fingerprint
-    store exceeds the size threshold: with a zero threshold the second
-    wave builds the bloom snapshot and probes it; with a huge
-    threshold no snapshot ever appears — and verdicts agree in both
-    modes."""
-    results = {}
-    for label, thresh in (("on", 0), ("off", 1 << 60)):
-        inp = str(tmp_path / f"in_{label}")
-        state = str(tmp_path / f"state_{label}")
-        ck = str(tmp_path / f"ck_{label}")
-        os.makedirs(inp, exist_ok=True)
-        for wave in (
-            [("a", _avi("x"))],
-            [("b", _avi("x", fps=25)), ("c", _avi("y"))],
-        ):
-            _write_wave(spark, inp, wave)
-            q = stream_media_novelty(
-                spark, inp, state, ck,
-                fingerprint_fn=video_fingerprints,
-                input_schema=INPUT_SCHEMA,
-                fp_schema=VIDEO_FP_SCHEMA,
-                id_col="video_id",
-                hashes_col="frame_hashes",
-                prefix="frame",
-                prune_index=None,
-                prune_min_index_bytes=thresh,
-            )
-            q.awaitTermination()
-        results[label] = sorted(
-            (r["video_id"], r["outcome"], r["match_ref_id"])
-            for r in load_media_verdicts(spark, state).collect()
-        )
-        has_bloom = os.path.isdir(os.path.join(state, "blooms"))
-        assert has_bloom == (thresh == 0), (label, has_bloom)
-    assert results["on"] == results["off"]
-    assert ("b", "ref_dup", "a") in results["on"]
 
 
 def test_prune_modes_interchangeable_on_one_state_dir(spark, tmp_path):

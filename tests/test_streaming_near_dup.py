@@ -210,7 +210,7 @@ def test_pruned_caption_resolver_prunes_and_matches(spark, tiny_corpus,
 
 
 def test_pruned_state_matches_full_scan(spark, tiny_corpus, tmp_path):
-    """prune_state=True (bloom-probed, shard-pruned rep/band index
+    """prune_min_state_bytes=0 (bloom-probed, shard-pruned rep/band index
     reads) must yield assignments identical to the full-frame path on
     the same waves, across a restart."""
     pdf, _ = tiny_corpus
@@ -223,7 +223,7 @@ def test_pruned_state_matches_full_scan(spark, tiny_corpus, tmp_path):
 
         def run_once():
             q = stream_near_dup_clusters(
-                spark, inp, state, ck, prune_state=mode
+                spark, inp, state, ck, prune_min_state_bytes=0 if mode else 1 << 60
             )
             q.awaitTermination()
 
@@ -255,7 +255,7 @@ def test_pruned_state_novel_batch_reads_zero_index_rows(
 
     def run_once():
         q = stream_near_dup_clusters(
-            spark, inp, state, ck, prune_state=True
+            spark, inp, state, ck, prune_min_state_bytes=0
         )
         q.awaitTermination()
 
@@ -291,7 +291,7 @@ def test_pruned_state_novel_batch_reads_zero_index_rows(
             "append"
         ).parquet(inp2)
         q = stream_near_dup_clusters(
-            spark, inp2, state2, ck2, prune_state=True
+            spark, inp2, state2, ck2, prune_min_state_bytes=0
         )
         q.awaitTermination()
     assert _assign_dict(load_assignments(spark, state)) == _assign_dict(
@@ -322,7 +322,7 @@ def test_pruned_state_exact_copy_batch_matches_full_scan(
                 "append"
             ).parquet(inp)
             q = stream_near_dup_clusters(
-                spark, inp, state, ck, prune_state=mode
+                spark, inp, state, ck, prune_min_state_bytes=0 if mode else 1 << 60
             )
             q.awaitTermination()
             n_in = sum(p["numInputRows"] for p in q.recentProgress)

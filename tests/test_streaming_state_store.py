@@ -21,9 +21,11 @@ from ordinarydumpdeduplicator_spark.streaming.ingest_dedup import (
     stream_ingest_dedup,
 )
 from ordinarydumpdeduplicator_spark.streaming.media_ingest import (
+    load_media_verdicts,
     stream_media_novelty,
 )
 from ordinarydumpdeduplicator_spark.streaming.near_dup import (
+    load_assignments,
     stream_near_dup_clusters,
 )
 from tests.conftest import to_spark_images
@@ -68,6 +70,23 @@ def test_bad_params_raise_before_query_starts(spark, tmp_path, stream,
     assert {q.id for q in spark.streams.active} == active
 
 
+@pytest.mark.parametrize(
+    "bad", [{"bucket_cap": 1}, {"jaccard_threshold": 1.5},
+            {"jaccard_threshold": -0.1}],
+    ids=["bucket_cap", "jaccard_above_1", "jaccard_below_0"],
+)
+def test_caption_bad_params_raise_before_query_starts(spark, tmp_path, bad):
+    """The caption stream rejects the near-dup parameters the batch
+    pipeline rejects, at call time."""
+    inp = str(tmp_path / "in")
+    os.makedirs(inp, exist_ok=True)
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(ValueError, match=next(iter(bad))):
+        _start("caption", spark, inp, str(tmp_path / "state"),
+               str(tmp_path / "ck"), **bad)
+    assert {q.id for q in spark.streams.active} == active
+
+
 @pytest.mark.parametrize("stream", ["caption", "media", "ingest"])
 def test_stream_leaves_no_cached_frames(spark, tiny_corpus, tmp_path,
                                         stream):
@@ -80,7 +99,7 @@ def test_stream_leaves_no_cached_frames(spark, tiny_corpus, tmp_path,
             to_spark_images(spark, pdf.iloc[lo:hi])
             for lo, hi in ((0, 80), (80, 120), (120, 160))
         ]
-        prune = {"prune_state": True}
+        prune = {"prune_min_state_bytes": 0}
     elif stream == "media":
         waves = [
             spark.createDataFrame(rows, MEDIA_SCHEMA)
@@ -90,7 +109,7 @@ def test_stream_leaves_no_cached_frames(spark, tiny_corpus, tmp_path,
                 [("e", _avi("y", fps=30)), ("f", _avi("w"))],
             )
         ]
-        prune = {"prune_index": True}
+        prune = {"prune_min_index_bytes": 0}
     else:
         waves = [
             spark.createDataFrame(
@@ -122,11 +141,11 @@ def test_restart_with_other_bloom_geometry_fails_loudly(spark, tiny_corpus,
     if stream == "caption":
         waves = [to_spark_images(spark, pdf.iloc[lo:hi])
                  for lo, hi in ((0, 60), (60, 90))]
-        prune = {"prune_state": True}
+        prune = {"prune_min_state_bytes": 0}
     elif stream == "media":
         waves = [spark.createDataFrame(rows, MEDIA_SCHEMA)
                  for rows in ([("a", _avi("x"))], [("b", _avi("x", fps=25))])]
-        prune = {"prune_index": True}
+        prune = {"prune_min_index_bytes": 0}
     else:
         waves = [spark.createDataFrame([(w, "same text")], DOCS_SCHEMA)
                  for w in range(2)]
@@ -143,3 +162,54 @@ def test_restart_with_other_bloom_geometry_fails_loudly(spark, tiny_corpus,
                **prune)
     with pytest.raises(Exception, match="bloom parameter mismatch"):
         q.awaitTermination()
+
+
+@pytest.mark.parametrize("stream", ["caption", "media"])
+def test_auto_policy_engages_by_index_size(spark, tiny_corpus, tmp_path,
+                                           stream):
+    """The prune policy engages exactly when the index reaches the size
+    threshold: with a zero threshold the second wave probes the bloom
+    snapshot the first built; with a huge threshold no snapshot ever
+    appears (bloom maintenance is deferred) — and the results agree in
+    both modes."""
+    pdf, _ = tiny_corpus
+    if stream == "caption":
+        waves = [to_spark_images(spark, pdf.iloc[lo:hi])
+                 for lo, hi in ((0, 120), (120, 200))]
+        threshold = "prune_min_state_bytes"
+    else:
+        waves = [
+            spark.createDataFrame(rows, MEDIA_SCHEMA)
+            for rows in (
+                [("a", _avi("x"))],
+                [("b", _avi("x", fps=25)), ("c", _avi("y"))],
+            )
+        ]
+        threshold = "prune_min_index_bytes"
+    results = {}
+    for label, nbytes in (("on", 0), ("off", 1 << 60)):
+        inp = str(tmp_path / f"in_{label}")
+        state = str(tmp_path / f"state_{label}")
+        ck = str(tmp_path / f"ck_{label}")
+        os.makedirs(inp, exist_ok=True)
+        for wave in waves:
+            wave.coalesce(1).write.mode("append").parquet(inp)
+            _start(stream, spark, inp, state, ck,
+                   **{threshold: nbytes}).awaitTermination()
+        if stream == "caption":
+            results[label] = sorted(
+                (r["image_id"], r["cluster_id"])
+                for r in load_assignments(spark, state).collect()
+            )
+        else:
+            results[label] = sorted(
+                (r["video_id"], r["outcome"], r["match_ref_id"])
+                for r in load_media_verdicts(spark, state).collect()
+            )
+        has_bloom = os.path.isdir(os.path.join(state, "blooms"))
+        assert has_bloom == (nbytes == 0), (label, has_bloom)
+    assert results["on"] == results["off"]
+    if stream == "caption":
+        assert len({c for _, c in results["on"]}) < len(results["on"])
+    else:
+        assert ("b", "ref_dup", "a") in results["on"]
