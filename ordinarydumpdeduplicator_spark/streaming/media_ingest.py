@@ -40,23 +40,39 @@ streaming/state_store.py):
                                + n_novel
 
 Per batch: ONE decode pass (the modality's mapInPandas fingerprint
-function — payload bytes never shuffle), then, once the prune policy
-engages, the index is probed the way the text twin probes its key
-store: the batch's band-slice and sha keys go through the sharded
-bloom (cogrouped Arrow probe); a miss-only batch READS ZERO INDEX ROWS
-(no fps or keys scan at all); a hit batch reads only the bloom-hit
-shards of the key store, resolves candidate reference ids, and scans
-only those ids' ``__ref_shard`` row groups of the fingerprint store. The pruned reference subset provably contains
-every member of every band bucket the batch touches (a row holding a
-hit key is, by construction of the key store, in a hit shard), so
-bucket-cap counts, min-id witnesses, verification and therefore
-VERDICTS are identical to a full-index scan — pinned by
-tests/test_media_index_pruning.py. segment_novelty then runs against
-that subset (cross-side-only banded candidates, reference buckets
-capped to a min-id witness, codegen popcount verify), plus a
-within-batch near-dup collapse over the segment core's three edge
-families so intra-batch copies don't each claim novelty. Outcomes are
-disjoint:
+function — payload bytes never shuffle), materialized before anything
+else reads it. Two independent branches then run side by side
+(state_store.run_together), both over that frame. Apart from the bloom
+probe of an engaged index (one Arrow UDF, in the novelty branch only),
+both run built-in expressions, so they do not contend for Python
+workers:
+
+- novelty, the batch against the index, checkpointed once. Once the
+  prune policy engages, the index is probed the way the text twin
+  probes its key store: the batch's band-slice and sha keys go through
+  the sharded bloom (cogrouped Arrow probe); a miss-only batch READS
+  ZERO INDEX ROWS (no fps or keys scan at all); a hit batch reads only
+  the bloom-hit shards of the key store, resolves candidate reference
+  ids, and scans only those ids' ``__ref_shard`` row groups of the
+  fingerprint store. The pruned reference subset provably contains
+  every member of every band bucket the batch touches (a row holding
+  a hit key is, by construction of the key store, in a hit shard), so
+  bucket-cap counts, min-id witnesses, verification and therefore
+  VERDICTS are identical to a full-index scan — pinned by
+  tests/test_media_index_pruning.py. segment_novelty then runs against
+  that subset (cross-side-only banded candidates, reference buckets
+  capped to a min-id witness, codegen popcount verify), plus the
+  byte-identity sha join;
+- the within-batch near-dup collapse over the segment core's three
+  edge families and connected components, so intra-batch copies don't
+  each claim novelty.
+
+The verdict write plans over the two materialized results, not their
+chains. The outcome counts and the novel clusters' members are read
+back from that verdict epoch on the driver (no Spark job); the fps
+delta and its probe-key delta are built from those members and
+written side by side, and the bloom refresh and the listing advance
+run only after both. Outcomes are disjoint:
 
     no_hashes   no fingerprintable evidence at all (NULL payload — the
                 Broken sentinel, OrdinaryDumpDeduplicator.cs:119-125) —
@@ -113,6 +129,7 @@ from .state_store import (
     key_shard,
     load_epochs,
     read_shards,
+    run_together,
     sha_key,
     write_clustered,
     write_row_epoch,
@@ -219,6 +236,17 @@ def _probe_keys(
     return band_keys.unionByName(sha_keys).distinct()
 
 
+def _read_verdicts(path: str, id_col: str):
+    """A verdict epoch's ids, outcomes and canonicals as a pandas frame,
+    read with pyarrow on the driver (files named ``_*``/``.*``, the
+    commit markers and checksums, are skipped)."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(
+        path, columns=[id_col, "outcome", "batch_canonical_id"]
+    ).to_pandas()
+
+
 def _index_keys(s: SparkSession, dirs: dict[str, list[str]]) -> DataFrame:
     """Bloom keys of the probe-key store."""
     keys = s.read.schema(KEYS_SCHEMA).parquet(*dirs["keys"])
@@ -238,8 +266,9 @@ def _reference_fps(
     n_shards: int,
 ) -> DataFrame | None:
     """``prune_reference_fps`` over given listings: None when nothing
-    is indexed, the full index when ``bloom`` gives no probe flags,
-    else the batch-pruned view."""
+    is indexed or no probe key hits the bloom, the full index when
+    ``bloom`` gives no probe flags or a hit finds no key store (lost
+    keys: the batch that rebuilds them), else the batch-pruned view."""
     if not fps_dirs:
         return None
     flags = bloom.flags(_probe_keys(batch_fps, id_col, hashes_col, bands))
@@ -248,8 +277,12 @@ def _reference_fps(
     flags = flags.persist()
     try:
         hit = hit_shards(flags)
-        if not hit or not keys_dirs:
+        if not hit:
             return None  # miss-only batch: no index scan at all
+        if not keys_dirs:
+            # lost key store: nothing maps a hit key to its ids, so
+            # this (migration) batch reads the whole index
+            return spark.read.schema(fp_schema).parquet(*fps_dirs)
         # eager localCheckpoint: the candidate id set is tiny (bounded
         # by index rows sharing a key with the batch) and feeds the
         # shard collect AND the semi-join below — without the cut,
@@ -378,18 +411,30 @@ def stream_media_novelty(
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         epoch = f"epoch={batch_id}"
-        # ONE decode pass; the skinny fingerprint frame feeds novelty,
-        # the edge families, and the delta write — persist it
+        # ONE decode pass, materialized before the branches below fork:
+        # the skinny fingerprint frame feeds the probe, novelty, the
+        # edge families and the delta writes, and two branches must not
+        # race to compute the same cached partitions
         fps_b = fingerprint_fn(batch_df).persist()
         dirs = cache.at(batch_id)
         fps_dirs, keys_dirs = dirs["fps"], dirs["keys"]
         bloom.at(batch_id, cache.nbytes("fps"))
         try:
-            ref = _reference_fps(
-                s, fps_b, fp_schema, fps_dirs, keys_dirs, bloom,
-                id_col, hashes_col, bands, n_shards,
-            )
-            if ref is not None:
+            fps_b.count()
+
+            def novelty() -> DataFrame:
+                """The batch against the index, checkpointed so the
+                verdict write plans over its result, not its chain."""
+                ref = _reference_fps(
+                    s, fps_b, fp_schema, fps_dirs, keys_dirs, bloom,
+                    id_col, hashes_col, bands, n_shards,
+                )
+                if ref is None:
+                    return fps_b.select(
+                        id_col,
+                        F.lit(None).cast("string").alias("match_ref_id"),
+                        F.lit(None).cast("double").alias("match_frac"),
+                    )
                 near = segment_novelty(
                     fps_b,
                     ref,
@@ -421,7 +466,7 @@ def stream_media_novelty(
                     .groupBy(id_col)
                     .agg(F.min("__rid").alias("__sha_ref"))
                 )
-                nov = (
+                return (
                     near.join(sha_match, id_col, "left")
                     .select(
                         id_col,
@@ -436,31 +481,35 @@ def stream_media_novelty(
                         .otherwise(F.col("match_frac"))
                         .alias("match_frac"),
                     )
+                    .localCheckpoint(eager=True)
                 )
-            else:
-                nov = fps_b.select(
-                    id_col,
-                    F.lit(None).cast("string").alias("match_ref_id"),
-                    F.lit(None).cast("double").alias("match_frac"),
+
+            def collapse() -> DataFrame:
+                """The batch against itself: all three edge families
+                over the batch fingerprints, CC (a driver-local frame
+                below the union-find cutover), canonical = string-min
+                member."""
+                edges = segment_edges(
+                    fps_b,
+                    id_col=id_col,
+                    hashes_col=hashes_col,
+                    prefix=prefix,
+                    bands=bands,
+                    max_hamming=max_hamming,
+                    min_match_frac=min_match_frac,
+                    bucket_cap=batch_bucket_cap,
                 )
-            # within-batch collapse: all three edge families over the
-            # batch fingerprints, CC, canonical = string-min member
-            edges = segment_edges(
-                fps_b,
-                id_col=id_col,
-                hashes_col=hashes_col,
-                prefix=prefix,
-                bands=bands,
-                max_hamming=max_hamming,
-                min_match_frac=min_match_frac,
-                bucket_cap=batch_bucket_cap,
-            )
-            assign = connected_components(
-                edges.select("src", "dst")
-            ).select(
-                F.col("image_id").alias(id_col),
-                F.col("cluster_id").alias("__cl"),
-            )
+                return connected_components(
+                    edges.select("src", "dst")
+                ).select(
+                    F.col("image_id").alias(id_col),
+                    F.col("cluster_id").alias("__cl"),
+                )
+
+            # independent branches: both read the materialized fps_b,
+            # and only the novelty branch may run a Python (bloom
+            # probe) UDF
+            nov, assign = run_together(s, novelty, collapse)
             usable = fps_b.select(
                 id_col,
                 (
@@ -502,24 +551,18 @@ def stream_media_novelty(
                     .alias("batch_canonical_id"),
                 )
             )
-            verdicts.write.mode("overwrite").parquet(
-                os.path.join(verdicts_path, epoch)
-            )
-            written = s.read.schema(
-                VERDICTS_SCHEMA.format(id_col=id_col)
-            ).parquet(os.path.join(verdicts_path, epoch))
-            counts = {
-                r["outcome"]: r["n"]
-                for r in written.groupBy("outcome")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            n_in = sum(counts.values())
+            verdicts_dir = os.path.join(verdicts_path, epoch)
+            verdicts.write.mode("overwrite").parquet(verdicts_dir)
+            # the epoch just written, read on the driver (one row per
+            # batch item): the outcome counts and the novel clusters'
+            # members, with no Spark job
+            written = _read_verdicts(verdicts_dir, id_col)
+            counts = written["outcome"].value_counts()
             write_row_epoch(
                 os.path.join(metrics_path, epoch),
                 {
                     "batch_id": int(batch_id),
-                    "n_in": int(n_in),
+                    "n_in": len(written),
                     "n_no_hashes": int(counts.get("no_hashes", 0)),
                     "n_ref_dup": int(counts.get("ref_dup", 0)),
                     "n_batch_dup": int(counts.get("batch_dup", 0)),
@@ -548,42 +591,47 @@ def stream_media_novelty(
             # canonical) while match_ref_id keeps pointing at one id.
             # Byte-identical members collapse via the full-row distinct;
             # the index still grows with distinct CONTENT, not volume.
-            novel_canon = written.filter(
-                F.col("outcome") == "novel"
-            ).select(F.col(id_col).alias("batch_canonical_id"))
-            members = (
-                written.join(novel_canon, "batch_canonical_id")
-                .select(id_col, "batch_canonical_id")
+            novel = written[id_col][written["outcome"] == "novel"]
+            members = s.createDataFrame(
+                written.loc[
+                    written["batch_canonical_id"].isin(novel),
+                    [id_col, "batch_canonical_id"],
+                ],
+                f"{id_col} string, batch_canonical_id string",
             )
-            write_clustered(
+            delta = (
                 fps_b.join(members, id_col)
                 .withColumn(id_col, F.col("batch_canonical_id"))
                 .drop("batch_canonical_id")
-                .dropDuplicates(),
-                os.path.join(fps_path, epoch),
-                _REF_SHARD,
-                id_shard(F.col(id_col), n_shards),
+                .dropDuplicates()
             )
-            fps_delta = s.read.schema(
-                f"{fp_schema}, {_REF_SHARD} int"
-            ).parquet(os.path.join(fps_path, epoch))
-            # probe-key delta for the rows just indexed; when the state
-            # predates the key store (legacy / migration), index the
-            # WHOLE existing fingerprint store once so the next batch
-            # can prune
-            delta_keys = _probe_keys(
-                fps_delta, id_col, hashes_col, bands
-            )
+            # probe-key delta of exactly the rows indexed; when the
+            # state predates the key store (legacy / migration), index
+            # the WHOLE existing fingerprint store once so the next
+            # batch can prune
+            delta_keys = _probe_keys(delta, id_col, hashes_col, bands)
             if migrate:
                 legacy = s.read.schema(fp_schema).parquet(*fps_dirs)
                 delta_keys = delta_keys.unionByName(
                     _probe_keys(legacy, id_col, hashes_col, bands)
                 )
-            write_clustered(
-                delta_keys,
-                os.path.join(keys_path, epoch),
-                "shard",
-                key_shard(F.col("key"), n_shards),
+            # the two deltas are independent writes into their own
+            # epoch dirs; the bloom refresh reads the keys epoch, so it
+            # waits for both
+            run_together(
+                s,
+                lambda: write_clustered(
+                    delta,
+                    os.path.join(fps_path, epoch),
+                    _REF_SHARD,
+                    id_shard(F.col(id_col), n_shards),
+                ),
+                lambda: write_clustered(
+                    delta_keys,
+                    os.path.join(keys_path, epoch),
+                    "shard",
+                    key_shard(F.col("key"), n_shards),
+                ),
             )
             bloom.refresh(s, batch_id, {"keys": keys_dirs}, _index_keys)
             cache.advance(batch_id, "fps", "keys")

@@ -32,6 +32,14 @@ MERGE by cluster_id — sources/merge.py):
 Every store follows the epoch-overwrite replay protocol of
 streaming/state_store.py; ``assign`` and ``blooms`` are its snapshot
 stores (latest prior snapshot retained as replay insurance).
+
+Per batch, the ``reps``, ``bands`` and ``assign`` writes run side by
+side (state_store.run_together): each writes an already checkpointed
+frame into its own epoch dir, so none depends on another, and a
+replay rewrites all three. The bloom refresh (which reads the new rep
+and band epochs), the rotation of the superseded ``assign`` snapshot
+and the listing advance wait for all three. The ``captions`` write
+stays before the probe, which reads it through the verify stage.
 """
 
 from __future__ import annotations
@@ -59,6 +67,7 @@ from .state_store import (
     load_epochs,
     read_shards,
     rotate,
+    run_together,
     sha_key,
     write_clustered,
 )
@@ -242,21 +251,25 @@ def stream_near_dup_clusters(
         finally:
             feats.unpersist()
         # outputs are localCheckpoint-materialized inside the run, so the
-        # writes below cannot invalidate what they were computed from;
-        # rep/band deltas are written key-shard-clustered so the pruned
-        # reads above serve future batches with row-group pruning
-        new_reps_dir = epoch_path(reps_path, batch_id)
-        new_bands_dir = epoch_path(bands_path, batch_id)
-        write_clustered(
-            out["new_reps"], new_reps_dir, _SHARD,
-            key_shard(sha_key(F.col("caption_sha")), n_shards),
-        )
-        write_clustered(
-            out["new_bands"], new_bands_dir, _SHARD,
-            key_shard(band_key(F.col("band"), F.col("key")), n_shards),
-        )
-        out["assign"].write.mode("overwrite").parquet(
-            epoch_path(assign_path, batch_id)
+        # three writes below neither invalidate what they were computed
+        # from nor depend on each other: they run side by side, each
+        # into its own epoch dir, and the bloom refresh, rotation and
+        # cache advance wait for all three. Rep/band deltas are written
+        # key-shard-clustered so the pruned reads above serve future
+        # batches with row-group pruning
+        run_together(
+            s,
+            lambda: write_clustered(
+                out["new_reps"], epoch_path(reps_path, batch_id), _SHARD,
+                key_shard(sha_key(F.col("caption_sha")), n_shards),
+            ),
+            lambda: write_clustered(
+                out["new_bands"], epoch_path(bands_path, batch_id), _SHARD,
+                key_shard(band_key(F.col("band"), F.col("key")), n_shards),
+            ),
+            lambda: out["assign"].write.mode("overwrite").parquet(
+                epoch_path(assign_path, batch_id)
+            ),
         )
         bloom.refresh(
             s, batch_id, {"reps": reps_dirs, "bands": bands_dirs}, _index_keys

@@ -35,6 +35,15 @@ re-lists from disk, so the replay contract is untouched. Bloom
 snapshots cross batches as a PATH, read where they are used — never a
 persisted frame that could outlive its query; ``BloomIndex`` holds
 their whole lifecycle (prune policy, probe, refresh and rotation).
+
+Inside a batch, steps that do not depend on each other run side by side
+through ``run_together``: a wave's cost is mostly the fixed latency of
+its Spark jobs, not their rows, so two independent job chains take the
+time of the longer one instead of the sum. Overlap is safe under the
+replay protocol because every overlapped write still targets its own
+epoch directory, and the steps that make the batch visible to the next
+one (``BloomIndex.refresh``, ``rotate``, ``EpochCache.advance``) run
+only after all of them have returned.
 """
 
 from __future__ import annotations
@@ -44,9 +53,11 @@ import os
 import re
 import shutil
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..operators.bloom_dedup import (
     _check_params,
@@ -66,6 +77,24 @@ BLOOMS_SCHEMA = (
 
 def epoch_path(base: str, batch_id: int) -> str:
     return os.path.join(base, f"epoch={batch_id}")
+
+
+def run_together(spark: SparkSession, *steps: Callable[[], object]) -> list:
+    """Run independent zero-argument steps side by side, one thread
+    each, and return their results in call order. Each thread carries
+    the caller's Spark local properties (in a stream, the query run id
+    as ``spark.jobGroup.id``), so its jobs stay attributed to the wave.
+    Waits for every step; if any raised, the first error in call order
+    is re-raised after all have finished, so no step outlives the
+    call. Meant for steps of built-in expressions or writes of
+    materialized frames: steps that each run a Python UDF would
+    contend for the same cores instead of overlapping latency."""
+    with ThreadPoolExecutor(max_workers=len(steps)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(step))
+            for step in steps
+        ]
+    return [f.result() for f in futures]
 
 
 def _tree_bytes(dirs: list[str]) -> int:

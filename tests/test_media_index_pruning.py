@@ -329,3 +329,31 @@ def test_offline_prune_stops_at_newest_committed_keys_epoch(spark, tmp_path):
         return sorted(r["video_id"] for r in ref.collect())
 
     assert ids(None) == ids(1) == ["a"]
+
+
+def test_lost_key_store_reads_whole_index(spark, tmp_path):
+    """A pruned state whose bloom snapshot survived but whose key store
+    was lost: a bloom hit has no key store to resolve its ids, so the
+    batch reads the whole index — a true re-upload is still a ref_dup
+    (not novel), and the batch rebuilds the key store (migration)."""
+    import shutil as sh
+
+    inp, state, ck = (str(tmp_path / d) for d in ("in", "state", "ck"))
+    os.makedirs(inp, exist_ok=True)
+    _write_wave(spark, inp, [("a", _avi("x")), ("c", _avi("y"))])
+    _run_once(spark, inp, state, ck)
+    assert os.path.isdir(os.path.join(state, "blooms"))
+    sh.rmtree(os.path.join(state, "keys"))
+
+    _write_wave(spark, inp, [("b", _avi("x", fps=25))])
+    _run_once(spark, inp, state, ck)
+    v = {
+        r["video_id"]: r
+        for r in load_media_verdicts(spark, state).collect()
+    }
+    assert v["b"]["outcome"] == "ref_dup" and v["b"]["match_ref_id"] == "a"
+    assert sorted(
+        r["video_id"]
+        for r in load_reference_fps(spark, state, VIDEO_FP_SCHEMA).collect()
+    ) == ["a", "c"]
+    assert os.path.isdir(os.path.join(state, "keys", "epoch=1"))

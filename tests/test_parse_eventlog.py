@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -64,3 +65,37 @@ def test_rolling_dir_and_single_file(tmp_path):
     single = tmp_path / "local-1"
     _write(single, app + mid + end)
     assert _run(single) == out
+
+
+def test_job_group_column_and_busy_wall(tmp_path):
+    """Each job line names its job group, and each group's summary has
+    its job count, summed job wall and busy wall (the union of its job
+    intervals): two overlapping jobs of one group sum to more wall than
+    the group was busy."""
+    def grouped(jid, t, name, group):
+        ev = _job_start(jid, t, name)
+        ev["Properties"] = {"spark.jobGroup.id": group}
+        return ev
+
+    def end(jid, t):
+        return {"Event": "SparkListenerJobEnd", "Job ID": jid,
+                "Completion Time": t}
+
+    log = tmp_path / "local-2"
+    _write(log, [
+        {"Event": "SparkListenerApplicationStart", "Timestamp": 0},
+        grouped(0, 1000, "save at a", "run-1"),
+        grouped(1, 1500, "save at b", "run-1"),
+        end(0, 3000),
+        end(1, 2500),
+        grouped(2, 4000, "collect at c", "run-1"),
+        end(2, 5000),
+        _job_start(3, 6000, "count at d"),
+        end(3, 6500),
+    ])
+    out = _run(log)
+    assert re.search(r"dur     1\.0s save at b +run-1 ", out), out
+    assert re.search(r"@    6\.0s dur     0\.5s count at d +- ", out), out
+    # run-1: walls 2.0 + 1.0 + 1.0 = 4.0 s; busy [1,3] + [4,5] = 3.0 s
+    assert "group run-1: 3 jobs, job wall 4.0s, busy 3.0s" in out, out
+    assert "group -: 1 jobs, job wall 0.5s, busy 0.5s" in out, out

@@ -236,3 +236,61 @@ def test_compact_media_index(spark, tmp_path):
         for r in load_media_verdicts(spark, state).collect()
     }
     assert v["rx"]["outcome"] == "ref_dup" and v["rx"]["match_ref_id"] == "x"
+
+
+def test_streaming_media_recall_gate(spark, tmp_path):
+    """Every planted pair of a ``spark_videos_df`` corpus streamed in
+    four waves — exact, re-muxed and near pairs, three of them split
+    across two waves — ends in one cluster, each video assigned to its
+    reference match, else its batch canonical, else itself: pair recall
+    is exactly 1.0."""
+    import pandas as pd
+
+    from ordinarydumpdeduplicator_spark.fixtures.generator import (
+        spark_videos_df,
+    )
+    from ordinarydumpdeduplicator_spark.operators.dedup_eval import (
+        dedup_pair_metrics,
+    )
+    from pyspark.sql import functions as F
+
+    inp = str(tmp_path / "in")
+    state = str(tmp_path / "state")
+    ck = str(tmp_path / "ck")
+    os.makedirs(inp, exist_ok=True)
+    n = 42
+    pdf = (
+        spark_videos_df(spark, n, seed=5).toPandas()
+        .sort_values("video_id").reset_index(drop=True)
+    )
+    # units of two (v<2u>, v<2u+1>); unit % 10 in (0, 1, 2) is a planted
+    # exact, re-mux or near pair. Cuts at 5, 21 and 23 split the near
+    # unit 2, the exact unit 10 and the re-mux unit 11 across waves
+    cuts = [0, 5, 21, 23, n]
+    for lo, hi in zip(cuts, cuts[1:]):
+        spark.createDataFrame(
+            pdf.iloc[lo:hi], INPUT_SCHEMA
+        ).coalesce(1).write.mode("append").parquet(inp)
+        _run_once(spark, inp, state, ck)
+    golden = pd.DataFrame(
+        [
+            (f"v{2 * u:09d}", f"v{2 * u + 1:09d}")
+            for u in range(n // 2)
+            if u % 10 in (0, 1, 2)
+        ],
+        columns=["id_a", "id_b"],
+    )
+    assign = load_media_verdicts(spark, state).select(
+        "video_id",
+        F.coalesce("match_ref_id", "batch_canonical_id", "video_id").alias(
+            "cluster_id"
+        ),
+    )
+    [m] = dedup_pair_metrics(
+        assign,
+        spark.createDataFrame(golden, "id_a string, id_b string"),
+        id_col="video_id",
+    ).collect()
+    assert assign.count() == n
+    assert m.n_golden == 7
+    assert m.pair_recall == 1.0, m

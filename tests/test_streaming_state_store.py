@@ -1,10 +1,15 @@
 """Contracts every stateful stream gets from streaming/state_store.py:
-bad parameters are rejected before a query starts, and no persisted
-frame (decoded batch, bloom snapshot, probe flags) outlives a query."""
+bad parameters are rejected before a query starts, no persisted frame
+(decoded batch, bloom snapshot, probe flags) outlives a query, steps
+run side by side keep the wave's job group, and a wave's job count
+stays within its budget."""
 
 from __future__ import annotations
 
+import gc
 import os
+import threading
+import time
 
 import pytest
 
@@ -28,6 +33,7 @@ from ordinarydumpdeduplicator_spark.streaming.near_dup import (
     load_assignments,
     stream_near_dup_clusters,
 )
+from ordinarydumpdeduplicator_spark.streaming.state_store import run_together
 from tests.conftest import to_spark_images
 
 MEDIA_SCHEMA = "video_id string, bytes binary"
@@ -213,3 +219,140 @@ def test_auto_policy_engages_by_index_size(spark, tiny_corpus, tmp_path,
         assert len({c for _, c in results["on"]}) < len(results["on"])
     else:
         assert ("b", "ref_dup", "a") in results["on"]
+
+
+def _wait_for_listeners(spark) -> None:
+    """Job ids reach the status tracker through the listener bus: drain
+    it before reading them."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_run_together_returns_results_in_call_order(spark):
+    def slow():
+        time.sleep(0.3)
+        return "slow"
+
+    assert run_together(spark, slow, lambda: "fast") == ["slow", "fast"]
+
+
+def test_run_together_reraises_after_every_step_finished(spark):
+    """The first error in call order is re-raised, and only once every
+    step has returned: no step is left running behind the caller."""
+    done = threading.Event()
+
+    def fail_late():
+        time.sleep(0.2)
+        raise ValueError("first")
+
+    def fail_now():
+        raise KeyError("second")
+
+    def slow():
+        time.sleep(0.6)
+        done.set()
+
+    with pytest.raises(ValueError, match="first"):
+        run_together(spark, fail_late, fail_now, slow)
+    assert done.is_set()
+
+
+def test_run_together_steps_keep_the_callers_job_group(spark):
+    """A step runs on its own thread with the caller's local
+    properties: it reads the caller's job group, and its Spark jobs are
+    counted under that group."""
+    sc = spark.sparkContext
+    group = "run-together-group"
+    sc.setJobGroup(group, "steps side by side")
+    try:
+        got = run_together(
+            spark,
+            lambda: sc.getLocalProperty("spark.jobGroup.id"),
+            lambda: spark.range(10).count(),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    _wait_for_listeners(spark)
+    assert got == [group, 10]
+    assert sc.statusTracker().getJobIdsForGroup(group)
+
+
+# Spark jobs of the second wave below, prune policy engaged (bloom
+# probe, pruned index reads, snapshot refresh), the most measured over
+# repeated runs on 4 cores (caption 45-46, media 77-79: one job
+# count varies from run to run, on the parent commit as well)
+STREAM_WAVE_JOB_BUDGET = {"caption": 46, "media": 79}
+
+
+@pytest.mark.parametrize("stream", ["caption", "media"])
+def test_stream_wave_job_budget(spark, tiny_corpus, tmp_path, stream):
+    """Regression guard on the fixed per-job cost of a stream wave: a
+    step that goes back to re-reading what it wrote, or a frame that
+    re-plans a chain instead of reading its checkpoint, shows up here
+    as extra jobs. Every job of a wave, including those of steps run
+    side by side, carries the query run id as its job group: no job
+    outside any group appears while a wave runs."""
+    pdf, _ = tiny_corpus
+    if stream == "caption":
+        waves = [to_spark_images(spark, pdf.iloc[lo:hi])
+                 for lo, hi in ((0, 120), (120, 200))]
+        prune = {"prune_min_state_bytes": 0}
+    else:
+        waves = [
+            spark.createDataFrame(rows, MEDIA_SCHEMA)
+            for rows in (
+                [("a", _avi("x")), ("c", _avi("y"))],
+                [("b", _avi("x", fps=25)), ("d", _avi("z"))],
+            )
+        ]
+        prune = {"prune_min_index_bytes": 0}
+    inp = str(tmp_path / "in")
+    state = str(tmp_path / "state")
+    ck = str(tmp_path / "ck")
+    os.makedirs(inp, exist_ok=True)
+    tracker = spark.sparkContext.statusTracker()
+    for wave in waves:
+        wave.coalesce(1).write.mode("append").parquet(inp)
+        _wait_for_listeners(spark)
+        ungrouped = set(tracker.getJobIdsForGroup())
+        q = _start(stream, spark, inp, state, ck, **prune)
+        q.awaitTermination()
+        _wait_for_listeners(spark)
+        assert not set(tracker.getJobIdsForGroup()) - ungrouped
+    n_jobs = len(tracker.getJobIdsForGroup(str(q.runId)))
+    assert n_jobs <= STREAM_WAVE_JOB_BUDGET[stream], n_jobs
+
+
+def _persistent_rdds(spark) -> int:
+    """Registered persistent RDDs once unreachable frames are collected
+    on both sides of the gateway (the JVM's context cleaner releases
+    the blocks of collected RDDs)."""
+    gc.collect()
+    spark._jvm.System.gc()
+    time.sleep(1)
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_media_waves_leave_no_growing_blocks(spark, tmp_path):
+    """The blocks a media wave registers (its checkpointed novelty
+    result) are released once the wave is over: over five waves on one
+    state dir, each matching the index, the count of persistent RDDs
+    does not grow with the number of waves."""
+    inp = str(tmp_path / "in")
+    state = str(tmp_path / "state")
+    ck = str(tmp_path / "ck")
+    os.makedirs(inp, exist_ok=True)
+    counts = []
+    for i in range(5):
+        spark.createDataFrame(
+            [(f"a{i}", _avi(f"u{i}")), (f"b{i}", _avi(f"u{i - 1}", fps=25))],
+            MEDIA_SCHEMA,
+        ).coalesce(1).write.mode("append").parquet(inp)
+        _start("media", spark, inp, state, ck).awaitTermination()
+        counts.append(_persistent_rdds(spark))
+    assert max(counts[2:]) <= counts[1], counts
+    v = {
+        r["video_id"]: (r["outcome"], r["match_ref_id"])
+        for r in load_media_verdicts(spark, state).collect()
+    }
+    assert all(v[f"b{i}"] == ("ref_dup", f"a{i - 1}") for i in range(1, 5))

@@ -5,10 +5,15 @@ Usage: python tools/parse_eventlog.py <spark.eventLog.dir>/<app-id>
 The log is either one file or a rolling-log directory, whose
 ``events_<n>_<app-id>`` files are read in numeric order of ``<n>``.
 The event log must be uncompressed (``spark.eventLog.compress=false``).
-Prints one line per job (start offset, duration, first stage name) plus
-driver-side gaps > 1s between consecutive jobs — the gaps are where
-driver/Python time (collects, localCheckpoint setup, thread contention)
-hides.
+Prints one line per job (start offset, duration, last stage name, job
+group) plus driver-side gaps > 1s between consecutive jobs — the gaps
+are where driver/Python time (collects, localCheckpoint setup, thread
+contention) hides. Then one line per job group (``spark.jobGroup.id``:
+a streaming query's run id, or ``-`` for jobs outside any group): its
+job count, the sum of its job walls, and its busy wall, the union of
+its job intervals. Jobs that run side by side make the sum exceed the
+busy wall, and make the serial inter-job gap an undercount of the time
+no job ran.
 """
 
 from __future__ import annotations
@@ -56,12 +61,11 @@ def main() -> None:
             t_app0 = ev["Timestamp"]
         elif e == "SparkListenerJobStart":
             jid = ev["Job ID"]
+            props = ev.get("Properties") or {}
             jobs[jid] = dict(
                 start=ev["Submission Time"],
                 stages=[s["Stage ID"] for s in ev["Stage Infos"]],
-                desc=(ev.get("Properties") or {}).get(
-                    "spark.job.description", ""
-                )[:80],
+                group=props.get("spark.jobGroup.id") or "-",
             )
             for s in ev["Stage Infos"]:
                 stage_names[s["Stage ID"]] = s["Stage Name"]
@@ -81,9 +85,9 @@ def main() -> None:
         j = jobs[jid]
         end = j.get("end", j["start"])
         dur = (end - j["start"]) / 1000.0
-        gap = (j["start"] - prev_end) / 1000.0 if prev_end else 0.0
+        gap = (j["start"] - prev_end) / 1000.0 if prev_end is not None else 0.0
         total_gap += max(gap, 0.0)
-        off = (j["start"] - t_app0) / 1000.0 if t_app0 else 0.0
+        off = (j["start"] - t_app0) / 1000.0 if t_app0 is not None else 0.0
         name = stage_names.get(j["stages"][-1], "?") if j["stages"] else "?"
         mark = f"  GAP {gap:7.1f}s" if gap > 1.0 else ""
         heavy = [
@@ -93,10 +97,33 @@ def main() -> None:
         ]
         print(
             f"job {jid:3d} @{off:7.1f}s dur {dur:7.1f}s {name[:60]:60s}"
-            f" {' '.join(heavy)}{mark}"
+            f" {j['group']} {' '.join(heavy)}{mark}"
         )
-        prev_end = max(prev_end or end, end)
+        prev_end = end if prev_end is None else max(prev_end, end)
     print(f"total inter-job gap: {total_gap:.1f}s")
+    for group, n, total, busy in group_summary(jobs):
+        print(f"group {group}: {n} jobs, job wall {total:.1f}s, busy {busy:.1f}s")
+
+
+def group_summary(jobs: dict[int, dict]) -> list[tuple[str, int, float, float]]:
+    """(group, jobs, summed job wall s, busy wall s) per job group, in
+    order of the group's first job; the busy wall is the length of the
+    union of the group's [start, end] job intervals."""
+    spans: dict[str, list[tuple[int, int]]] = {}
+    for jid in sorted(jobs):
+        j = jobs[jid]
+        spans.setdefault(j["group"], []).append(
+            (j["start"], j.get("end", j["start"]))
+        )
+    out = []
+    for group, iv in spans.items():
+        busy, reach = 0, min(iv)[0]  # reach: latest end so far
+        for lo, hi in sorted(iv):
+            busy += max(hi - max(lo, reach), 0)
+            reach = max(reach, hi)
+        total = sum(hi - lo for lo, hi in iv)
+        out.append((group, len(iv), total / 1000.0, busy / 1000.0))
+    return out
 
 
 if __name__ == "__main__":
