@@ -57,8 +57,6 @@ _VOCAB = [
     "near", "inside", "outside", "against", "between", "through",
 ]
 
-_FMTS = ["png", "bmp", "jpg"]
-
 
 def _rng(seed: int, *parts) -> np.random.Generator:
     key = ":".join(str(p) for p in parts)

@@ -44,14 +44,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .multimodal import decode_wav
-from .segment_dedup import segment_dedup_report, tier_precedence
+from .segment_dedup import segment_dedup_report
 
 AUDIO_FP_SCHEMA = (
     "audio_id string, status string, file_sha string, "
     "n_samples int, segment_hashes array<long>"
 )
-
-AUDIO_TIER_PRECEDENCE = tier_precedence("segment")
 
 
 def spectral_hash64(segment: np.ndarray) -> int:

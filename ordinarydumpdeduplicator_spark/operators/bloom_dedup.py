@@ -278,24 +278,16 @@ def incremental_new_docs(
     the history join; key-level structure leaves that rule nothing to
     push through (plan-gated in tests/test_plans.py).
 
-    If ``history`` carries a ``shard`` column (the sharded key store the
-    streaming ingest maintains — shard as computed by these bloom
-    hashes), the verify side is first semi-joined to the shards that saw
-    a bloom hit, so a wave whose hits cluster in few shards reads only
-    those shards' keys. Without it the verify anti-join scans the full
-    key store once — the bloom then only thins the probe side, which is
-    the honest limit of a one-shot (non-indexed) call.
-
-    The flags sub-plan has multiple consumers (miss branch, hit branch,
-    hit-shard pruning) and Spark does not dedupe common subplans, so an
+    The flags sub-plan has two consumers (miss branch, hit branch) and
+    Spark does not dedupe common subplans, so an
     inline-built flags frame is ``persist()``-ed: recompute-safe under
     executor loss (unlike a localCheckpoint) and shared across the
     branches, at the cost of a cached footprint of one boolean row per
     distinct batch key that lives until the plan is GC'd — bounded by
     the wave size, not history. Long-running callers that control action
     timing (streaming/ingest_dedup.py) instead pass their own persisted
-    ``flags`` frame — the ``_probe_flags(...)`` output — and unpersist
-    it right after their writes."""
+    ``flags`` frame — one (``key_col``, ``might_contain``) row per
+    distinct batch key — and unpersist it right after their writes."""
     if flags is None:
         if blooms is None:
             validate = False  # built right here: params match trivially
@@ -314,18 +306,8 @@ def incremental_new_docs(
         ).persist()
     miss_keys = flags.filter(~F.col("might_contain")).select(key_col)
     hit_keys = flags.filter(F.col("might_contain")).select(key_col)
-    history_keys = history.select(
-        key_col, *(["shard"] if "shard" in history.columns else [])
-    )
-    if "shard" in history_keys.columns:
-        hit_shards = (
-            flags.filter(F.col("might_contain")).select("shard").distinct()
-        )
-        history_keys = history_keys.join(
-            F.broadcast(hit_shards), "shard", "left_semi"
-        )
     verified_keys = hit_keys.join(
-        history_keys.select(key_col).distinct(), key_col, "left_anti"
+        history.select(key_col).distinct(), key_col, "left_anti"
     )
     new_keys = miss_keys.unionByName(verified_keys)
     # eqNullSafe: a NULL key (e.g. NULL text) has no history match by

@@ -53,11 +53,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SEG_FP_SCHEMA = (
-    "media_id string, status string, file_sha string, "
-    "seg_hashes array<long>"
-)
-
 # default chain parameters for the contract queries — one place, so the
 # Spark queries and the oracle SQL builders cannot drift
 SEG_BANDS = 4

@@ -39,8 +39,6 @@ from pyspark.sql import functions as F
 
 from .text_dedup import near_dup_text_clusters, normalized_text
 
-TIERS = ["empty", "exact", "normalized", "near", "unique"]
-
 
 def dedup_tiers(
     docs: DataFrame,

@@ -47,16 +47,12 @@ from .segment_dedup import (
     band_slices as _band_slices,
     segment_band_rows,
     segment_dedup_report,
-    tier_precedence,
 )
 
 VIDEO_FP_SCHEMA = (
     "video_id string, status string, file_sha string, "
     "n_frames_total int, frame_hashes array<long>"
 )
-
-# strongest identity first — same contract as tiers.IMAGE_TIER_PRECEDENCE
-VIDEO_TIER_PRECEDENCE = tier_precedence("frame")
 
 
 def video_fingerprints(

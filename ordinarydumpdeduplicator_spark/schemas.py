@@ -1,9 +1,5 @@
-"""Fixed schemas for the engine's tables (SURVEY.md §1.3).
-
-The reference's six in-memory hash-set "tables"
-(OrdinaryDumpDeduplicator/DataController/DataControllerSimple.cs:13-18)
-become fixed-schema DataFrames. The primary input table shape is mandated
-by BASELINE.json ``input_hint``.
+"""Fixed schema of the engine's primary input table (SURVEY.md §1.3),
+the shape mandated by BASELINE.json ``input_hint``.
 """
 
 from __future__ import annotations
@@ -20,61 +16,5 @@ IMAGES_SCHEMA = T.StructType(
         T.StructField("fmt", T.StringType(), True),
         T.StructField("caption", T.StringType(), True),
         T.StructField("phash", T.LongType(), True),
-    ]
-)
-
-# One row per pipeline run — analogue of Inspection (Common/Inspection.cs:7-29).
-RUNS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("source_id", T.StringType(), False),
-        T.StructField("start_ts", T.TimestampType(), False),
-        T.StructField("finish_ts", T.TimestampType(), True),
-    ]
-)
-
-# One row per (image, run) — analogue of FileState (Common/FileState.cs:7-28),
-# append-only; `previousState` pointer chain becomes a lag() window.
-STATES_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("size", T.LongType(), True),  # -1 on error (sentinel)
-        T.StructField("sha", T.BinaryType(), True),
-        # new|unchanged|modified|removed|unreadable|error (Common/FileStatus.cs:5-14)
-        T.StructField("status", T.StringType(), True),
-        T.StructField("location", T.StringType(), True),
-        # original|isolated (OrdinaryDumpDeduplicator/DuplicateSort.cs:5-11)
-        T.StructField("sort", T.StringType(), True),
-    ]
-)
-
-# Cluster assignment output: one row per member image.
-CLUSTERS_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("cluster_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # exact|near
-    ]
-)
-
-# Candidate / verified pair edges (image_id_a < image_id_b).
-PAIRS_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id_a", T.StringType(), False),
-        T.StructField("image_id_b", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-    ]
-)
-
-# Per-stage lineage/metrics row (resumability, SURVEY.md §4 item 3).
-STAGE_METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),  # complete|failed
-        T.StructField("rows_out", T.LongType(), True),
-        T.StructField("wall_sec", T.DoubleType(), True),
-        T.StructField("detail", T.StringType(), True),
     ]
 )

@@ -24,9 +24,12 @@ would be directory-partitioned by shard for file-level pruning) — then
 OR-merge the new keys' bitmap into the snapshot
 (``operators/bloom_dedup.bloom_merge`` — O(index size), independent of
 history row count). A miss-only batch never touches the key store at
-all. The reference's analogue is the per-file ``HashSet`` membership
-check in ``DataControllerSimple.cs``; this is that check, made
-restartable and distributed.
+all. With no snapshot below the batch (the first batch, or a lost
+``blooms/``) every key counts as a hit: the anti-join reads the key
+store at the batch keys' shards, and the refresh keys the whole store
+into a new snapshot. The reference's analogue is the per-file
+``HashSet`` membership check in ``DataControllerSimple.cs``; this is
+that check, made restartable and distributed.
 """
 
 from __future__ import annotations
@@ -39,8 +42,6 @@ from pyspark.sql import functions as F
 from ..operators.bloom_dedup import (
     DEFAULT_BITS_PER_SHARD,
     DEFAULT_K_HASHES,
-    _probe_flags,
-    bloom_shards,
     incremental_new_docs,
 )
 from ..operators.text_dedup import normalized_text
@@ -146,18 +147,14 @@ def stream_ingest_dedup(
         bloom.at(batch_id)
         flags = bloom.flags(batch_first, "content_sha")
         if flags is None:
-            # no snapshot yet (fresh or legacy store): probe a bloom
-            # built inline from the key history — the anti-join and
-            # n_distinct below need flags either way
-            history = read_shards(
-                s, "content_sha string", key_dirs, "shard", None
-            )
-            flags = _probe_flags(
-                batch_first,
-                bloom_shards(history, "content_sha", *params),
-                "content_sha",
-                *params,
-                validate=False,
+            # no snapshot below the batch (batch 0, or a lost blooms/):
+            # every non-NULL key is a hit, so the anti-join below reads
+            # the key store at the batch's shards and stays exact
+            sha = F.col("content_sha")
+            flags = batch_first.select(sha).distinct().select(
+                sha,
+                key_shard(sha, n_shards).alias("shard"),
+                sha.isNotNull().alias("might_contain"),
             )
         # ONE probe per batch: persist the flags, unpersist after writes
         flags = flags.persist()

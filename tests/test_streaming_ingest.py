@@ -1,13 +1,18 @@
 """Streaming ingest-dedup == batch first-occurrence dedup on the same
 corpus, across availableNow restarts, with bloom-index state carried
-between batches and crash-replay healing."""
+between batches, crash-replay healing at every write boundary, and a
+lost bloom snapshot rebuilt from the key store."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from ordinarydumpdeduplicator_spark.streaming import ingest_dedup, state_store
 from ordinarydumpdeduplicator_spark.streaming.ingest_dedup import (
     load_new_docs,
     stream_ingest_dedup,
@@ -208,3 +213,124 @@ def test_compact_ingest_keys(spark, tmp_path):
         r["doc_id"] for r in load_new_docs(spark, state).collect()
     )
     assert 5 not in new_ids and 6 in new_ids
+
+
+# three waves with within-batch, history and NULL-text duplicates
+CRASH_WAVES = [
+    [(i, f"w {i % 12}") for i in range(30)] + [(90, None)],
+    [(100 + i, f"w {i % 20}") for i in range(30)] + [(190, None)],
+    [(200 + i, f"w {5 + i % 25}") for i in range(30)],
+]
+
+
+def _stores(state):
+    """Every epoch dir of the ingest's stores, with its rows (sorted)
+    when committed, else None."""
+    out = {}
+    for store in ("new", "keys", "blooms", "metrics"):
+        base = os.path.join(state, store)
+        for name in sorted(os.listdir(base)):
+            path = os.path.join(base, name)
+            committed = os.path.exists(os.path.join(path, "_SUCCESS"))
+            out[store, name] = (
+                sorted(pq.read_table(path).to_pylist(), key=repr)
+                if committed else None
+            )
+    return out
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_stores(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("uninterrupted")
+    inp, state, ck = (str(root / d) for d in ("in", "state", "ck"))
+    os.makedirs(inp)
+    for rows in CRASH_WAVES:
+        _write_wave(spark, inp, rows)
+        _run_once(spark, inp, state, ck)
+    return _stores(state)
+
+
+@pytest.mark.parametrize(
+    "target, when",
+    [
+        ("write_row_epoch", "before"),  # after the new/ write
+        ("write_clustered", "before"),  # after the metrics row
+        ("refresh", "before"),  # after the key delta
+        ("refresh", "after"),  # after the snapshot, before the commit
+    ],
+    ids=["metrics", "keys", "blooms", "commit"],
+)
+def test_crash_at_each_write_boundary_restarts_to_identical_state(
+    spark, tmp_path, monkeypatch, uninterrupted_stores, target, when
+):
+    """The query dies at one write boundary of the second batch and is
+    restarted on the same checkpoint: the replayed batch and the next
+    one leave every store (new docs, key deltas, bloom bits, metrics)
+    row for row as an uninterrupted run does."""
+    inp, state, ck = (str(tmp_path / d) for d in ("in", "state", "ck"))
+    os.makedirs(inp)
+    _write_wave(spark, inp, CRASH_WAVES[0])
+    _run_once(spark, inp, state, ck)
+
+    owner = state_store.BloomIndex if target == "refresh" else ingest_dedup
+    original = getattr(owner, target)
+    crashed = []
+
+    def crash_once(*args, **kwargs):
+        if when == "after":
+            original(*args, **kwargs)
+        if not crashed:
+            crashed.append(target)
+            raise RuntimeError(f"crash at {target} ({when})")
+        if when == "before":
+            original(*args, **kwargs)
+
+    monkeypatch.setattr(owner, target, crash_once)
+    _write_wave(spark, inp, CRASH_WAVES[1])
+    with pytest.raises(Exception, match=f"crash at {target}"):
+        _run_once(spark, inp, state, ck)
+    _run_once(spark, inp, state, ck)
+    assert crashed == [target]
+    _write_wave(spark, inp, CRASH_WAVES[2])
+    _run_once(spark, inp, state, ck)
+
+    assert _stores(state) == uninterrupted_stores
+    got = sorted(r.doc_id for r in load_new_docs(spark, state).collect())
+    assert got == _expected_first_occurrence(sum(CRASH_WAVES, []))
+
+
+def test_lost_bloom_snapshot_rebuilds_from_key_store(spark, tmp_path):
+    """With ``blooms/`` gone, the next batch treats every key as a bloom
+    hit: it stays exact against the whole key history, writes a fresh
+    snapshot that keys the whole store, and later batches probe it."""
+    inp, state, ck = (str(tmp_path / d) for d in ("in", "state", "ck"))
+    os.makedirs(inp)
+    waves = [
+        [(i, f"lost {i % 15}") for i in range(30)] + [(90, None)],
+        [(100 + i, f"lost {10 + i % 15}") for i in range(30)],
+        # history duplicates of both waves, new keys, a NULL, and a
+        # within-batch duplicate of a new key
+        [(200 + i, f"lost {i * 3}") for i in range(15)]
+        + [(300, None), (301, "lost 99"), (302, "LOST   99")],
+        # all duplicates of the first two waves: the rebuilt snapshot
+        # must know the keys written before it was lost
+        [(400 + i, f"lost {i}") for i in range(25)],
+    ]
+    for rows in waves[:2]:
+        _write_wave(spark, inp, rows)
+        _run_once(spark, inp, state, ck)
+    blooms = os.path.join(state, "blooms")
+    shutil.rmtree(blooms)
+
+    _write_wave(spark, inp, waves[2])
+    _run_once(spark, inp, state, ck)
+    got = sorted(r.doc_id for r in load_new_docs(spark, state).collect())
+    assert got == _expected_first_occurrence(sum(waves[:3], []))
+    assert 300 in got and 301 in got and 302 not in got
+    assert state_store.latest_epoch(blooms) == os.path.join(blooms, "epoch=2")
+
+    _write_wave(spark, inp, waves[3])
+    _run_once(spark, inp, state, ck)
+    assert sorted(
+        r.doc_id for r in load_new_docs(spark, state).collect()
+    ) == got
