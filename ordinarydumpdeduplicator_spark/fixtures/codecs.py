@@ -186,8 +186,8 @@ def decode(data: bytes | None) -> np.ndarray:
     The ValueError contract holds for ANY malformed payload, including
     ones with a valid magic but a corrupt body — zlib/struct/numpy errors
     from the per-format decoders are normalized here so per-row callers
-    (operators/features.py, operators/multimodal.py) can mark the row
-    unreadable instead of failing the whole task."""
+    (operators/features.py, operators/image_region_dedup.py) can mark
+    the row unreadable instead of failing the whole task."""
     if data is None or len(data) == 0:
         raise ValueError("empty payload")
     head = bytes(data[:8])
@@ -331,7 +331,7 @@ def decode_avi_rgb(data: bytes) -> list:
 def encode_wav(x, sr: int = 8000, sampwidth: int = 2) -> bytes:
     """Synthesize a PCM RIFF/WAVE payload from a float waveform in
     [-1, 1] with the stdlib writer (mono; 1/2/4-byte PCM) — the encode
-    twin of operators/multimodal.decode_wav."""
+    twin of operators/audio_dedup.decode_wav."""
     import io
     import wave as _wave
 

@@ -30,8 +30,6 @@ def _dct_matrix(n: int = 32) -> np.ndarray:
     return _DCT32
 
 
-_GRAY_W = np.array([0.299, 0.587, 0.114], dtype=np.float64)
-
 # Fixed-point luma weights: 77/256, 150/256, 29/256 (sum = 256/256). All
 # gray math below runs on integers scaled by 256 — exact, deterministic,
 # and ~6x less memory traffic per image than the float64 formulation
@@ -40,12 +38,6 @@ _GRAY_W = np.array([0.299, 0.587, 0.114], dtype=np.float64)
 # the integer path keeps the feature stage compute-bound (measured: the
 # 4N-executor feature stage lost ~35% throughput to the f64 traffic).
 _W_R, _W_G, _W_B = 77, 150, 29
-
-
-def _to_gray(pixels: np.ndarray) -> np.ndarray:
-    """RGB HxWx3 uint8 -> HxW float64 grayscale (float reference path;
-    the feature hot path uses the fixed-point `_gray_fp`)."""
-    return np.tensordot(pixels.astype(np.float64), _GRAY_W, axes=([2], [0]))
 
 
 def _gray_fp(pixels: np.ndarray) -> np.ndarray:
@@ -75,14 +67,6 @@ def _bin_edges(n: int, bins: int) -> tuple[np.ndarray, np.ndarray]:
     return lo, hi
 
 
-def _integral(g: np.ndarray) -> np.ndarray:
-    h, w = g.shape
-    csum = np.zeros((h + 1, w + 1), dtype=np.float64)
-    np.cumsum(g, axis=0, out=csum[1:, 1:])
-    np.cumsum(csum[1:, 1:], axis=1, out=csum[1:, 1:])
-    return csum
-
-
 def _integral_fp(g: np.ndarray) -> np.ndarray:
     """Integer integral image of the uint16 fixed-point gray. uint32 when
     the worst-case total fits (any frame < ~8.2 MP), else int64 — exact
@@ -99,9 +83,10 @@ def _area_mean_resample_fp(
     g: np.ndarray, csum: np.ndarray, out_h: int, out_w: int
 ) -> np.ndarray:
     """Block-area-mean resample from the INTEGER integral image; returns
-    float64 gray values (same scale as `_to_gray`, i.e. divided back by
-    256). The gathers are tiny (out_h+1 x out_w+1), so the int64 casts
-    cost nothing; grouping keeps unsigned intermediates non-negative."""
+    float64 gray values on the 0-255 luma scale (the fixed-point sums
+    divided back by 256). The gathers are tiny (out_h+1 x out_w+1), so
+    the int64 casts cost nothing; grouping keeps unsigned intermediates
+    non-negative."""
     h, w = g.shape
     y0, y1 = _bin_edges(h, out_h)
     x0, x1 = _bin_edges(w, out_w)
@@ -112,26 +97,6 @@ def _area_mean_resample_fp(
     s = (c11 - c01) - (c10 - c00)
     area = np.outer(y1 - y0, x1 - x0).astype(np.float64)
     return s / (area * 256.0)
-
-
-def _area_mean_resample(
-    g: np.ndarray, out_h: int, out_w: int, csum: np.ndarray | None = None
-) -> np.ndarray:
-    """Vectorized block-area-mean resample via an integral image (pass a
-    precomputed ``csum`` to amortize it across several target sizes)."""
-    h, w = g.shape
-    y0, y1 = _bin_edges(h, out_h)
-    x0, x1 = _bin_edges(w, out_w)
-    if csum is None:
-        csum = _integral(g)
-    s = (
-        csum[np.ix_(y1, x1)]
-        - csum[np.ix_(y0, x1)]
-        - csum[np.ix_(y1, x0)]
-        + csum[np.ix_(y0, x0)]
-    )
-    area = np.outer(y1 - y0, x1 - x0).astype(np.float64)
-    return s / area
 
 
 def _pack_bits_msb(bits: np.ndarray) -> int:

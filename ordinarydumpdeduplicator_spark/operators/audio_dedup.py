@@ -20,10 +20,10 @@ decoded segment's magnitude spectrum is folded into 65 geometrically
 spaced bands and bit b = E[b] > E[b+1]. (The video chain's pHash plays
 the same role per frame.)
 
-Codec layer matches operators/multimodal.audio_features: RIFF/WAVE PCM
-is REALLY decoded (stdlib ``wave`` + numpy, 8/16/32-bit, multi-channel
-to mono); other containers (mp3/flac/ogg...) need codec libraries
-absent here — strict=True raises inside the task, strict=False emits
+Codec layer: RIFF/WAVE PCM is REALLY decoded (``decode_wav``: stdlib
+``wave`` + numpy, 8/16/32-bit, multi-channel to mono); other
+containers (mp3/flac/ogg...) need codec libraries absent here —
+strict=True raises inside the task, strict=False emits
 clearly-marked deterministic fake segment hashes (status 'fake_decode';
 hash-seeded per clip, so fakes never cross-match).
 
@@ -43,13 +43,39 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .multimodal import decode_wav
 from .segment_dedup import segment_dedup_report
 
 AUDIO_FP_SCHEMA = (
     "audio_id string, status string, file_sha string, "
     "n_samples int, segment_hashes array<long>"
 )
+
+
+def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
+    """REAL RIFF/WAVE PCM decode via the stdlib ``wave`` module (public
+    API, no external codec): returns (mono float32 waveform in [-1, 1],
+    sample_rate). 8-bit unsigned / 16-bit / 32-bit signed PCM; channels
+    are averaged to mono. Raises on anything wave can't parse."""
+    import io
+    import wave as _wave
+
+    with _wave.open(io.BytesIO(bytes(data)), "rb") as w:
+        sw = w.getsampwidth()
+        ch = w.getnchannels()
+        sr = w.getframerate()
+        raw = w.readframes(w.getnframes())
+    if sw == 1:  # WAV 8-bit is unsigned
+        arr = (np.frombuffer(raw, dtype=np.uint8).astype(np.float32) - 128.0) / 128.0
+    elif sw == 2:
+        arr = np.frombuffer(raw, dtype="<i2").astype(np.float32) / 32768.0
+    elif sw == 4:
+        arr = np.frombuffer(raw, dtype="<i4").astype(np.float32) / 2147483648.0
+    else:
+        raise ValueError(f"unsupported WAV sample width {sw}")
+    if ch > 1:
+        arr = arr[: len(arr) - len(arr) % ch].reshape(-1, ch).mean(axis=1)
+        arr = arr.astype(np.float32)
+    return arr, sr
 
 
 def spectral_hash64(segment: np.ndarray) -> int:

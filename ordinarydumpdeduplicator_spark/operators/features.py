@@ -225,85 +225,3 @@ def extract_features(images: DataFrame) -> DataFrame:
             yield _extract_batch(pdf)
 
     return images.select(*cols).mapInPandas(run, schema=FEATURES_SCHEMA)
-
-
-# Image-curation rule names in fixed order (deterministic reasons array,
-# the gopher_quality_filter convention).
-IMAGE_QUALITY_RULES = [
-    "unreadable",
-    "too_small",
-    "extreme_aspect",
-    "near_constant",
-    "no_caption",
-]
-
-
-def image_quality_filter(
-    features: DataFrame,
-    min_side: int = 64,
-    max_aspect_num: int = 3,
-    max_aspect_den: int = 1,
-    min_gray_std: float = 4.0,
-) -> DataFrame:
-    """LAION/DataComp-style image curation verdict over the compact
-    feature frame (NOT the bytes): (image_id, keep, reasons).
-
-    Rules, in the fixed IMAGE_QUALITY_RULES order:
-      - unreadable:     decode failed or payload missing (status != 'ok')
-      - too_small:      min(w, h) < min_side (thumbnails, tracking pixels)
-      - extreme_aspect: max(w, h) * den > num * min(w, h) — banners /
-                        skyscraper ads; integer cross-product, no floats
-      - near_constant:  gray_std < min_gray_std — blank fills, solid
-                        placeholders (the pixel analogue of an empty doc)
-      - no_caption:     caption absent (caption_sha NULL)
-
-    Scale shape: pure per-row expressions over the already-computed
-    feature columns — the verdict rides free on any pass that reads the
-    feature table; the expensive decode happened exactly once in
-    extract_features. Filters compose: `features.join(verdict, ...)
-    .where("keep")` before LSH keeps unusable images out of the banding
-    volume entirely.
-
-    Reference analogue: the reference's readability gate (P2/P3 —
-    FileInfo.IsReadable / Broken sentinels, Common/FileInfo.cs) widened
-    to content-quality rules the reference never needed (it never
-    decodes); beyond-reference surface, SURVEY §2.12."""
-    w, h = F.col("w_actual"), F.col("h_actual")
-    side_min, side_max = F.least(w, h), F.greatest(w, h)
-    # a status='ok' row whose feature columns are NULL anyway (partially
-    # populated frame) must fail too, not NULL-skip every gated rule and
-    # come out keep=true — missing features are an 'unreadable' verdict
-    feature_missing = w.isNull() | h.isNull() | F.col("gray_std").isNull()
-    rules = [
-        (
-            "unreadable",
-            F.col("status").isNull()
-            | (F.col("status") != "ok")
-            | feature_missing,
-        ),
-        ("too_small", side_min < min_side),
-        (
-            "extreme_aspect",
-            side_max * max_aspect_den > F.lit(max_aspect_num) * side_min,
-        ),
-        ("near_constant", F.col("gray_std") < min_gray_std),
-        ("no_caption", F.col("caption_sha").isNull()),
-    ]
-    # a NULL condition (unreadable rows have NULL dims/stats) must not
-    # silently pass: every rule except 'unreadable' is moot once the
-    # decode failed, so gate them on readability
-    readable = F.col("status") == "ok"
-    reasons = F.array_compact(
-        F.array(
-            F.when(rules[0][1], F.lit(rules[0][0])),
-            *[
-                F.when(readable & cond, F.lit(name))
-                for name, cond in rules[1:]
-            ],
-        )
-    )
-    return features.select(
-        "image_id",
-        (F.size(reasons) == 0).alias("keep"),
-        reasons.alias("reasons"),
-    )

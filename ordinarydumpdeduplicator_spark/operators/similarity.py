@@ -154,40 +154,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = _HP_SEED) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def sign_sketch(
-    embeddings: DataFrame,
-    dim: int,
-    n_planes: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, vec, sketch) where sketch bit j = sign(vec . hyperplane_j).
-
-    One numpy matmul per Arrow batch (vectorized pandas UDF): stacking the
-    batch to (n, dim) and multiplying by the seeded (dim, n_planes) plane
-    matrix is ~100x faster than per-element JVM array-aggregate expressions
-    and is the exact "vectorized Arrow UDF" pattern the input_hint mandates."""
-    if n_planes > 53:
-        # bit packing goes through a float64 dot product with 2^j weights;
-        # above 53 bits the mantissa cannot represent the sum exactly
-        raise ValueError("sign_sketch supports at most 53 planes")
-    planes = _hyperplanes(dim, n_planes)
-    weights = (2.0 ** np.arange(n_planes)).astype(np.float64)
-
-    @F.pandas_udf(T.LongType())
-    def sketch_udf(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())  # (n, dim) float32
-        bits = (mat @ planes.T) > 0  # (n, n_planes)
-        vals = (bits.astype(np.float64) @ weights).astype(np.int64)
-        return pd.Series(vals, index=vecs.index)
-
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        sketch_udf(F.col(vec_col)).alias("sketch"),
-    )
-
-
 def band_sketch(
     embeddings: DataFrame,
     dim: int,
@@ -198,12 +164,13 @@ def band_sketch(
 ) -> DataFrame:
     """(vec_id, vec, keys array<long>) — per-BAND hyperplane sketch keys.
 
-    Unlike ``sign_sketch`` (one packed long, <= 53 planes), each band's
-    ``n_planes/bands`` sign bits pack into their own key, so total planes
-    are unbounded: 8 bands x 8 bits (64 planes) gives both high candidate
-    recall (8 chances to agree) AND fine bucket granularity (256 keys per
-    band — a 4-bit key yields corpus/16-sized buckets that blow past any
-    cap at scale). One matmul + one reshape-matmul per Arrow batch."""
+    Each band's ``n_planes/bands`` sign bits pack into their own key
+    (<= 53 bits: the packing is a float64 dot product with 2^j weights),
+    so total planes are unbounded: 8 bands x 8 bits (64 planes) gives
+    both high candidate recall (8 chances to agree) AND fine bucket
+    granularity (256 keys per band — a 4-bit key yields corpus/16-sized
+    buckets that blow past any cap at scale). One matmul + one
+    reshape-matmul per Arrow batch."""
     if n_planes % bands != 0:
         raise ValueError("band_sketch: n_planes must be divisible by bands")
     bits_per = n_planes // bands

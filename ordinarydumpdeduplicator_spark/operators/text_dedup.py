@@ -507,7 +507,7 @@ def pair_score_histogram(
 ) -> DataFrame:
     """Empirical S-curve data: every LSH candidate pair scored by EXACT
     shingle Jaccard and bucketed into fixed-width bins — the measured
-    counterpart of functions/lsh_tuning's analytic banding curve.
+    counterpart of the analytic banding curve 1 - (1 - s^r)^b.
     Operators read the threshold/band trade-off off this histogram (how
     many candidates sit just below the verify threshold, where the
     marginal recall of loosening it lives) without ever materializing the

@@ -16,12 +16,12 @@ modality over REAL decoded frames:
                candidates, symmetric frame-match fraction >= threshold
                (catches trimmed, noised, or lightly re-quantized copies)
 
-Codec layer matches operators/multimodal.video_frame_sample: uncompressed
-24-bit RGB AVI is REALLY decoded (fixtures/codecs.decode_avi_rgb, pure
-struct + numpy over the public RIFF layout); other containers need
-ffmpeg-like tooling absent here — strict=True raises inside the task,
-strict=False emits clearly-marked deterministic fake frame hashes
-(status 'fake_decode'; hash-seeded per video, so fakes never cross-match).
+Codec layer: uncompressed 24-bit RGB AVI is REALLY decoded
+(fixtures/codecs.decode_avi_rgb, pure struct + numpy over the public
+RIFF layout); other containers need ffmpeg-like tooling absent here —
+strict=True raises inside the task, strict=False emits clearly-marked
+deterministic fake frame hashes (status 'fake_decode'; hash-seeded per
+video, so fakes never cross-match).
 
 Scale shape (the 100 TB question): fingerprinting is ONE mapInPandas
 pass over the payload column — bytes never enter a shuffle; only

@@ -187,41 +187,37 @@ def incremental_caption_candidates(
 
 def incremental_caption_run(
     new_features: DataFrame,
-    corpus_captions: DataFrame | None,
+    captions_resolver,
     state: dict | None = None,
     bucket_cap: int = 256,
     jaccard_threshold: float = 0.5,
-    captions_resolver=None,
 ) -> dict:
     """One incremental batch of the caption near-dup pipeline.
 
     new_features: extract_features output for the NEW images only
     (image_id, caption_sha, bands, ...).
-    corpus_captions: the cumulative images table (image_id, caption) —
-    in production the Iceberg table itself; verification joins captions
-    for both endpoints by id, old or new.
-    captions_resolver: optional callable (ids DataFrame with one
-    ``image_id`` column) -> (image_id, caption) frame covering AT LEAST
-    those ids. When given, verification fetches captions only for the
-    candidate pairs' endpoints instead of joining the whole corpus
-    table — the corpus captions store is the FAT side of this chain
-    (payload text), and the endpoint set is candidate-sized, so a
-    shard-clustered store serves the fetch with row-group pruning
+    captions_resolver: callable (ids DataFrame with one ``image_id``
+    column) -> (image_id, caption) frame covering AT LEAST those ids,
+    old or new. Verification fetches captions only for the candidate
+    pairs' endpoints instead of joining the whole corpus table — the
+    corpus captions store is the FAT side of this chain (payload text),
+    and the endpoint set is candidate-sized, so a shard-clustered store
+    serves the fetch with row-group pruning
     (streaming/near_dup.pruned_caption_resolver) instead of two
-    corpus-wide shuffles per batch. ``corpus_captions`` may be None in
-    that case. Candidates are eagerly materialized first so the
-    resolver sees a concrete id set; extra rows the resolver returns
-    are ignored (the verify join is by id).
-    state: previous batch's return value, or None for the first batch:
+    corpus-wide shuffles per batch. Candidates are eagerly materialized
+    first so the resolver sees a concrete id set; extra rows the
+    resolver returns are ignored (the verify join is by id).
+    state: the index as of the previous batch, or None for the first:
       reps    (caption_sha, rep)   exact-caption representative index
       bands   (id, band, key)      LSH band index (reps only)
       assign  (image_id, cluster_id) current assignments
     ``reps``/``bands`` may be pruned views that cover AT LEAST the index
     rows under the batch's shas and band keys (a bloom-pruned read has no
     false negatives): the left join / semi join below drop every other
-    row, so a pruned view behaves exactly like the full index (the
-    returned cumulative ``reps``/``bands`` then cover only that view;
-    ``new_reps``/``new_bands`` are the deltas to persist).
+    row, so a pruned view behaves exactly like the full index.
+
+    Returns ``assign`` (the new assignments) and the index deltas to
+    persist: ``new_reps`` and ``new_bands``.
 
     Matches the batch pipeline exactly while no bucket crosses the cap
     (tests pin equality with a full recompute on sub-cap corpora):
@@ -284,23 +280,19 @@ def incremental_caption_run(
     cands, new_band_rows = incremental_caption_candidates(
         new_rep_feats, prev_bands, bucket_cap=bucket_cap
     )
-    if captions_resolver is not None:
-        # materialize the (candidate-sized) pair set so the resolver
-        # sees a concrete endpoint id list — without the cut the
-        # resolver's shard collect AND the verify join would each
-        # re-run the whole candidate enumeration
-        cands = cands.localCheckpoint(eager=True)
-        endpoint_ids = (
-            cands.select(F.col("src").alias("image_id"))
-            .unionByName(cands.select(F.col("dst").alias("image_id")))
-            .distinct()
-        )
-        caps = captions_resolver(endpoint_ids)
-    else:
-        caps = corpus_captions
+    # materialize the (candidate-sized) pair set so the resolver sees a
+    # concrete endpoint id list — without the cut the resolver's shard
+    # collect AND the verify join would each re-run the whole candidate
+    # enumeration
+    cands = cands.localCheckpoint(eager=True)
+    endpoint_ids = (
+        cands.select(F.col("src").alias("image_id"))
+        .unionByName(cands.select(F.col("dst").alias("image_id")))
+        .distinct()
+    )
     near = verify_caption_pairs(
         cands.select("src", "dst", "capped"),
-        caps,
+        captions_resolver(endpoint_ids),
         jaccard_threshold=jaccard_threshold,
     ).select("src", "dst")
     # two consumers (the clustering's edge collect and its touched /
@@ -314,27 +306,10 @@ def incremental_caption_run(
     )
     assign = assign.localCheckpoint()
     new_reps = resolved.filter("is_new_rep").select("caption_sha", "rep")
-    # delta outputs are materialized (they are what persistent callers
-    # write); the cumulative reps/bands unions stay LAZY — a streaming
-    # caller reloads state from its tables each batch and would otherwise
-    # pay an O(corpus) re-materialization per micro-batch for frames it
-    # discards. Batch callers that thread the dict forward chain cheap
-    # unions over already-materialized deltas.
-    new_band_rows = new_band_rows.localCheckpoint()
-    reps = (
-        new_reps if prev_reps is None else prev_reps.unionByName(new_reps)
-    )
-    bands = (
-        new_band_rows if prev_bands is None
-        else prev_bands.unionByName(new_band_rows)
-    )
     return dict(
         assign=assign,
-        reps=reps,
-        bands=bands,
         new_reps=new_reps,
-        new_bands=new_band_rows,
-        edges=new_edges,
+        new_bands=new_band_rows.localCheckpoint(),
     )
 
 

@@ -46,52 +46,6 @@ def read_stage(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 64,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    path: str | None = None,
-) -> None:
-    """Persist as a BUCKETED table on the join/group key — the layout
-    that makes the hot dedup joins shuffle-free.
-
-    The dedup workload joins and aggregates on one key family over and
-    over (content sha: exact groups, keeper lookup, incremental
-    anti-joins). Hash-bucketing the stored table on that key means
-    Catalyst plans those joins/aggs WITHOUT an Exchange on the bucketed
-    side: two tables bucketed the same way sort-merge/hash-join directly
-    file-to-file, and a groupBy on the bucket key skips the shuffle
-    (pinned by tests/test_plans.py::test_bucketed_join_no_exchange). At
-    10^12 rows the features table is written once per ingest wave and
-    consumed by many queries — paying one bucketed write to delete every
-    downstream shuffle on the key is the classic warehouse trade.
-
-    Bucket metadata lives in the session catalog (``saveAsTable``; a
-    production deployment backs it with a metastore or switches to
-    Iceberg's bucket partition transform — sources/catalog.py's Iceberg
-    path). ``sort_cols`` additionally sorts within buckets so merge
-    joins skip their sort.
-
-    Reference analogue: none — the reference's store is a flat in-memory
-    dictionary (DataControllerSimple.cs); bucketing is the distributed
-    answer to the same "find my key's group fast" need.
-    """
-    w = df.write.mode(mode).format("parquet").bucketBy(
-        n_buckets, *bucket_cols
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    if path is not None:
-        # external table: files at an explicit location (tests use a tmp
-        # dir; spark.sql.warehouse.dir is a static conf and can't move
-        # at runtime)
-        w = w.option("path", path)
-    w.saveAsTable(table)
-
-
 def compact_stage(
     spark: SparkSession,
     path: str,

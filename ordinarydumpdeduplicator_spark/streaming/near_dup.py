@@ -242,11 +242,10 @@ def stream_near_dup_clusters(
             )
             out = incremental_caption_run(
                 feats,
-                None,
+                pruned_caption_resolver(s, caption_dirs),
                 state,
                 bucket_cap=bucket_cap,
                 jaccard_threshold=jaccard_threshold,
-                captions_resolver=pruned_caption_resolver(s, caption_dirs),
             )
         finally:
             feats.unpersist()

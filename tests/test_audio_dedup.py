@@ -9,6 +9,7 @@ from ordinarydumpdeduplicator_spark.functions.phash import hamming64
 from ordinarydumpdeduplicator_spark.operators.audio_dedup import (
     audio_dedup_report,
     audio_fingerprints,
+    decode_wav,
     spectral_hash64,
 )
 
@@ -138,6 +139,44 @@ def test_spectral_hash_invariances():
     assert hamming64(h, spectral_hash64(_tone("zzz")[:2000])) > 12
     assert spectral_hash64(np.zeros(2000)) == 0    # silence
     assert spectral_hash64(np.zeros(10)) == 0      # too short
+
+
+def _pcm_wav(pcm: np.ndarray, channels: int, sr: int = 8000) -> bytes:
+    """16-bit PCM WAV with the stdlib writer; each sample repeated on
+    every channel."""
+    import io
+    import wave
+
+    frames = np.repeat(pcm[:, None], channels, axis=1)
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(channels)
+        w.setsampwidth(2)
+        w.setframerate(sr)
+        w.writeframes(frames.tobytes())
+    return buf.getvalue()
+
+
+def test_decode_wav_real_decode_and_stereo_downmix():
+    """decode_wav is a REAL PCM decode (stdlib wave): a 440 Hz sine reads
+    back at its rate and amplitude, a stereo copy averages to the same
+    mono waveform, and a truncated RIFF raises."""
+    t = np.arange(4000) / 8000
+    pcm = (np.sin(2 * np.pi * 440.0 * t) * 32767).astype("<i2")
+    mono_wav = _pcm_wav(pcm, channels=1)
+    mono, sr = decode_wav(mono_wav)
+    assert len(mono) == 4000
+    assert sr == 8000
+    # sine rms = 1/sqrt(2); int16 quantization keeps it within 1e-3
+    rms = float(np.sqrt((mono ** 2).mean()))
+    assert abs(rms - 1 / np.sqrt(2)) < 1e-3
+    # 440 Hz over 0.5 s crosses zero ~2*440*0.5 times
+    assert abs(int(np.count_nonzero(np.diff(np.signbit(mono)))) - 440) <= 2
+    stereo, stereo_sr = decode_wav(_pcm_wav(pcm, channels=2))
+    assert stereo_sr == 8000
+    assert np.array_equal(stereo, mono)
+    with pytest.raises(Exception):
+        decode_wav(mono_wav[:30])
 
 
 def test_strict_raises_on_non_wav(spark):

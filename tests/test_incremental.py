@@ -118,13 +118,21 @@ def test_incremental_caption_run_equals_batch(spark, tiny_corpus):
 
     b1 = to_spark_images(spark, pdf.iloc[:120])
     b2 = to_spark_images(spark, pdf.iloc[120:])
-    s1 = incremental_caption_run(extract_features(b1), caps, None)
-    s2 = incremental_caption_run(extract_features(b2), caps, s1)
+    s1 = incremental_caption_run(
+        extract_features(b1), captions_resolver=lambda ids: caps
+    )
+    s2 = incremental_caption_run(
+        extract_features(b2),
+        captions_resolver=lambda ids: caps,
+        state=dict(reps=s1["new_reps"], bands=s1["new_bands"],
+                   assign=s1["assign"]),
+    )
 
     assert _assign_dict(s2["assign"]) == _assign_dict(ref)
     # band index holds one row-set per distinct caption rep, never members
-    n_reps = s2["reps"].count()
-    assert s2["bands"].select("id").distinct().count() <= n_reps
+    n_reps = s1["new_reps"].unionByName(s2["new_reps"]).count()
+    bands = s1["new_bands"].unionByName(s2["new_bands"])
+    assert bands.select("id").distinct().count() <= n_reps
 
 
 def test_incremental_capped_bucket_delta_preserves_connectivity(spark):

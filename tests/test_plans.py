@@ -235,50 +235,6 @@ def test_curation_funnel_plan_shape(spark, queries):
     assert "partial_count" in plan or "partial_sum" in plan
 
 
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    """write_bucketed's contract: a join of two tables bucketed on the
-    same key plans with NO shuffle Exchange on either side, and a
-    groupBy on the bucket key shuffles nothing — the layout that deletes
-    the dedup workload's hot-key shuffles at scale."""
-    from pyspark.sql import functions as F
-
-    from ordinarydumpdeduplicator_spark.sources.sinks import write_bucketed
-
-    a = spark.range(2000).select(
-        F.sha2(F.col("id").cast("string"), 256).alias("sha"),
-        F.col("id").alias("size"),
-    )
-    b = spark.range(1000).select(
-        F.sha2(F.col("id").cast("string"), 256).alias("sha"),
-        (F.col("id") * 2).alias("n"),
-    )
-    try:
-        write_bucketed(
-            a, "feat_a", ["sha"], n_buckets=8, path=str(tmp_path / "a")
-        )
-        write_bucketed(
-            b, "feat_b", ["sha"], n_buckets=8, path=str(tmp_path / "b")
-        )
-        ta, tb = spark.table("feat_a"), spark.table("feat_b")
-        # AQE/broadcast would hide the bucketing — force the merge path
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = ta.join(tb, "sha")
-            plan = plan_of(joined)
-            assert "Exchange" not in plan, plan
-            assert joined.count() == 1000
-            grouped = ta.groupBy("sha").agg(F.sum("size"))
-            gplan = plan_of(grouped)
-            assert "Exchange" not in gplan, gplan
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024)
-            )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS feat_a")
-        spark.sql("DROP TABLE IF EXISTS feat_b")
-
-
 def test_top_reclaimable_is_topk_not_global_sort(spark, tmp_path):
     """The reclaimable-space report's ordering must execute as
     TakeOrderedAndProject (per-partition k-heaps merged on the driver),
