@@ -324,10 +324,14 @@ def incremental_clusters(
         .union(new_edges.select(F.col("dst").alias("image_id")))
         .distinct()
     )
+    # two consumers (the affected members feeding the re-clustering,
+    # and the untouched pass-through): materialize once, or each runs
+    # the semi join and distinct again
     affected = (
         prev_assign.join(nodes, "image_id", "left_semi")
         .select("cluster_id")
         .distinct()
+        .localCheckpoint()
     )
     affected_assign = prev_assign.join(
         F.broadcast(affected), "cluster_id", "left_semi"

@@ -11,11 +11,15 @@ daily increment must NOT re-decode the whole corpus.
 id already seen and runs the (expensive, Python-side) extraction ONLY for
 ids not present yet — a left-anti join. Graph stages then run over the
 combined compact features, which is the cheap, JVM-side part.
-``incremental_caption_candidates`` / ``incremental_caption_run`` are the
-fully incremental LSH refinement: an append-only band index read through
-a batch-key semi join, candidates only for pairs a new doc completes, and
-re-clustering only of components the new edges touch
-(operators/connected_components.incremental_clusters).
+The fully incremental LSH refinement is one caption batch in two steps,
+which the caption stream (streaming/near_dup.py) overlaps with its index
+writes: ``incremental_caption_resolve`` (the first-seen rep of each batch
+caption, and the rep/band index deltas) and ``incremental_caption_cluster``
+(an append-only band index read through a batch-key semi join,
+candidates only for pairs a new doc completes —
+``incremental_caption_candidates`` — and re-clustering only of
+components the new edges touch,
+operators/connected_components.incremental_clusters).
 
 Status derivation (CDC) comes from operators/states.derive_status over the
 append-only states rows each run emits.
@@ -56,6 +60,13 @@ def incremental_features(
     return kept.unionByName(fresh), fresh
 
 
+def _band_rows(features: DataFrame) -> DataFrame:
+    """(id, band, key): one row per LSH band of each featured image."""
+    return features.filter("bands IS NOT NULL").selectExpr(
+        "image_id AS id", "posexplode(bands) AS (band, key)"
+    )
+
+
 def incremental_caption_candidates(
     new_features: DataFrame,
     prev_bands: DataFrame | None,
@@ -71,112 +82,88 @@ def incremental_caption_candidates(
     (index + batch), mirroring operators/lsh.pairs_from_buckets.
 
     Per-batch cost shape: the index is only read through a semi join on
-    the batch's band keys (pruned scan, no index-wide shuffle — the old
-    formulation aggregated the ENTIRE index every batch), and over-cap
-    buckets pay O(batch), not O(bucket):
+    the batch's band keys (pruned scan, no index-wide shuffle), and
+    over-cap buckets pay O(batch), not O(bucket). The batch's band rows
+    and the touched index rows go through ONE window over (band, key)
+    that tags every row with its bucket's ``n``/``mn`` (size and min id,
+    index + batch) and ``n_old``/``mn_old`` (the index's share). That
+    window output is the one checkpoint: every edge family below reads
+    it, so the index is scanned once. Per touched bucket:
 
-    - a bucket the batch pushes over the cap stars ALL members (old and
-      new) to the combined min — paid once, at the transition;
-    - a bucket that was ALREADY over cap stars only the batch's new
-      members to the combined min, plus one bridge edge old-min -> new
-      min when the min moved, so the star centers chain together. The
-      old members were starred when the bucket first crossed the cap.
+    - small (``n <= bucket_cap``): each new member pairs with every
+      other member, old or new;
+    - crossing the cap (``n > bucket_cap >= n_old``): ALL members, old
+      and new, star to ``mn`` — paid once, at the transition;
+    - already capped (``n_old > bucket_cap``): only the new members
+      star to ``mn`` (the old ones were starred when the bucket
+      crossed), plus one bridge edge ``mn -> mn_old`` when the min
+      moved, so the star centers chain together.
 
     Exact-duplicate captions collapse upstream (the caller emits
     caption_exact star edges from caption_sha groups), so the band index
     holds representatives — identical-caption skew never reaches the
     join, same as the batch pipeline."""
-    new_bands = (
-        new_features.filter(F.col("bands").isNotNull())
-        .select(
-            F.col("image_id").alias("id"),
-            F.posexplode("bands").alias("band", "key"),
-        )
-    )
-    batch_stats = new_bands.groupBy("band", "key").agg(
-        F.count(F.lit(1)).alias("n_new"), F.min("id").alias("mn_new")
-    )
+    new_bands = _band_rows(new_features)
+    rows = new_bands.selectExpr("id", "band", "key", "true AS is_new")
     if prev_bands is not None:
         # index members of batch-touched buckets only: semi join on the
         # batch's (band, key) set — a pruned scan of the index (AQE
         # broadcasts the batch side when it is small), never an
-        # index-wide aggregate. Checkpoint: three consumers below.
-        old_touched = prev_bands.join(
-            new_bands.select("band", "key").distinct(),
-            ["band", "key"],
-            "left_semi",
-        ).localCheckpoint()
-        prev_stats = old_touched.groupBy("band", "key").agg(
-            F.count(F.lit(1)).alias("n_old"), F.min("id").alias("mn_old")
+        # index-wide aggregate
+        rows = rows.unionByName(
+            prev_bands.join(
+                new_bands.select("band", "key").distinct(),
+                ["band", "key"],
+                "left_semi",
+            ).selectExpr("id", "band", "key", "false AS is_new")
         )
-        stats = batch_stats.join(prev_stats, ["band", "key"], "left")
-    else:
-        old_touched = None
-        stats = batch_stats.select(
-            "band", "key", "n_new", "mn_new",
-            F.lit(None).cast("long").alias("n_old"),
-            F.lit(None).cast("string").alias("mn_old"),
-        )
-    stats = (
-        stats.select(
+    w = "OVER (PARTITION BY band, key)"
+    win = (
+        rows.selectExpr(
+            "id",
             "band",
             "key",
-            (F.col("n_new") + F.coalesce("n_old", F.lit(0))).alias("n"),
-            F.least("mn_new", "mn_old").alias("mn"),  # least skips nulls
-            F.coalesce("n_old", F.lit(0)).alias("n_old"),
-            "mn_old",
+            "is_new",
+            f"count(1) {w} AS n",
+            f"min(id) {w} AS mn",
+            f"count(CASE WHEN NOT is_new THEN 1 END) {w} AS n_old",
+            f"min(CASE WHEN NOT is_new THEN id END) {w} AS mn_old",
         )
-        .filter(F.col("n") >= 2)
+        .filter("n >= 2")
+        .localCheckpoint()
     )
-    nb = new_bands.join(stats, ["band", "key"]).localCheckpoint()
-    small_new = nb.filter(F.col("n") <= bucket_cap)
-    small_old = (
-        old_touched.join(
-            stats.filter(F.col("n") <= bucket_cap).select("band", "key"),
-            ["band", "key"],
-            "left_semi",
-        ).select("band", "key", F.col("id").alias("other"))
-        if old_touched is not None
-        else None
-    )
-    small_all = small_new.select("band", "key", F.col("id").alias("other"))
-    if small_old is not None:
-        small_all = small_all.unionByName(small_old)
+    small = win.filter(f"n <= {bucket_cap}")
     # pair each new member against every bucket member (old or new);
     # least/greatest collapses the doubled new-new direction, the final
     # groupBy collapses multi-band agreement
     p_small = (
-        small_new.join(small_all.hint("shuffle_hash"), ["band", "key"])
-        .where(F.col("id") != F.col("other"))
-        .select(
-            F.least("id", "other").alias("src"),
-            F.greatest("id", "other").alias("dst"),
-            F.lit(False).alias("capped"),
+        small.filter("is_new")
+        .select("band", "key", "id")
+        .join(
+            small.selectExpr("band", "key", "id AS other").hint(
+                "shuffle_hash"
+            ),
+            ["band", "key"],
+        )
+        .where("id != other")
+        .selectExpr(
+            "least(id, other) AS src",
+            "greatest(id, other) AS dst",
+            "false AS capped",
         )
     )
-    # over-cap buckets: batch members always star to the combined min
-    star_new = (
-        nb.filter((F.col("n") > bucket_cap) & (F.col("id") != F.col("mn")))
-        .select(F.col("mn").alias("src"), F.col("id").alias("dst"))
+    big = win.filter(f"n > {bucket_cap}")
+    stars = big.filter(
+        f"(is_new OR n_old <= {bucket_cap}) AND id != mn"
+    ).selectExpr("mn AS src", "id AS dst")
+    # a moved min is a new member: its own row carries the bridge, once
+    # per bucket
+    bridges = big.filter(
+        f"n_old > {bucket_cap} AND id = mn AND mn != mn_old"
+    ).selectExpr("mn AS src", "mn_old AS dst")
+    p_big = stars.unionByName(bridges).selectExpr(
+        "src", "dst", "true AS capped"
     )
-    p_big = star_new
-    if old_touched is not None:
-        trans_keys = stats.filter(
-            (F.col("n") > bucket_cap) & (F.col("n_old") <= bucket_cap)
-        ).select("band", "key", "mn")
-        star_old_transition = (
-            old_touched.join(trans_keys, ["band", "key"])
-            .filter(F.col("id") != F.col("mn"))
-            .select(F.col("mn").alias("src"), F.col("id").alias("dst"))
-        )
-        bridge = stats.filter(
-            (F.col("n") > bucket_cap)
-            & (F.col("n_old") > bucket_cap)
-            & F.col("mn_old").isNotNull()
-            & (F.col("mn_old") != F.col("mn"))
-        ).select(F.col("mn").alias("src"), F.col("mn_old").alias("dst"))
-        p_big = p_big.unionByName(star_old_transition).unionByName(bridge)
-    p_big = p_big.select("src", "dst", F.lit(True).alias("capped"))
     cands = (
         p_small.unionByName(p_big)
         .groupBy("src", "dst")
@@ -185,17 +172,71 @@ def incremental_caption_candidates(
     return cands, new_bands
 
 
-def incremental_caption_run(
+def incremental_caption_resolve(
+    new_features: DataFrame, prev_reps: DataFrame | None = None
+) -> dict:
+    """Step one of an incremental caption batch: each batch caption sha
+    resolves to its representative, the FIRST-SEEN one (``prev_reps``,
+    the (caption_sha, rep) index as of the previous batch, None for the
+    first) or, for a new sha, the batch-min id. ``prev_reps`` may be a
+    pruned view covering AT LEAST the index rows under the batch's
+    shas: the left join drops every other row.
+
+    Returns ``resolved`` (caption_sha, rep, is_new_rep, bands),
+    localCheckpoint-materialized, and the two index deltas it alone
+    determines: ``new_reps`` (caption_sha, rep) and ``new_bands`` (id,
+    band, key) of the new reps. The deltas are projections of the
+    checkpoint, so they can be written while step two
+    (``incremental_caption_cluster``) reads the same checkpoint."""
+    f = new_features.filter("caption_sha IS NOT NULL AND bands IS NOT NULL")
+    batch_groups = f.groupBy("caption_sha").agg(
+        F.min("image_id").alias("batch_rep"),
+        F.any_value("bands").alias("bands"),
+    )
+    if prev_reps is not None:
+        resolved = batch_groups.join(
+            prev_reps, "caption_sha", "left"
+        ).selectExpr(
+            "caption_sha",
+            "coalesce(rep, batch_rep) AS rep",
+            "rep IS NULL AS is_new_rep",
+            "bands",
+        )
+    else:
+        resolved = batch_groups.selectExpr(
+            "caption_sha",
+            "batch_rep AS rep",
+            "true AS is_new_rep",
+            "bands",
+        )
+    resolved = resolved.localCheckpoint()
+    new_reps = resolved.filter("is_new_rep")
+    return dict(
+        resolved=resolved,
+        new_reps=new_reps.select("caption_sha", "rep"),
+        new_bands=_band_rows(new_reps.selectExpr("rep AS image_id", "bands")),
+    )
+
+
+def incremental_caption_cluster(
     new_features: DataFrame,
+    resolved: DataFrame,
     captions_resolver,
-    state: dict | None = None,
+    prev_bands: DataFrame | None = None,
+    prev_assign: DataFrame | None = None,
     bucket_cap: int = 256,
     jaccard_threshold: float = 0.5,
-) -> dict:
-    """One incremental batch of the caption near-dup pipeline.
+) -> DataFrame:
+    """Step two of an incremental caption batch: the caption_exact star
+    edges (each batch member -> its rep), the near-dup candidates of
+    the new reps against the band index, their verification, and the
+    re-clustering of the components the new edges touch. Returns the
+    new assignments (image_id, cluster_id), localCheckpoint-
+    materialized.
 
     new_features: extract_features output for the NEW images only
     (image_id, caption_sha, bands, ...).
+    resolved: step one's (``incremental_caption_resolve``) output.
     captions_resolver: callable (ids DataFrame with one ``image_id``
     column) -> (image_id, caption) frame covering AT LEAST those ids,
     old or new. Verification fetches captions only for the candidate
@@ -207,17 +248,13 @@ def incremental_caption_run(
     corpus-wide shuffles per batch. Candidates are eagerly materialized
     first so the resolver sees a concrete id set; extra rows the
     resolver returns are ignored (the verify join is by id).
-    state: the index as of the previous batch, or None for the first:
-      reps    (caption_sha, rep)   exact-caption representative index
-      bands   (id, band, key)      LSH band index (reps only)
-      assign  (image_id, cluster_id) current assignments
-    ``reps``/``bands`` may be pruned views that cover AT LEAST the index
-    rows under the batch's shas and band keys (a bloom-pruned read has no
-    false negatives): the left join / semi join below drop every other
-    row, so a pruned view behaves exactly like the full index.
-
-    Returns ``assign`` (the new assignments) and the index deltas to
-    persist: ``new_reps`` and ``new_bands``.
+    prev_bands (id, band, key): the LSH band index (reps only) as of
+    the previous batch; prev_assign (image_id, cluster_id): its
+    assignments. None for a first batch. Like ``prev_reps`` in step
+    one, ``prev_bands`` may be a pruned view that covers AT LEAST the
+    index rows under the batch's band keys (a bloom-pruned read has no
+    false negatives): the semi join drops every other row, so a pruned
+    view behaves exactly like the full index.
 
     Matches the batch pipeline exactly while no bucket crosses the cap
     (tests pin equality with a full recompute on sub-cap corpora):
@@ -238,47 +275,18 @@ def incremental_caption_run(
     )
     from ..operators.verify import verify_caption_pairs
 
-    prev_reps = state["reps"] if state else None
-    prev_bands = state["bands"] if state else None
-    prev_assign = state["assign"] if state else None
-
-    f = new_features.filter(
-        F.col("caption_sha").isNotNull() & F.col("bands").isNotNull()
-    )
-    batch_groups = f.groupBy("caption_sha").agg(
-        F.min("image_id").alias("batch_rep"),
-        F.any_value("bands").alias("bands"),
-    )
-    if prev_reps is not None:
-        joined = batch_groups.join(prev_reps, "caption_sha", "left")
-        resolved = joined.select(
-            "caption_sha",
-            F.coalesce("rep", "batch_rep").alias("rep"),
-            F.col("rep").isNull().alias("is_new_rep"),
-            "batch_rep",
-            "bands",
-        )
-    else:
-        resolved = batch_groups.select(
-            "caption_sha",
-            F.col("batch_rep").alias("rep"),
-            F.lit(True).alias("is_new_rep"),
-            "batch_rep",
-            "bands",
-        )
-    resolved = resolved.localCheckpoint()
     # caption_exact star edges: every new member -> its (possibly old) rep
     star = (
-        f.select("image_id", "caption_sha")
+        new_features.filter("caption_sha IS NOT NULL AND bands IS NOT NULL")
+        .select("image_id", "caption_sha")
         .join(resolved.select("caption_sha", "rep"), "caption_sha")
-        .filter(F.col("image_id") != F.col("rep"))
-        .select(F.col("rep").alias("src"), F.col("image_id").alias("dst"))
+        .filter("image_id != rep")
+        .selectExpr("rep AS src", "image_id AS dst")
     )
-    new_rep_feats = resolved.filter("is_new_rep").select(
-        F.col("rep").alias("image_id"), "bands"
-    )
-    cands, new_band_rows = incremental_caption_candidates(
-        new_rep_feats, prev_bands, bucket_cap=bucket_cap
+    cands, _ = incremental_caption_candidates(
+        resolved.filter("is_new_rep").selectExpr("rep AS image_id", "bands"),
+        prev_bands,
+        bucket_cap=bucket_cap,
     )
     # materialize the (candidate-sized) pair set so the resolver sees a
     # concrete endpoint id list — without the cut the resolver's shard
@@ -286,8 +294,8 @@ def incremental_caption_run(
     # enumeration
     cands = cands.localCheckpoint(eager=True)
     endpoint_ids = (
-        cands.select(F.col("src").alias("image_id"))
-        .unionByName(cands.select(F.col("dst").alias("image_id")))
+        cands.selectExpr("src AS image_id")
+        .unionByName(cands.selectExpr("dst AS image_id"))
         .distinct()
     )
     near = verify_caption_pairs(
@@ -304,13 +312,7 @@ def incremental_caption_run(
         if prev_assign is not None
         else connected_components(new_edges)
     )
-    assign = assign.localCheckpoint()
-    new_reps = resolved.filter("is_new_rep").select("caption_sha", "rep")
-    return dict(
-        assign=assign,
-        new_reps=new_reps,
-        new_bands=new_band_rows.localCheckpoint(),
-    )
+    return assign.localCheckpoint()
 
 
 def run_states(

@@ -1,10 +1,10 @@
 """Streaming near-duplicate clustering (SURVEY.md §2.11 + O19).
 
 ``foreachBatch`` over the image stream, where each micro-batch runs the
-fully incremental LSH (plans/incremental.incremental_caption_run): only
-the batch pays feature extraction, its (rep-only) band rows are joined
-against the append-only band index, and only components touched by new
-edges re-cluster. The reference's analogue is the re-inspection loop —
+fully incremental LSH (plans/incremental.py: its resolve step, then its
+cluster step): only the batch pays feature extraction, its (rep-only)
+band rows are joined against the append-only band index, and only
+components touched by new edges re-cluster. The reference's analogue is the re-inspection loop —
 this is the same operation with near-duplicate semantics and exactly-once
 file processing via the stream checkpoint.
 
@@ -33,13 +33,23 @@ Every store follows the epoch-overwrite replay protocol of
 streaming/state_store.py; ``assign`` and ``blooms`` are its snapshot
 stores (latest prior snapshot retained as replay insurance).
 
-Per batch, the ``reps``, ``bands`` and ``assign`` writes run side by
-side (state_store.run_together): each writes an already checkpointed
-frame into its own epoch dir, so none depends on another, and a
-replay rewrites all three. The bloom refresh (which reads the new rep
-and band epochs), the rotation of the superseded ``assign`` snapshot
-and the listing advance wait for all three. The ``captions`` write
-stays before the probe, which reads it through the verify stage.
+A wave's cost is mostly the fixed latency of its Spark jobs, so its
+independent steps run side by side (state_store.run_together):
+
+- the ``captions`` write beside the bloom probe and the rep
+  resolution (``plans/incremental.incremental_caption_resolve``): only
+  the verify step reads the new captions epoch;
+- once the resolved reps are checkpointed, the INDEX branch (the
+  ``reps`` and ``bands`` deltas side by side, then the bloom refresh,
+  which reads both) beside the CLUSTER branch (candidates, verify,
+  connected components: ``incremental_caption_cluster``), which reads
+  only index epochs below the batch.
+
+The ``assign`` write, the rotation of the superseded snapshot and the
+listing advance wait for both branches. Each write goes to its own
+epoch dir and a replay rewrites them all, so the order in which they
+commit does not matter. With the one-window candidate step, this
+took a traced steady seed-7 perfbench wave from 67 Spark jobs to 48.
 """
 
 from __future__ import annotations
@@ -52,7 +62,10 @@ from pyspark.sql import functions as F
 from ..operators.bloom_dedup import DEFAULT_BITS_PER_SHARD, DEFAULT_K_HASHES
 from ..operators.features import extract_features
 from ..operators.lsh import check_caption_params
-from ..plans.incremental import incremental_caption_run
+from ..plans.incremental import (
+    incremental_caption_cluster,
+    incremental_caption_resolve,
+)
 from .inspection import read_image_stream
 from .state_store import (
     BloomIndex,
@@ -82,10 +95,10 @@ _SHARD = "__shard"
 
 
 def pruned_caption_resolver(spark: SparkSession, caption_dirs: list[str]):
-    """Resolver for incremental_caption_run's caption fetches: given the
-    candidate pairs' endpoint ids, read ONLY their id-shards' row groups
-    of the shard-clustered caption store (plus a semi-join refinement) —
-    the captions table is the FAT store of this chain (payload text),
+    """Resolver for incremental_caption_cluster's caption fetches: given
+    the candidate pairs' endpoint ids, read ONLY their id-shards' row
+    groups of the shard-clustered caption store (plus a semi-join
+    refinement) — the captions table is the FAT store of this chain (payload text),
     and the endpoint set is candidate-sized, so this replaces two
     corpus-wide caption shuffles per micro-batch with a pruned fetch.
     Epochs written before the clustering column existed read as NULL
@@ -183,14 +196,6 @@ def stream_near_dup_clusters(
         dirs = cache.at(batch_id)
         reps_dirs, bands_dirs = dirs["reps"], dirs["bands"]
         bloom.at(batch_id, cache.nbytes("reps", "bands"))
-        # captions are written id-shard-clustered so the verify stage's
-        # endpoint fetches prune row groups (pruned_caption_resolver)
-        write_clustered(
-            batch_df.select("image_id", "caption"),
-            epoch_path(captions_path, batch_id),
-            _SHARD,
-            id_shard(F.col("image_id"), CAPTION_SHARDS),
-        )
         # verify joins captions for BOTH endpoints: prior epochs + this
         # one — fetched per candidate endpoint through the pruned
         # resolver, never as a corpus-wide join
@@ -198,7 +203,8 @@ def stream_near_dup_clusters(
         # the decode UDF runs once: the probe keys, the sha groups and
         # the caption-exact star edges all read this frame
         feats = extract_features(batch_df).persist()
-        try:
+
+        def resolve() -> tuple[dict, DataFrame | None]:
             # one probe covers both stores: every new rep is a batch
             # row, so the batch's sha and band keys are a superset of
             # what the run looks up (no flags: the stores are read whole)
@@ -213,7 +219,6 @@ def stream_near_dup_clusters(
                 )
             )
             hit = None if flags is None else hit_shards(flags)
-
             reps = (
                 read_shards(s, REPS_SCHEMA, reps_dirs, _SHARD, hit)
                 if reps_dirs
@@ -224,55 +229,66 @@ def stream_near_dup_clusters(
                 if bands_dirs
                 else None
             )
+            return incremental_caption_resolve(feats, reps), bands
+
+        def write_index(res: dict) -> None:
+            # rep/band deltas are written key-shard-clustered so the
+            # pruned reads above serve future batches with row-group
+            # pruning; the refresh reads both new epochs
+            run_together(
+                s,
+                lambda: write_clustered(
+                    res["new_reps"], epoch_path(reps_path, batch_id), _SHARD,
+                    key_shard(sha_key(F.col("caption_sha")), n_shards),
+                ),
+                lambda: write_clustered(
+                    res["new_bands"], epoch_path(bands_path, batch_id), _SHARD,
+                    key_shard(band_key(F.col("band"), F.col("key")), n_shards),
+                ),
+            )
+            bloom.refresh(
+                s, batch_id, {"reps": reps_dirs, "bands": bands_dirs},
+                _index_keys,
+            )
+
+        try:
+            # captions are written id-shard-clustered so the verify
+            # stage's endpoint fetches prune row groups (pruned_caption_
+            # resolver), its only reader: the write runs beside the
+            # probe and the rep resolution
+            _, (res, bands) = run_together(
+                s,
+                lambda: write_clustered(
+                    batch_df.select("image_id", "caption"),
+                    epoch_path(captions_path, batch_id),
+                    _SHARD,
+                    id_shard(F.col("image_id"), CAPTION_SHARDS),
+                ),
+                resolve,
+            )
             prior_assign = latest_epoch(assign_path, batch_id)
-            assign = (
-                s.read.schema(ASSIGN_SCHEMA).parquet(prior_assign)
-                if prior_assign
-                else None
-            )
-            # each state component stands on its own: gating the whole
-            # dict on one component would throw away a loadable
-            # reps/bands index when another is missing (e.g. a snapshot
-            # dir lost to storage issues) and re-emit duplicate
-            # first-seen reps
-            state = (
-                dict(reps=reps, bands=bands, assign=assign)
-                if any(x is not None for x in (reps, bands, assign))
-                else None
-            )
-            out = incremental_caption_run(
-                feats,
-                pruned_caption_resolver(s, caption_dirs),
-                state,
-                bucket_cap=bucket_cap,
-                jaccard_threshold=jaccard_threshold,
+            # once ``resolved`` is checkpointed, the index maintenance
+            # (rep/band deltas, then the bloom refresh) depends on
+            # nothing the clustering computes, and the clustering reads
+            # only prior index epochs: the two branches run side by side
+            _, assign = run_together(
+                s,
+                lambda: write_index(res),
+                lambda: incremental_caption_cluster(
+                    feats,
+                    res["resolved"],
+                    pruned_caption_resolver(s, caption_dirs),
+                    bands,
+                    s.read.schema(ASSIGN_SCHEMA).parquet(prior_assign)
+                    if prior_assign
+                    else None,
+                    bucket_cap=bucket_cap,
+                    jaccard_threshold=jaccard_threshold,
+                ),
             )
         finally:
             feats.unpersist()
-        # outputs are localCheckpoint-materialized inside the run, so the
-        # three writes below neither invalidate what they were computed
-        # from nor depend on each other: they run side by side, each
-        # into its own epoch dir, and the bloom refresh, rotation and
-        # cache advance wait for all three. Rep/band deltas are written
-        # key-shard-clustered so the pruned reads above serve future
-        # batches with row-group pruning
-        run_together(
-            s,
-            lambda: write_clustered(
-                out["new_reps"], epoch_path(reps_path, batch_id), _SHARD,
-                key_shard(sha_key(F.col("caption_sha")), n_shards),
-            ),
-            lambda: write_clustered(
-                out["new_bands"], epoch_path(bands_path, batch_id), _SHARD,
-                key_shard(band_key(F.col("band"), F.col("key")), n_shards),
-            ),
-            lambda: out["assign"].write.mode("overwrite").parquet(
-                epoch_path(assign_path, batch_id)
-            ),
-        )
-        bloom.refresh(
-            s, batch_id, {"reps": reps_dirs, "bands": bands_dirs}, _index_keys
-        )
+        assign.write.mode("overwrite").parquet(epoch_path(assign_path, batch_id))
         rotate(assign_path, batch_id)
         cache.advance(batch_id, "captions", "reps", "bands")
 

@@ -41,9 +41,11 @@ through ``run_together``: a wave's cost is mostly the fixed latency of
 its Spark jobs, not their rows, so two independent job chains take the
 time of the longer one instead of the sum. Overlap is safe under the
 replay protocol because every overlapped write still targets its own
-epoch directory, and the steps that make the batch visible to the next
-one (``BloomIndex.refresh``, ``rotate``, ``EpochCache.advance``) run
-only after all of them have returned.
+epoch directory, which no step of the same batch reads unless it
+waited for that write (``BloomIndex.refresh`` waits for the key-store
+writes it reads), and ``rotate`` and ``EpochCache.advance`` run only
+after every write of the batch has returned. Steps nest: a step may
+call ``run_together`` itself.
 """
 
 from __future__ import annotations

@@ -3,6 +3,7 @@ full recompute."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ordinarydumpdeduplicator_spark.operators.connected_components import (
@@ -11,6 +12,7 @@ from ordinarydumpdeduplicator_spark.operators.connected_components import (
 from ordinarydumpdeduplicator_spark.operators.exact_dedup import exact_edges
 from ordinarydumpdeduplicator_spark.operators.features import extract_features
 from ordinarydumpdeduplicator_spark.plans.incremental import (
+    incremental_caption_candidates,
     incremental_features,
 )
 from tests.conftest import to_spark_images
@@ -91,9 +93,10 @@ def test_incremental_clusters_equals_full_cc(spark):
 
 
 def test_incremental_caption_run_equals_batch(spark, tiny_corpus):
-    """Two incremental caption batches == the batch caption pipeline over
-    the full corpus: same assignments, band index holds reps only, and
-    only affected components re-cluster."""
+    """Two incremental caption batches (resolve step, then cluster
+    step, each) == the batch caption pipeline over the full corpus:
+    same assignments, band index holds reps only, and only affected
+    components re-cluster."""
     from ordinarydumpdeduplicator_spark.operators.lsh import (
         caption_candidates,
     )
@@ -101,7 +104,8 @@ def test_incremental_caption_run_equals_batch(spark, tiny_corpus):
         verify_caption_pairs,
     )
     from ordinarydumpdeduplicator_spark.plans.incremental import (
-        incremental_caption_run,
+        incremental_caption_cluster,
+        incremental_caption_resolve,
     )
 
     pdf, _ = tiny_corpus
@@ -116,17 +120,17 @@ def test_incremental_caption_run_equals_batch(spark, tiny_corpus):
         star.select("src", "dst").unionByName(near.select("src", "dst"))
     )
 
-    b1 = to_spark_images(spark, pdf.iloc[:120])
-    b2 = to_spark_images(spark, pdf.iloc[120:])
-    s1 = incremental_caption_run(
-        extract_features(b1), captions_resolver=lambda ids: caps
-    )
-    s2 = incremental_caption_run(
-        extract_features(b2),
-        captions_resolver=lambda ids: caps,
-        state=dict(reps=s1["new_reps"], bands=s1["new_bands"],
-                   assign=s1["assign"]),
-    )
+    def batch(images, reps=None, bands=None, assign=None):
+        feats = extract_features(images)
+        out = incremental_caption_resolve(feats, reps)
+        out["assign"] = incremental_caption_cluster(
+            feats, out["resolved"], lambda ids: caps, bands, assign
+        )
+        return out
+
+    s1 = batch(to_spark_images(spark, pdf.iloc[:120]))
+    s2 = batch(to_spark_images(spark, pdf.iloc[120:]),
+               s1["new_reps"], s1["new_bands"], s1["assign"])
 
     assert _assign_dict(s2["assign"]) == _assign_dict(ref)
     # band index holds one row-set per distinct caption rep, never members
@@ -184,3 +188,77 @@ def test_incremental_capped_bucket_delta_preserves_connectivity(spark):
 
     comp = uf_components(sorted(got1 | got2 | got3))
     assert len(set(comp.values())) == 1
+
+
+def _bucket_rule_oracle(old_rows, new_rows, cap):
+    """The candidate rule of ``incremental_caption_candidates`` in pure
+    Python, over (id, band, key) rows of the index and of the batch:
+    {(src, dst): capped}, and how often each bucket case applied."""
+    from collections import Counter, defaultdict
+
+    buckets = defaultdict(lambda: ([], []))
+    for i, band, key in old_rows:
+        buckets[band, key][0].append(i)
+    for i, band, key in new_rows:
+        buckets[band, key][1].append(i)
+    edges, cases = {}, Counter()
+    for old, new in buckets.values():
+        members = old + new
+        if not new or len(members) < 2:
+            continue
+        mn = min(members)
+        if len(members) <= cap:
+            cases["small"] += 1
+            got = {(min(a, b), max(a, b)) for a in new for b in members
+                   if a != b}
+        elif len(old) <= cap:
+            cases["crossing"] += 1
+            got = {(mn, x) for x in members if x != mn}
+        else:
+            got = {(mn, x) for x in new if x != mn}
+            if mn != min(old):
+                cases["capped_bridge"] += 1
+                got.add((mn, min(old)))
+            else:
+                cases["capped"] += 1
+        for e in got:
+            edges[e] = edges.get(e, False) or len(members) > cap
+    return edges, cases
+
+
+@pytest.mark.parametrize("cap", [2, 3])
+def test_incremental_caption_candidates_follow_the_bucket_rule(spark, cap):
+    """Exact edge set and capped flags of ``incremental_caption_
+    candidates`` against a pure-Python oracle of its four bucket cases
+    (small, crossing the cap, already capped with a moved min, already
+    capped without), on seeded random indexes and batches whose small
+    key ranges make every case occur; and on a first batch (no index)."""
+    import random
+
+    n_bands = 3
+    seen = set()
+    for seed in range(3):
+        rng = random.Random(seed)
+        old_rows = [(f"m{i:02d}", b, rng.randrange(4))
+                    for i in range(12) for b in range(n_bands)]
+        # new ids below and above the index ids, so the min moves in
+        # some buckets and stays in others
+        new_ids = [f"{c}{seed}" for c in "aknxyz"]
+        new_bands = {i: [rng.randrange(5) for _ in range(n_bands)]
+                     for i in new_ids}
+        new_rows = [(i, b, k) for i, ks in new_bands.items()
+                    for b, k in enumerate(ks)]
+        feats = spark.createDataFrame(
+            list(new_bands.items()), "image_id string, bands array<long>"
+        )
+        index = spark.createDataFrame(old_rows, "id string, band int, key long")
+        for prev, prev_rows in ((index, old_rows), (None, [])):
+            cands, rows = incremental_caption_candidates(
+                feats, prev, bucket_cap=cap
+            )
+            want, cases = _bucket_rule_oracle(prev_rows, new_rows, cap)
+            seen |= set(cases)
+            got = {(r.src, r.dst): r.capped for r in cands.collect()}
+            assert got == want, (seed, prev is None, cases)
+            assert sorted(map(tuple, rows.collect())) == sorted(new_rows)
+    assert seen == {"small", "crossing", "capped_bridge", "capped"}, seen

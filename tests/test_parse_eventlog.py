@@ -1,6 +1,7 @@
 """tools/parse_eventlog.py reads both event-log layouts: a single file
 and a rolling-log ``eventlog_v2_<app-id>/`` directory, whose
-``events_<n>_*`` parts must be read in numeric order of ``<n>``."""
+``events_<n>_*`` parts must be read in numeric order of ``<n>``; it
+summarizes job groups, and one group's SQL executions."""
 
 from __future__ import annotations
 
@@ -30,8 +31,12 @@ def _job_start(jid, t, name):
 
 
 def _run(path):
+    return _run_with(path)
+
+
+def _run_with(path, *args):
     return subprocess.run(
-        [sys.executable, TOOL, str(path)],
+        [sys.executable, TOOL, str(path), *args],
         check=True, capture_output=True, text=True,
     ).stdout
 
@@ -99,3 +104,71 @@ def test_job_group_column_and_busy_wall(tmp_path):
     # run-1: walls 2.0 + 1.0 + 1.0 = 4.0 s; busy [1,3] + [4,5] = 3.0 s
     assert "group run-1: 3 jobs, job wall 4.0s, busy 3.0s" in out, out
     assert "group -: 1 jobs, job wall 0.5s, busy 0.5s" in out, out
+
+
+def test_sql_execution_summary_for_one_group(tmp_path):
+    """With a job group, each SQL execution that ran jobs of the group
+    gets a line: its job count, its span, the input records of its
+    tasks (a stage reused by a later job counts once) and the scan
+    nodes of its final adaptive plan; executions of other groups are
+    left out."""
+    sql = "org.apache.spark.sql.execution.ui."
+
+    def job(jid, t, stages, group, eid):
+        ev = _job_start(jid, t, f"job {jid}")
+        ev["Stage Infos"] = [{"Stage ID": s, "Stage Name": f"s{s}"}
+                             for s in stages]
+        ev["Properties"] = {"spark.jobGroup.id": group,
+                            "spark.sql.execution.id": str(eid)}
+        return ev
+
+    def end(jid, t):
+        return {"Event": "SparkListenerJobEnd", "Job ID": jid,
+                "Completion Time": t}
+
+    def task(stage, records):
+        return {"Event": "SparkListenerTaskEnd", "Stage ID": stage,
+                "Task Metrics": {"Input Metrics": {"Records Read": records}}}
+
+    def plan(*scans):
+        return {"nodeName": "AdaptiveSparkPlan", "children": [
+            {"nodeName": "WriteFiles", "children": [
+                {"nodeName": "Union", "children": [
+                    {"nodeName": s, "children": []} for s in scans]}]}]}
+
+    log = tmp_path / "local-3"
+    _write(log, [
+        {"Event": "SparkListenerApplicationStart", "Timestamp": 0},
+        {"Event": sql + "SparkListenerSQLExecutionStart", "executionId": 7,
+         "time": 1000, "sparkPlanInfo": plan("Scan parquet ")},
+        job(0, 1100, [0], "run-1", 7),
+        task(0, 40), task(0, 60),
+        end(0, 1400),
+        job(1, 1500, [0, 1], "run-1", 7),  # stage 0 reused: skipped
+        task(1, 5),
+        end(1, 1800),
+        # the adaptive plan replaces the one the execution started with
+        {"Event": sql + "SparkListenerSQLAdaptiveExecutionUpdate",
+         "executionId": 7,
+         "sparkPlanInfo": plan("Scan parquet ", "Scan ExistingRDD",
+                               "Scan parquet ")},
+        {"Event": sql + "SparkListenerSQLExecutionEnd", "executionId": 7,
+         "time": 2000},
+        # no execution events: the span is its jobs' range
+        job(2, 2500, [2], "run-1", 9),
+        task(2, 3),
+        end(2, 3000),
+        job(3, 3100, [3], "run-2", 10),
+        task(3, 1000),
+        end(3, 3200),
+    ])
+    out = _run_with(log, "run-1")
+    assert re.search(
+        r"sql +7 @ +1\.0s span +1\.00s jobs +2 records +105 "
+        r"scans ExistingRDDx1 parquetx2 +WriteFiles", out), out
+    assert re.search(r"sql +9 @ +2\.5s span +0\.50s jobs +1 records +3 "
+                     r"scans - +-$", out, re.M), out
+    assert "sql   10" not in out, out
+    assert "group run-1: 2 SQL executions, 3 jobs, 108 input records" in out
+    # without a group argument, no SQL lines
+    assert not re.search(r"^sql ", _run(log), re.M)

@@ -1,10 +1,17 @@
 """Streaming near-dup clustering == batch caption pipeline on the same
 corpus, across two availableNow restarts (exactly-once per file via the
-stream checkpoint, state tables carried between batches)."""
+stream checkpoint, state tables carried between batches), and a query
+killed at any write boundary restarts to the state of an uninterrupted
+run."""
 
 from __future__ import annotations
 
 import os
+
+import pandas as pd
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql.readwriter import DataFrameWriter
 
 from ordinarydumpdeduplicator_spark.operators.connected_components import (
     connected_components,
@@ -12,6 +19,7 @@ from ordinarydumpdeduplicator_spark.operators.connected_components import (
 from ordinarydumpdeduplicator_spark.operators.features import extract_features
 from ordinarydumpdeduplicator_spark.operators.lsh import caption_candidates
 from ordinarydumpdeduplicator_spark.operators.verify import verify_caption_pairs
+from ordinarydumpdeduplicator_spark.streaming import near_dup, state_store
 from ordinarydumpdeduplicator_spark.streaming.near_dup import (
     load_assignments,
     stream_near_dup_clusters,
@@ -335,3 +343,105 @@ def test_pruned_state_exact_copy_batch_matches_full_scan(
     assert any(i in got for i in copies["image_id"])
     for i in copies["image_id"]:
         assert got.get(i) == got.get(i[: -len("_copy")])
+
+
+def _crash_waves(pdf):
+    """Three caption waves: fresh images, plus from the second wave on
+    exact-caption copies (new ids) of the previous wave's images, so
+    every wave reuses first-seen reps and probes index band rows."""
+    waves = [pdf.iloc[:40]]
+    for lo, hi in ((40, 70), (70, 100)):
+        copies = pdf.iloc[lo - 30:lo - 20].copy()
+        copies["image_id"] = copies["image_id"] + f"_c{lo}"
+        waves.append(pd.concat([pdf.iloc[lo:hi], copies]))
+    return waves
+
+
+def _run_caption_wave(spark, pdf_wave, inp, state, ck):
+    to_spark_images(spark, pdf_wave).coalesce(1).write.mode(
+        "append"
+    ).parquet(inp)
+    stream_near_dup_clusters(
+        spark, inp, state, ck, prune_min_state_bytes=0
+    ).awaitTermination()
+
+
+def _caption_stores(state):
+    """Every epoch dir of the caption stream's stores, with its rows
+    (sorted) when committed, else None."""
+    out = {}
+    for store in ("captions", "reps", "bands", "assign", "blooms"):
+        base = os.path.join(state, store)
+        for name in sorted(os.listdir(base)):
+            path = os.path.join(base, name)
+            committed = os.path.exists(os.path.join(path, "_SUCCESS"))
+            out[store, name] = (
+                sorted(pq.read_table(path).to_pylist(), key=repr)
+                if committed else None
+            )
+    return out
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_caption_stores(spark, tiny_corpus, tmp_path_factory):
+    root = tmp_path_factory.mktemp("caption_uninterrupted")
+    inp, state, ck = (str(root / d) for d in ("in", "state", "ck"))
+    os.makedirs(inp)
+    for wave in _crash_waves(tiny_corpus[0]):
+        _run_caption_wave(spark, wave, inp, state, ck)
+    return _caption_stores(state)
+
+
+# (owner, attribute, crash before or after the call, the store whose
+# path the call must carry): the wave's writes in the order they
+# commit, where the index writes run beside the clustering
+CAPTION_CRASH_POINTS = {
+    "captions": (near_dup, "write_clustered", "before", "captions"),
+    "reps": (near_dup, "write_clustered", "before", "reps"),
+    "bands": (near_dup, "write_clustered", "before", "bands"),
+    "refresh": (state_store.BloomIndex, "refresh", "before", None),
+    "assign": (DataFrameWriter, "parquet", "before", "assign"),
+    "rotate": (near_dup, "rotate", "after", "assign"),
+}
+
+
+@pytest.mark.parametrize("point", list(CAPTION_CRASH_POINTS))
+def test_caption_crash_at_each_write_boundary_restarts_to_identical_state(
+    spark, tiny_corpus, tmp_path, monkeypatch, uninterrupted_caption_stores,
+    point,
+):
+    """The caption query dies at one write boundary of the second of
+    three waves and is restarted on the same checkpoint: the replayed
+    wave and the next one leave every epoch of the captions, reps,
+    bands, assign and blooms stores row for row as an uninterrupted
+    run does."""
+    waves = _crash_waves(tiny_corpus[0])
+    inp, state, ck = (str(tmp_path / d) for d in ("in", "state", "ck"))
+    os.makedirs(inp)
+    _run_caption_wave(spark, waves[0], inp, state, ck)
+
+    owner, target, when, store = CAPTION_CRASH_POINTS[point]
+    original = getattr(owner, target)
+    crashed = []
+
+    def crash_once(*args, **kwargs):
+        mine = not crashed and (store is None or any(
+            isinstance(a, str) and store in a.split(os.sep) for a in args
+        ))
+        if when == "after" or not mine:
+            out = original(*args, **kwargs)
+        if mine:
+            crashed.append(point)
+            raise RuntimeError(f"crash at {point}")
+        return out
+
+    monkeypatch.setattr(owner, target, crash_once)
+    with pytest.raises(Exception, match=f"crash at {point}"):
+        _run_caption_wave(spark, waves[1], inp, state, ck)
+    stream_near_dup_clusters(
+        spark, inp, state, ck, prune_min_state_bytes=0
+    ).awaitTermination()
+    assert crashed == [point]
+    _run_caption_wave(spark, waves[2], inp, state, ck)
+
+    assert _caption_stores(state) == uninterrupted_caption_stores
