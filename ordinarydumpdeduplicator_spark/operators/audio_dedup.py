@@ -23,9 +23,10 @@ the same role per frame.)
 Codec layer: RIFF/WAVE PCM is REALLY decoded (``decode_wav``: stdlib
 ``wave`` + numpy, 8/16/32-bit, multi-channel to mono); other
 containers (mp3/flac/ogg...) need codec libraries absent here —
-strict=True raises inside the task, strict=False emits
-clearly-marked deterministic fake segment hashes (status 'fake_decode';
-hash-seeded per clip, so fakes never cross-match).
+``audio_fingerprints(strict=True)`` raises inside the task; the default
+(and ``audio_dedup_report``) emits clearly-marked deterministic fake
+segment hashes (status 'fake_decode'; hash-seeded per clip, so fakes
+never cross-match).
 
 Scale shape: ONE mapInPandas pass over the payload column (bytes never
 shuffle; only id + <= n_segments int64 hashes do); everything after is
@@ -198,12 +199,7 @@ def audio_fingerprints(
 def audio_dedup_report(
     audio: DataFrame,
     n_segments: int = 8,
-    seg_len: int = 2048,
-    bands: int = 4,
-    max_hamming: int = 6,
     min_match_frac: float = 0.5,
-    bucket_cap: int = 64,
-    strict: bool = False,
     fingerprints: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """End-to-end audio dedup: fingerprints, tagged edges, cluster
@@ -214,17 +210,12 @@ def audio_dedup_report(
     fps = (
         fingerprints
         if fingerprints is not None
-        else audio_fingerprints(
-            audio, n_segments=n_segments, seg_len=seg_len, strict=strict
-        )
+        else audio_fingerprints(audio, n_segments=n_segments)
     )
     return segment_dedup_report(
         fps,
         id_col="audio_id",
         hashes_col="segment_hashes",
         prefix="segment",
-        bands=bands,
-        max_hamming=max_hamming,
         min_match_frac=min_match_frac,
-        bucket_cap=bucket_cap,
     )

@@ -17,10 +17,10 @@ Scale shape (the part that must survive 100 TB):
   per side, bands computed inside the UDF, explode of ready arrays only.
 - Candidates come from an equi-join of band rows on (band, key): only
   cross-side pairs exist by construction, never the C(n,2) within-side
-  blowup. The reference side of each bucket is capped FIRST with the
-  engine's standard rule (buckets with more than ``ref_bucket_cap``
-  members collapse to their minimum id — one deterministic witness), so
-  a hot shingle-band in the snapshot cannot multiply the batch.
+  blowup. The reference side of each bucket is capped FIRST by
+  lsh.cap_reference_buckets (over ``ref_bucket_cap`` members collapse
+  to their minimum id — one deterministic witness), so a hot
+  shingle-band in the snapshot cannot multiply the batch.
 - The reference band frame is the big side at steady state (snapshot >>
   batch): the join hints SHUFFLE_HASH on it — the checkpoint-less band
   frames carry no size stats, and Catalyst would otherwise broadcast
@@ -45,7 +45,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.minhash import band_keys_udf
-from .lsh import DEFAULT_BUCKET_CAP, caption_band_rows, ensure_min_parallelism
+from .lsh import (
+    DEFAULT_BUCKET_CAP,
+    cap_reference_buckets,
+    caption_band_rows,
+    ensure_min_parallelism,
+)
 from .verify import JACCARD_THRESHOLD, LCS_RATIO, verify_caption_pairs
 
 
@@ -77,27 +82,12 @@ def cross_corpus_matches(
     same rule as the in-corpus candidate chain (and the oracle).
     """
     b_rows = _band_rows(batch, id_col, text_col)
-    # the reference band frame feeds TWO consumers (bucket stats + the
-    # join back): without a cut Catalyst recomputes the signature UDF
-    # chain once per consumer (the measured multi-consumer pitfall
-    # operators/lsh.pairs_from_buckets checkpoints against); lazy so it
-    # materializes inside whichever job consumes it first
-    r_rows = _band_rows(reference, id_col, text_col).localCheckpoint(
-        eager=False
-    )
-
-    # standard engine cap rule, applied to the reference side only: a
-    # hash-aggregate (count/min per bucket) joined back — never a window,
-    # so nothing sorts the band frame (the plan rule tests/test_plans.py
-    # pins for the in-corpus operators)
-    r_stats = r_rows.groupBy("band", "key").agg(
-        F.count(F.lit(1)).alias("n"), F.min("id").alias("mn")
-    )
-    r_capped = (
-        r_rows.join(r_stats, ["band", "key"])
-        .filter((F.col("n") <= ref_bucket_cap) | (F.col("id") == F.col("mn")))
-        .select("band", "key", F.col("id").alias("ref_id"))
-    )
+    # standard engine cap rule, applied to the reference side only
+    # (lsh.cap_reference_buckets): the signature UDF chain runs once, and
+    # nothing sorts the full reference band frame
+    r_capped = cap_reference_buckets(
+        _band_rows(reference, id_col, text_col), "id", ref_bucket_cap
+    ).select("band", "key", F.col("id").alias("ref_id"))
 
     cands = (
         b_rows.join(r_capped.hint("shuffle_hash"), ["band", "key"])

@@ -35,7 +35,6 @@ def dedup_pair_metrics(
     cluster_col: str = "cluster_id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """One-row metrics frame: n_golden, n_predicted, n_hit, pair_recall,
     pair_precision.
@@ -47,14 +46,12 @@ def dedup_pair_metrics(
     semantics), which is the honest reading: the deduper never clustered
     them.
 
-    ``checkpoint``: ``assignments`` feeds THREE consumers (both endpoint
-    probes and the cluster-size fold) and ``golden_pairs`` two — without
-    a lazy cut each consumer re-executes the upstream chain (a full
-    LSH->CC run, measured 3x wall on the contract query). Pass False
-    when both frames are already materialized tables (the production
-    case, where assignments is a pipeline stage on disk)."""
-    if checkpoint:
-        assignments = assignments.localCheckpoint(eager=False)
+    Both inputs are cut with a lazy localCheckpoint: ``assignments``
+    feeds THREE consumers (both endpoint probes and the cluster-size
+    fold) and ``golden_pairs`` two — without the cut each consumer
+    re-executes the upstream chain (a full LSH->CC run, measured 3x wall
+    on the contract query)."""
+    assignments = assignments.localCheckpoint(eager=False)
     g = (
         golden_pairs.select(
             F.least(F.col(id_a), F.col(id_b)).alias("__ga"),
@@ -62,9 +59,8 @@ def dedup_pair_metrics(
         )
         .where(F.col("__ga") != F.col("__gb"))
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    if checkpoint:
-        g = g.localCheckpoint(eager=False)
 
     a = assignments.select(
         F.col(id_col).alias("__ida"), F.col(cluster_col).alias("__ca")

@@ -71,10 +71,8 @@ from pyspark.sql import functions as F
 
 from ..fixtures import codecs
 from ..functions.phash import tile_phashes
-from .connected_components import connected_components
 from .features import EMPTY_SHA256
-from .segment_dedup import segment_near_pairs, star_edges
-from .tiers import tier_attribution
+from .segment_dedup import cluster_report, segment_near_pairs, star_edges
 
 IMAGE_REGION_FP_SCHEMA = (
     "image_id string, status string, file_sha string, "
@@ -159,20 +157,16 @@ def image_region_fingerprints(
     )
 
 
-def image_region_edges(
-    fps: DataFrame,
-    bands: int = 4,
-    max_hamming: int = 4,
-    min_match_frac: float = 0.6,
-    bucket_cap: int = 64,
-) -> DataFrame:
+def image_region_edges(fps: DataFrame) -> DataFrame:
     """All three edge families over one fingerprint frame, tagged with
     `kind` for tier attribution (precedence: REGION_TIER_PRECEDENCE).
 
     Note the near family is position-free (segment_band_rows drops tile
     position from the LSH key and match_frac_expr matches tile SETS), so
     a collage of the same tiles rearranged also verifies — acceptable
-    for dedup (it IS derived content) and documented rather than hidden."""
+    for dedup (it IS derived content) and documented rather than hidden.
+    A near pair needs >= 60% of its tiles matched within Hamming 4 (4
+    bands, bucket cap 64: the segment_near_pairs defaults)."""
     exact = star_edges(
         fps.filter(F.col("file_sha").isNotNull()).select(
             "image_id", "file_sha"
@@ -191,10 +185,8 @@ def image_region_edges(
     )
     near = segment_near_pairs(
         fps.filter(F.col("status") == "ok"),
-        bands=bands,
-        max_hamming=max_hamming,
-        min_match_frac=min_match_frac,
-        bucket_cap=bucket_cap,
+        max_hamming=4,
+        min_match_frac=0.6,
         id_col="image_id",
         hashes_col="tile_hashes",
     ).select("src", "dst", F.lit("tile_near").alias("kind"))
@@ -204,10 +196,6 @@ def image_region_edges(
 def image_region_dedup_report(
     images: DataFrame,
     grid: int = 4,
-    bands: int = 4,
-    max_hamming: int = 4,
-    min_match_frac: float = 0.6,
-    bucket_cap: int = 64,
     fingerprints: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """End-to-end region-level image dedup: fingerprints, tagged edges,
@@ -227,31 +215,8 @@ def image_region_dedup_report(
         else image_region_fingerprints(images, grid=grid)
     )
     # fps feeds six consumers (3 edge families + near verify sides +
-    # the cluster left join); edges feeds two (CC + tier attribution)
+    # the cluster left join)
     fps = fps.localCheckpoint(eager=False)
-    edges = image_region_edges(
-        fps,
-        bands=bands,
-        max_hamming=max_hamming,
-        min_match_frac=min_match_frac,
-        bucket_cap=bucket_cap,
-    ).localCheckpoint(eager=False)
-    assign = connected_components(edges.select("src", "dst"))
-    clusters = (
-        fps.select("image_id")
-        .join(assign, "image_id", "left")
-        .select(
-            "image_id",
-            F.coalesce("cluster_id", "image_id").alias("cluster_id"),
-            F.col("cluster_id").isNotNull().alias("is_dup"),
-        )
+    return cluster_report(
+        fps, image_region_edges(fps), "image_id", REGION_TIER_PRECEDENCE
     )
-    tiers = tier_attribution(
-        clusters, edges, REGION_TIER_PRECEDENCE, id_col="image_id"
-    )
-    return {
-        "fingerprints": fps,
-        "edges": edges,
-        "clusters": clusters,
-        "tiers": tiers,
-    }

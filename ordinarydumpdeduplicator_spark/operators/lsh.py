@@ -83,7 +83,6 @@ def pairs_from_buckets(
     banded: DataFrame,
     id_col: str = "id",
     bucket_cap: int = DEFAULT_BUCKET_CAP,
-    materialize: bool = True,
     with_band_range: bool = False,
 ) -> DataFrame:
     """(id, band, key) -> candidate edges (src < dst).
@@ -99,7 +98,7 @@ def pairs_from_buckets(
     multi-member buckets survive), so AQE turns the join into a broadcast
     and the band frame is never exchanged a second time.
 
-    ``materialize`` localCheckpoints the joined bucket frame: it feeds
+    The joined bucket frame is localCheckpointed (lazily): it feeds
     THREE consumers (both sides of the pair self-join + the star branch),
     and without a cut Catalyst re-executes the whole upstream band DAG per
     consumer — measured 3x wall on the edges stage at 160k rows. On a
@@ -111,18 +110,15 @@ def pairs_from_buckets(
         .agg(F.expr("count(1) AS n"), F.expr("min(id) AS mn"))
         .filter("n >= 2")
     )
-    b = rows.join(stats, ["band", "key"])
-    if materialize:
-        # the checkpoint guarantees b's subtree computes once for its
-        # three consumers (the BlockManager's per-partition
-        # get-or-compute lock dedupes concurrent pulls). Under AQE the
-        # call runs every shuffle stage of b's subtree right here, as its
-        # own SQL execution; eager=False only defers the final,
-        # shuffle-free stage to the first consuming job. Measured at
-        # 320k rows / 4x2 executors (full edges stage, warm): eager
-        # 16.2s, lazy 15.5s, no checkpoint at all 21.6s (the 3 consumers
-        # recompute the band DAG).
-        b = b.localCheckpoint(eager=False)
+    # the checkpoint guarantees b's subtree computes once for its three
+    # consumers (the BlockManager's per-partition get-or-compute lock
+    # dedupes concurrent pulls). Under AQE the call runs every shuffle
+    # stage of b's subtree right here, as its own SQL execution;
+    # eager=False only defers the final, shuffle-free stage to the first
+    # consuming job. Measured at 320k rows / 4x2 executors (full edges
+    # stage, warm): eager 16.2s, lazy 15.5s, no checkpoint at all 21.6s
+    # (the 3 consumers recompute the band DAG).
+    b = rows.join(stats, ["band", "key"]).localCheckpoint(eager=False)
     small = b.filter(f"n <= {int(bucket_cap)}").select("id", "band", "key")
     # SHUFFLE_HASH hint: the checkpointed bucket frame carries no size
     # stats, so Catalyst happily BROADCASTS tens of millions of band rows
@@ -148,6 +144,34 @@ def pairs_from_buckets(
         aggs += [F.expr("min(band) AS min_band"), F.expr("max(band) AS max_band")]
     return (
         p_small.unionByName(p_big).groupBy("src", "dst").agg(*aggs)
+    )
+
+
+def cap_reference_buckets(
+    rows: DataFrame, id_col: str, bucket_cap: int
+) -> DataFrame:
+    """The reference-side cap of every cross-side candidate join: band
+    rows (band, key, <id_col>, ...) pass through, except that a bucket of
+    more than ``bucket_cap`` rows keeps only its min-id row, so a hot
+    reference bucket cannot multiply the batch side.
+
+    The count is a fixed-width HashAggregate; the STRING min witness
+    (a SortAggregate) runs only over the over-cap buckets, so nothing
+    sorts the whole band frame. ``rows`` is cut lazily: three consumers."""
+    rows = rows.localCheckpoint(eager=False)
+    n = rows.groupBy("band", "key").agg(F.count(F.lit(1)).alias("n"))
+    over_mn = (
+        rows.join(
+            n.filter(F.col("n") > bucket_cap).hint("shuffle_hash"),
+            ["band", "key"],
+        )
+        .groupBy("band", "key")
+        .agg(F.min(id_col).alias("_mn"))
+    )
+    return (
+        rows.join(over_mn.hint("shuffle_hash"), ["band", "key"], "left")
+        .filter(F.col("_mn").isNull() | (F.col(id_col) == F.col("_mn")))
+        .drop("_mn")
     )
 
 
@@ -202,15 +226,11 @@ def caption_band_rows(reps: DataFrame) -> DataFrame:
 def caption_candidates(
     features: DataFrame,
     bucket_cap: int = DEFAULT_BUCKET_CAP,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """-> (candidate rep pairs (src,dst,capped), caption_exact star edges)."""
     reps, star = caption_representatives(features)
     banded = caption_band_rows(reps)
-    return (
-        pairs_from_buckets(banded, bucket_cap=bucket_cap, materialize=materialize),
-        star,
-    )
+    return pairs_from_buckets(banded, bucket_cap=bucket_cap), star
 
 
 # ------------------------------------------------------------------ phash
@@ -280,15 +300,11 @@ def phash_candidates(
     features: DataFrame,
     mode: str = "c2x16",
     bucket_cap: int = DEFAULT_BUCKET_CAP,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """-> (candidate rep pairs, phash_exact star edges)."""
     reps, star = phash_representatives(features)
     banded = phash_band_rows(reps, mode)
-    return (
-        pairs_from_buckets(banded, bucket_cap=bucket_cap, materialize=materialize),
-        star,
-    )
+    return pairs_from_buckets(banded, bucket_cap=bucket_cap), star
 
 
 # --------------------------------------------------------- combined chain
@@ -302,7 +318,6 @@ def rep_candidates(
     phash_reps: DataFrame,
     phash_mode: str = "c2x16",
     bucket_cap: int = DEFAULT_BUCKET_CAP,
-    materialize: bool = True,
 ) -> DataFrame:
     """Both candidate families through ONE banding chain.
 
@@ -324,10 +339,7 @@ def rep_candidates(
         phash_band_rows(phash_reps, phash_mode, band_offset=PHASH_BAND_OFFSET)
     )
     return pairs_from_buckets(
-        banded,
-        bucket_cap=bucket_cap,
-        materialize=materialize,
-        with_band_range=True,
+        banded, bucket_cap=bucket_cap, with_band_range=True
     ).selectExpr(
         "src",
         "dst",
@@ -341,7 +353,6 @@ def combined_candidates(
     features: DataFrame,
     phash_mode: str = "c2x16",
     bucket_cap: int = DEFAULT_BUCKET_CAP,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Both candidate families from features: the representatives come
     from the one key-group aggregate (exact_dedup.key_groups), the pairs
@@ -350,9 +361,7 @@ def combined_candidates(
     Returns (pairs, caption_star, phash_star) where pairs has columns
     (src, dst, capped, from_caption, from_phash)."""
     star, cap_reps, ph_reps = key_groups(features)
-    pairs = rep_candidates(
-        cap_reps, ph_reps, phash_mode, bucket_cap=bucket_cap, materialize=materialize
-    )
+    pairs = rep_candidates(cap_reps, ph_reps, phash_mode, bucket_cap=bucket_cap)
     return (
         pairs,
         star.filter(F.col("kind") == "caption_exact"),

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .connected_components import connected_components
-from .lsh import pairs_from_buckets
+from .lsh import cap_reference_buckets, pairs_from_buckets
 from .tiers import tier_attribution
 
 
@@ -135,11 +135,10 @@ def segment_near_pairs(
 
     Candidate generation reuses lsh.pairs_from_buckets (hash-agg bucket
     stats, caps + star-edge fallback, shuffle-hash self-join — the exact
-    machinery the text/caption chains run at scale); verification joins
-    the two skinny hash arrays back and scores each pair with built-in
-    higher-order array expressions (codegen; zero UDFs). The fingerprint
-    frame is tiny relative to any real corpus, so AQE broadcasts it into
-    the verify joins."""
+    machinery the text/caption chains run at scale); verification is
+    verify_segment_pairs (codegen; zero UDFs). The fingerprint frame is
+    tiny relative to any real corpus, so AQE broadcasts it into the
+    verify joins."""
     cand = pairs_from_buckets(
         segment_band_rows(
             fps, bands=bands, id_col=id_col, hashes_col=hashes_col
@@ -147,25 +146,39 @@ def segment_near_pairs(
         id_col=id_col,
         bucket_cap=bucket_cap,
     )
-    sig = fps.filter(F.col(hashes_col).isNotNull()).select(
-        id_col, hashes_col
-    )
-    a = sig.select(
-        F.col(id_col).alias("src"), F.col(hashes_col).alias("ha")
-    )
-    b = sig.select(
-        F.col(id_col).alias("dst"), F.col(hashes_col).alias("hb")
-    )
+    return verify_segment_pairs(
+        cand, fps, fps, id_col, hashes_col, max_hamming, min_match_frac
+    ).select("src", "dst", "match_frac", "capped")
+
+
+def verify_segment_pairs(
+    cands: DataFrame,
+    src_fps: DataFrame,
+    dst_fps: DataFrame,
+    id_col: str,
+    hashes_col: str,
+    max_hamming: int,
+    min_match_frac: float,
+) -> DataFrame:
+    """Candidate pairs (src, dst, ...) -> those whose match_frac_expr
+    reaches ``min_match_frac``, plus a ``match_frac`` column; ``src``
+    hashes come from ``src_fps``, ``dst`` hashes from ``dst_fps``."""
+
+    def hashes(fps: DataFrame, key: str, h: str) -> DataFrame:
+        return fps.filter(F.col(hashes_col).isNotNull()).select(
+            F.col(id_col).alias(key), F.col(hashes_col).alias(h)
+        )
+
     # SHUFFLE_HASH on the join-backs: without the hint Catalyst picks
     # SortMergeJoin and SORTS the fingerprint frame twice (measured in
     # BENCH/plans.md) — the hash arrays are ~100 B/row, so a shuffled
     # hash join builds tiny per-partition maps and nothing sorts
     return (
-        cand.join(a.hint("shuffle_hash"), "src")
-        .join(b.hint("shuffle_hash"), "dst")
+        cands.join(hashes(src_fps, "src", "ha").hint("shuffle_hash"), "src")
+        .join(hashes(dst_fps, "dst", "hb").hint("shuffle_hash"), "dst")
         .withColumn("match_frac", match_frac_expr("ha", "hb", max_hamming))
         .filter(F.col("match_frac") >= min_match_frac)
-        .select("src", "dst", "match_frac", "capped")
+        .drop("ha", "hb")
     )
 
 
@@ -256,18 +269,15 @@ def segment_dedup_report(
     max_hamming: int = 6,
     min_match_frac: float = 0.5,
     bucket_cap: int = 64,
-    checkpoint: bool = True,
 ) -> dict[str, DataFrame]:
     """Fingerprints -> tagged edges, cluster assignment for EVERY item
     (singletons -> themselves), and per-item tier attribution
     (exact / <prefix>_exact / <prefix>_near / canonical / unique).
 
-    ``checkpoint``: lazily cut the fingerprint and edge frames — fps
-    feeds six consumers and edges two; without cuts each consumer
-    re-executes the upstream chain (pass False when the caller already
-    materialized them)."""
-    if checkpoint:
-        fps = fps.localCheckpoint(eager=False)
+    The fingerprint frame is cut lazily here (it feeds six consumers),
+    the edge frame in cluster_report; without the cuts each consumer
+    re-executes the upstream chain."""
+    fps = fps.localCheckpoint(eager=False)
     edges = segment_edges(
         fps,
         id_col=id_col,
@@ -278,8 +288,18 @@ def segment_dedup_report(
         min_match_frac=min_match_frac,
         bucket_cap=bucket_cap,
     )
-    if checkpoint:
-        edges = edges.localCheckpoint(eager=False)
+    return cluster_report(fps, edges, id_col, tier_precedence(prefix))
+
+
+def cluster_report(
+    fps: DataFrame, edges: DataFrame, id_col: str, precedence: list[str]
+) -> dict[str, DataFrame]:
+    """The media reports' shared tail: CC over the tagged ``edges`` (cut
+    lazily: CC and the tiers read them), a (<id_col>, cluster_id, is_dup)
+    row for EVERY item of ``fps`` (singletons -> themselves) and the tier
+    attribution under ``precedence``. Returns {"fingerprints", "edges",
+    "clusters", "tiers"}."""
+    edges = edges.localCheckpoint(eager=False)
     assign = connected_components(edges.select("src", "dst")).select(
         F.col("image_id").alias(id_col), "cluster_id"
     )
@@ -295,9 +315,7 @@ def segment_dedup_report(
             F.col("cluster_id").isNotNull().alias("is_dup"),
         )
     )
-    tiers = tier_attribution(
-        clusters, edges, tier_precedence(prefix), id_col=id_col
-    )
+    tiers = tier_attribution(clusters, edges, precedence, id_col=id_col)
     return {
         "fingerprints": fps,
         "edges": edges,
@@ -330,73 +348,39 @@ def segment_novelty(
 
     Scale shape: only CROSS-side candidate pairs are generated (batch
     bands join reference bands — never batch x batch or ref x ref); the
-    reference side is bucket-capped with a min-id witness (hash-agg +
-    join back, nothing sorts the band frames); verify is the codegen
-    bit_count match fraction; the min-match argmin is one hash
-    aggregate via min_by over (frac packed desc, ref_id asc)."""
+    reference side is bucket-capped with a min-id witness
+    (lsh.cap_reference_buckets: hash-agg + join back, nothing sorts the
+    band frames); verify is the codegen bit_count match fraction; the
+    min-match argmin is one hash aggregate via min_by over (frac packed
+    desc, ref_id asc)."""
     b_rows = segment_band_rows(
         batch_fps, bands=bands, id_col=id_col, hashes_col=hashes_col
-    ).withColumnRenamed(id_col, "_bid")
-    r_rows = (
+    ).withColumnRenamed(id_col, "src")
+    r_rows = cap_reference_buckets(
         segment_band_rows(
             ref_fps, bands=bands, id_col=id_col, hashes_col=hashes_col
-        )
-        .withColumnRenamed(id_col, "_rid")
-        # two consumers (bucket stats + join back) — cut once
-        .localCheckpoint(eager=False)
-    )
-    # two-phase cap stats: counting is a fixed-width HashAggregate; the
-    # min-id witness (a STRING min, which Spark executes as a
-    # SortAggregate over its whole input) is resolved only on the rare
-    # over-cap buckets, so nothing ever sorts the full reference band
-    # frame. A bucket with no over-cap row keeps all its rows (mn NULL).
-    r_stats = r_rows.groupBy("band", "key").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    over_mn = (
-        r_rows.join(
-            r_stats.filter(F.col("n") > ref_bucket_cap).hint(
-                "shuffle_hash"
-            ),
-            ["band", "key"],
-        )
-        .groupBy("band", "key")
-        .agg(F.min("_rid").alias("mn"))
-    )
-    r_capped = (
-        r_rows.join(over_mn.hint("shuffle_hash"), ["band", "key"], "left")
-        .filter(F.col("mn").isNull() | (F.col("_rid") == F.col("mn")))
-        .select("band", "key", "_rid")
+        ).withColumnRenamed(id_col, "dst"),
+        "dst",
+        ref_bucket_cap,
     )
     cands = (
-        b_rows.join(r_capped.hint("shuffle_hash"), ["band", "key"])
-        .select("_bid", "_rid")
-        .dropDuplicates(["_bid", "_rid"])
+        b_rows.join(r_rows.hint("shuffle_hash"), ["band", "key"])
+        .select("src", "dst")
+        .dropDuplicates(["src", "dst"])
     )
-    bh = batch_fps.filter(F.col(hashes_col).isNotNull()).select(
-        F.col(id_col).alias("_bid"), F.col(hashes_col).alias("ha")
-    )
-    rh = ref_fps.filter(F.col(hashes_col).isNotNull()).select(
-        F.col(id_col).alias("_rid"), F.col(hashes_col).alias("hb")
-    )
-    # shuffle_hash join-backs: same no-sort rationale as
-    # segment_near_pairs — hash arrays are skinny, SMJ would sort both
-    verified = (
-        cands.join(bh.hint("shuffle_hash"), "_bid")
-        .join(rh.hint("shuffle_hash"), "_rid")
-        .withColumn("match_frac", match_frac_expr("ha", "hb", max_hamming))
-        .filter(F.col("match_frac") >= min_match_frac)
-        .select("_bid", "_rid", "match_frac")
+    verified = verify_segment_pairs(
+        cands, batch_fps, ref_fps, id_col, hashes_col, max_hamming,
+        min_match_frac,
     )
     # smallest ref id among the BEST-matching refs per batch item: pack
     # (frac desc, id asc) into one min_by ordering — frac is a ratio of
     # small ints so 1e-9 quantization cannot reorder distinct values,
     # and the string id tie-break rides in the struct
-    best = verified.groupBy("_bid").agg(
+    best = verified.groupBy("src").agg(
         F.min_by(
-            F.struct("match_frac", "_rid"),
+            F.struct("match_frac", "dst"),
             F.struct(
-                (-F.col("match_frac")).alias("nf"), F.col("_rid").alias("i")
+                (-F.col("match_frac")).alias("nf"), F.col("dst").alias("i")
             ),
         ).alias("m")
     )
@@ -405,13 +389,13 @@ def segment_novelty(
         # `best` is candidate-volume-sized; shuffle_hash keeps the batch
         # side sort-free (AQE still broadcasts it when small)
         .join(
-            best.withColumnRenamed("_bid", id_col).hint("shuffle_hash"),
+            best.withColumnRenamed("src", id_col).hint("shuffle_hash"),
             id_col,
             "left",
         )
         .select(
             id_col,
-            F.col("m._rid").alias("match_ref_id"),
+            F.col("m.dst").alias("match_ref_id"),
             F.col("m.match_frac").alias("match_frac"),
             F.col("m").isNull().alias("is_novel"),
         )

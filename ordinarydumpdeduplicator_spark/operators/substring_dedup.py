@@ -198,7 +198,6 @@ def corpus_filter_decisions(
     min_docs: int = 2,
     dup_num: int = 1,
     dup_den: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """The corpus-cleaning policy a training pipeline runs after dedup:
     one keep/drop decision per document, combining
@@ -227,10 +226,9 @@ def corpus_filter_decisions(
     boolean, so the decision is hash-exact against the DuckDB oracle.
 
     Plan shape: ONE scan and tokenize pass over the corpus builds a skinny
-    (doc_id, content_sha, toks) frame; ``materialize`` localCheckpoints it
-    because three consumers read it (group agg, member join probe, rep
-    gram source) and would otherwise re-scan the raw corpus per consumer —
-    the same multi-consumer discipline as operators/lsh.pairs_from_buckets
+    (doc_id, content_sha, toks) frame, localCheckpointed because three
+    consumers read it (group agg, member join probe, rep gram source) and
+    would otherwise re-scan the raw corpus per consumer — the same multi-consumer discipline as operators/lsh.pairs_from_buckets
     (a persisted stage table on a cluster).
 
     Output: (doc_id, cluster_id, is_exact_dup, n_tokens, dup_tokens,
@@ -241,9 +239,7 @@ def corpus_filter_decisions(
         F.col(id_col).alias("doc_id"),
         F.sha2(normalized_text(F.col(text_col)), 256).alias("content_sha"),
         _tokens(text_col).alias("toks"),
-    )
-    if materialize:
-        base = base.localCheckpoint()
+    ).localCheckpoint()
     groups = base.groupBy("content_sha").agg(
         F.min("doc_id").alias("cluster_id")
     )
@@ -278,7 +274,6 @@ def trim_duplicate_spans(
     text_col: str = "text",
     k: int = 8,
     min_docs: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Lee et al. 2022's OTHER remedy: instead of dropping a document
     over its duplication budget (``corpus_filter_decisions``), REMOVE
@@ -292,9 +287,8 @@ def trim_duplicate_spans(
     ``n_tokens``, ``n_kept_tokens``. NULL text stays NULL.
 
     Shape: ONE scan-and-tokenize pass builds the skinny (doc_id, toks)
-    frame; ``materialize`` localCheckpoints it because TWO consumers
-    read it (the gram/span pass and the trim itself) and would otherwise
-    re-scan the raw corpus — the same multi-consumer discipline as
+    frame, localCheckpointed because TWO consumers read it (the gram/span
+    pass and the trim itself) and would otherwise re-scan the raw corpus — the same multi-consumer discipline as
     ``corpus_filter_decisions``. The spans come from the same
     shared-k-gram hash-group + island merge as
     ``exact_substring_spans``; they aggregate to ONE array per doc
@@ -304,9 +298,7 @@ def trim_duplicate_spans(
     token position inside any span — entirely JVM-side, no explode of
     the corpus token stream and no Python. NULL text is detected via the
     toks column (split of NULL is NULL, so toks is NULL iff text is)."""
-    base = _toks_frame(docs, id_col, text_col)
-    if materialize:
-        base = base.localCheckpoint()
+    base = _toks_frame(docs, id_col, text_col).localCheckpoint()
     spans_agg = (
         _merge_spans(_gram_hits_toks(base, k, min_docs), k)
         .groupBy("doc_id")

@@ -19,9 +19,10 @@ modality over REAL decoded frames:
 Codec layer: uncompressed 24-bit RGB AVI is REALLY decoded
 (fixtures/codecs.decode_avi_rgb, pure struct + numpy over the public
 RIFF layout); other containers need ffmpeg-like tooling absent here —
-strict=True raises inside the task, strict=False emits clearly-marked
-deterministic fake frame hashes (status 'fake_decode'; hash-seeded per
-video, so fakes never cross-match).
+``video_fingerprints(strict=True)`` raises inside the task; the default
+(and ``video_dedup_report``) emits clearly-marked deterministic fake
+frame hashes (status 'fake_decode'; hash-seeded per video, so fakes
+never cross-match).
 
 Scale shape (the 100 TB question): fingerprinting is ONE mapInPandas
 pass over the payload column — bytes never enter a shuffle; only
@@ -43,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..fixtures import codecs
 from ..functions.phash import phash64
+from .lsh import cap_reference_buckets
 from .segment_dedup import (
     band_slices as _band_slices,
     segment_band_rows,
@@ -136,11 +138,6 @@ def frame_band_rows(fps: DataFrame, bands: int = 4) -> DataFrame:
 def video_dedup_report(
     video: DataFrame,
     n_frames: int = 8,
-    bands: int = 4,
-    max_hamming: int = 6,
-    min_match_frac: float = 0.5,
-    bucket_cap: int = 64,
-    strict: bool = False,
     fingerprints: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """End-to-end video dedup: fingerprints, tagged edges, cluster
@@ -158,17 +155,10 @@ def video_dedup_report(
     fps = (
         fingerprints
         if fingerprints is not None
-        else video_fingerprints(video, n_frames=n_frames, strict=strict)
+        else video_fingerprints(video, n_frames=n_frames)
     )
     return segment_dedup_report(
-        fps,
-        id_col="video_id",
-        hashes_col="frame_hashes",
-        prefix="frame",
-        bands=bands,
-        max_hamming=max_hamming,
-        min_match_frac=min_match_frac,
-        bucket_cap=bucket_cap,
+        fps, id_col="video_id", hashes_col="frame_hashes", prefix="frame"
     )
 
 
@@ -197,9 +187,9 @@ def frames_matching_images(
 
     Scale shape: both sides band into (band, key) buckets via
     band_slices (recall guaranteed within Hamming < bands); the
-    image side is capped per bucket with a min-id witness — the
-    cross_dedup.cross_corpus_matches cap rule: a hash-aggregate joined
-    back, never a window, so nothing sorts the band frames. The verify
+    image side is capped per bucket with a min-id witness
+    (lsh.cap_reference_buckets: a hash-aggregate joined back, never a
+    window, so nothing sorts the band frames). The verify
     is bit_count over the XOR (codegen, zero UDFs), and only
     cross-side pairs are ever generated."""
     v_rows = (
@@ -215,7 +205,7 @@ def frames_matching_images(
         .select("video_id", "frame_pos", "h",
                 F.col("s.band").alias("band"), F.col("s.key").alias("key"))
     )
-    i_rows = (
+    i_rows = cap_reference_buckets(
         images.filter(F.col(phash_col).isNotNull())
         .select(
             F.col(id_col).alias("image_id"),
@@ -223,37 +213,12 @@ def frames_matching_images(
             F.explode(_band_slices(F.col(phash_col), bands)).alias("s"),
         )
         .select("image_id", "ph",
-                F.col("s.band").alias("band"), F.col("s.key").alias("key"))
-        # two consumers (bucket stats + join back) — cut so the explode
-        # chain computes once
-        .localCheckpoint(eager=False)
-    )
-    # two-phase cap stats (same rationale as segment_novelty): the
-    # count is a fixed-width HashAggregate; the STRING min-id witness
-    # resolves only on over-cap buckets, so the full image band frame
-    # never feeds a SortAggregate
-    i_stats = i_rows.groupBy("band", "key").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    over_mn = (
-        i_rows.join(
-            i_stats.filter(F.col("n") > image_bucket_cap).hint(
-                "shuffle_hash"
-            ),
-            ["band", "key"],
-        )
-        .groupBy("band", "key")
-        .agg(F.min("image_id").alias("mn"))
-    )
-    i_capped = (
-        i_rows.join(over_mn.hint("shuffle_hash"), ["band", "key"], "left")
-        .filter(
-            F.col("mn").isNull() | (F.col("image_id") == F.col("mn"))
-        )
-        .select("band", "key", "image_id", "ph")
+                F.col("s.band").alias("band"), F.col("s.key").alias("key")),
+        "image_id",
+        image_bucket_cap,
     )
     return (
-        v_rows.join(i_capped.hint("shuffle_hash"), ["band", "key"])
+        v_rows.join(i_rows.hint("shuffle_hash"), ["band", "key"])
         .filter(
             F.bit_count(F.col("h").bitwiseXOR(F.col("ph"))) <= max_hamming
         )

@@ -61,7 +61,6 @@ def curation_attribution(
     max_mean_tok_len_x10: int = 100,
     n: int = 4,
     salt: str = "mixr",
-    materialize: bool = False,
 ) -> DataFrame:
     """Per-document funnel attribution: (doc_id, survived) where
     ``survived`` = 4 for a fully retained document, else the 0-based
@@ -69,18 +68,14 @@ def curation_attribution(
     char length, 0 for NULL text) rides along for the char accounting,
     same pattern as tiers._tiers_frame.
 
-    ``materialize`` localCheckpoints (lazily) the skinny flagged frame
-    before the mixture stage. TWO consumers read it — the stage-3
-    survivor counts that derive the mixture thresholds, and the final
-    attribution — but both live in ONE job, so AQE's ReusedExchange
-    already dedupes the upstream subtree here (measured: checkpointing
-    is ~20% SLOWER at sandbox scale because it adds a materialization
-    barrier for work the planner was sharing anyway — BENCH/plans.md
-    shows '+4 reused' exchanges for this query). Default off; flip it
-    on only when the two consumers become separate actions (e.g. the
-    thresholds are persisted for audit), where the checkpoint prevents
-    a genuine double scan. At production scale, substitute a stage
-    table the way plans/pipeline.py does."""
+    The skinny flagged frame before the mixture stage is NOT cut, though
+    TWO consumers read it (the stage-3 survivor counts that derive the
+    mixture thresholds, and the final attribution): both live in ONE
+    job, so AQE's ReusedExchange already dedupes the upstream subtree
+    (BENCH/plans.md shows '+4 reused' exchanges), and a lazy
+    localCheckpoint there measured ~20% SLOWER at sandbox scale. At
+    production scale, substitute a stage table the way
+    plans/pipeline.py does."""
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("text"),
@@ -133,8 +128,6 @@ def curation_attribution(
         # lookup) — checkpointing them would replicate the whole corpus
         "doc_id", "__stratum", "_len", "q_keep", "__keeper", "contaminated"
     )
-    if materialize:
-        flagged = flagged.localCheckpoint(eager=False)
 
     # stage 4 — mixture thresholds derived over stage-3 survivors only
     survivors3 = flagged.filter(

@@ -53,7 +53,9 @@ from .state_store import (
     hit_shards,
     key_shard,
     load_epochs,
+    read_parquet_stream,
     read_shards,
+    start_batches,
     write_clustered,
     write_row_epoch,
 )
@@ -103,11 +105,9 @@ def stream_ingest_dedup(
     input_path: str,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     n_shards: int = 32,
     bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
     k_hashes: int = DEFAULT_K_HASHES,
-    schema: str = DOCS_SCHEMA,
     max_files_per_trigger: int | None = None,
 ):
     """Start the streaming ingest-dedup query over a parquet document
@@ -224,16 +224,10 @@ def stream_ingest_dedup(
             flags.unpersist()
         cache.advance(batch_id, "keys")
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        # bounded micro-batches even under availableNow — the per-batch
-        # latency benchmark shape (one input file per batch)
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (
-        reader.parquet(input_path)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_batches(
+        read_parquet_stream(
+            spark, input_path, DOCS_SCHEMA, max_files_per_trigger
+        ),
+        handle_batch,
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

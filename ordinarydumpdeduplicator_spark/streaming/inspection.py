@@ -7,7 +7,7 @@ chain (Common/FileState.cs:67-70, Common/FileStatus.cs:5-14) are
 change-data-capture states. Here that maps onto file-source streams with
 ``Trigger.AvailableNow`` semantics:
 
-- ``stream_features``   — continuous feature extraction: new parquet files
+- ``stream_features``   — incremental feature extraction: new parquet files
   landing under the input path flow through the SAME vectorized
   ``extract_features`` stage (operators/features.py) and append to a
   features table. Exactly-once per file via the stream checkpoint.
@@ -26,22 +26,19 @@ transformations here are schema-stable DataFrame ops.
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.features import extract_features
 from ..schemas import IMAGES_SCHEMA
-
-
-def read_image_stream(
-    spark: SparkSession, input_path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source stream of input-table parquet files (fixed schema —
-    streaming sources require an explicit schema, no inference)."""
-    reader = spark.readStream.schema(IMAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_path)
+from .state_store import (
+    epoch_path,
+    read_parquet_stream,
+    start_batches,
+    write_row_epoch,
+)
 
 
 def stream_features(
@@ -49,20 +46,19 @@ def stream_features(
     input_path: str,
     output_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Streaming feature extraction: input stream -> extract_features ->
-    append parquet. Returns the started StreamingQuery."""
-    feats = extract_features(read_image_stream(spark, input_path))
-    writer = (
+    append parquet (an availableNow run). Returns the started
+    StreamingQuery."""
+    feats = extract_features(read_parquet_stream(spark, input_path, IMAGES_SCHEMA))
+    return (
         feats.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_inspections(
@@ -71,62 +67,50 @@ def stream_inspections(
     states_path: str,
     runs_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    location_expr: F.Column | None = None,
 ):
     """foreachBatch incremental inspection: micro-batch -> one inspection.
 
     Writes (image_id, run_id, size, sha, status, location, sort) state rows
     and one runs row per batch; run ids embed the batch id so run order is
     the batch order. The tables feed operators/states.py
-    (latest_runs / derive_status / detect_moved) unchanged.
-
-    ``location_expr``: optional Column expression over the FEATURES frame
-    (image_id, size, sha, status, ...) producing the state row's location;
-    default ``ingest/<image_id>``. (The streaming source schema is the
-    fixed IMAGES_SCHEMA, so there is no input column it could name — hence
-    an expression, not a column name.)
+    (latest_runs / derive_status / detect_moved) unchanged. A state row's
+    location is ``ingest/<image_id>``: the stream source is the fixed
+    IMAGES_SCHEMA, which carries no path column.
 
     Replay safety: each table write is an overwrite of the stream epoch's
     own ``epoch=<batch_id>`` subdirectory (same protocol as
     streaming/near_dup.py) — a plain parquet append inside foreachBatch is
     only at-least-once, and a replayed batch would duplicate its state and
     runs rows. Readers of the root path see the extra ``epoch`` partition
-    column, which the states operators ignore.
+    column, which the states operators ignore. The one-row runs epoch is
+    written with pyarrow (state_store.write_row_epoch), not as a Spark
+    job.
     """
     from ..plans.incremental import run_states
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         run_id = f"inspection_{batch_id:09d}"
-        feats = extract_features(batch_df)
-        loc = (
-            location_expr
-            if location_expr is not None
-            else F.concat(F.lit("ingest/"), F.col("image_id"))
+        states = run_states(
+            extract_features(batch_df),
+            run_id,
+            location_col=F.concat(F.lit("ingest/"), F.col("image_id")),
         )
-        states = run_states(feats, run_id, location_col=loc)
-        states.write.mode("overwrite").parquet(
-            f"{states_path}/epoch={batch_id}"
+        states.write.mode("overwrite").parquet(epoch_path(states_path, batch_id))
+        # deterministic, monotone in batch order (no wall clock: replays
+        # of the same batch id produce the identical runs row); tz-aware,
+        # so parquet stores it UTC-adjusted and Spark reads `timestamp`
+        ts = datetime.fromtimestamp(1_600_000_000 + batch_id, timezone.utc)
+        write_row_epoch(
+            epoch_path(runs_path, batch_id),
+            {"run_id": run_id, "source_id": "stream", "start_ts": ts,
+             "finish_ts": ts},
         )
-        batch_df.sparkSession.createDataFrame(
-            [(run_id, "stream", batch_id)], "run_id string, source_id string, seq long"
-        ).withColumn(
-            # deterministic, monotone in batch order (no wall clock: replays
-            # of the same batch id produce the identical runs row)
-            "start_ts",
-            F.timestamp_seconds(F.lit(1_600_000_000) + F.col("seq")),
-        ).withColumn("finish_ts", F.col("start_ts")).drop("seq").write.mode(
-            "overwrite"
-        ).parquet(f"{runs_path}/epoch={batch_id}")
 
-    writer = (
-        read_image_stream(spark, input_path)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_batches(
+        read_parquet_stream(spark, input_path, IMAGES_SCHEMA),
+        handle_batch,
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ingest_metrics(images: DataFrame, window: str = "1 minute", watermark: str = "2 minutes") -> DataFrame:
@@ -158,7 +142,6 @@ def stream_ingest_metrics(
     input_path: str,
     output_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Streaming ingest-rate table for PROCESSING-time sources.
 
@@ -182,13 +165,10 @@ def stream_ingest_metrics(
         )
         ingest_metrics(stamped).withColumn(
             "batch_id", F.lit(batch_id)
-        ).write.mode("overwrite").parquet(f"{output_path}/epoch={batch_id}")
+        ).write.mode("overwrite").parquet(epoch_path(output_path, batch_id))
 
-    writer = (
-        read_image_stream(spark, input_path)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_batches(
+        read_parquet_stream(spark, input_path, IMAGES_SCHEMA),
+        handle_batch,
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -128,9 +128,11 @@ from .state_store import (
     id_shard,
     key_shard,
     load_epochs,
+    read_parquet_stream,
     read_shards,
     run_together,
     sha_key,
+    start_batches,
     write_clustered,
     write_row_epoch,
 )
@@ -371,7 +373,6 @@ def stream_media_novelty(
     id_col: str = "video_id",
     hashes_col: str = "frame_hashes",
     prefix: str = "frame",
-    available_now: bool = True,
     bands: int = 4,
     max_hamming: int = 6,
     min_match_frac: float = 0.5,
@@ -638,15 +639,10 @@ def stream_media_novelty(
         finally:
             fps_b.unpersist()
 
-    reader = spark.readStream.schema(input_schema).format("parquet")
-    if max_files_per_trigger is not None:
-        # bounded micro-batches even under availableNow — the per-batch
-        # latency benchmark shape (one input file per batch)
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    reader = reader.load(input_path)
-    writer = reader.writeStream.foreachBatch(handle_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_batches(
+        read_parquet_stream(
+            spark, input_path, input_schema, max_files_per_trigger
+        ),
+        handle_batch,
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -66,7 +66,7 @@ from ..plans.incremental import (
     incremental_caption_cluster,
     incremental_caption_resolve,
 )
-from .inspection import read_image_stream
+from ..schemas import IMAGES_SCHEMA
 from .state_store import (
     BloomIndex,
     EpochCache,
@@ -78,10 +78,12 @@ from .state_store import (
     key_shard,
     latest_epoch,
     load_epochs,
+    read_parquet_stream,
     read_shards,
     rotate,
     run_together,
     sha_key,
+    start_batches,
     write_clustered,
 )
 
@@ -152,7 +154,6 @@ def stream_near_dup_clusters(
     input_path: str,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     bucket_cap: int = 256,
     jaccard_threshold: float = 0.5,
     prune_min_state_bytes: int = 64 << 20,
@@ -177,7 +178,7 @@ def stream_near_dup_clusters(
     ``bucket_cap`` < 2, ``jaccard_threshold`` outside [0, 1], or an
     ``n_shards`` that is not a power of two <= 256.
 
-    Returns the StreamingQuery; after it finishes (availableNow) read the
+    Returns the StreamingQuery; after it finishes read the
     current assignments with ``load_assignments(spark, state_dir)`` —
     NOT the bare root path: pruning retains the latest prior snapshot as
     replay insurance, so two epochs coexist on disk."""
@@ -292,11 +293,8 @@ def stream_near_dup_clusters(
         rotate(assign_path, batch_id)
         cache.advance(batch_id, "captions", "reps", "bands")
 
-    writer = (
-        read_image_stream(spark, input_path)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_batches(
+        read_parquet_stream(spark, input_path, IMAGES_SCHEMA),
+        handle_batch,
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -46,6 +46,11 @@ waited for that write (``BloomIndex.refresh`` waits for the key-store
 writes it reads), and ``rotate`` and ``EpochCache.advance`` run only
 after every write of the batch has returned. Steps nest: a step may
 call ``run_together`` itself.
+
+Every stream query reads its source through ``read_parquet_stream``
+and starts through ``start_batches`` (``foreachBatch``, checkpoint,
+availableNow trigger): each start processes what has landed and stops,
+the scheduled runs that offline compaction assumes.
 """
 
 from __future__ import annotations
@@ -79,6 +84,38 @@ BLOOMS_SCHEMA = (
 
 def epoch_path(base: str, batch_id: int) -> str:
     return os.path.join(base, f"epoch={batch_id}")
+
+
+def read_parquet_stream(
+    spark: SparkSession,
+    path: str,
+    schema: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """File-source stream of the parquet files under ``path`` (a stream
+    source needs an explicit schema). ``max_files_per_trigger`` bounds
+    each micro-batch, even under availableNow (bench.py's one file per
+    batch)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
+
+
+def start_batches(
+    stream: DataFrame,
+    handle_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+):
+    """Start ``handle_batch(batch_df, batch_id)`` over ``stream`` as an
+    availableNow ``foreachBatch`` query checkpointed at
+    ``checkpoint_dir``; returns the StreamingQuery."""
+    return (
+        stream.writeStream.foreachBatch(handle_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def run_together(spark: SparkSession, *steps: Callable[[], object]) -> list:

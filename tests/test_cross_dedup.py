@@ -87,3 +87,48 @@ def test_novel_docs_keeps_full_payload(spark):
     kept = novel_docs(_df(spark, BATCH), _df(spark, REF))
     assert set(kept.columns) == {"doc_id", "text"}
     assert {r["doc_id"] for r in kept.collect()} == {3, 4, 5}
+
+
+def test_cap_reference_buckets_exact_rule(spark):
+    """The one reference-bucket cap rule, against a pure-Python oracle: a
+    bucket of at most ``cap`` rows keeps them all, a larger one keeps only
+    its STRING-minimum id, and payload columns ride through."""
+    from collections import defaultdict
+
+    from ordinarydumpdeduplicator_spark.operators.lsh import cap_reference_buckets
+
+    cap = 3
+    buckets = {
+        (0, 7): ["9", "2"],                              # cap - 1
+        (0, 8): ["9", "10", "2"],                        # cap
+        (1, 7): ["9", "10", "11", "2"],                  # cap + 1
+        (1, 8): ["9", "2", "30", "40", "100", "5"],      # 2 * cap
+    }
+    rows = [
+        (band, key, i, f"p:{band}:{key}:{i}")
+        for (band, key), ids in buckets.items()
+        for i in ids
+    ]
+    df = spark.createDataFrame(
+        rows, "band int, key long, id string, payload string"
+    )
+    got = sorted(
+        tuple(r)
+        for r in cap_reference_buckets(df, "id", cap)
+        .select("band", "key", "id", "payload")
+        .collect()
+    )
+
+    by_bucket = defaultdict(list)
+    for r in rows:
+        by_bucket[r[:2]].append(r)
+    want = sorted(
+        r
+        for rs in by_bucket.values()
+        for r in (rs if len(rs) <= cap else [min(rs, key=lambda r: r[2])])
+    )
+    assert got == want
+    # "10" < "2" < "9" as strings: the over-cap witnesses are string mins
+    assert [r[2] for r in got if r[:2] == (1, 7)] == ["10"]
+    assert [r[2] for r in got if r[:2] == (1, 8)] == ["100"]
+    assert sorted(r[2] for r in got if r[:2] == (0, 8)) == ["10", "2", "9"]

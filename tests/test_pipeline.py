@@ -275,9 +275,9 @@ def test_combined_candidates_match_per_family(spark, small_images):
     )
 
     feats = extract_features(small_images).localCheckpoint()
-    cap_pairs, cap_star = caption_candidates(feats, materialize=False)
-    ph_pairs, ph_star = phash_candidates(feats, materialize=False)
-    pairs, cstar, pstar = combined_candidates(feats, materialize=False)
+    cap_pairs, cap_star = caption_candidates(feats)
+    ph_pairs, ph_star = phash_candidates(feats)
+    pairs, cstar, pstar = combined_candidates(feats)
 
     cap_set = {(r.src, r.dst) for r in cap_pairs.collect()}
     ph_set = {(r.src, r.dst) for r in ph_pairs.collect()}

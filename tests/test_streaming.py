@@ -153,3 +153,33 @@ def test_ingest_metrics_windows(spark, tiny_corpus):
     for r in rows:
         assert r["window_start"].second == 0
         assert (r["window_end"] - r["window_start"]).seconds == 60
+
+
+def test_stream_inspections_runs_epoch_reads_back_typed(
+    spark, tiny_corpus, stream_dirs
+):
+    """The pyarrow-written runs epoch reads back with the schema and values
+    a Spark-written epoch had: UTC-adjusted ``timestamp`` columns."""
+    from ordinarydumpdeduplicator_spark.streaming.state_store import epoch_path
+
+    pdf, _ = tiny_corpus
+    _write_batch(spark, pdf.iloc[:10], stream_dirs["in"], "batch0")
+    stream_inspections(
+        spark,
+        stream_dirs["in"] + "/*",
+        stream_dirs["states"],
+        stream_dirs["runs"],
+        stream_dirs["ckpt"],
+    ).awaitTermination(120)
+
+    runs = spark.read.parquet(epoch_path(stream_dirs["runs"], 0))
+    assert runs.schema.simpleString() == (
+        "struct<run_id:string,source_id:string,"
+        "start_ts:timestamp,finish_ts:timestamp>"
+    )
+    spark_written = spark.sql(
+        "SELECT 'inspection_000000000' AS run_id, 'stream' AS source_id, "
+        "timestamp_seconds(1600000000) AS start_ts, "
+        "timestamp_seconds(1600000000) AS finish_ts"
+    )
+    assert runs.collect() == spark_written.collect()
