@@ -8,7 +8,8 @@ streaming/state_store.py):
     new/epoch=N/     rows of the batch that were NEW at ingest time
                      (first occurrence wins; within-batch duplicates
                      collapse to the lowest doc_id) — the stream output
-    keys/epoch=N/    the content keys those rows introduced (delta)
+    keys/epoch=N/    the content keys those rows introduced (delta; the
+                     KEY_STORES declaration, state_store.KeyIndex)
     blooms/epoch=N/  FULL merged bloom-shards snapshot after batch N
                      (a state_store snapshot store)
     metrics/epoch=N/ per-batch accounting (load_ingest_metrics)
@@ -24,10 +25,11 @@ would be directory-partitioned by shard for file-level pruning) — then
 OR-merge the new keys' bitmap into the snapshot
 (``operators/bloom_dedup.bloom_merge`` — O(index size), independent of
 history row count). A miss-only batch never touches the key store at
-all. With no snapshot below the batch (the first batch, or a lost
-``blooms/``) every key counts as a hit: the anti-join reads the key
-store at the batch keys' shards, and the refresh keys the whole store
-into a new snapshot. The reference's analogue is the per-file
+all. The refresh keys the delta frame the key write was handed, not
+the epoch it wrote. With no snapshot below the batch (the first
+batch, or a lost ``blooms/``) every key counts as a hit: the anti-join
+reads the whole key store, and the refresh keys the whole store into
+a new snapshot. The reference's analogue is the per-file
 ``HashSet`` membership check in ``DataControllerSimple.cs``; this is
 that check, made restartable and distributed.
 """
@@ -46,28 +48,20 @@ from ..operators.bloom_dedup import (
 )
 from ..operators.text_dedup import normalized_text
 from .state_store import (
-    BloomIndex,
     EpochCache,
+    KeyIndex,
+    KeyStore,
     check_stream_params,
-    compact_epoch_dirs,
-    hit_shards,
-    key_shard,
+    compact_key_store,
     load_epochs,
     read_parquet_stream,
-    read_shards,
     start_batches,
-    write_clustered,
     write_row_epoch,
 )
 
 DOCS_SCHEMA = "doc_id long, text string"
-KEYS_SCHEMA = "content_sha string, shard int"
-
-
-def _index_keys(s: SparkSession, dirs: dict[str, list[str]]) -> DataFrame:
-    """Bloom keys of the content-key store."""
-    keys = s.read.schema(KEYS_SCHEMA).parquet(*dirs["keys"])
-    return keys.select(F.col("content_sha").alias("key"))
+# the content-key store: the content hash is the bloom key
+KEY_STORES = (KeyStore("keys", "content_sha string", "shard", "content_sha"),)
 
 
 def compact_ingest_keys(spark: SparkSession, state_dir: str) -> int:
@@ -76,12 +70,7 @@ def compact_ingest_keys(spark: SparkSession, state_dir: str) -> int:
     IN-predicate row-group pruning relies on — the text twin of
     media_ingest.compact_media_index. Offline maintenance; run while
     the stream is stopped. Returns epochs merged."""
-    return compact_epoch_dirs(
-        spark,
-        os.path.join(state_dir, "keys"),
-        KEYS_SCHEMA,
-        cluster_by=["shard"],
-    )
+    return compact_key_store(spark, state_dir, *KEY_STORES)
 
 
 def load_ingest_metrics(
@@ -116,12 +105,11 @@ def stream_ingest_dedup(
     params = (n_shards, bits_per_shard, k_hashes)
     check_stream_params(*params)
     new_path = os.path.join(state_dir, "new")
-    keys_path = os.path.join(state_dir, "keys")
     metrics_path = os.path.join(state_dir, "metrics")
     cache = EpochCache(state_dir, "keys")
     # threshold 0: the stream is always engaged, so every batch keeps a
     # snapshot fresh (the first one keys the whole store)
-    bloom = BloomIndex(state_dir, params)
+    index = KeyIndex(state_dir, KEY_STORES, params)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -143,29 +131,27 @@ def stream_ingest_dedup(
             keyed.filter(F.col("content_sha").isNull())
         )
 
-        key_dirs = cache.at(batch_id)["keys"]
-        bloom.at(batch_id)
-        flags = bloom.flags(batch_first, "content_sha")
+        index.at(s, batch_id, cache.at(batch_id))
+        flags = index.probe(batch_first, "content_sha")
         if flags is None:
             # no snapshot below the batch (batch 0, or a lost blooms/):
             # every non-NULL key is a hit, so the anti-join below reads
-            # the key store at the batch's shards and stays exact
+            # the whole key store and stays exact (the refresh keys the
+            # whole store anyway)
             sha = F.col("content_sha")
             flags = batch_first.select(sha).distinct().select(
-                sha,
-                key_shard(sha, n_shards).alias("shard"),
-                sha.isNotNull().alias("might_contain"),
+                sha, sha.isNotNull().alias("might_contain")
             )
         # ONE probe per batch: persist the flags, unpersist after writes
-        flags = flags.persist()
+        flags.persist()
         try:
             # only the bloom-hit shards of the key store are read; a
             # miss-only batch reads nothing
-            pruned = read_shards(
-                s, "content_sha string", key_dirs, "shard", hit_shards(flags)
-            )
+            history = index.read("keys")
+            if history is None:
+                history = s.createDataFrame([], "content_sha string")
             new = incremental_new_docs(
-                pruned, batch_first, "content_sha", *params, flags=flags
+                history, batch_first, "content_sha", *params, flags=flags
             )
             new.write.mode("overwrite").parquet(
                 os.path.join(new_path, epoch)
@@ -211,15 +197,14 @@ def stream_ingest_dedup(
                     "n_new": int(w_stats.n_nonnull),
                 },
             )
-            write_clustered(
-                written.select("content_sha")
-                .filter(F.col("content_sha").isNotNull())
-                .distinct(),
-                os.path.join(keys_path, epoch),
-                "shard",
-                key_shard(F.col("content_sha"), n_shards),
+            # the non-NULL keys of ``written`` are distinct already
+            # (first occurrence per key), so the delta needs no shuffle
+            index.write(
+                "keys",
+                batch_id,
+                written.select("content_sha").filter("content_sha IS NOT NULL"),
             )
-            bloom.refresh(s, batch_id, {"keys": key_dirs}, _index_keys)
+            index.refresh(batch_id)
         finally:
             flags.unpersist()
         cache.advance(batch_id, "keys")

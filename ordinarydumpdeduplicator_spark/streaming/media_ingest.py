@@ -28,10 +28,11 @@ streaming/state_store.py):
                        ``s:<file_sha>`` for its byte hash — clustered by
                        the bloom shard of the key so a batch's
                        ``shard IN (<bloom-hit shards>)`` read prunes
-                       row groups (the text ingest key-store shape).
+                       row groups (the text ingest key-store shape; the
+                       KEY_STORES declaration, state_store.KeyIndex).
     blooms/epoch=N/    FULL merged bloom snapshot over all index keys
                        after batch N, from the prune policy's first
-                       engagement on (state_store.BloomIndex).
+                       engagement on (state_store.KeyIndex).
     verdicts/epoch=N/  one row per batch item:
                        (id, outcome, match_ref_id, match_frac,
                         batch_canonical_id)
@@ -71,8 +72,10 @@ The verdict write plans over the two materialized results, not their
 chains. The outcome counts and the novel clusters' members are read
 back from that verdict epoch on the driver (no Spark job); the fps
 delta and its probe-key delta are built from those members and
-written side by side, and the bloom refresh and the listing advance
-run only after both. Outcomes are disjoint:
+written side by side, and the bloom refresh (which keys the cached
+probe-key delta, not the epoch just written) and the listing advance
+run only after both. The segment-core settings are the MEDIA_*
+module constants. Outcomes are disjoint:
 
     no_hashes   no fingerprintable evidence at all (NULL payload — the
                 Broken sentinel, OrdinaryDumpDeduplicator.cs:119-125) —
@@ -116,17 +119,16 @@ from ..operators.segment_dedup import (
     segment_novelty,
 )
 from .state_store import (
-    BloomIndex,
     EpochCache,
+    KeyIndex,
+    KeyStore,
     _committed_epochs,
-    _hit_candidates,
     band_key,
     check_stream_params,
     compact_epoch_dirs,
+    compact_key_store,
     epoch_dirs,
-    hit_shards,
     id_shard,
-    key_shard,
     load_epochs,
     read_parquet_stream,
     read_shards,
@@ -145,8 +147,16 @@ METRICS_SCHEMA = (
     "batch_id long, n_in long, n_no_hashes long, n_ref_dup long, "
     "n_batch_dup long, n_novel long"
 )
-KEYS_SCHEMA = "key string, shard int, ref_id string"
+# the probe-key store: its ``key`` column is the bloom key
+KEY_STORES = (KeyStore("keys", "key string, ref_id string", "shard", "key"),)
 MEDIA_N_SHARDS = 32
+# segment-core settings of the stream; the index's probe keys are cut
+# with MEDIA_BANDS, so every reader of the index must use it too
+MEDIA_BANDS = 4
+MEDIA_MAX_HAMMING = 6
+MEDIA_MIN_MATCH_FRAC = 0.5
+MEDIA_REF_BUCKET_CAP = 1024
+MEDIA_BATCH_BUCKET_CAP = 64
 _REF_SHARD = "__ref_shard"
 
 
@@ -209,16 +219,11 @@ def compact_media_index(
         f"{fp_schema}, {_REF_SHARD} int",
         cluster_by=[_REF_SHARD],
     )
-    compact_epoch_dirs(
-        spark, os.path.join(state_dir, "keys"), KEYS_SCHEMA,
-        cluster_by=["shard"],
-    )
+    compact_key_store(spark, state_dir, *KEY_STORES)
     return merged
 
 
-def _probe_keys(
-    fps: DataFrame, id_col: str, hashes_col: str, bands: int
-) -> DataFrame:
+def _probe_keys(fps: DataFrame, id_col: str, hashes_col: str) -> DataFrame:
     """(key, ref_id) probe/index keys of a fingerprint frame: one row
     per distinct LSH band slice (``b:<band>:<slice>``) and one per
     non-null byte hash (``s:<sha>``). These are exactly the equality
@@ -226,13 +231,13 @@ def _probe_keys(
     none of them with a batch can never become a candidate (band-join)
     nor a byte-exact match (sha-join)."""
     band_keys = segment_band_rows(
-        fps, bands=bands, id_col=id_col, hashes_col=hashes_col
+        fps, bands=MEDIA_BANDS, id_col=id_col, hashes_col=hashes_col
     ).select(
-        band_key(F.col("band"), F.col("key")).alias("key"),
+        F.expr(band_key("band", "key")).alias("key"),
         F.col(id_col).alias("ref_id"),
     )
     sha_keys = fps.filter(F.col("file_sha").isNotNull()).select(
-        sha_key(F.col("file_sha")).alias("key"),
+        F.expr(sha_key("file_sha")).alias("key"),
         F.col(id_col).alias("ref_id"),
     )
     return band_keys.unionByName(sha_keys).distinct()
@@ -249,39 +254,32 @@ def _read_verdicts(path: str, id_col: str):
     ).to_pandas()
 
 
-def _index_keys(s: SparkSession, dirs: dict[str, list[str]]) -> DataFrame:
-    """Bloom keys of the probe-key store."""
-    keys = s.read.schema(KEYS_SCHEMA).parquet(*dirs["keys"])
-    return keys.select("key").distinct()
-
-
 def _reference_fps(
     spark: SparkSession,
     batch_fps: DataFrame,
     fp_schema: str,
     fps_dirs: list[str],
-    keys_dirs: list[str],
-    bloom: BloomIndex,
+    index: KeyIndex,
     id_col: str,
     hashes_col: str,
-    bands: int,
     n_shards: int,
 ) -> DataFrame | None:
-    """``prune_reference_fps`` over given listings: None when nothing
-    is indexed or no probe key hits the bloom, the full index when
-    ``bloom`` gives no probe flags or a hit finds no key store (lost
-    keys: the batch that rebuilds them), else the batch-pruned view."""
+    """``prune_reference_fps`` over a given fps listing and a started
+    ``index``: None when nothing is indexed or no probe key hits the
+    bloom, the full index when ``index`` gives no probe flags or a hit
+    finds no key store (lost keys: the batch that rebuilds them), else
+    the batch-pruned view."""
     if not fps_dirs:
         return None
-    flags = bloom.flags(_probe_keys(batch_fps, id_col, hashes_col, bands))
+    flags = index.probe(_probe_keys(batch_fps, id_col, hashes_col))
     if flags is None:
         return spark.read.schema(fp_schema).parquet(*fps_dirs)
-    flags = flags.persist()
+    flags.persist()
     try:
-        hit = hit_shards(flags)
-        if not hit:
+        if not index.hits():
             return None  # miss-only batch: no index scan at all
-        if not keys_dirs:
+        keys = index.read("keys")
+        if keys is None:
             # lost key store: nothing maps a hit key to its ids, so
             # this (migration) batch reads the whole index
             return spark.read.schema(fp_schema).parquet(*fps_dirs)
@@ -290,9 +288,13 @@ def _reference_fps(
         # shard collect AND the semi-join below — without the cut,
         # every downstream action on the pruned ref would re-run the
         # whole bloom probe and key-store scan
-        cands = _hit_candidates(
-            spark, keys_dirs, flags, hit, n_shards
-        ).localCheckpoint(eager=True)
+        cands = (
+            keys.join(flags.filter("might_contain").select("key"), "key")
+            .select("ref_id")
+            .distinct()
+            .withColumn(_REF_SHARD, id_shard(F.col("ref_id"), n_shards))
+            .localCheckpoint(eager=True)
+        )
         ref_shards = [
             r[_REF_SHARD]
             for r in cands.select(_REF_SHARD).distinct().collect()
@@ -318,7 +320,6 @@ def prune_reference_fps(
     fp_schema: str,
     id_col: str = "video_id",
     hashes_col: str = "frame_hashes",
-    bands: int = 4,
     n_shards: int = MEDIA_N_SHARDS,
     bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
     k_hashes: int = DEFAULT_K_HASHES,
@@ -346,18 +347,19 @@ def prune_reference_fps(
     if below is None:
         keys = _committed_epochs(os.path.join(state_dir, "keys"))
         below = keys[-1][0] + 1 if keys else None
-    bloom = BloomIndex(state_dir, (n_shards, bits_per_shard, k_hashes))
-    bloom.at(below)
+    index = KeyIndex(
+        state_dir, KEY_STORES, (n_shards, bits_per_shard, k_hashes)
+    )
+    keys_dirs = epoch_dirs(os.path.join(state_dir, "keys"), below)
+    index.at(spark, below, {"keys": keys_dirs})
     return _reference_fps(
         spark,
         batch_fps,
         fp_schema,
         epoch_dirs(os.path.join(state_dir, "fps"), below),
-        epoch_dirs(os.path.join(state_dir, "keys"), below),
-        bloom,
+        index,
         id_col,
         hashes_col,
-        bands,
         n_shards,
     )
 
@@ -373,11 +375,6 @@ def stream_media_novelty(
     id_col: str = "video_id",
     hashes_col: str = "frame_hashes",
     prefix: str = "frame",
-    bands: int = 4,
-    max_hamming: int = 6,
-    min_match_frac: float = 0.5,
-    ref_bucket_cap: int = 1024,
-    batch_bucket_cap: int = 64,
     max_files_per_trigger: int | None = None,
     prune_min_index_bytes: int = 64 << 20,
     n_shards: int = MEDIA_N_SHARDS,
@@ -397,17 +394,16 @@ def stream_media_novelty(
     grows with the index. 0 engages from the first batch, ``1 << 60``
     keeps full scans. The probe-key store is maintained on every
     indexing batch and the bloom snapshot from first engagement on
-    (state_store.BloomIndex), so a state dir can be resumed under any
+    (state_store.KeyIndex), so a state dir can be resumed under any
     threshold. Returns the StreamingQuery; read results with
     load_media_verdicts / load_reference_fps / load_media_metrics."""
     params = (n_shards, bits_per_shard, k_hashes)
     check_stream_params(*params)
     fps_path = os.path.join(state_dir, "fps")
-    keys_path = os.path.join(state_dir, "keys")
     verdicts_path = os.path.join(state_dir, "verdicts")
     metrics_path = os.path.join(state_dir, "metrics")
     cache = EpochCache(state_dir, "fps", "keys")
-    bloom = BloomIndex(state_dir, params, prune_min_index_bytes)
+    index = KeyIndex(state_dir, KEY_STORES, params, prune_min_index_bytes)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -418,8 +414,7 @@ def stream_media_novelty(
         # race to compute the same cached partitions
         fps_b = fingerprint_fn(batch_df).persist()
         dirs = cache.at(batch_id)
-        fps_dirs, keys_dirs = dirs["fps"], dirs["keys"]
-        bloom.at(batch_id, cache.nbytes("fps"))
+        index.at(s, batch_id, dirs, cache.nbytes("fps"))
         try:
             fps_b.count()
 
@@ -427,8 +422,8 @@ def stream_media_novelty(
                 """The batch against the index, checkpointed so the
                 verdict write plans over its result, not its chain."""
                 ref = _reference_fps(
-                    s, fps_b, fp_schema, fps_dirs, keys_dirs, bloom,
-                    id_col, hashes_col, bands, n_shards,
+                    s, fps_b, fp_schema, dirs["fps"], index,
+                    id_col, hashes_col, n_shards,
                 )
                 if ref is None:
                     return fps_b.select(
@@ -441,10 +436,10 @@ def stream_media_novelty(
                     ref,
                     id_col=id_col,
                     hashes_col=hashes_col,
-                    bands=bands,
-                    max_hamming=max_hamming,
-                    min_match_frac=min_match_frac,
-                    ref_bucket_cap=ref_bucket_cap,
+                    bands=MEDIA_BANDS,
+                    max_hamming=MEDIA_MAX_HAMMING,
+                    min_match_frac=MEDIA_MIN_MATCH_FRAC,
+                    ref_bucket_cap=MEDIA_REF_BUCKET_CAP,
                 ).select(id_col, "match_ref_id", "match_frac")
                 # byte-identity path: an undecodable payload has no
                 # hashes but byte-identical copies are REAL exact
@@ -495,10 +490,10 @@ def stream_media_novelty(
                     id_col=id_col,
                     hashes_col=hashes_col,
                     prefix=prefix,
-                    bands=bands,
-                    max_hamming=max_hamming,
-                    min_match_frac=min_match_frac,
-                    bucket_cap=batch_bucket_cap,
+                    bands=MEDIA_BANDS,
+                    max_hamming=MEDIA_MAX_HAMMING,
+                    min_match_frac=MEDIA_MIN_MATCH_FRAC,
+                    bucket_cap=MEDIA_BATCH_BUCKET_CAP,
                 )
                 return connected_components(
                     edges.select("src", "dst")
@@ -576,7 +571,7 @@ def stream_media_novelty(
             # A non-empty key store always covers the fps store (fps
             # and keys epochs are written together, and migration
             # covers everything older).
-            migrate = bool(fps_dirs) and not keys_dirs
+            migrate = bool(dirs["fps"]) and not dirs["keys"]
             if counts.get("novel", 0) == 0 and not migrate:
                 # nothing to index: the fps/keys/bloom state is
                 # byte-unchanged, so skip all three writes (epoch gaps
@@ -610,31 +605,31 @@ def stream_media_novelty(
             # state predates the key store (legacy / migration), index
             # the WHOLE existing fingerprint store once so the next
             # batch can prune
-            delta_keys = _probe_keys(delta, id_col, hashes_col, bands)
+            delta_keys = _probe_keys(delta, id_col, hashes_col)
             if migrate:
-                legacy = s.read.schema(fp_schema).parquet(*fps_dirs)
+                legacy = s.read.schema(fp_schema).parquet(*dirs["fps"])
                 delta_keys = delta_keys.unionByName(
-                    _probe_keys(legacy, id_col, hashes_col, bands)
+                    _probe_keys(legacy, id_col, hashes_col)
                 )
             # the two deltas are independent writes into their own
-            # epoch dirs; the bloom refresh reads the keys epoch, so it
-            # waits for both
-            run_together(
-                s,
-                lambda: write_clustered(
-                    delta,
-                    os.path.join(fps_path, epoch),
-                    _REF_SHARD,
-                    id_shard(F.col(id_col), n_shards),
-                ),
-                lambda: write_clustered(
-                    delta_keys,
-                    os.path.join(keys_path, epoch),
-                    "shard",
-                    key_shard(F.col("key"), n_shards),
-                ),
-            )
-            bloom.refresh(s, batch_id, {"keys": keys_dirs}, _index_keys)
+            # epoch dirs; the bloom refresh and the listing advance wait
+            # for both. The key write caches its delta for the refresh,
+            # which would otherwise re-run the delta's three shuffles
+            delta_keys.persist()
+            try:
+                run_together(
+                    s,
+                    lambda: write_clustered(
+                        delta,
+                        os.path.join(fps_path, epoch),
+                        _REF_SHARD,
+                        id_shard(F.col(id_col), n_shards),
+                    ),
+                    lambda: index.write("keys", batch_id, delta_keys),
+                )
+                index.refresh(batch_id)
+            finally:
+                delta_keys.unpersist()
             cache.advance(batch_id, "fps", "keys")
         finally:
             fps_b.unpersist()

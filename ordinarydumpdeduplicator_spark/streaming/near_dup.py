@@ -21,6 +21,9 @@ MERGE by cluster_id — sources/merge.py):
                                                 whole (fat) store
     reps/epoch=N/      (caption_sha, rep)       first-seen rep index delta
     bands/epoch=N/     (id, band, key)          LSH band index delta
+                                                (both key stores of the
+                                                KEY_STORES declaration,
+                                                key-shard-clustered)
     assign/epoch=N/    (image_id, cluster_id)   FULL snapshot; superseded
                                                 epochs pruned after commit
     blooms/epoch=N/    (shard, bits, ...)       bloom over the rep and band
@@ -41,9 +44,11 @@ independent steps run side by side (state_store.run_together):
   the verify step reads the new captions epoch;
 - once the resolved reps are checkpointed, the INDEX branch (the
   ``reps`` and ``bands`` deltas side by side, then the bloom refresh,
-  which reads both) beside the CLUSTER branch (candidates, verify,
-  connected components: ``incremental_caption_cluster``), which reads
-  only index epochs below the batch.
+  which keys the same two projections of the checkpoint instead of
+  re-reading the epochs just written) beside the CLUSTER branch
+  (candidates, verify, connected components:
+  ``incremental_caption_cluster``), which reads only index epochs
+  below the batch.
 
 The ``assign`` write, the rotation of the superseded snapshot and the
 listing advance wait for both branches. Each write goes to its own
@@ -68,14 +73,13 @@ from ..plans.incremental import (
 )
 from ..schemas import IMAGES_SCHEMA
 from .state_store import (
-    BloomIndex,
     EpochCache,
+    KeyIndex,
+    KeyStore,
     band_key,
     check_stream_params,
     epoch_path,
-    hit_shards,
     id_shard,
-    key_shard,
     latest_epoch,
     load_epochs,
     read_parquet_stream,
@@ -88,12 +92,19 @@ from .state_store import (
 )
 
 CAPTIONS_SCHEMA = "image_id string, caption string"
-REPS_SCHEMA = "caption_sha string, rep string"
-BANDS_SCHEMA = "id string, band int, key long"
 ASSIGN_SCHEMA = "image_id string, cluster_id string"
 CAPTION_SHARDS = 32
 STATE_SHARDS = 32
 _SHARD = "__shard"
+# the rep and band stores' own columns ARE their bloom keys, so no
+# separate key store is needed
+KEY_STORES = (
+    KeyStore("reps", "caption_sha string, rep string", _SHARD,
+             sha_key("caption_sha")),
+    KeyStore("bands", "id string, band int, key long", _SHARD,
+             band_key("band", "key")),
+)
+REPS, BANDS = KEY_STORES
 
 
 def pruned_caption_resolver(spark: SparkSession, caption_dirs: list[str]):
@@ -126,22 +137,6 @@ def pruned_caption_resolver(spark: SparkSession, caption_dirs: list[str]):
     return resolve
 
 
-def _index_keys(s: SparkSession, dirs: dict[str, list[str]]) -> DataFrame:
-    """Bloom keys of the rep and band stores: their own columns ARE the
-    keys, so no separate key store is needed."""
-    return (
-        s.read.schema(REPS_SCHEMA)
-        .parquet(*dirs["reps"])
-        .select(sha_key(F.col("caption_sha")).alias("key"))
-        .unionByName(
-            s.read.schema(BANDS_SCHEMA)
-            .parquet(*dirs["bands"])
-            .select(band_key(F.col("band"), F.col("key")).alias("key"))
-        )
-        .distinct()
-    )
-
-
 def load_assignments(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """The latest committed assignment snapshot (None before any batch)."""
     return load_epochs(
@@ -172,7 +167,7 @@ def stream_near_dup_clusters(
     captions reads ZERO index rows. The bloom snapshot
     (``blooms/epoch=N``, latest prior retained as replay insurance) is
     built at first engagement from the stores themselves and kept
-    fresh every batch once it exists (state_store.BloomIndex).
+    fresh every batch once it exists (state_store.KeyIndex).
 
     Bad parameters raise ValueError before the query starts:
     ``bucket_cap`` < 2, ``jaccard_threshold`` outside [0, 1], or an
@@ -186,17 +181,14 @@ def stream_near_dup_clusters(
     check_stream_params(*params)
     check_caption_params(bucket_cap, jaccard_threshold)
     captions_path = os.path.join(state_dir, "captions")
-    reps_path = os.path.join(state_dir, "reps")
-    bands_path = os.path.join(state_dir, "bands")
     assign_path = os.path.join(state_dir, "assign")
     cache = EpochCache(state_dir, "captions", "reps", "bands")
-    bloom = BloomIndex(state_dir, params, prune_min_state_bytes)
+    index = KeyIndex(state_dir, KEY_STORES, params, prune_min_state_bytes)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         dirs = cache.at(batch_id)
-        reps_dirs, bands_dirs = dirs["reps"], dirs["bands"]
-        bloom.at(batch_id, cache.nbytes("reps", "bands"))
+        index.at(s, batch_id, dirs, cache.nbytes("reps", "bands"))
         # verify joins captions for BOTH endpoints: prior epochs + this
         # one — fetched per candidate endpoint through the pruned
         # resolver, never as a corpus-wide join
@@ -208,49 +200,20 @@ def stream_near_dup_clusters(
         def resolve() -> tuple[dict, DataFrame | None]:
             # one probe covers both stores: every new rep is a batch
             # row, so the batch's sha and band keys are a superset of
-            # what the run looks up (no flags: the stores are read whole)
-            f = feats.filter(
-                F.col("caption_sha").isNotNull() & F.col("bands").isNotNull()
-            )
-            flags = bloom.flags(
-                f.select(sha_key(F.col("caption_sha")).alias("key")).unionByName(
-                    f.select(F.posexplode("bands")).select(
-                        band_key(F.col("pos"), F.col("col")).alias("key")
-                    )
-                )
-            )
-            hit = None if flags is None else hit_shards(flags)
-            reps = (
-                read_shards(s, REPS_SCHEMA, reps_dirs, _SHARD, hit)
-                if reps_dirs
-                else None
-            )
-            bands = (
-                read_shards(s, BANDS_SCHEMA, bands_dirs, _SHARD, hit)
-                if bands_dirs
-                else None
-            )
+            # what the run looks up
+            f = feats.filter("caption_sha IS NOT NULL AND bands IS NOT NULL")
+            slices = f.selectExpr("posexplode(bands) AS (band, key)")
+            index.probe(REPS.keys(f).unionByName(BANDS.keys(slices)))
+            reps, bands = index.read("reps"), index.read("bands")
             return incremental_caption_resolve(feats, reps), bands
 
         def write_index(res: dict) -> None:
-            # rep/band deltas are written key-shard-clustered so the
-            # pruned reads above serve future batches with row-group
-            # pruning; the refresh reads both new epochs
             run_together(
                 s,
-                lambda: write_clustered(
-                    res["new_reps"], epoch_path(reps_path, batch_id), _SHARD,
-                    key_shard(sha_key(F.col("caption_sha")), n_shards),
-                ),
-                lambda: write_clustered(
-                    res["new_bands"], epoch_path(bands_path, batch_id), _SHARD,
-                    key_shard(band_key(F.col("band"), F.col("key")), n_shards),
-                ),
+                lambda: index.write("reps", batch_id, res["new_reps"]),
+                lambda: index.write("bands", batch_id, res["new_bands"]),
             )
-            bloom.refresh(
-                s, batch_id, {"reps": reps_dirs, "bands": bands_dirs},
-                _index_keys,
-            )
+            index.refresh(batch_id)
 
         try:
             # captions are written id-shard-clustered so the verify

@@ -1,8 +1,10 @@
 """Epoch-keyed parquet state shared by the stateful streams
 (streaming/near_dup.py, media_ingest.py, ingest_dedup.py): epoch
 listing and loading, crash-safe compaction, shard-clustered writes and
-pruned reads, the bloom snapshot lifecycle and the prune policy. Each
-stream's docstring describes its own store layout.
+pruned reads, and the key index (``KeyIndex``): each stream declares
+its key stores once (``KeyStore``), and the index alone writes, reads
+and blooms them. Each stream's docstring describes its own store
+layout.
 
 Replay protocol — EVERY write is keyed by the stream's epoch id and
 uses mode("overwrite") on that epoch's own directory
@@ -33,7 +35,7 @@ listing cost does not grow with history. The cache is keyed by the
 expected next batch id; a replayed or restarted batch misses it and
 re-lists from disk, so the replay contract is untouched. Bloom
 snapshots cross batches as a PATH, read where they are used — never a
-persisted frame that could outlive its query; ``BloomIndex`` holds
+persisted frame that could outlive its query; ``KeyIndex`` holds
 their whole lifecycle (prune policy, probe, refresh and rotation).
 
 Inside a batch, steps that do not depend on each other run side by side
@@ -41,11 +43,11 @@ through ``run_together``: a wave's cost is mostly the fixed latency of
 its Spark jobs, not their rows, so two independent job chains take the
 time of the longer one instead of the sum. Overlap is safe under the
 replay protocol because every overlapped write still targets its own
-epoch directory, which no step of the same batch reads unless it
-waited for that write (``BloomIndex.refresh`` waits for the key-store
-writes it reads), and ``rotate`` and ``EpochCache.advance`` run only
-after every write of the batch has returned. Steps nest: a step may
-call ``run_together`` itself.
+epoch directory, which no step of the same batch reads (the bloom
+refresh keys the delta frames the key-store writes were handed, not
+the epochs they wrote), and ``rotate`` and ``EpochCache.advance`` run
+only after every write of the batch has returned. Steps nest: a step
+may call ``run_together`` itself.
 
 Every stream query reads its source through ``read_parquet_stream``
 and starts through ``start_batches`` (``foreachBatch``, checkpoint,
@@ -61,6 +63,8 @@ import re
 import shutil
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -392,16 +396,18 @@ def key_shard(key: Column, n_shards: int) -> Column:
     )
 
 
-def sha_key(sha: Column) -> Column:
-    """Index key of a content hash, ``s:<sha>``. With ``band_key`` this
-    is the one spelling of the keys that the blooms, the key-shard
-    clustering and the key stores share."""
-    return F.concat(F.lit("s:"), sha)
+def sha_key(sha: str) -> str:
+    """SQL expression of the index key of a content-hash column,
+    ``s:<sha>``. With ``band_key`` this is the one spelling of the keys
+    that the blooms, the key-shard clustering and the key stores
+    share."""
+    return f"concat('s:', {sha})"
 
 
-def band_key(band: Column, key: Column) -> Column:
-    """Index key of an LSH band slice, ``b:<band>:<key>``."""
-    return F.concat_ws(":", F.lit("b"), band, key)
+def band_key(band: str, key: str) -> str:
+    """SQL expression of the index key of an LSH band slice,
+    ``b:<band>:<key>``."""
+    return f"concat_ws(':', 'b', {band}, {key})"
 
 
 def id_shard(id_col: Column, n_shards: int) -> Column:
@@ -471,39 +477,6 @@ def _check_snapshot(path: str, params: tuple[int, int, int]) -> None:
         )
 
 
-def hit_shards(flags: DataFrame) -> list[int]:
-    """Shards where at least one probe key might be indexed (empty =
-    nothing probed can be in the index, bloom false negatives being
-    impossible)."""
-    return [
-        r.shard
-        for r in flags.filter("might_contain")
-        .select("shard")
-        .distinct()
-        .collect()
-    ]
-
-
-def _hit_candidates(
-    spark: SparkSession,
-    keys_dirs: list[str],
-    flags: DataFrame,
-    hit: list[int],
-    n_shards: int,
-) -> DataFrame:
-    """Candidate ids reachable from the bloom-hit probe keys through a
-    shard-clustered (key, shard, ref_id) key store: the store is read
-    at the hit shards only, then equi-joined to the hit keys. Each id
-    carries its id shard as ``__ref_shard``."""
-    return (
-        read_shards(spark, "key string, ref_id string", keys_dirs, "shard", hit)
-        .join(flags.filter("might_contain").select("key"), "key")
-        .select("ref_id")
-        .distinct()
-        .withColumn("__ref_shard", id_shard(F.col("ref_id"), n_shards))
-    )
-
-
 def rotate(base: str, batch_id: int) -> None:
     """Delete every snapshot below ``batch_id`` except the newest one:
     the stream checkpoint may not have committed this batch yet, and a
@@ -551,9 +524,44 @@ class EpochCache:
         self._next = batch_id + 1
 
 
-class BloomIndex:
-    """One query's bloom index over its key stores: the snapshot store
-    ``<state_dir>/blooms``, the prune policy, the probe and the refresh.
+
+
+class KeyStore(NamedTuple):
+    """Declaration of one key store: its directory under the state dir,
+    the columns of its rows, the column it is clustered by, and the SQL
+    expression over those columns that gives a row's bloom key. The
+    expression is the only spelling of the rule "a key store is
+    clustered by ``key_shard`` of exactly the key the bloom holds":
+    ``KeyIndex`` writes, reads and blooms the store through it."""
+
+    name: str
+    schema: str
+    shard_col: str
+    key: str
+
+    def keys(self, rows: DataFrame) -> DataFrame:
+        """Bloom keys of rows with this store's columns, column ``key``."""
+        return rows.selectExpr(f"{self.key} AS key")
+
+
+def compact_key_store(
+    spark: SparkSession, state_dir: str, store: KeyStore
+) -> int:
+    """``compact_epoch_dirs`` for a key store, keeping its shard
+    clustering (the pruned reads rely on it)."""
+    return compact_epoch_dirs(
+        spark,
+        os.path.join(state_dir, store.name),
+        f"{store.schema}, {store.shard_col} int",
+        cluster_by=[store.shard_col],
+    )
+
+
+class KeyIndex:
+    """One query's key stores and the bloom over their keys: the only
+    code that writes or reads a key store, and owner of the snapshot
+    store ``<state_dir>/blooms``, the prune policy, the probe and the
+    refresh.
 
     The policy engages once the index reaches ``threshold`` bytes on
     disk; below it a full scan is cheaper than the probe's fixed cost
@@ -561,64 +569,119 @@ class BloomIndex:
     engagement: the snapshot is derivable from the key stores, so a
     stream below the threshold pays no bloom jobs. Once a snapshot
     exists it is refreshed every batch whatever the policy says; a
-    stale snapshot would hide index rows from later probes."""
+    stale snapshot would hide index rows from later probes.
+
+    Per batch: ``at``, at most one ``probe``, ``read`` of the stores at
+    its hit shards, one ``write`` per key store, then ``refresh``."""
 
     def __init__(
-        self, state_dir: str, params: tuple[int, int, int], threshold: int = 0
+        self,
+        state_dir: str,
+        stores: tuple[KeyStore, ...],
+        params: tuple[int, int, int],
+        threshold: int = 0,
     ):
         self._state_dir = state_dir
+        self._stores = {st.name: st for st in stores}
         self._path = os.path.join(state_dir, "blooms")
         self._params = params
         self._threshold = threshold
-        self.snapshot: str | None = None
-        self.engaged = False
 
-    def at(self, batch_id: int | None, nbytes: int = 0) -> None:
-        """Start a batch: the latest snapshot strictly below
-        ``batch_id`` (the newest when None), and the policy's verdict
-        on an index of ``nbytes`` bytes."""
-        self.snapshot = latest_epoch(self._path, batch_id)
-        self.engaged = nbytes >= self._threshold
-
-    def flags(self, probes: DataFrame, key_col: str = "key") -> DataFrame | None:
-        """Probe flags (key_col, shard, might_contain) of the distinct
-        ``key_col`` values of ``probes``; None, meaning "read the whole
-        store", unless the policy engaged and a snapshot exists."""
-        if not self.engaged or self.snapshot is None:
-            return None
-        _check_snapshot(self.snapshot, self._params)
-        blooms = probes.sparkSession.read.schema(BLOOMS_SCHEMA).parquet(
-            self.snapshot
-        )
-        return _probe_flags(
-            probes, blooms, key_col, *self._params, validate=False
-        )
-
-    def refresh(
+    def at(
         self,
         spark: SparkSession,
-        batch_id: int,
+        batch_id: int | None,
         listed: dict[str, list[str]],
-        keys: Callable[[SparkSession, dict[str, list[str]]], DataFrame],
+        nbytes: int = 0,
     ) -> None:
-        """After the batch's key-store writes, write its snapshot and
-        ``rotate``. ``listed`` holds the key stores' committed dirs
-        below the batch; ``keys(spark, dirs)`` turns such dirs into a
-        frame of index keys, column ``key``. At first engagement the
-        bloom keys the whole stores plus this epoch; after that only
-        this epoch, OR-merged into the prior snapshot."""
-        if self.snapshot is None and not self.engaged:
+        """Start a batch: ``listed`` holds each key store's committed
+        dirs strictly below ``batch_id``; the snapshot is the latest one
+        below it (the newest when None), and the policy rules on an
+        index of ``nbytes`` bytes."""
+        self._spark = spark
+        self._dirs = {name: listed[name] for name in self._stores}
+        self._snapshot = latest_epoch(self._path, batch_id)
+        self._engaged = nbytes >= self._threshold
+        self._flags: DataFrame | None = None
+        self._hit: list[int] | None = None
+        self._deltas: dict[str, DataFrame] = {}
+
+    def probe(self, probes: DataFrame, key_col: str = "key") -> DataFrame | None:
+        """The batch's one probe: flags (key_col, shard, might_contain)
+        of the distinct ``key_col`` values of ``probes``, whose hit
+        shards ``read`` then reads. None, meaning "read whole stores",
+        unless the policy engaged and a snapshot exists."""
+        if not self._engaged or self._snapshot is None:
+            return None
+        _check_snapshot(self._snapshot, self._params)
+        self._flags = _probe_flags(
+            probes, self._blooms(), key_col, *self._params, validate=False
+        )
+        return self._flags
+
+    def _blooms(self) -> DataFrame:
+        return self._spark.read.schema(BLOOMS_SCHEMA).parquet(self._snapshot)
+
+    def hits(self) -> list[int] | None:
+        """Shards where at least one probe key might be indexed (empty:
+        nothing probed can be in the index, bloom false negatives being
+        impossible); None without a probe."""
+        if self._flags is not None and self._hit is None:
+            self._hit = [
+                r.shard
+                for r in self._flags.filter("might_contain")
+                .select("shard")
+                .distinct()
+                .collect()
+            ]
+        return self._hit
+
+    def read(self, name: str) -> DataFrame | None:
+        """Store ``name`` below the batch at the probe's hit shards (all
+        of it without a probe); None when it has no committed epoch."""
+        store, dirs = self._stores[name], self._dirs[name]
+        if not dirs:
+            return None
+        return read_shards(
+            self._spark, store.schema, dirs, store.shard_col, self.hits()
+        )
+
+    def write(self, name: str, batch_id: int, delta: DataFrame) -> None:
+        """Write ``delta`` as the batch's epoch of store ``name``,
+        clustered by the key shard of its declared key; ``refresh``
+        blooms the keys of this frame."""
+        store = self._stores[name]
+        write_clustered(
+            delta,
+            epoch_path(os.path.join(self._state_dir, name), batch_id),
+            store.shard_col,
+            key_shard(F.expr(store.key), self._params[0]),
+        )
+        self._deltas[name] = delta
+
+    def refresh(self, batch_id: int) -> None:
+        """After the batch's writes, write its snapshot and ``rotate``.
+        The new keys are those of the frames handed to ``write``, so no
+        epoch this batch wrote is listed or read back. At first
+        engagement the prior stores' keys join them; after that they
+        are OR-merged into the prior snapshot."""
+        if self._snapshot is None and not self._engaged:
             return
-        dirs = {
-            store: ([] if self.snapshot else d)
-            + [epoch_path(os.path.join(self._state_dir, store), batch_id)]
-            for store, d in listed.items()
-        }
-        merged = bloom_shards(keys(spark, dirs), "key", *self._params)
-        if self.snapshot is not None:
-            merged = bloom_merge(
-                spark.read.schema(BLOOMS_SCHEMA).parquet(self.snapshot),
-                merged,
-            )
+        keys = [
+            st.keys(self._deltas[n])
+            for n, st in self._stores.items()
+            if n in self._deltas
+        ]
+        if self._snapshot is None:
+            keys += [
+                st.keys(self._spark.read.schema(st.schema).parquet(*dirs))
+                for st, dirs in zip(self._stores.values(), self._dirs.values())
+                if dirs
+            ]
+        merged = bloom_shards(
+            reduce(DataFrame.unionByName, keys), "key", *self._params
+        )
+        if self._snapshot is not None:
+            merged = bloom_merge(self._blooms(), merged)
         merged.write.mode("overwrite").parquet(epoch_path(self._path, batch_id))
         rotate(self._path, batch_id)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -133,26 +134,38 @@ def test_hit_probe_scan_carries_ref_shard_in_literal(spark, tmp_path):
 
 
 def test_keys_store_scan_carries_shard_in_literal(spark, tmp_path):
-    """The key-store read inside the probe is filtered by the bloom-hit
+    """The key-store read after the probe is filtered by the bloom-hit
     shard list as a pushed IN literal — row-group stats prune the
     non-hit shards of the shard-clustered store."""
-    from ordinarydumpdeduplicator_spark.streaming.state_store import (
-        _hit_candidates,
+    from ordinarydumpdeduplicator_spark.streaming.media_ingest import (
+        KEY_STORES,
+        MEDIA_N_SHARDS,
+        _probe_keys,
     )
+    from ordinarydumpdeduplicator_spark.operators.bloom_dedup import (
+        DEFAULT_BITS_PER_SHARD,
+        DEFAULT_K_HASHES,
+    )
+    from ordinarydumpdeduplicator_spark.streaming.state_store import KeyIndex
 
     inp, state, ck = (str(tmp_path / d) for d in ("in", "state", "ck"))
     os.makedirs(inp, exist_ok=True)
     _write_wave(spark, inp, [("a", _avi("x")), ("c", _avi("y"))])
     _run_once(spark, inp, state, ck)
 
-    keys_dirs = [os.path.join(state, "keys", "epoch=0")]
-    flags = spark.createDataFrame(
-        [("b:0:1", 3, True), ("s:feed", 7, True), ("b:1:9", 11, False)],
-        "key string, shard int, might_contain boolean",
+    index = KeyIndex(
+        state, KEY_STORES,
+        (MEDIA_N_SHARDS, DEFAULT_BITS_PER_SHARD, DEFAULT_K_HASHES),
     )
-    cands = _hit_candidates(spark, keys_dirs, flags, [3, 7], 32)
-    plan = cands._jdf.queryExecution().executedPlan().toString()
-    assert "In(shard, [3,7])" in plan, plan
+    index.at(spark, 1, {"keys": [os.path.join(state, "keys", "epoch=0")]})
+    batch = _fps_frame(spark, [("b", _avi("x", fps=25))])  # re-mux of a
+    index.probe(_probe_keys(batch, "video_id", "frame_hashes"))
+    hit = index.hits()
+    assert len(hit) > 1
+    plan = index.read("keys")._jdf.queryExecution().executedPlan().toString()
+    pushed = re.search(r"PushedFilters: .*In\(shard, \[([\d,]+)\]\)", plan)
+    assert pushed, plan
+    assert sorted(map(int, pushed.group(1).split(","))) == sorted(hit)
 
 
 def test_pruned_verdicts_match_full_scan(spark, tmp_path):

@@ -165,7 +165,6 @@ def test_compact_ingest_keys(spark, tmp_path):
     import os
 
     from ordinarydumpdeduplicator_spark.streaming.ingest_dedup import (
-        KEYS_SCHEMA,
         compact_ingest_keys,
         load_new_docs,
         stream_ingest_dedup,
@@ -196,7 +195,7 @@ def test_compact_ingest_keys(spark, tmp_path):
 
         return sorted(
             (r["content_sha"], r["shard"])
-            for r in spark.read.schema(KEYS_SCHEMA)
+            for r in spark.read.schema("content_sha string, shard int")
             .parquet(*[p for _, p in _committed_epochs(keys_dir)])
             .collect()
         )
@@ -254,7 +253,7 @@ def uninterrupted_stores(spark, tmp_path_factory):
     "target, when",
     [
         ("write_row_epoch", "before"),  # after the new/ write
-        ("write_clustered", "before"),  # after the metrics row
+        ("write", "before"),  # after the metrics row
         ("refresh", "before"),  # after the key delta
         ("refresh", "after"),  # after the snapshot, before the commit
     ],
@@ -272,7 +271,9 @@ def test_crash_at_each_write_boundary_restarts_to_identical_state(
     _write_wave(spark, inp, CRASH_WAVES[0])
     _run_once(spark, inp, state, ck)
 
-    owner = state_store.BloomIndex if target == "refresh" else ingest_dedup
+    owner = (
+        state_store.KeyIndex if target in ("write", "refresh") else ingest_dedup
+    )
     original = getattr(owner, target)
     crashed = []
 

@@ -1,10 +1,15 @@
 """Streaming media-ingest novelty: per-batch verdicts vs the epoch-keyed
 fingerprint index, within-batch collapse, byte-exact path for
-undecodable payloads, crash-replay healing."""
+undecodable payloads, crash-replay healing, and a crash at every write
+boundary restarting to the state of an uninterrupted run."""
 
 from __future__ import annotations
 
 import os
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql.readwriter import DataFrameWriter
 
 from ordinarydumpdeduplicator_spark.fixtures import codecs
 from ordinarydumpdeduplicator_spark.fixtures.generator import (
@@ -15,6 +20,7 @@ from ordinarydumpdeduplicator_spark.operators.video_dedup import (
     VIDEO_FP_SCHEMA,
     video_fingerprints,
 )
+from ordinarydumpdeduplicator_spark.streaming import media_ingest, state_store
 from ordinarydumpdeduplicator_spark.streaming.media_ingest import (
     load_media_metrics,
     load_media_verdicts,
@@ -294,3 +300,110 @@ def test_streaming_media_recall_gate(spark, tmp_path):
     assert assign.count() == n
     assert m.n_golden == 7
     assert m.pair_recall == 1.0, m
+
+
+# three waves at prune threshold 0: fresh content (and a NULL payload);
+# a re-mux of indexed content, a new item and its within-batch re-mux;
+# then only re-muxes of indexed content, so the third wave indexes
+# nothing and takes the early return
+MEDIA_CRASH_WAVES = [
+    [("a", _avi("x")), ("c", _avi("y")), ("n1", None)],
+    [("b", _avi("x", fps=25)), ("d", _avi("z")), ("d2", _avi("z", fps=25))],
+    [("e", _avi("y", fps=30)), ("f", _avi("z", fps=15))],
+]
+MEDIA_STORES = ("verdicts", "metrics", "fps", "keys", "blooms")
+
+
+def _run_pruned(spark, inp, state, ck):
+    stream_media_novelty(
+        spark, inp, state, ck,
+        fingerprint_fn=video_fingerprints,
+        input_schema=INPUT_SCHEMA,
+        fp_schema=VIDEO_FP_SCHEMA,
+        prune_min_index_bytes=0,
+    ).awaitTermination()
+
+
+def _media_stores(state):
+    """Every epoch dir of the media stream's stores, with its rows
+    (sorted; fingerprint rows with their ``__ref_shard``) when
+    committed, else None."""
+    out = {}
+    for store in MEDIA_STORES:
+        base = os.path.join(state, store)
+        for name in sorted(os.listdir(base)):
+            path = os.path.join(base, name)
+            committed = os.path.exists(os.path.join(path, "_SUCCESS"))
+            out[store, name] = (
+                sorted(pq.read_table(path).to_pylist(), key=repr)
+                if committed else None
+            )
+    return out
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_media_stores(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("media_uninterrupted")
+    inp, state, ck = (str(root / d) for d in ("in", "state", "ck"))
+    os.makedirs(inp)
+    for rows in MEDIA_CRASH_WAVES:
+        _write_wave(spark, inp, rows)
+        _run_pruned(spark, inp, state, ck)
+    return _media_stores(state)
+
+
+# (owner, attribute, crash before or after the call, the store whose
+# path the call must carry, the wave that crashes): the second wave's
+# writes in the order they commit (the fps and keys deltas run side by
+# side), and the third wave's last write before its early return
+MEDIA_CRASH_POINTS = {
+    "verdicts": (DataFrameWriter, "parquet", "before", "verdicts", 1),
+    "metrics": (media_ingest, "write_row_epoch", "before", "metrics", 1),
+    "fps": (media_ingest, "write_clustered", "before", "fps", 1),
+    "keys": (state_store.KeyIndex, "write", "before", "keys", 1),
+    "refresh": (state_store.KeyIndex, "refresh", "before", None, 1),
+    "commit": (state_store.KeyIndex, "refresh", "after", None, 1),
+    "no_novel": (media_ingest, "write_row_epoch", "after", "metrics", 2),
+}
+
+
+@pytest.mark.parametrize("point", list(MEDIA_CRASH_POINTS))
+def test_media_crash_at_each_write_boundary_restarts_to_identical_state(
+    spark, tmp_path, monkeypatch, uninterrupted_media_stores, point
+):
+    """The media query dies at one write boundary of a wave and is
+    restarted on the same checkpoint: the replayed wave and the ones
+    after it leave every epoch of the verdicts, metrics, fps, keys and
+    blooms stores row for row as an uninterrupted run does."""
+    owner, target, when, store, wave = MEDIA_CRASH_POINTS[point]
+    inp, state, ck = (str(tmp_path / d) for d in ("in", "state", "ck"))
+    os.makedirs(inp)
+    for rows in MEDIA_CRASH_WAVES[:wave]:
+        _write_wave(spark, inp, rows)
+        _run_pruned(spark, inp, state, ck)
+
+    original = getattr(owner, target)
+    crashed = []
+
+    def crash_once(*args, **kwargs):
+        mine = not crashed and (store is None or any(
+            isinstance(a, str) and store in a.split(os.sep) for a in args
+        ))
+        if when == "after" or not mine:
+            out = original(*args, **kwargs)
+        if mine:
+            crashed.append(point)
+            raise RuntimeError(f"crash at {point}")
+        return out
+
+    monkeypatch.setattr(owner, target, crash_once)
+    _write_wave(spark, inp, MEDIA_CRASH_WAVES[wave])
+    with pytest.raises(Exception, match=f"crash at {point}"):
+        _run_pruned(spark, inp, state, ck)
+    _run_pruned(spark, inp, state, ck)
+    assert crashed == [point]
+    for rows in MEDIA_CRASH_WAVES[wave + 1:]:
+        _write_wave(spark, inp, rows)
+        _run_pruned(spark, inp, state, ck)
+
+    assert _media_stores(state) == uninterrupted_media_stores

@@ -397,9 +397,9 @@ def uninterrupted_caption_stores(spark, tiny_corpus, tmp_path_factory):
 # commit, where the index writes run beside the clustering
 CAPTION_CRASH_POINTS = {
     "captions": (near_dup, "write_clustered", "before", "captions"),
-    "reps": (near_dup, "write_clustered", "before", "reps"),
-    "bands": (near_dup, "write_clustered", "before", "bands"),
-    "refresh": (state_store.BloomIndex, "refresh", "before", None),
+    "reps": (state_store.KeyIndex, "write", "before", "reps"),
+    "bands": (state_store.KeyIndex, "write", "before", "bands"),
+    "refresh": (state_store.KeyIndex, "refresh", "before", None),
     "assign": (DataFrameWriter, "parquet", "before", "assign"),
     "rotate": (near_dup, "rotate", "after", "assign"),
 }

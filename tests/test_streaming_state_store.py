@@ -2,26 +2,35 @@
 bad parameters are rejected before a query starts, no persisted frame
 (decoded batch, bloom snapshot, probe flags) outlives a query, the
 checkpoint blocks of waves do not pile up, steps run side by side keep
-the wave's job group, and a wave's job count stays within its
-budget."""
+the wave's job group, a wave's job count stays within its budget, and
+the bloom snapshot covers every key the key stores hold."""
 
 from __future__ import annotations
 
 import gc
 import os
+import shutil
 import threading
 import time
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame
 
 from ordinarydumpdeduplicator_spark.fixtures import codecs
 from ordinarydumpdeduplicator_spark.fixtures.generator import (
     _make_pixels,
     _rng,
 )
+from ordinarydumpdeduplicator_spark.operators.bloom_dedup import bloom_shards
 from ordinarydumpdeduplicator_spark.operators.video_dedup import (
     VIDEO_FP_SCHEMA,
     video_fingerprints,
+)
+from ordinarydumpdeduplicator_spark.streaming import (
+    ingest_dedup,
+    media_ingest,
+    near_dup,
 )
 from ordinarydumpdeduplicator_spark.streaming.ingest_dedup import (
     stream_ingest_dedup,
@@ -34,7 +43,11 @@ from ordinarydumpdeduplicator_spark.streaming.near_dup import (
     load_assignments,
     stream_near_dup_clusters,
 )
-from ordinarydumpdeduplicator_spark.streaming.state_store import run_together
+from ordinarydumpdeduplicator_spark.streaming.state_store import (
+    epoch_dirs,
+    latest_epoch,
+    run_together,
+)
 from tests.conftest import to_spark_images
 
 MEDIA_SCHEMA = "video_id string, bytes binary"
@@ -281,11 +294,11 @@ def test_run_together_steps_keep_the_callers_job_group(spark):
 # Spark jobs of the second wave below, prune policy engaged (bloom
 # probe, pruned index reads, snapshot refresh), the most measured over
 # repeated runs on 4 cores (caption 36-37 over 8 runs, media 77-79:
-# one job count varies from run to run)
-STREAM_WAVE_JOB_BUDGET = {"caption": 37, "media": 79}
+# one job count varies from run to run; ingest 25 over 3 runs)
+STREAM_WAVE_JOB_BUDGET = {"caption": 37, "media": 79, "ingest": 25}
 
 
-@pytest.mark.parametrize("stream", ["caption", "media"])
+@pytest.mark.parametrize("stream", ["caption", "media", "ingest"])
 def test_stream_wave_job_budget(spark, tiny_corpus, tmp_path, stream):
     """Regression guard on the fixed per-job cost of a stream wave: a
     step that goes back to re-reading what it wrote, or a frame that
@@ -298,7 +311,7 @@ def test_stream_wave_job_budget(spark, tiny_corpus, tmp_path, stream):
         waves = [to_spark_images(spark, pdf.iloc[lo:hi])
                  for lo, hi in ((0, 120), (120, 200))]
         prune = {"prune_min_state_bytes": 0}
-    else:
+    elif stream == "media":
         waves = [
             spark.createDataFrame(rows, MEDIA_SCHEMA)
             for rows in (
@@ -307,6 +320,18 @@ def test_stream_wave_job_budget(spark, tiny_corpus, tmp_path, stream):
             )
         ]
         prune = {"prune_min_index_bytes": 0}
+    else:
+        # history duplicates, new keys, a within-batch duplicate and a
+        # NULL text in the second wave
+        waves = [
+            spark.createDataFrame(
+                [(w * 100 + i, f"text {i % 9 + 4 * w}") for i in range(30)]
+                + [(w * 100 + 99, None)],
+                DOCS_SCHEMA,
+            )
+            for w in range(2)
+        ]
+        prune = {}
     inp = str(tmp_path / "in")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -396,3 +421,71 @@ def test_caption_waves_leave_no_growing_blocks(spark, tiny_corpus, tmp_path):
     assert clustered
     for x in clustered:
         assert cluster_of[f"w4_{x}"] == cluster_of[x]
+
+
+@pytest.mark.parametrize("stream", ["caption", "media", "ingest"])
+def test_bloom_snapshot_covers_every_stored_key(spark, tiny_corpus, tmp_path,
+                                                stream):
+    """After several waves the latest bloom snapshot holds, shard by
+    shard, exactly the bits that ``bloom_shards`` sets for the declared
+    keys of every committed key-store epoch. The waves include a first
+    engagement that follows waves run below the prune threshold
+    (caption, media) or a lost snapshot (ingest), where the refresh
+    must key the prior stores as well as the batch's deltas. A refresh
+    that drops keys passes the crash tests, which compare two runs of
+    the same code; this compares the bloom with the stores."""
+    pdf, _ = tiny_corpus
+    off, on = 1 << 60, 0
+    if stream == "caption":
+        module = near_dup
+        waves = [to_spark_images(spark, pdf.iloc[lo:hi])
+                 for lo, hi in ((0, 60), (60, 100), (100, 150), (150, 200))]
+        prunes = [{"prune_min_state_bytes": t} for t in (off, off, on, on)]
+    elif stream == "media":
+        module = media_ingest
+        waves = [
+            spark.createDataFrame(rows, MEDIA_SCHEMA)
+            for rows in (
+                [("a", _avi("x")), ("c", _avi("y"))],
+                [("b", _avi("x", fps=25)), ("d", _avi("z"))],
+                [("e", _avi("y", fps=30)), ("f", _avi("w"))],
+                [("g", _avi("v")), ("h", _avi("z", fps=25))],
+            )
+        ]
+        prunes = [{"prune_min_index_bytes": t} for t in (off, off, on, on)]
+    else:
+        module = ingest_dedup
+        waves = [
+            spark.createDataFrame(
+                [(w * 100 + i, f"cover {i % 11 + 5 * w}") for i in range(20)],
+                DOCS_SCHEMA,
+            )
+            for w in range(4)
+        ]
+        prunes = [{}] * 4
+    params = (32, 1 << 14, 7)
+    geometry = dict(zip(("n_shards", "bits_per_shard", "k_hashes"), params))
+    inp = str(tmp_path / "in")
+    state = str(tmp_path / "state")
+    ck = str(tmp_path / "ck")
+    os.makedirs(inp, exist_ok=True)
+    blooms = os.path.join(state, "blooms")
+    for i, (wave, prune) in enumerate(zip(waves, prunes)):
+        if stream == "ingest" and i == 2:
+            shutil.rmtree(blooms)
+        wave.coalesce(1).write.mode("append").parquet(inp)
+        _start(stream, spark, inp, state, ck, **geometry,
+               **prune).awaitTermination()
+
+    stored = reduce(DataFrame.unionByName, [
+        st.keys(spark.read.schema(st.schema).parquet(
+            *epoch_dirs(os.path.join(state, st.name))
+        ))
+        for st in module.KEY_STORES
+    ])
+    want = {r.shard: bytes(r.bits)
+            for r in bloom_shards(stored, "key", *params).collect()}
+    got = {r.shard: bytes(r.bits)
+           for r in spark.read.parquet(latest_epoch(blooms)).collect()}
+    assert sorted(got) == sorted(want)
+    assert [s for s in want if got[s] != want[s]] == []
