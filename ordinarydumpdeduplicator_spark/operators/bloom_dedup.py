@@ -12,101 +12,109 @@ work-avoidance device, the same role the reference's in-memory
 ``HashSet`` lookup plays per file (``DataControllerSimple.cs:43-75``)
 — rebuilt here so no single machine ever holds the key set.
 
-Scale shape — everything stays distributed:
+Scale shape — everything stays distributed, in built-in SQL (no Python
+worker on any bloom path):
 
-- the bitmap is SHARDED by key hash: ``n_shards`` rows of
-  ``bits_per_shard/8`` bytes each, built with one applyInPandas pass
-  over history keys and persistable as a table — at 10^12 keys / 1% fpp
-  the full bitmap is ~1.2 TB, far beyond a driver or a broadcast, but
-  each shard is executor-sized and co-partitioned with its probes; the
-  build parameters ride along as columns and are VALIDATED at probe
-  time (a mismatched probe would silently emit duplicates as new);
-- the probe COGROUPS batch keys with their shard's bitmap row — one
-  shuffle of the (small) batch, never a per-row copy of bitmap bytes
-  (a broadcast-join + scalar UDF would Arrow-copy the bitmap onto
-  every row);
-- every key is MD5-hashed exactly ONCE (one pandas pass computes
-  shard + both double-hash bases; build and probe reuse the same
-  columns), with bit positions by double hashing (Kirsch–Mitzenmacher
-  2006) — the repo-standard mixing family
-  (functions/text.shingle_hash64), process-stable, engine-stable.
+- the bitmap is SHARDED by key hash and stored as SPARSE WORD ROWS
+  ``(shard, word, bits long, <params>)``: bit position ``p`` of a shard
+  is bit ``p & 63`` of its word ``p >> 6``, and a word with no bit set
+  has no row. No row is ever a whole shard bitmap, so a shard never has
+  to fit one task; at 10^12 keys / 1% fpp the full bitmap is ~1.2 TB,
+  spread over word rows like any other table. The build parameters
+  ride along as columns and are VALIDATED at probe time (a mismatched
+  probe would silently emit duplicates as new);
+- build, merge and probe are plain aggregations and an equi-join: the
+  build explodes each key's k positions and ``bit_or``-s them per
+  (shard, word); the merge is a union and the same ``bit_or``; the probe
+  left-joins the batch keys' positions to the words on (shard, word)
+  and takes ``bool_and`` per key — the engine's own hash join, not a
+  per-shard Python loop;
+- every key's ``md5`` is split ONCE, by ``md5_split``: the shard is the
+  first digest byte, the double-hash bases h1/h2 (Kirsch–Mitzenmacher
+  2006) the little-endian low 32 bits of the two digest halves. With a
+  power-of-two ``bits_per_shard`` those 32 bits are all a position
+  needs. The key stores are clustered by the same shard column
+  (streaming/state_store.KeyIndex), so the hash is written in one
+  place.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterable
+from functools import reduce
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_BITS_PER_SHARD = 1 << 20  # 128 KiB per shard row
+DEFAULT_BITS_PER_SHARD = 1 << 20  # 128 KiB of bits per shard
 DEFAULT_K_HASHES = 7
 
 _PARAM_COLS = ("n_shards", "bits_per_shard", "k_hashes")
 
 
-def _check_params(n_shards: int, bits_per_shard: int, k_hashes: int) -> None:
-    if n_shards <= 0:
-        raise ValueError(f"n_shards must be positive, got {n_shards}")
-    if bits_per_shard <= 0 or bits_per_shard % 8 != 0:
+def _power_of_two(n: int, most: int) -> bool:
+    return 0 < n <= most and n & (n - 1) == 0
+
+
+def check_bloom_params(n_shards: int, bits_per_shard: int, k_hashes: int) -> None:
+    """Reject a geometry no bloom can serve, at the API boundary: the
+    shard is one digest byte mod ``n_shards``, and a position keeps the
+    low bits of a 32-bit sum (``bits_per_shard`` is an int column)."""
+    if not _power_of_two(n_shards, 256):
         raise ValueError(
-            f"bits_per_shard must be a positive multiple of 8, got {bits_per_shard}"
+            f"n_shards must be a power of two <= 256, got {n_shards}"
+        )
+    if not _power_of_two(bits_per_shard, 1 << 30):
+        raise ValueError(
+            f"bits_per_shard must be a power of two <= 2^30, got {bits_per_shard}"
         )
     if k_hashes <= 0:
         raise ValueError(f"k_hashes must be positive, got {k_hashes}")
 
 
-def _h1h2(keys: Iterable[str]) -> tuple[np.ndarray, np.ndarray]:
-    """Double-hash bases per key: (h1, h2) from the MD5 digest halves,
-    h2 forced odd so the k probe positions cycle the whole bitmap."""
-    h1 = np.empty(len(keys), dtype=np.uint64)
-    h2 = np.empty(len(keys), dtype=np.uint64)
-    for i, s in enumerate(keys):
-        d = hashlib.md5(str(s).encode("utf-8")).digest()
-        h1[i] = int.from_bytes(d[:8], "little")
-        h2[i] = int.from_bytes(d[8:], "little") | 1
-    return h1, h2
+def _le32(md5: str, first: int) -> str:
+    """SQL: the little-endian uint32 of digest bytes ``first``..+3 of
+    the md5 hex string ``md5``."""
+    pairs = ", ".join(
+        f"substring({md5}, {2 * b + 1}, 2)" for b in range(first + 3, first - 1, -1)
+    )
+    return f"CAST(conv(concat({pairs}), 16, 10) AS BIGINT)"
 
 
-def _hash_cols(key: Column, n_shards: int) -> Column:
-    """ONE hashing pass per key: struct(shard, h1, h2). Build and probe
-    both consume these columns, so shard assignment cannot drift between
-    them and no key is ever hashed twice. h1/h2 are stored as the int64
-    bit patterns of the uint64 values (Spark has no unsigned type)."""
-
-    @F.pandas_udf("shard int, h1 long, h2 long")
-    def udf(s: pd.Series) -> pd.DataFrame:
-        h1, h2 = _h1h2(s.tolist())
-        return pd.DataFrame(
-            {
-                "shard": (h1 % np.uint64(n_shards)).astype(np.int32),
-                "h1": h1.view(np.int64),
-                "h2": h2.view(np.int64),
-            },
-            index=s.index,
-        )
-
-    return udf(key)
-
-
-def _positions(
-    h1: np.ndarray, h2: np.ndarray, bits: int, k: int
-) -> np.ndarray:
-    """(n, k) probe positions: (h1 + (i+1)*h2) mod bits."""
-    steps = (np.arange(1, k + 1, dtype=np.uint64))[None, :]
-    return ((h1[:, None] + steps * h2[:, None]) % np.uint64(bits)).astype(
-        np.int64
+def md5_split(key: str, n_shards: int) -> tuple[str, str, str]:
+    """SQL expressions (shard, h1, h2) of the string SQL expression
+    ``key``: its md5 digest's first byte mod ``n_shards``, and the
+    little-endian low 32 bits of each digest half, h2 forced odd so the
+    k positions cycle the whole shard. NULL for a NULL key."""
+    check_bloom_params(n_shards, 1, 1)
+    m = f"md5(CAST({key} AS STRING))"
+    return (
+        f"CAST(conv(substring({m}, 1, 2), 16, 10) AS INT) % {n_shards}",
+        _le32(m, 0),
+        f"{_le32(m, 8)} | 1",
     )
 
 
-def _keyed(df: DataFrame, key_col: str, n_shards: int) -> DataFrame:
-    return df.select(
-        F.col(key_col).cast("string").alias("__key"),
-        _hash_cols(F.col(key_col).cast("string"), n_shards).alias("__h"),
-    ).select("__key", "__h.shard", "__h.h1", "__h.h2")
+def _positions(
+    keys: DataFrame, key_col: str, n_shards: int, bits_per_shard: int, k_hashes: int
+) -> DataFrame:
+    """(key_col, shard, word, bit): one row per key and i in 1..k for
+    position (h1 + i·h2) & (bits_per_shard - 1)."""
+    key = f"`{key_col}`"
+    shard, h1, h2 = md5_split(key, n_shards)
+    # the explode gets its own projection: a column selected beside a
+    # generator is evaluated once per generated row
+    return keys.selectExpr(
+        key, f"{shard} AS shard", f"{h1} AS h1", f"{h2} AS h2"
+    ).selectExpr(
+        key, "shard", "h1", "h2", f"explode(sequence(1, {k_hashes})) AS i"
+    ).selectExpr(
+        key, "shard", f"(h1 + i * h2) & {bits_per_shard - 1} AS p"
+    ).selectExpr(
+        key,
+        "shard",
+        "CAST(shiftright(p, 6) AS INT) AS word",
+        "CAST(p & 63 AS INT) AS bit",
+    )
 
 
 def bloom_shards(
@@ -116,38 +124,29 @@ def bloom_shards(
     bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
     k_hashes: int = DEFAULT_K_HASHES,
 ) -> DataFrame:
-    """History keys -> one (shard, bits, <params>) bitmap row per shard.
+    """History keys -> word rows (shard, word, bits, <params>), one per
+    word with a bit set; NULL keys set no bit.
 
     Persist the result (it is the ingest index); rebuild cost is one
-    shuffle of history keys by shard. Size ``bits_per_shard * n_shards``
+    shuffle of the keys' positions. Size ``bits_per_shard * n_shards``
     to ~10 bits per expected key for ~1% fpp. The parameter columns let
     ``bloom_probe`` reject a probe configured differently from the
     build — a mismatch would otherwise emit duplicates as new."""
-    _check_params(n_shards, bits_per_shard, k_hashes)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        h1 = pdf["h1"].to_numpy().view(np.uint64)
-        h2 = pdf["h2"].to_numpy().view(np.uint64)
-        bmp = np.zeros(bits_per_shard // 8, dtype=np.uint8)
-        pos = _positions(h1, h2, bits_per_shard, k_hashes).ravel()
-        np.bitwise_or.at(bmp, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf["shard"].iloc[0])],
-                "bits": [bmp.tobytes()],
-                "n_shards": [n_shards],
-                "bits_per_shard": [bits_per_shard],
-                "k_hashes": [k_hashes],
-            }
-        )
-
+    check_bloom_params(n_shards, bits_per_shard, k_hashes)
     return (
-        _keyed(keys, key_col, n_shards)
-        .groupBy("shard")
-        .applyInPandas(
-            build,
-            "shard int, bits binary, n_shards int, bits_per_shard int, "
-            "k_hashes int",
+        _positions(
+            keys.filter(f"`{key_col}` IS NOT NULL"),
+            key_col, n_shards, bits_per_shard, k_hashes,
+        )
+        .groupBy("shard", "word")
+        .agg(F.expr("bit_or(shiftleft(1L, bit))").alias("bits"))
+        .selectExpr(
+            "shard",
+            "word",
+            "bits",
+            f"{n_shards} AS n_shards",
+            f"{bits_per_shard} AS bits_per_shard",
+            f"{k_hashes} AS k_hashes",
         )
     )
 
@@ -157,9 +156,8 @@ def _validate_blooms(
 ) -> None:
     """Fail LOUDLY when a persisted blooms table was built with different
     parameters than the probe is using (the silent failure mode: keys
-    hash to shards with no bitmap row -> might_contain=False -> true
-    duplicates bypass verification). The blooms frame is n_shards rows,
-    so .first() is cheap."""
+    test positions the build never set -> might_contain=False -> true
+    duplicates bypass verification). Reads one row."""
     if not set(_PARAM_COLS) <= set(blooms.columns):
         raise ValueError(
             "blooms table lacks parameter columns "
@@ -186,50 +184,33 @@ def _probe_flags(
     k_hashes: int,
     validate: bool = True,
 ) -> DataFrame:
-    """Distinct batch keys -> (key_col, shard, might_contain), via a
-    cogroup on shard (the bitmap rows ride to their probes ONCE per
-    shard, not per row). Batch payload columns never enter the Python
-    worker. ``validate=False`` skips the persisted-table parameter check
-    for blooms frames built inline with the same parameters — the check
-    costs one execution of the (lazy) build plan."""
-    _check_params(n_shards, bits_per_shard, k_hashes)
+    """Distinct batch keys -> (key_col, shard, might_contain). The
+    snapshot's rows are OR-ed per (shard, word) first, so a word held by
+    several rows (deltas written without ``bloom_merge``) tests as their
+    union; a key's positions then left-join those words, and it might
+    be contained iff every position's bit is set. A NULL key, or one
+    whose word has no row, is a miss. ``validate=False`` skips the
+    persisted-table parameter check for blooms frames built inline with
+    the same parameters — the check costs one execution of the (lazy)
+    build plan."""
+    check_bloom_params(n_shards, bits_per_shard, k_hashes)
     if validate:
         _validate_blooms(blooms, n_shards, bits_per_shard, k_hashes)
-
-    def probe(probes: pd.DataFrame, bmp_pdf: pd.DataFrame) -> pd.DataFrame:
-        if probes.empty:
-            return pd.DataFrame({"__key": pd.Series(dtype="object"),
-                                 "shard": pd.Series(dtype="int32"),
-                                 "might_contain": pd.Series(dtype="bool")})
-        keys = probes["__key"].tolist()
-        shards = probes["shard"].tolist()
-        if bmp_pdf.empty:  # shard never seen in history
-            return pd.DataFrame({"__key": keys, "shard": shards,
-                                 "might_contain": [False] * len(keys)})
-        # a shard may hold several bitmap rows (epoch deltas written
-        # without bloom_merge): membership is their UNION — testing only
-        # the first row would silently emit duplicates as new
-        bmp = np.frombuffer(bmp_pdf["bits"].iloc[0], dtype=np.uint8)
-        if len(bmp_pdf) > 1:
-            bmp = np.bitwise_or.reduce(
-                [np.frombuffer(b, dtype=np.uint8) for b in bmp_pdf["bits"]]
-            )
-        h1 = probes["h1"].to_numpy().view(np.uint64)
-        h2 = probes["h2"].to_numpy().view(np.uint64)
-        pos = _positions(h1, h2, bits_per_shard, k_hashes)
-        hit = (
-            (bmp[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-        ).all(axis=1)
-        return pd.DataFrame(
-            {"__key": keys, "shard": shards, "might_contain": hit}
-        )
-
-    probes = _keyed(batch.select(key_col).distinct(), key_col, n_shards)
+    words = blooms.groupBy("shard", "word").agg(
+        F.expr("bit_or(bits)").alias("bits")
+    )
     return (
-        probes.groupBy("shard")
-        .cogroup(blooms.groupBy("shard"))
-        .applyInPandas(probe, "__key string, shard int, might_contain boolean")
-        .withColumnRenamed("__key", key_col)
+        _positions(
+            batch.select(key_col).distinct(),
+            key_col, n_shards, bits_per_shard, k_hashes,
+        )
+        .join(words, ["shard", "word"], "left")
+        .groupBy(key_col, "shard")
+        .agg(
+            F.expr(
+                "bool_and(coalesce((bits & shiftleft(1L, bit)) != 0, false))"
+            ).alias("might_contain")
+        )
     )
 
 
@@ -321,39 +302,32 @@ def incremental_new_docs(
 
 
 def bloom_merge(*tables: DataFrame) -> DataFrame:
-    """Union bloom-shard tables into one index: bloom union IS bitwise OR
-    of bitmaps, so merging a wave's delta into the main index never
-    rebuilds history (the incremental-ingest maintenance step — cost is
-    O(n_shards x bits_per_shard), independent of history size).
+    """Union bloom tables into one index: bloom union IS bitwise OR, so
+    merging a wave's delta into the main index never rebuilds history
+    (the incremental-ingest maintenance step — cost is the tables' word
+    rows, independent of history size).
 
-    All inputs must share build parameters (ORing bitmaps built with
-    different geometry silently corrupts membership). Validation happens
-    INSIDE the merge task, per shard group — an eager driver-side check
-    would execute every input plan once just to read three constants,
-    doubling the per-wave index-maintenance cost."""
+    All inputs must share build parameters (ORing words built with
+    different geometry silently corrupts membership). Validation runs
+    INSIDE the merge aggregation, per (shard, word), through
+    ``raise_error`` — an eager driver-side check would execute every
+    input plan once just to read three constants."""
     if not tables:
         raise ValueError("bloom_merge needs at least one shards table")
-    from functools import reduce
-
-    allr = reduce(lambda a, b: a.unionByName(b), tables)
-
-    def or_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        for c in _PARAM_COLS:
-            if pdf[c].nunique() > 1:
-                raise ValueError(
-                    f"bloom_merge: mismatched build parameters within "
-                    f"shard {int(pdf['shard'].iloc[0])}: "
-                    f"{c}={sorted(pdf[c].unique().tolist())}"
-                )
-        acc = np.frombuffer(pdf["bits"].iloc[0], dtype=np.uint8).copy()
-        for b in pdf["bits"].iloc[1:]:
-            acc |= np.frombuffer(b, dtype=np.uint8)
-        out = pdf.iloc[[0]].copy()
-        out["bits"] = [acc.tobytes()]
-        return out
-
-    return allr.groupBy("shard").applyInPandas(
-        or_group,
-        "shard int, bits binary, n_shards int, bits_per_shard int, "
-        "k_hashes int",
+    mismatch = " OR ".join(f"min({c}) != max({c})" for c in _PARAM_COLS)
+    seen = ", ".join(
+        f"'{c}=[', min({c}), ', ', max({c}), ']'" for c in _PARAM_COLS
+    )
+    # the check rides in ``bits``, the one column no reader prunes
+    return (
+        reduce(DataFrame.unionByName, tables)
+        .groupBy("shard", "word")
+        .agg(
+            F.expr(
+                f"CASE WHEN {mismatch} THEN raise_error(concat("
+                "'bloom_merge: mismatched build parameters within shard ', "
+                f"shard, ': ', concat_ws(' ', {seen}))) ELSE bit_or(bits) END"
+            ).alias("bits"),
+            *(F.expr(f"min({c})").alias(c) for c in _PARAM_COLS),
+        )
     )

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.features import extract_features
+from ..operators.lsh import DEFAULT_BUCKET_CAP
 
 
 def incremental_features(
@@ -70,7 +71,7 @@ def _band_rows(features: DataFrame) -> DataFrame:
 def incremental_caption_candidates(
     new_features: DataFrame,
     prev_bands: DataFrame | None,
-    bucket_cap: int = 256,
+    bucket_cap: int = DEFAULT_BUCKET_CAP,
 ) -> tuple[DataFrame, DataFrame]:
     """-> (candidate pairs touching a NEW doc, band rows for new docs).
 
@@ -224,8 +225,6 @@ def incremental_caption_cluster(
     captions_resolver,
     prev_bands: DataFrame | None = None,
     prev_assign: DataFrame | None = None,
-    bucket_cap: int = 256,
-    jaccard_threshold: float = 0.5,
 ) -> DataFrame:
     """Step two of an incremental caption batch: the caption_exact star
     edges (each batch member -> its rep), the near-dup candidates of
@@ -262,13 +261,13 @@ def incremental_caption_cluster(
     batch-min id), only new reps add band rows, candidates touch at
     least one new rep, and only affected components re-cluster
     (operators/connected_components.incremental_clusters). Buckets that
-    cross ``bucket_cap`` make the CANDIDATE enumeration arrival-order
-    dependent (a bucket capped mid-history keeps the all-pairs
-    candidates its earlier, smaller self emitted; a one-shot recompute
-    caps them all) — verification still gates every candidate, so the
-    difference is bounded recall variation on capped buckets, never a
-    false merge. The batch path has the same property across re-runs
-    with different batch splits."""
+    cross the cap (``lsh.DEFAULT_BUCKET_CAP``) make the CANDIDATE
+    enumeration arrival-order dependent (a bucket capped mid-history
+    keeps the all-pairs candidates its earlier, smaller self emitted; a
+    one-shot recompute caps them all) — verification still gates every
+    candidate, so the difference is bounded recall variation on capped
+    buckets, never a false merge. The batch path has the same property
+    across re-runs with different batch splits."""
     from ..operators.connected_components import (
         connected_components,
         incremental_clusters,
@@ -286,7 +285,6 @@ def incremental_caption_cluster(
     cands, _ = incremental_caption_candidates(
         resolved.filter("is_new_rep").selectExpr("rep AS image_id", "bands"),
         prev_bands,
-        bucket_cap=bucket_cap,
     )
     # materialize the (candidate-sized) pair set so the resolver sees a
     # concrete endpoint id list — without the cut the resolver's shard
@@ -301,7 +299,6 @@ def incremental_caption_cluster(
     near = verify_caption_pairs(
         cands.select("src", "dst", "capped"),
         captions_resolver(endpoint_ids),
-        jaccard_threshold=jaccard_threshold,
     ).select("src", "dst")
     # two consumers (the clustering's edge collect and its touched /
     # untouched split): materialize once, or each re-runs the star join

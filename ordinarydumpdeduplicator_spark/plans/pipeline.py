@@ -43,20 +43,25 @@ from ..operators.connected_components import connected_components
 from ..operators.exact_dedup import key_groups, readable
 from ..operators.features import extract_features
 from ..operators.lsh import (
+    DEFAULT_BUCKET_CAP,
     PHASH_BAND_MODES,
     check_caption_params,
     rep_candidates,
 )
-from ..operators.verify import verify_caption_pairs, verify_phash_pairs
+from ..operators.verify import (
+    JACCARD_THRESHOLD,
+    verify_caption_pairs,
+    verify_phash_pairs,
+)
 
 
 @dataclass
 class PipelineConfig:
     checkpoint_dir: str | None = None  # None -> in-memory cache() only
-    bucket_cap: int = 256
+    bucket_cap: int = DEFAULT_BUCKET_CAP
     phash_band_mode: str = "c2x16"
     hamming_threshold: int = 8
-    jaccard_threshold: float = 0.5
+    jaccard_threshold: float = JACCARD_THRESHOLD
     run_id: str = "run_0"
     metrics: list[dict] = field(default_factory=list)
 

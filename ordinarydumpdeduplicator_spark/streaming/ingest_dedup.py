@@ -15,21 +15,23 @@ streaming/state_store.py):
     metrics/epoch=N/ per-batch accounting (load_ingest_metrics)
 
 Per batch the work is: probe the batch's distinct keys against the bloom
-snapshot (cogroup; the flags frame is persisted for the batch and
+snapshot (built-in SQL: the keys' bit positions left-join the
+snapshot's word rows; the flags frame is persisted for the batch and
 unpersisted after the writes, so the probe runs exactly once), anti-join
 ONLY the bloom hits against the key store — which is read with a
 ``shard IN (<bloom-hit shards>)`` literal predicate, so parquet
 row-group stats prune everything outside the hit shards (each key delta
 is written clustered by shard for exactly this; at real scale the store
 would be directory-partitioned by shard for file-level pruning) — then
-OR-merge the new keys' bitmap into the snapshot
+OR-merge the new keys' words into the snapshot
 (``operators/bloom_dedup.bloom_merge`` — O(index size), independent of
 history row count). A miss-only batch never touches the key store at
 all. The refresh keys the delta frame the key write was handed, not
-the epoch it wrote. With no snapshot below the batch (the first
-batch, or a lost ``blooms/``) every key counts as a hit: the anti-join
-reads the whole key store, and the refresh keys the whole store into
-a new snapshot. The reference's analogue is the per-file
+the epoch it wrote, and the batch's accounting reads the counts of
+the ``new/`` epoch it wrote on the driver, with pyarrow. With no
+snapshot below the batch (the first batch, or a lost ``blooms/``)
+every key counts as a hit: the anti-join reads the whole key store,
+and the refresh keys the whole store into a new snapshot. The reference's analogue is the per-file
 ``HashSet`` membership check in ``DataControllerSimple.cs``; this is
 that check, made restartable and distributed.
 """
@@ -38,12 +40,14 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.bloom_dedup import (
     DEFAULT_BITS_PER_SHARD,
     DEFAULT_K_HASHES,
+    check_bloom_params,
     incremental_new_docs,
 )
 from ..operators.text_dedup import normalized_text
@@ -51,7 +55,6 @@ from .state_store import (
     EpochCache,
     KeyIndex,
     KeyStore,
-    check_stream_params,
     compact_key_store,
     load_epochs,
     read_parquet_stream,
@@ -103,7 +106,7 @@ def stream_ingest_dedup(
     stream (``doc_id``, ``text``). Returns the StreamingQuery; read the
     deduplicated corpus with ``load_new_docs(spark, state_dir)``."""
     params = (n_shards, bits_per_shard, k_hashes)
-    check_stream_params(*params)
+    check_bloom_params(*params)
     new_path = os.path.join(state_dir, "new")
     metrics_path = os.path.join(state_dir, "metrics")
     cache = EpochCache(state_dir, "keys")
@@ -156,8 +159,8 @@ def stream_ingest_dedup(
             new.write.mode("overwrite").parquet(
                 os.path.join(new_path, epoch)
             )
-            # derive the key delta from what was WRITTEN (the later
-            # writes cannot disagree with it)
+            # derive the key delta and the counts from what was
+            # WRITTEN (the later writes cannot disagree with it)
             written = s.read.parquet(os.path.join(new_path, epoch))
             # per-batch accounting (the streaming analogue of the
             # curation funnel's per-stage counters; north rule's metrics
@@ -166,9 +169,10 @@ def stream_ingest_dedup(
             # batch contributes only count(1)/count(text) — Catalyst
             # prunes the hash entirely — and n_distinct comes from the
             # already-persisted flags frame (one row per distinct key).
-            # n_new reads the already-written output. Epoch-keyed
-            # overwrite like every other state dir, so a crash replay
-            # heals its own metrics row too.
+            # The written epoch's counts are read on the driver with
+            # pyarrow (no Spark job). Epoch-keyed overwrite like every
+            # other state dir, so a crash replay heals its own metrics
+            # row too.
             stats = batch_df.agg(
                 F.count(F.lit(1)).alias("n_in"),
                 F.count("text").alias("n_nonnull"),
@@ -178,10 +182,11 @@ def stream_ingest_dedup(
             ).count()
             n_null = stats.n_in - stats.n_nonnull
             n_batch_first = n_distinct + n_null
-            w_stats = written.agg(
-                F.count(F.lit(1)).alias("n_total"),
-                F.count("content_sha").alias("n_nonnull"),
-            ).collect()[0]
+            written_keys = pq.read_table(
+                os.path.join(new_path, epoch), columns=["content_sha"]
+            ).column("content_sha")
+            n_total = len(written_keys)
+            n_new = n_total - written_keys.null_count
             # disjoint buckets — every arriving row lands in exactly one:
             # NULL-key passthrough, within-batch dup, history dup, or new.
             # Driver-side pyarrow write: a one-row accounting frame is
@@ -193,8 +198,8 @@ def stream_ingest_dedup(
                     "n_in": int(stats.n_in),
                     "n_null_key": int(n_null),
                     "n_batch_dup": int(stats.n_nonnull - n_distinct),
-                    "n_history_dup": int(n_batch_first - w_stats.n_total),
-                    "n_new": int(w_stats.n_nonnull),
+                    "n_history_dup": int(n_batch_first - n_total),
+                    "n_new": int(n_new),
                 },
             )
             # the non-NULL keys of ``written`` are distinct already

@@ -43,19 +43,19 @@ streaming/state_store.py):
 Per batch: ONE decode pass (the modality's mapInPandas fingerprint
 function — payload bytes never shuffle), materialized before anything
 else reads it. Two independent branches then run side by side
-(state_store.run_together), both over that frame. Apart from the bloom
-probe of an engaged index (one Arrow UDF, in the novelty branch only),
-both run built-in expressions, so they do not contend for Python
-workers:
+(state_store.run_together), both over that frame. Both run built-in
+expressions (the bloom probe included), so they do not contend for
+Python workers:
 
 - novelty, the batch against the index, checkpointed once. Once the
   prune policy engages, the index is probed the way the text twin
   probes its key store: the batch's band-slice and sha keys go through
-  the sharded bloom (cogrouped Arrow probe); a miss-only batch READS
-  ZERO INDEX ROWS (no fps or keys scan at all); a hit batch reads only
-  the bloom-hit shards of the key store, resolves candidate reference
-  ids, and scans only those ids' ``__ref_shard`` row groups of the
-  fingerprint store. The pruned reference subset provably contains
+  the sharded bloom (a built-in SQL join of their bit positions to
+  the snapshot's word rows); a miss-only batch READS ZERO INDEX ROWS
+  (no fps or keys scan at all); a hit batch reads only the bloom-hit
+  shards of the key store, resolves candidate reference ids, and
+  scans only those ids' ``__ref_shard`` row groups of the fingerprint
+  store. The pruned reference subset provably contains
   every member of every band bucket the batch touches (a row holding
   a hit key is, by construction of the key store, in a hit shard), so
   bucket-cap counts, min-id witnesses, verification and therefore
@@ -70,12 +70,12 @@ workers:
 
 The verdict write plans over the two materialized results, not their
 chains. The outcome counts and the novel clusters' members are read
-back from that verdict epoch on the driver (no Spark job); the fps
-delta and its probe-key delta are built from those members and
-written side by side, and the bloom refresh (which keys the cached
-probe-key delta, not the epoch just written) and the listing advance
-run only after both. The segment-core settings are the MEDIA_*
-module constants. Outcomes are disjoint:
+back from that verdict epoch on the driver (no Spark job). The fps
+delta is built from those members and materialized once; it and its
+probe-key delta are written side by side, and the bloom refresh
+(which keys the cached probe-key delta, not the epoch just written)
+and the listing advance run only after both. The segment-core
+settings are the MEDIA_* module constants. Outcomes are disjoint:
 
     no_hashes   no fingerprintable evidence at all (NULL payload — the
                 Broken sentinel, OrdinaryDumpDeduplicator.cs:119-125) —
@@ -111,7 +111,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.bloom_dedup import DEFAULT_BITS_PER_SHARD, DEFAULT_K_HASHES
+from ..operators.bloom_dedup import (
+    DEFAULT_BITS_PER_SHARD,
+    DEFAULT_K_HASHES,
+    check_bloom_params,
+)
 from ..operators.connected_components import connected_components
 from ..operators.segment_dedup import (
     segment_band_rows,
@@ -124,7 +128,6 @@ from .state_store import (
     KeyStore,
     _committed_epochs,
     band_key,
-    check_stream_params,
     compact_epoch_dirs,
     compact_key_store,
     epoch_dirs,
@@ -320,9 +323,6 @@ def prune_reference_fps(
     fp_schema: str,
     id_col: str = "video_id",
     hashes_col: str = "frame_hashes",
-    n_shards: int = MEDIA_N_SHARDS,
-    bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
-    k_hashes: int = DEFAULT_K_HASHES,
     below: int | None = None,
 ) -> DataFrame | None:
     """The batch-pruned view of the reference fingerprint index: only
@@ -343,12 +343,15 @@ def prune_reference_fps(
     keys twin did not (a crash between the two writes) is not covered
     by the key store, so the prune could not see its rows. Returns
     the FULL index (legacy fallback) when no bloom snapshot exists
-    yet."""
+    yet. The bloom geometry is the stream's default; a snapshot built
+    with another fails loudly."""
     if below is None:
         keys = _committed_epochs(os.path.join(state_dir, "keys"))
         below = keys[-1][0] + 1 if keys else None
     index = KeyIndex(
-        state_dir, KEY_STORES, (n_shards, bits_per_shard, k_hashes)
+        state_dir,
+        KEY_STORES,
+        (MEDIA_N_SHARDS, DEFAULT_BITS_PER_SHARD, DEFAULT_K_HASHES),
     )
     keys_dirs = epoch_dirs(os.path.join(state_dir, "keys"), below)
     index.at(spark, below, {"keys": keys_dirs})
@@ -360,7 +363,7 @@ def prune_reference_fps(
         index,
         id_col,
         hashes_col,
-        n_shards,
+        MEDIA_N_SHARDS,
     )
 
 
@@ -398,7 +401,7 @@ def stream_media_novelty(
     threshold. Returns the StreamingQuery; read results with
     load_media_verdicts / load_reference_fps / load_media_metrics."""
     params = (n_shards, bits_per_shard, k_hashes)
-    check_stream_params(*params)
+    check_bloom_params(*params)
     fps_path = os.path.join(state_dir, "fps")
     verdicts_path = os.path.join(state_dir, "verdicts")
     metrics_path = os.path.join(state_dir, "metrics")
@@ -502,9 +505,7 @@ def stream_media_novelty(
                     F.col("cluster_id").alias("__cl"),
                 )
 
-            # independent branches: both read the materialized fps_b,
-            # and only the novelty branch may run a Python (bloom
-            # probe) UDF
+            # independent branches: both read the materialized fps_b
             nov, assign = run_together(s, novelty, collapse)
             usable = fps_b.select(
                 id_col,
@@ -600,6 +601,7 @@ def stream_media_novelty(
                 .withColumn(id_col, F.col("batch_canonical_id"))
                 .drop("batch_canonical_id")
                 .dropDuplicates()
+                .persist()
             )
             # probe-key delta of exactly the rows indexed; when the
             # state predates the key store (legacy / migration), index
@@ -613,10 +615,13 @@ def stream_media_novelty(
                 )
             # the two deltas are independent writes into their own
             # epoch dirs; the bloom refresh and the listing advance wait
-            # for both. The key write caches its delta for the refresh,
-            # which would otherwise re-run the delta's three shuffles
+            # for both. The fps delta is materialized before they fork,
+            # so its join and dedup run once for both writes; the key
+            # write caches its delta for the refresh, which would
+            # otherwise re-run the delta's shuffles
             delta_keys.persist()
             try:
+                delta.count()
                 run_together(
                     s,
                     lambda: write_clustered(
@@ -629,6 +634,7 @@ def stream_media_novelty(
                 )
                 index.refresh(batch_id)
             finally:
+                delta.unpersist()
                 delta_keys.unpersist()
             cache.advance(batch_id, "fps", "keys")
         finally:

@@ -26,7 +26,7 @@ MERGE by cluster_id — sources/merge.py):
                                                 key-shard-clustered)
     assign/epoch=N/    (image_id, cluster_id)   FULL snapshot; superseded
                                                 epochs pruned after commit
-    blooms/epoch=N/    (shard, bits, ...)       bloom over the rep and band
+    blooms/epoch=N/    (shard, word, bits, ...) bloom over the rep and band
                                                 keys; once pruning engages,
                                                 ONE probe per batch over its
                                                 sha and band keys picks the
@@ -64,9 +64,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.bloom_dedup import DEFAULT_BITS_PER_SHARD, DEFAULT_K_HASHES
+from ..operators.bloom_dedup import (
+    DEFAULT_BITS_PER_SHARD,
+    DEFAULT_K_HASHES,
+    check_bloom_params,
+)
 from ..operators.features import extract_features
-from ..operators.lsh import check_caption_params
 from ..plans.incremental import (
     incremental_caption_cluster,
     incremental_caption_resolve,
@@ -77,7 +80,6 @@ from .state_store import (
     KeyIndex,
     KeyStore,
     band_key,
-    check_stream_params,
     epoch_path,
     id_shard,
     latest_epoch,
@@ -149,8 +151,6 @@ def stream_near_dup_clusters(
     input_path: str,
     state_dir: str,
     checkpoint_dir: str,
-    bucket_cap: int = 256,
-    jaccard_threshold: float = 0.5,
     prune_min_state_bytes: int = 64 << 20,
     n_shards: int = STATE_SHARDS,
     bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
@@ -169,17 +169,17 @@ def stream_near_dup_clusters(
     built at first engagement from the stores themselves and kept
     fresh every batch once it exists (state_store.KeyIndex).
 
-    Bad parameters raise ValueError before the query starts:
-    ``bucket_cap`` < 2, ``jaccard_threshold`` outside [0, 1], or an
-    ``n_shards`` that is not a power of two <= 256.
+    The near-dup settings are the batch pipeline's defaults
+    (``lsh.DEFAULT_BUCKET_CAP``, ``verify.JACCARD_THRESHOLD``). A
+    bloom geometry ``check_bloom_params`` rejects raises ValueError
+    before the query starts.
 
     Returns the StreamingQuery; after it finishes read the
     current assignments with ``load_assignments(spark, state_dir)`` —
     NOT the bare root path: pruning retains the latest prior snapshot as
     replay insurance, so two epochs coexist on disk."""
     params = (n_shards, bits_per_shard, k_hashes)
-    check_stream_params(*params)
-    check_caption_params(bucket_cap, jaccard_threshold)
+    check_bloom_params(*params)
     captions_path = os.path.join(state_dir, "captions")
     assign_path = os.path.join(state_dir, "assign")
     cache = EpochCache(state_dir, "captions", "reps", "bands")
@@ -246,8 +246,6 @@ def stream_near_dup_clusters(
                     s.read.schema(ASSIGN_SCHEMA).parquet(prior_assign)
                     if prior_assign
                     else None,
-                    bucket_cap=bucket_cap,
-                    jaccard_threshold=jaccard_threshold,
                 ),
             )
         finally:

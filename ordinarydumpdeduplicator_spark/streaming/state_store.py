@@ -71,10 +71,11 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from ..operators.bloom_dedup import (
-    _check_params,
+    _PARAM_COLS,
     _probe_flags,
     bloom_merge,
     bloom_shards,
+    md5_split,
 )
 
 _EPOCH_RE = re.compile(r"^epoch=(\d+)$")
@@ -82,7 +83,8 @@ _MANIFEST = "_COMPACT_MANIFEST"
 _TMP_SUFFIX = ".compacting"
 _PRE_SUFFIX = ".pre_compact"
 BLOOMS_SCHEMA = (
-    "shard int, bits binary, n_shards int, bits_per_shard int, k_hashes int"
+    "shard int, word int, bits long, n_shards int, bits_per_shard int, "
+    "k_hashes int"
 )
 
 
@@ -131,7 +133,10 @@ def run_together(spark: SparkSession, *steps: Callable[[], object]) -> list:
     is re-raised after all have finished, so no step outlives the
     call. Meant for steps of built-in expressions or writes of
     materialized frames: steps that each run a Python UDF would
-    contend for the same cores instead of overlapping latency."""
+    contend for the same cores instead of overlapping latency. The
+    bloom steps (``KeyIndex.probe`` and ``refresh``) are built-in SQL,
+    so they do not contend with a Python step run beside them, such as
+    the caption wave's verify."""
     with ThreadPoolExecutor(max_workers=len(steps)) as pool:
         futures = [
             pool.submit(inheritable_thread_target(spark)(step))
@@ -365,37 +370,6 @@ def compact_epoch_dirs(
     return len(merge)
 
 
-def _check_n_shards(n_shards: int) -> None:
-    if not (0 < n_shards <= 256 and n_shards & (n_shards - 1) == 0):
-        raise ValueError(
-            f"n_shards must be a power of two <= 256, got {n_shards}"
-        )
-
-
-def check_stream_params(
-    n_shards: int, bits_per_shard: int, k_hashes: int
-) -> None:
-    """Reject stream parameters the state store cannot serve, before a
-    query starts: ``n_shards`` must be a power of two <= 256 (the JVM
-    key-shard expression), plus the bloom's own parameter checks."""
-    _check_n_shards(n_shards)
-    _check_params(n_shards, bits_per_shard, k_hashes)
-
-
-def key_shard(key: Column, n_shards: int) -> Column:
-    """Bloom shard of a key column as a pure JVM expression: the
-    bloom's h1 is the little-endian int64 of the md5 digest, so
-    h1 mod 2^k (k <= 8) is the FIRST digest byte mod 2^k — the first
-    two hex chars of md5(key). Byte-equal to bloom_dedup._keyed's
-    pandas hashing (pinned by test_jvm_shard_expression_matches_bloom_
-    hashing), so key-store clustering and probe pruning cannot drift."""
-    _check_n_shards(n_shards)
-    return (
-        F.conv(F.substring(F.md5(key), 1, 2), 16, 10).cast("int")
-        % F.lit(n_shards)
-    )
-
-
 def sha_key(sha: str) -> str:
     """SQL expression of the index key of a content-hash column,
     ``s:<sha>``. With ``band_key`` this is the one spelling of the keys
@@ -456,25 +430,28 @@ def read_shards(
     return df.drop(shard_col)
 
 
-def _check_snapshot(path: str, params: tuple[int, int, int]) -> None:
-    """Fail LOUDLY when a bloom snapshot was built with other
-    parameters than the probe's (keys would hash to positions the
-    build never set, and true duplicates would read as new). Reads the
-    n_shards-row parameter columns on the driver — no Spark job."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def _check_snapshot(path: str, params: tuple[int, int, int]) -> bool:
+    """Whether the bloom snapshot at ``path`` is in word rows (False for
+    the older one-bitmap-per-shard layout, which has no ``word``
+    column); fails LOUDLY when it was built with other parameters than
+    the probe's (keys would test positions the build never set, and
+    true duplicates would read as new). Reads the parameter columns on
+    the driver — no Spark job."""
+    import pyarrow.dataset as pads
 
-    cols = ["n_shards", "bits_per_shard", "k_hashes"]
-    t = pq.read_table(
-        path, columns=cols, schema=pa.schema([(c, pa.int32()) for c in cols])
-    )
-    got = set(zip(*(c.to_pylist() for c in t.columns)))
+    snapshot = pads.dataset(path, format="parquet")
+    if "word" not in snapshot.schema.names:
+        return False
+    cols = list(_PARAM_COLS)
+    distinct = snapshot.to_table(columns=cols).group_by(cols).aggregate([])
+    got = {tuple(r.values()) for r in distinct.to_pylist()}
     if got - {tuple(params)}:
         raise ValueError(
             f"bloom parameter mismatch: snapshot {path} built with "
             f"(n_shards, bits_per_shard, k_hashes)={sorted(got)}, "
             f"probe uses {tuple(params)}"
         )
+    return True
 
 
 def rotate(base: str, batch_id: int) -> None:
@@ -524,14 +501,12 @@ class EpochCache:
         self._next = batch_id + 1
 
 
-
-
 class KeyStore(NamedTuple):
     """Declaration of one key store: its directory under the state dir,
     the columns of its rows, the column it is clustered by, and the SQL
     expression over those columns that gives a row's bloom key. The
     expression is the only spelling of the rule "a key store is
-    clustered by ``key_shard`` of exactly the key the bloom holds":
+    clustered by the bloom shard of exactly the key the bloom holds":
     ``KeyIndex`` writes, reads and blooms the store through it."""
 
     name: str
@@ -600,7 +575,15 @@ class KeyIndex:
         index of ``nbytes`` bytes."""
         self._spark = spark
         self._dirs = {name: listed[name] for name in self._stores}
-        self._snapshot = latest_epoch(self._path, batch_id)
+        snapshot = latest_epoch(self._path, batch_id)
+        # a snapshot in the older bitmap layout counts as absent: this
+        # batch reads whole stores and its refresh rebuilds the
+        # snapshot from them, as after a lost ``blooms/``
+        self._snapshot = (
+            snapshot
+            if snapshot and _check_snapshot(snapshot, self._params)
+            else None
+        )
         self._engaged = nbytes >= self._threshold
         self._flags: DataFrame | None = None
         self._hit: list[int] | None = None
@@ -613,7 +596,6 @@ class KeyIndex:
         unless the policy engaged and a snapshot exists."""
         if not self._engaged or self._snapshot is None:
             return None
-        _check_snapshot(self._snapshot, self._params)
         self._flags = _probe_flags(
             probes, self._blooms(), key_col, *self._params, validate=False
         )
@@ -655,7 +637,7 @@ class KeyIndex:
             delta,
             epoch_path(os.path.join(self._state_dir, name), batch_id),
             store.shard_col,
-            key_shard(F.expr(store.key), self._params[0]),
+            F.expr(md5_split(store.key, self._params[0])[0]),
         )
         self._deltas[name] = delta
 
@@ -683,5 +665,11 @@ class KeyIndex:
         )
         if self._snapshot is not None:
             merged = bloom_merge(self._blooms(), merged)
-        merged.write.mode("overwrite").parquet(epoch_path(self._path, batch_id))
+        # sorted word rows under zstd: below the bitmap layout's bytes
+        # (snappy's word rows were ~40% above it on a 17k-key bloom)
+        merged.sortWithinPartitions("shard", "word").write.mode(
+            "overwrite"
+        ).option("compression", "zstd").parquet(
+            epoch_path(self._path, batch_id)
+        )
         rotate(self._path, batch_id)

@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ordinarydumpdeduplicator_spark.operators.bloom_dedup import (
+    _positions,
+    _probe_flags,
     bloom_probe,
     bloom_shards,
     incremental_new_docs,
@@ -22,6 +24,7 @@ from ordinarydumpdeduplicator_spark.operators.sampling import (
 from ordinarydumpdeduplicator_spark.operators.text_analysis import (
     token_freq_quality,
 )
+from tests.conftest import bloom_reference, reference_words
 
 
 @pytest.fixture(scope="module")
@@ -243,11 +246,65 @@ def test_bloom_param_mismatch_raises(spark, keyed):
 
 def test_bloom_invalid_params_raise(spark, keyed):
     hist, _ = keyed
-    with pytest.raises(ValueError, match="multiple of 8"):
+    with pytest.raises(ValueError, match="power of two"):
         bloom_shards(hist.select("content_sha"), "content_sha",
                      bits_per_shard=1001)
     with pytest.raises(ValueError, match="n_shards"):
         bloom_shards(hist.select("content_sha"), "content_sha", n_shards=0)
+
+
+@pytest.mark.parametrize("params", [(8, 1 << 12, 7), (32, 1 << 14, 7),
+                                    (32, 1 << 20, 7)],
+                         ids=["8x2^12", "32x2^14", "32x2^20"])
+def test_sql_bloom_matches_hashlib_reference(spark, params):
+    """The SQL bloom follows its spec bit for bit: each key's shard and
+    k positions, the build's word rows and the probe's might_contain
+    equal a hashlib reference, over random keys, a non-ASCII key, the
+    empty string and a NULL key (which sets no bit and probes as a
+    miss). The probed snapshot is two unmerged builds that share
+    (shard, word) rows, which must test as their union."""
+    import random
+
+    rng = random.Random(11)
+    keys = [f"k{rng.getrandbits(48):x}" for _ in range(200)]
+    keys += ["", "ключ-鍵-ü"]
+    frame = lambda ks: spark.createDataFrame([(k,) for k in ks], "k string")
+    everything = frame(keys + [None])
+
+    got = {}
+    for r in _positions(everything, "k", *params).collect():
+        shard, positions = got.setdefault(r.k, (r.shard, []))
+        assert r.shard == shard
+        positions.append(None if r.k is None else r.word * 64 + r.bit)
+    assert got.pop(None) == (None, [None] * params[2])
+    assert {k: (s, sorted(p)) for k, (s, p) in got.items()} == {
+        k: (s, sorted(p))
+        for k, (s, p) in ((k, bloom_reference(k, *params)) for k in keys)
+    }
+
+    history = keys[:60] + ["", "ключ-鍵-ü"]
+    a = bloom_shards(frame(history[:40]), "k", *params)
+    b = bloom_shards(frame(history[40:]), "k", *params)
+    assert {(r.shard, r.word): r.bits
+            for r in bloom_shards(frame(history + [None]), "k", *params)
+            .collect()} == reference_words(history, params)
+    if params == (8, 1 << 12, 7):
+        shared = {(r.shard, r.word) for r in a.collect()} & {
+            (r.shard, r.word) for r in b.collect()}
+        assert shared  # the union below holds two rows for these words
+    words = reference_words(history, params)
+
+    def ref_contains(key):
+        if key is None:
+            return False
+        shard, positions = bloom_reference(key, *params)
+        return all(words.get((shard, p >> 6), 0) >> (p & 63) & 1
+                   for p in positions)
+
+    flags = {r.k: r.might_contain for r in _probe_flags(
+        everything, a.unionByName(b), "k", *params).collect()}
+    assert flags == {k: ref_contains(k) for k in keys + [None]}
+    assert all(flags[k] for k in history)
 
 
 def test_bloom_empty_history(spark, keyed):
@@ -286,11 +343,11 @@ def test_bloom_merge_is_union(spark):
         bloom_shards(b, "k", n_shards=4, bits_per_shard=1 << 12),
     )
     scratch = bloom_shards(both, "k", n_shards=4, bits_per_shard=1 << 12)
-    m = {r.shard: bytes(r.bits) for r in merged.collect()}
-    s = {r.shard: bytes(r.bits) for r in scratch.collect()}
+    m = {(r.shard, r.word): r.bits for r in merged.collect()}
+    s = {(r.shard, r.word): r.bits for r in scratch.collect()}
     assert m == s
     # mismatched geometry is rejected (raised in the merge task, so it
-    # surfaces as Spark's wrapped PythonException — still loud)
+    # surfaces as Spark's wrapped raise_error exception — still loud)
     with pytest.raises(Exception, match="mismatched build parameters"):
         bloom_merge(
             bloom_shards(a, "k", n_shards=4, bits_per_shard=1 << 12),

@@ -209,36 +209,28 @@ def test_pruned_verdicts_match_full_scan(spark, tmp_path):
 
 
 def test_jvm_shard_expression_matches_bloom_hashing(spark):
-    """The JVM key-shard expression (first md5 byte mod 2^k) must
-    agree with the bloom's pandas hashing (h1 % n_shards) for every
-    key — a drift would route keys to shards the probe never reads."""
+    """The shard column that clusters the key stores (the bloom's own
+    ``md5_split``) agrees with the hashlib reference of the bloom's
+    spec (first md5 byte mod n_shards) for every key — a drift would
+    route keys to shards the probe never reads."""
     import pytest
 
-    from ordinarydumpdeduplicator_spark.operators.bloom_dedup import _keyed
-    from ordinarydumpdeduplicator_spark.streaming.state_store import (
-        key_shard,
-    )
+    from ordinarydumpdeduplicator_spark.operators.bloom_dedup import md5_split
+    from tests.conftest import bloom_reference
 
-    keys = spark.createDataFrame(
-        [(f"b:{b}:{k}", "r") for b in range(4) for k in range(50)]
-        + [(f"s:sha-{i}", "r") for i in range(50)],
-        "key string, ref_id string",
-    )
+    keys = [f"b:{b}:{k}" for b in range(4) for k in range(50)] + [
+        f"s:sha-{i}" for i in range(50)]
+    frame = spark.createDataFrame([(k, "r") for k in keys],
+                                  "key string, ref_id string")
     for n_shards in (8, 32, 256):
-        fast = {
-            r["key"]: r["shard"]
-            for r in keys.select(
-                "key", key_shard(F.col("key"), n_shards).alias("shard")
-            ).collect()
-        }
-        slow = {
-            r["__key"]: r["shard"]
-            for r in _keyed(keys.select("key"), "key", n_shards).collect()
-        }
-        assert fast == slow, n_shards
-    # a non-power-of-two count has no JVM expression: rejected
+        shard = md5_split("key", n_shards)[0]
+        got = {r["key"]: r["shard"]
+               for r in frame.selectExpr("key", f"{shard} AS shard").collect()}
+        assert got == {k: bloom_reference(k, n_shards, 1, 1)[0]
+                       for k in keys}, n_shards
+    # a non-power-of-two count has no shard expression: rejected
     with pytest.raises(ValueError, match="n_shards"):
-        key_shard(F.col("key"), 12)
+        md5_split("key", 12)
 
 
 def test_legacy_state_migrates_to_pruned_index(spark, tmp_path):

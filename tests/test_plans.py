@@ -9,11 +9,17 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
+
+
+# physical plan nodes that run a Python worker
+PYTHON_NODES = ("FlatMapCoGroupsInPandas", "FlatMapGroupsInPandas",
+                "ArrowEvalPython", "BatchEvalPython")
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -133,16 +139,17 @@ def test_bloom_dedup_history_join_only_on_hits(spark, queries):
     child_block = "\n".join(lines[anti[0] + 1 : anti[0] + 4])
     assert "might_contain" in child_block, child_block
     assert "Relation" not in child_block.split("might_contain")[0]
-    # and the bitmap build/probe stays in cogrouped Arrow workers
+    # and the bitmap build/probe runs no Python worker
     phys = plan.split("== Physical Plan ==", 1)[1]
-    assert "FlatMapCoGroupsInPandas" in phys
+    assert not [n for n in PYTHON_NODES if n in phys], phys
 
 
-def test_bloom_probe_is_cogrouped(spark):
-    """The probe itself must be a shard-cogrouped Arrow exchange — never
-    a per-row bitmap broadcast (which would Arrow-copy the bitmap onto
-    every probe row)."""
+def test_bloom_probe_runs_no_python(spark):
+    """The bloom's build, merge and probe are built-in SQL: no plan
+    node of any of them runs a Python worker, and the probe joins the
+    key positions to the snapshot's word rows on (shard, word)."""
     from ordinarydumpdeduplicator_spark.operators.bloom_dedup import (
+        bloom_merge,
         bloom_probe,
         bloom_shards,
     )
@@ -150,11 +157,15 @@ def test_bloom_probe_is_cogrouped(spark):
     keys = spark.createDataFrame([("k1",), ("k2",)], "content_sha string")
     blooms = bloom_shards(keys, "content_sha", n_shards=4,
                           bits_per_shard=1 << 12)
-    plan = plan_of(
+    probe = plan_of(
         bloom_probe(keys, blooms, "content_sha", n_shards=4,
                     bits_per_shard=1 << 12)
     )
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert re.search(r"Left keys \[2\]: \[shard#\d+, word#\d+\]\n"
+                     r"Right keys \[2\]: \[shard#\d+, word#\d+\]\n"
+                     r"Join type: LeftOuter", probe), probe
+    for plan in (probe, plan_of(bloom_merge(blooms, blooms))):
+        assert not [n for n in PYTHON_NODES if n in plan], plan
 
 
 def test_sessionize_single_exchange_shared_by_windows(spark, queries):
