@@ -31,6 +31,7 @@ import numpy as np
 
 LJPG_MAGIC = b"LJPG"
 LJPG_QUANT = 6  # quantization step -> PSNR ~ 43 dB vs source pixels
+WAV_SR = 8000  # sample rate of every synthesized WAV payload
 
 
 # ---------------------------------------------------------------- BMP (real)
@@ -151,13 +152,15 @@ def decode_png(data: bytes) -> np.ndarray:
 # ------------------------------------------------- LJPG (simulated lossy)
 
 
-def encode_ljpg(pixels: np.ndarray, quant: int = LJPG_QUANT) -> bytes:
-    """Deterministic lossy encode: quantize pixels to step `quant`, zlib."""
+def encode_ljpg(pixels: np.ndarray) -> bytes:
+    """Deterministic lossy encode: quantize pixels to step LJPG_QUANT, zlib."""
     h, w, _ = pixels.shape
     q = np.clip(
-        (pixels.astype(np.int32) + quant // 2) // quant * quant, 0, 255
+        (pixels.astype(np.int32) + LJPG_QUANT // 2) // LJPG_QUANT * LJPG_QUANT,
+        0,
+        255,
     ).astype(np.uint8)
-    header = LJPG_MAGIC + struct.pack("<HHB", w, h, quant)
+    header = LJPG_MAGIC + struct.pack("<HHB", w, h, LJPG_QUANT)
     return header + zlib.compress(q.tobytes(), 6)
 
 
@@ -328,10 +331,10 @@ def decode_avi_rgb(data: bytes) -> list:
     return frames
 
 
-def encode_wav(x, sr: int = 8000, sampwidth: int = 2) -> bytes:
-    """Synthesize a PCM RIFF/WAVE payload from a float waveform in
-    [-1, 1] with the stdlib writer (mono; 1/2/4-byte PCM) — the encode
-    twin of operators/audio_dedup.decode_wav."""
+def encode_wav(x, sampwidth: int = 2) -> bytes:
+    """Synthesize a PCM RIFF/WAVE payload at WAV_SR Hz from a float
+    waveform in [-1, 1] with the stdlib writer (mono; 1/2/4-byte PCM) —
+    the encode twin of operators/audio_dedup.decode_wav."""
     import io
     import wave as _wave
 
@@ -348,6 +351,6 @@ def encode_wav(x, sr: int = 8000, sampwidth: int = 2) -> bytes:
     with _wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(sampwidth)
-        w.setframerate(sr)
+        w.setframerate(WAV_SR)
         w.writeframes(pcm.tobytes())
     return buf.getvalue()

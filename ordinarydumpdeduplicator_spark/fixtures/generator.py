@@ -33,6 +33,9 @@ from ..functions.text import jaccard, shingles
 from . import codecs
 
 HOT_CAPTION = "photo"
+SEED = 42  # the fixture corpora's seed
+VIDEO_FRAMES = 8  # frames per generated video
+AUDIO_CLIP_LEN = 16384  # samples per generated clip (2 s at codecs.WAV_SR)
 
 # class fractions (of n rows); remainder = uniques
 FRAC = {
@@ -165,7 +168,7 @@ CAPTION_TIERS = [1, 2, 8]  # words replaced out of 24 -> shingle J ~.78/.6/.2;
 def gen_row(
     i: int,
     plan: CorpusPlan,
-    seed: int = 42,
+    seed: int,
     img_size: tuple[int, int] = (32, 24),
     fmts: tuple[str, ...] = ("png", "bmp", "jpg"),
 ) -> dict:
@@ -258,7 +261,6 @@ IMAGE_COLS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
 
 def make_corpus(
     n: int,
-    seed: int = 42,
     img_size: tuple[int, int] = (32, 24),
     fmts: tuple[str, ...] = ("png", "bmp", "jpg"),
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
@@ -270,7 +272,7 @@ def make_corpus(
     hot (identical hot caption).
     """
     plan = CorpusPlan.make(n)
-    rows = [gen_row(i, plan, seed, img_size, fmts) for i in range(n)]
+    rows = [gen_row(i, plan, SEED, img_size, fmts) for i in range(n)]
     pdf = pd.DataFrame(rows)
 
     pairs: list[tuple[str, str, str]] = []
@@ -299,7 +301,7 @@ def make_corpus(
 def spark_images_df(
     spark,
     n: int,
-    seed: int = 42,
+    seed: int = SEED,
     partitions: int | None = None,
     img_size: tuple[int, int] = (32, 24),
     fmts: tuple[str, ...] = ("png", "bmp", "jpg"),
@@ -342,8 +344,7 @@ def spark_images_df(
 
 def gen_video_row(
     i: int,
-    seed: int = 42,
-    n_frames: int = 8,
+    seed: int,
     frame_size: tuple[int, int] = (24, 12),  # _make_pixels needs 8|w, 6|h
 ) -> dict:
     """Deterministic planted-class video row. Videos come in units of
@@ -363,7 +364,7 @@ def gen_video_row(
     key = ("u", unit) if cls in (0, 1, 2) else ("s", i)
     frames = [
         _make_pixels(_rng(seed, "vidframe", *key, k), w, h)
-        for k in range(n_frames)
+        for k in range(VIDEO_FRAMES)
     ]
     fps = 10
     if member == 1 and cls == 1:
@@ -384,7 +385,7 @@ def gen_video_row(
     return dict(video_id=f"v{i:09d}", bytes=data, _class=cls_name, _unit=unit)
 
 
-def spark_videos_df(spark, n: int, seed: int = 42, partitions: int | None = None):
+def spark_videos_df(spark, n: int, seed: int = SEED, partitions: int | None = None):
     """Distributed deterministic video corpus (same pattern as
     spark_images_df): each partition generates its own id range via
     mapInPandas — no driver materialization."""
@@ -411,7 +412,6 @@ def spark_videos_df(spark, n: int, seed: int = 42, partitions: int | None = None
 
 def gen_region_image_row(
     i: int,
-    seed: int = 42,
     size: tuple[int, int] = (64, 48),  # _make_pixels wants 8|w, 6|h
 ) -> dict:
     """Deterministic planted-class row for region-level image dedup
@@ -420,7 +420,7 @@ def gen_region_image_row(
     0 -> byte-identical pair, 1 -> dihedral pair (member 1 is a
     rotated/flipped copy, stored in a DIFFERENT container), 2 ->
     watermark pair (member 1 has its top-left quadrant inverted — a
-    heavy local edit, tile-aligned at grid=4), 3 -> banner pair
+    heavy local edit, tile-aligned at phash.TILE_GRID), 3 -> banner pair
     (member 1's bottom quarter replaced with a per-unit noise strip, a
     caption-banner edit), else two independent unique images. 4/10 of
     units are therefore dup pairs."""
@@ -430,7 +430,7 @@ def gen_region_image_row(
     cls = unit % 10
     w, h = size
     key = ("u", unit) if cls in (0, 1, 2, 3) else ("s", i)
-    pixels = _make_pixels(_rng(seed, "regimg", *key), w, h)
+    pixels = _make_pixels(_rng(SEED, "regimg", *key), w, h)
     fmt = "png"
     if member == 1:
         if cls == 1:
@@ -452,7 +452,7 @@ def gen_region_image_row(
             # same value for every unit (all-zero DCT coefficients) and
             # hot-bucket the band join across unrelated units
             pixels = pixels.copy()
-            strip = _rng(seed, "banner", unit).integers(
+            strip = _rng(SEED, "banner", unit).integers(
                 0, 256, size=(h - h * 3 // 4, w, 3), dtype=np.int64
             ).astype(np.uint8)
             pixels[h * 3 // 4 :, :] = strip
@@ -463,9 +463,7 @@ def gen_region_image_row(
     return dict(image_id=f"r{i:09d}", bytes=data, _class=cls_name, _unit=unit)
 
 
-def spark_region_images_df(
-    spark, n: int, seed: int = 42, partitions: int | None = None
-):
+def spark_region_images_df(spark, n: int, partitions: int | None = None):
     """Distributed deterministic region-dedup image corpus (same pattern
     as spark_videos_df: each partition generates its own id range)."""
     from pyspark.sql import types as T
@@ -477,7 +475,7 @@ def spark_region_images_df(
 
     def gen_batches(iterator):
         for pdf in iterator:
-            recs = [gen_region_image_row(int(i), seed) for i in pdf["id"]]
+            recs = [gen_region_image_row(int(i)) for i in pdf["id"]]
             yield pd.DataFrame(
                 [(r["image_id"], r["bytes"]) for r in recs],
                 columns=["image_id", "bytes"],
@@ -489,7 +487,7 @@ def spark_region_images_df(
     )
 
 
-def gen_audio_row(i: int, seed: int = 42, n: int = 16384, sr: int = 8000) -> dict:
+def gen_audio_row(i: int) -> dict:
     """Deterministic planted-class audio row (broadband colored noise +
     slow envelope — see tests/test_audio_dedup for why broadband).
     Units of two; unit % 10 picks the class: 0 -> byte-identical pair,
@@ -501,11 +499,12 @@ def gen_audio_row(i: int, seed: int = 42, n: int = 16384, sr: int = 8000) -> dic
     unit, member = i // 2, i % 2
     cls = unit % 10
     key = ("u", unit) if cls in (0, 1, 2) else ("s", i)
-    rng = _rng(seed, "audclip", *key)
+    n = AUDIO_CLIP_LEN
+    rng = _rng(SEED, "audclip", *key)
     x = rng.standard_normal(n + 64)
     kern = rng.standard_normal(48) * np.hanning(48)
     x = np.convolve(x, kern, mode="same")[:n]
-    t = np.arange(n) / sr
+    t = np.arange(n) / codecs.WAV_SR
     env = 0.6 + 0.4 * np.sin(2 * np.pi * rng.uniform(0.5, 2.0) * t)
     x = x * env
     x = x / (np.abs(x).max() + 1e-9) * 0.8
@@ -513,14 +512,14 @@ def gen_audio_row(i: int, seed: int = 42, n: int = 16384, sr: int = 8000) -> dic
     if member == 1 and cls == 1:
         sampwidth = 4
     elif member == 1 and cls == 2:
-        nrng = _rng(seed, "audnoise", *key)
+        nrng = _rng(SEED, "audnoise", *key)
         x = x[2 * 2048:] + nrng.normal(0, 0.002, n - 2 * 2048)
-    data = codecs.encode_wav(x, sr, sampwidth)
+    data = codecs.encode_wav(x, sampwidth)
     cls_name = {0: "exact", 1: "reenc", 2: "near"}.get(cls, "unique")
     return dict(audio_id=f"a{i:09d}", bytes=data, _class=cls_name, _unit=unit)
 
 
-def spark_audio_df(spark, n: int, seed: int = 42, partitions: int | None = None):
+def spark_audio_df(spark, n: int, partitions: int | None = None):
     """Distributed deterministic audio corpus (same pattern as
     spark_videos_df)."""
     from pyspark.sql import types as T
@@ -532,7 +531,7 @@ def spark_audio_df(spark, n: int, seed: int = 42, partitions: int | None = None)
 
     def gen_batches(iterator):
         for pdf in iterator:
-            recs = [gen_audio_row(int(i), seed) for i in pdf["id"]]
+            recs = [gen_audio_row(int(i)) for i in pdf["id"]]
             yield pd.DataFrame(
                 [(r["audio_id"], r["bytes"]) for r in recs],
                 columns=["audio_id", "bytes"],

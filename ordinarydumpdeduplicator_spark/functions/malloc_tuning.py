@@ -15,10 +15,12 @@ Python worker that runs the feature UDFs gets it) and session.py (driver).
 from __future__ import annotations
 
 _APPLIED = False
+MMAP_THRESHOLD = 256 * 1024 * 1024
 
 
-def tune_malloc(mmap_threshold: int = 256 * 1024 * 1024) -> bool:
-    """Raise M_MMAP_THRESHOLD and disable arena trimming. Idempotent."""
+def tune_malloc() -> bool:
+    """Raise M_MMAP_THRESHOLD to MMAP_THRESHOLD and disable arena
+    trimming. Idempotent."""
     global _APPLIED
     if _APPLIED:
         return True
@@ -28,7 +30,7 @@ def tune_malloc(mmap_threshold: int = 256 * 1024 * 1024) -> bool:
         libc = ctypes.CDLL("libc.so.6", use_errno=True)
         M_TRIM_THRESHOLD, M_MMAP_THRESHOLD = -1, -3
         ok1 = libc.mallopt(
-            ctypes.c_int(M_MMAP_THRESHOLD), ctypes.c_int(mmap_threshold)
+            ctypes.c_int(M_MMAP_THRESHOLD), ctypes.c_int(MMAP_THRESHOLD)
         )
         ok2 = libc.mallopt(
             ctypes.c_int(M_TRIM_THRESHOLD), ctypes.c_int(1 << 30)

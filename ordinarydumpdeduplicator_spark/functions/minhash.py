@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text import SHINGLE_K, jaccard, shingle_hashes, shingles
+from .text import jaccard, shingle_hashes, shingles
 
 NUM_HASHES = 128
 BANDS = 32
@@ -45,11 +45,11 @@ def _coeffs(num_hashes: int = NUM_HASHES, seed: int = _HASH_SEED):
 _A, _B = _coeffs()
 
 
-def minhash_signature(text: str | None, k: int = SHINGLE_K) -> list[int] | None:
+def minhash_signature(text: str | None) -> list[int] | None:
     """Pure-python/numpy signature for one text (oracle + generator side).
 
     Returns None for texts with no shingles (empty caption)."""
-    sh = shingle_hashes(text, k)
+    sh = shingle_hashes(text)
     if sh.size == 0:
         return None
     # (num_hashes, n_shingles) multiply-shift, min over shingles

@@ -17,6 +17,7 @@ from __future__ import annotations
 import numpy as np
 
 _DCT32 = None
+TILE_GRID = 4  # tile_phashes cuts an image into TILE_GRID x TILE_GRID tiles
 
 
 def _dct_matrix(n: int = 32) -> np.ndarray:
@@ -144,8 +145,8 @@ def dhash64(pixels: np.ndarray) -> int:
     return _dhash_from_small(_area_mean_resample_fp(g, _integral_fp(g), 8, 9))
 
 
-def tile_phashes(pixels: np.ndarray, grid: int = 4) -> list[int]:
-    """grid x grid per-tile 64-bit pHashes (row-major), ONE gray
+def tile_phashes(pixels: np.ndarray) -> list[int]:
+    """TILE_GRID x TILE_GRID per-tile 64-bit pHashes (row-major), ONE gray
     conversion + ONE integral image shared by every tile: tile (ty, tx)'s
     32x32 area-mean downsample is gathered straight from the full-image
     integral by offsetting its bin edges into the tile rectangle, so the
@@ -163,6 +164,7 @@ def tile_phashes(pixels: np.ndarray, grid: int = 4) -> list[int]:
     g = _gray_fp(pixels)
     csum = _integral_fp(g)
     h, w = g.shape
+    grid = TILE_GRID
     ylo, yhi = _bin_edges(h, grid)
     xlo, xhi = _bin_edges(w, grid)
     out: list[int] = []

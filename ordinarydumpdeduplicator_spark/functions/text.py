@@ -36,14 +36,17 @@ def tokens(text: str | None) -> list[str]:
     return text.lower().split()
 
 
-def shingles(text: str | None, k: int = SHINGLE_K) -> set[str]:
-    """Word k-gram shingles as space-joined strings."""
+def shingles(text: str | None) -> set[str]:
+    """Word SHINGLE_K-gram shingles as space-joined strings."""
     toks = tokens(text)
     if not toks:
         return set()
-    if len(toks) < k:
+    if len(toks) < SHINGLE_K:
         return {" ".join(toks)}
-    return {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
+    return {
+        " ".join(toks[i : i + SHINGLE_K])
+        for i in range(len(toks) - SHINGLE_K + 1)
+    }
 
 
 def shingle_hash64(s: str) -> int:
@@ -57,9 +60,9 @@ def shingle_hash64(s: str) -> int:
     return int.from_bytes(hashlib.md5(s.encode("utf-8")).digest()[8:], "little")
 
 
-def shingle_hashes(text: str | None, k: int = SHINGLE_K) -> np.ndarray:
+def shingle_hashes(text: str | None) -> np.ndarray:
     return np.fromiter(
-        (shingle_hash64(s) for s in shingles(text, k)), dtype=np.uint64
+        (shingle_hash64(s) for s in shingles(text)), dtype=np.uint64
     )
 
 

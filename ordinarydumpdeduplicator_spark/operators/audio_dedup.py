@@ -29,7 +29,7 @@ segment hashes (status 'fake_decode'; hash-seeded per clip, so fakes
 never cross-match).
 
 Scale shape: ONE mapInPandas pass over the payload column (bytes never
-shuffle; only id + <= n_segments int64 hashes do); everything after is
+shuffle; only id + <= N_SEGMENTS int64 hashes do); everything after is
 the segment_dedup built-ins core — banded LSH with bucket caps,
 codegen bit_count verify, CC over an edge frame orders of magnitude
 below corpus size.
@@ -45,6 +45,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .segment_dedup import segment_dedup_report
+
+N_SEGMENTS = 8  # segments hashed per clip
+SEG_LEN = 2048  # samples per segment
 
 AUDIO_FP_SCHEMA = (
     "audio_id string, status string, file_sha string, "
@@ -108,13 +111,11 @@ def spectral_hash64(segment: np.ndarray) -> int:
 
 def audio_fingerprints(
     audio: DataFrame,
-    n_segments: int = 8,
-    seg_len: int = 2048,
     strict: bool = False,
 ) -> DataFrame:
     """(audio_id, bytes) -> one skinny fingerprint row per clip: sha256
-    of the raw payload + up to ``n_segments`` evenly-strided
-    FIXED-LENGTH (``seg_len`` samples) segment spectral hashes over the
+    of the raw payload + up to N_SEGMENTS evenly-strided
+    FIXED-LENGTH (SEG_LEN samples) segment spectral hashes over the
     decoded mono waveform.
 
     Fixed-length segments — not an equal split of the clip — so a copy
@@ -143,22 +144,22 @@ def audio_fingerprints(
                         out.append((aid, "broken", sha, None, None))
                         continue
                     n = len(wave)
-                    n_total = n // seg_len
+                    n_total = n // SEG_LEN
                     if n_total < 1:
                         # shorter than one segment: hash what's there
                         hashes = [spectral_hash64(wave)]
                     else:
                         take = (
                             range(n_total)
-                            if n_total <= n_segments
+                            if n_total <= N_SEGMENTS
                             else [
-                                k * n_total // n_segments
-                                for k in range(n_segments)
+                                k * n_total // N_SEGMENTS
+                                for k in range(N_SEGMENTS)
                             ]
                         )
                         hashes = [
                             spectral_hash64(
-                                wave[i * seg_len:(i + 1) * seg_len]
+                                wave[i * SEG_LEN:(i + 1) * SEG_LEN]
                             )
                             for i in take
                         ]
@@ -171,7 +172,7 @@ def audio_fingerprints(
                         "in this environment"
                     )
                 fake = []
-                for k in range(n_segments):
+                for k in range(N_SEGMENTS):
                     h = hashlib.blake2b(
                         f"{aid}:{k}".encode(), digest_size=8
                     ).digest()
@@ -198,7 +199,6 @@ def audio_fingerprints(
 
 def audio_dedup_report(
     audio: DataFrame,
-    n_segments: int = 8,
     min_match_frac: float = 0.5,
     fingerprints: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
@@ -210,7 +210,7 @@ def audio_dedup_report(
     fps = (
         fingerprints
         if fingerprints is not None
-        else audio_fingerprints(audio, n_segments=n_segments)
+        else audio_fingerprints(audio)
     )
     return segment_dedup_report(
         fps,

@@ -21,12 +21,14 @@ worker on any bloom path):
   has no row. No row is ever a whole shard bitmap, so a shard never has
   to fit one task; at 10^12 keys / 1% fpp the full bitmap is ~1.2 TB,
   spread over word rows like any other table. The build parameters
-  ride along as columns and are VALIDATED at probe time (a mismatched
-  probe would silently emit duplicates as new);
+  ride along as columns: a merge of mismatched tables fails, and the
+  streams check a snapshot's geometry before they probe it (a
+  mismatched probe would silently emit duplicates as new);
 - build, merge and probe are plain aggregations and an equi-join: the
   build explodes each key's k positions and ``bit_or``-s them per
-  (shard, word); the merge is a union and the same ``bit_or``; the probe
-  left-joins the batch keys' positions to the words on (shard, word)
+  (shard, word); the merge is a union and the same ``bit_or``, so a
+  built or merged table holds one row per (shard, word); the probe
+  left-joins the batch keys' positions to those rows on (shard, word)
   and takes ``bool_and`` per key — the engine's own hash join, not a
   per-shard Python loop;
 - every key's ``md5`` is split ONCE, by ``md5_split``: the shard is the
@@ -130,8 +132,9 @@ def bloom_shards(
     Persist the result (it is the ingest index); rebuild cost is one
     shuffle of the keys' positions. Size ``bits_per_shard * n_shards``
     to ~10 bits per expected key for ~1% fpp. The parameter columns let
-    ``bloom_probe`` reject a probe configured differently from the
-    build — a mismatch would otherwise emit duplicates as new."""
+    ``bloom_merge`` and a snapshot's reader reject a table built with
+    another geometry — a mismatch would otherwise emit duplicates as
+    new."""
     check_bloom_params(n_shards, bits_per_shard, k_hashes)
     return (
         _positions(
@@ -151,30 +154,6 @@ def bloom_shards(
     )
 
 
-def _validate_blooms(
-    blooms: DataFrame, n_shards: int, bits_per_shard: int, k_hashes: int
-) -> None:
-    """Fail LOUDLY when a persisted blooms table was built with different
-    parameters than the probe is using (the silent failure mode: keys
-    test positions the build never set -> might_contain=False -> true
-    duplicates bypass verification). Reads one row."""
-    if not set(_PARAM_COLS) <= set(blooms.columns):
-        raise ValueError(
-            "blooms table lacks parameter columns "
-            f"{_PARAM_COLS} — rebuild it with bloom_shards()"
-        )
-    row = blooms.select(*_PARAM_COLS).first()
-    if row is None:
-        return  # empty history: every probe misses, which is correct
-    got = (row["n_shards"], row["bits_per_shard"], row["k_hashes"])
-    want = (n_shards, bits_per_shard, k_hashes)
-    if got != want:
-        raise ValueError(
-            f"bloom parameter mismatch: table built with "
-            f"(n_shards, bits_per_shard, k_hashes)={got}, probe uses {want}"
-        )
-
-
 def _probe_flags(
     batch: DataFrame,
     blooms: DataFrame,
@@ -182,29 +161,21 @@ def _probe_flags(
     n_shards: int,
     bits_per_shard: int,
     k_hashes: int,
-    validate: bool = True,
 ) -> DataFrame:
-    """Distinct batch keys -> (key_col, shard, might_contain). The
-    snapshot's rows are OR-ed per (shard, word) first, so a word held by
-    several rows (deltas written without ``bloom_merge``) tests as their
-    union; a key's positions then left-join those words, and it might
-    be contained iff every position's bit is set. A NULL key, or one
-    whose word has no row, is a miss. ``validate=False`` skips the
-    persisted-table parameter check for blooms frames built inline with
-    the same parameters — the check costs one execution of the (lazy)
-    build plan."""
+    """Distinct batch keys -> (key_col, shard, might_contain): a key's
+    positions left-join the word rows of ``blooms`` — a ``bloom_shards``
+    or ``bloom_merge`` table, one row per (shard, word) — and it might be
+    contained iff every position's bit is set. A NULL key, or one whose
+    word has no row, is a miss."""
     check_bloom_params(n_shards, bits_per_shard, k_hashes)
-    if validate:
-        _validate_blooms(blooms, n_shards, bits_per_shard, k_hashes)
-    words = blooms.groupBy("shard", "word").agg(
-        F.expr("bit_or(bits)").alias("bits")
-    )
     return (
         _positions(
             batch.select(key_col).distinct(),
             key_col, n_shards, bits_per_shard, k_hashes,
         )
-        .join(words, ["shard", "word"], "left")
+        .join(
+            blooms.select("shard", "word", "bits"), ["shard", "word"], "left"
+        )
         .groupBy(key_col, "shard")
         .agg(
             F.expr(
@@ -214,42 +185,20 @@ def _probe_flags(
     )
 
 
-def bloom_probe(
-    batch: DataFrame,
-    blooms: DataFrame,
-    key_col: str,
-    n_shards: int = 32,
-    bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
-    k_hashes: int = DEFAULT_K_HASHES,
-) -> DataFrame:
-    """Batch + boolean ``might_contain`` column (see ``_probe_flags``).
-    ``key_col`` must be string-typed (content hashes are)."""
-    flags = _probe_flags(
-        batch, blooms, key_col, n_shards, bits_per_shard, k_hashes
-    ).drop("shard")
-    return batch.join(flags, key_col, "left").fillna(
-        {"might_contain": False}
-    )
-
-
 def incremental_new_docs(
     history: DataFrame,
     batch: DataFrame,
     key_col: str = "content_sha",
     n_shards: int = 32,
     bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
-    k_hashes: int = DEFAULT_K_HASHES,
-    blooms: DataFrame | None = None,
     flags: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT new-content extraction for one ingest wave: batch rows whose
     ``key_col`` does not occur in history. Bloom misses bypass the
     history join; hits are verified with a left-anti join whose probe
-    side is only the hit sliver. Pass a persisted ``blooms`` table to
-    skip the rebuild (the production shape) — its build parameters are
-    validated against this call's (skipped for the inline build, whose
-    parameters match by construction — the check would execute the lazy
-    build plan a second time).
+    side is only the hit sliver. The bloom is built here from
+    ``history`` with DEFAULT_K_HASHES hashes, unless ``flags`` are
+    passed (then ``n_shards`` and ``bits_per_shard`` go unused).
 
     The whole decision runs at KEY level (miss keys ∪ anti-joined hit
     keys, then one null-safe semi-join back to the batch payload). The
@@ -270,21 +219,9 @@ def incremental_new_docs(
     ``flags`` frame — one (``key_col``, ``might_contain``) row per
     distinct batch key — and unpersist it right after their writes."""
     if flags is None:
-        if blooms is None:
-            validate = False  # built right here: params match trivially
-            blooms = bloom_shards(
-                history.select(key_col),
-                key_col=key_col,
-                n_shards=n_shards,
-                bits_per_shard=bits_per_shard,
-                k_hashes=k_hashes,
-            )
-        else:
-            validate = True
-        flags = _probe_flags(
-            batch, blooms, key_col, n_shards, bits_per_shard, k_hashes,
-            validate=validate,
-        ).persist()
+        geometry = (n_shards, bits_per_shard, DEFAULT_K_HASHES)
+        blooms = bloom_shards(history.select(key_col), key_col, *geometry)
+        flags = _probe_flags(batch, blooms, key_col, *geometry).persist()
     miss_keys = flags.filter(~F.col("might_contain")).select(key_col)
     hit_keys = flags.filter(F.col("might_contain")).select(key_col)
     verified_keys = hit_keys.join(

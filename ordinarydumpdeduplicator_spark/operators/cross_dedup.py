@@ -51,7 +51,7 @@ from .lsh import (
     caption_band_rows,
     ensure_min_parallelism,
 )
-from .verify import JACCARD_THRESHOLD, LCS_RATIO, verify_caption_pairs
+from .verify import verify_caption_pairs
 
 
 def _band_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -68,8 +68,6 @@ def cross_corpus_matches(
     reference: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    jaccard_threshold: float = JACCARD_THRESHOLD,
-    lcs_ratio: float = LCS_RATIO,
     ref_bucket_cap: int = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """One row per batch document: its novelty verdict against the
@@ -107,9 +105,7 @@ def cross_corpus_matches(
             )
         )
     )
-    verified = verify_caption_pairs(
-        cands, corpus, jaccard_threshold=jaccard_threshold, lcs_ratio=lcs_ratio
-    )
+    verified = verify_caption_pairs(cands, corpus)
 
     matches = verified.groupBy("src").agg(
         F.min(F.col("dst").cast("long")).alias("match_ref_id")
@@ -135,12 +131,11 @@ def novel_docs(
     reference: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    **kwargs,
 ) -> DataFrame:
     """The keep-side convenience: batch rows with no near-duplicate in
     the reference corpus (full original payload, not just ids)."""
     verdicts = cross_corpus_matches(
-        batch, reference, id_col=id_col, text_col=text_col, **kwargs
+        batch, reference, id_col=id_col, text_col=text_col
     ).filter("is_novel")
     return batch.join(
         verdicts.select(F.col("doc_id").alias(id_col)), id_col, "left_semi"

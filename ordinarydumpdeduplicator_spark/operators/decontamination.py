@@ -118,7 +118,6 @@ def fuzzy_decontaminate(
     eval_docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    **cross_kwargs,
 ) -> DataFrame:
     """NEAR-duplicate decontamination: flag training documents that are
     fuzzy near-dups of any eval document, not just exact n-gram hits.
@@ -142,13 +141,11 @@ def fuzzy_decontaminate(
     payloads never shuffled past the skinny band rows. Unlike the exact
     pass there is no broadcast shortcut — the LSH index of the eval set
     plays that role (band rows of a benchmark suite are tiny, and the
-    shuffle-hash join streams the training bands past them once).
-    ``**cross_kwargs`` forward to cross_corpus_matches
-    (jaccard_threshold, lcs_ratio, ref_bucket_cap)."""
+    shuffle-hash join streams the training bands past them once)."""
     from .cross_dedup import cross_corpus_matches
 
     m = cross_corpus_matches(
-        train, eval_docs, id_col=id_col, text_col=text_col, **cross_kwargs
+        train, eval_docs, id_col=id_col, text_col=text_col
     )
     return m.select(
         "doc_id",

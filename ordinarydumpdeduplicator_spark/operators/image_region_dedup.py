@@ -18,9 +18,9 @@ Two duplicate classes the existing image families cannot see:
 - **Locally-edited copies** (watermark, corner logo, banner strip, meme
   caption box). A heavy local edit flips global-pHash bits far past any
   usable Hamming radius — the DCT mixes the edited region into every
-  coefficient — while most of the image is untouched. A ``grid x grid``
-  grid of per-tile pHashes (functions/phash.tile_phashes: one integral
-  image shared by all tiles) keeps the identity evidence in the
+  coefficient — while most of the image is untouched. A TILE_GRID x
+  TILE_GRID grid of per-tile pHashes (functions/phash.tile_phashes: one
+  integral image shared by all tiles) keeps the identity evidence in the
   unedited tiles; candidates and verification ride the shared
   modality-agnostic segment core (operators/segment_dedup.py — banded
   bit-slice LSH with bucket caps, codegen bit_count match fraction).
@@ -46,7 +46,7 @@ plans/pipeline.py); this module exists for orientation and local edits.
 
 Scale shape (the 100 TB question): fingerprinting is ONE mapInPandas
 pass over the payload column — bytes never enter a shuffle; only
-(image_id, 2 digests, grid^2 int64 hashes) does (~200 bytes/row). The
+(image_id, 2 digests, TILE_GRID^2 int64 hashes) does (~200 bytes/row). The
 dihedral cost is 8 digests over the decoded buffer — memory-bandwidth
 bound and embarrassingly parallel, amortized against the decode it
 shares a pass with. Everything downstream is the segment core: bucket
@@ -73,6 +73,7 @@ from ..fixtures import codecs
 from ..functions.phash import tile_phashes
 from .features import EMPTY_SHA256
 from .segment_dedup import cluster_report, segment_near_pairs, star_edges
+from .segment_synth import SEG_BANDS, SEG_BUCKET_CAP
 
 IMAGE_REGION_FP_SCHEMA = (
     "image_id string, status string, file_sha string, "
@@ -99,12 +100,10 @@ def dihedral_sha256(pixels: np.ndarray) -> str:
     return best
 
 
-def image_region_fingerprints(
-    images: DataFrame, grid: int = 4
-) -> DataFrame:
+def image_region_fingerprints(images: DataFrame) -> DataFrame:
     """(image_id, bytes) -> one skinny fingerprint row per image:
     sha256 of the raw payload, the dihedral-canonical pixel digest +
-    orientation-invariant dims key, and grid^2 per-tile pHashes.
+    orientation-invariant dims key, and TILE_GRID^2 per-tile pHashes.
 
     status: ok | empty | undecodable (valid-looking bytes, decode fails;
     file_sha still set — byte-identical corrupt files are REAL exact
@@ -137,7 +136,7 @@ def image_region_fingerprints(
                         sha,
                         dims,
                         dihedral_sha256(pixels),
-                        tile_phashes(pixels, grid=grid),
+                        tile_phashes(pixels),
                     )
                 )
             yield pd.DataFrame(
@@ -165,8 +164,8 @@ def image_region_edges(fps: DataFrame) -> DataFrame:
     position from the LSH key and match_frac_expr matches tile SETS), so
     a collage of the same tiles rearranged also verifies — acceptable
     for dedup (it IS derived content) and documented rather than hidden.
-    A near pair needs >= 60% of its tiles matched within Hamming 4 (4
-    bands, bucket cap 64: the segment_near_pairs defaults)."""
+    A near pair needs >= 60% of its tiles matched within Hamming 4 (the
+    segment chain's SEG_BANDS bands and SEG_BUCKET_CAP cap)."""
     exact = star_edges(
         fps.filter(F.col("file_sha").isNotNull()).select(
             "image_id", "file_sha"
@@ -185,8 +184,10 @@ def image_region_edges(fps: DataFrame) -> DataFrame:
     )
     near = segment_near_pairs(
         fps.filter(F.col("status") == "ok"),
+        bands=SEG_BANDS,
         max_hamming=4,
         min_match_frac=0.6,
+        bucket_cap=SEG_BUCKET_CAP,
         id_col="image_id",
         hashes_col="tile_hashes",
     ).select("src", "dst", F.lit("tile_near").alias("kind"))
@@ -195,7 +196,6 @@ def image_region_edges(fps: DataFrame) -> DataFrame:
 
 def image_region_dedup_report(
     images: DataFrame,
-    grid: int = 4,
     fingerprints: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """End-to-end region-level image dedup: fingerprints, tagged edges,
@@ -212,7 +212,7 @@ def image_region_dedup_report(
     fps = (
         fingerprints
         if fingerprints is not None
-        else image_region_fingerprints(images, grid=grid)
+        else image_region_fingerprints(images)
     )
     # fps feeds six consumers (3 edge families + near verify sides +
     # the cluster left join)

@@ -16,8 +16,8 @@ exactly how exact_substring_spans generalizes it to k-token grams.
 Scale shape (everything built-in Catalyst, no Python):
     posexplode(split(text, '\\n'))             -- map-only explode
     -> hash-agg on md5(normalized line)        -- shuffle 1 (gram-style key)
-    -> ">= min_docs distinct docs" via the min(doc)!=max(doc) trick for
-       min_docs=2 (plain hash-agg, no count_distinct expansion)
+    -> "in more than one doc" via the min(doc)!=max(doc) trick
+       (plain hash-agg, no count_distinct expansion)
     -> join line rows back on the 32-char key  -- same key, exchange reuse
     -> re-assemble per doc                     -- shuffle 2 (doc_id)
 The line frame is the biggest intermediate; both of its shuffles are on
@@ -32,6 +32,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# shorter duplicated lines ("Yes.", headers) repeat by chance, not as
+# boilerplate: line_dedup keeps them (the CCNet convention)
+MIN_LINE_CHARS = 10
 
 
 def _line_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -54,11 +58,10 @@ def line_duplication_stats(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_docs: int = 2,
 ) -> DataFrame:
     """Corpus-global line frequency: one row per duplicated line key —
     (key, n_occurrences, n_docs, line_chars) for lines appearing in
-    >= min_docs distinct documents. The observability half of the
+    more than one document. The observability half of the
     operator (what IS the boilerplate), and the frame line_dedup joins
     against."""
     rows = _line_rows(docs, id_col, text_col).where(F.col("key").isNotNull())
@@ -67,20 +70,18 @@ def line_duplication_stats(
         F.count_distinct("doc_id").alias("n_docs"),
         F.min(F.length("line")).cast("long").alias("line_chars"),
     )
-    return stats.where(F.col("n_docs") >= min_docs)
+    return stats.where(F.col("n_docs") > 1)
 
 
 def line_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_docs: int = 2,
-    min_line_chars: int = 10,
 ) -> DataFrame:
     """Remove corpus-duplicated lines from every document.
 
-    A line is dropped when (a) its normalized form occurs in >= min_docs
-    distinct documents AND (b) it is >= min_line_chars long — short lines
+    A line is dropped when (a) its normalized form occurs in more than
+    one document AND (b) it is >= MIN_LINE_CHARS long — short lines
     ("Yes.", headers) duplicate by chance, not by boilerplate; the length
     guard is the CCNet convention. Blank lines always survive.
 
@@ -89,29 +90,20 @@ def line_dedup(
     clean_text preserves the source order of surviving lines; documents
     with nothing dropped pass through byte-identical.
 
-    For min_docs=2 the distinct-doc test is min(doc_id) != max(doc_id)
-    (one plain hash-agg over the line frame — count_distinct would
-    two-phase-expand the biggest intermediate in the operator); above 2
-    it falls back to count_distinct.
+    The more-than-one-doc test is min(doc_id) != max(doc_id) (one plain
+    hash-agg over the line frame — count_distinct would two-phase-expand
+    the biggest intermediate in the operator).
     """
     rows = _line_rows(docs, id_col, text_col)
     keyed = rows.where(
-        F.col("key").isNotNull() & (F.length(F.trim("line")) >= min_line_chars)
+        F.col("key").isNotNull() & (F.length(F.trim("line")) >= MIN_LINE_CHARS)
     )
-    if min_docs == 2:
-        dup_keys = (
-            keyed.groupBy("key")
-            .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
-            .where(F.col("mn") != F.col("mx"))
-            .select("key")
-        )
-    else:
-        dup_keys = (
-            keyed.groupBy("key")
-            .agg(F.count_distinct("doc_id").alias("nd"))
-            .where(F.col("nd") >= min_docs)
-            .select("key")
-        )
+    dup_keys = (
+        keyed.groupBy("key")
+        .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
+        .where(F.col("mn") != F.col("mx"))
+        .select("key")
+    )
     flagged = rows.join(
         dup_keys.withColumn("is_dup", F.lit(True)), "key", "left"
     ).select(
@@ -120,7 +112,7 @@ def line_dedup(
         "line",
         (
             F.coalesce(F.col("is_dup"), F.lit(False))
-            & (F.length(F.trim("line")) >= min_line_chars)
+            & (F.length(F.trim("line")) >= MIN_LINE_CHARS)
         ).alias("drop"),
     )
     kept = F.array_sort(

@@ -50,17 +50,6 @@ from .exact_dedup import key_groups
 DEFAULT_BUCKET_CAP = 256
 
 
-def check_caption_params(bucket_cap: int, jaccard_threshold: float) -> None:
-    """Reject caption near-dup parameters no run can serve — the batch
-    pipeline and the caption stream both call this before any work."""
-    if bucket_cap < 2:
-        raise ValueError(f"bucket_cap must be >= 2, got {bucket_cap}")
-    if not 0 <= jaccard_threshold <= 1:
-        raise ValueError(
-            f"jaccard_threshold must be in [0, 1], got {jaccard_threshold}"
-        )
-
-
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Small-input guard for expensive Arrow-UDF stages.
 
@@ -81,8 +70,8 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
 
 def pairs_from_buckets(
     banded: DataFrame,
+    bucket_cap: int,
     id_col: str = "id",
-    bucket_cap: int = DEFAULT_BUCKET_CAP,
     with_band_range: bool = False,
 ) -> DataFrame:
     """(id, band, key) -> candidate edges (src < dst).
@@ -223,14 +212,12 @@ def caption_band_rows(reps: DataFrame) -> DataFrame:
     return reps.selectExpr("id", "posexplode(bands) AS (band, key)")
 
 
-def caption_candidates(
-    features: DataFrame,
-    bucket_cap: int = DEFAULT_BUCKET_CAP,
-) -> tuple[DataFrame, DataFrame]:
-    """-> (candidate rep pairs (src,dst,capped), caption_exact star edges)."""
+def caption_candidates(features: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """-> (candidate rep pairs (src,dst,capped), caption_exact star edges),
+    buckets capped at DEFAULT_BUCKET_CAP."""
     reps, star = caption_representatives(features)
     banded = caption_band_rows(reps)
-    return pairs_from_buckets(banded, bucket_cap=bucket_cap), star
+    return pairs_from_buckets(banded, bucket_cap=DEFAULT_BUCKET_CAP), star
 
 
 # ------------------------------------------------------------------ phash
@@ -297,14 +284,13 @@ def phash_band_rows(
 
 
 def phash_candidates(
-    features: DataFrame,
-    mode: str = "c2x16",
-    bucket_cap: int = DEFAULT_BUCKET_CAP,
+    features: DataFrame, mode: str = "c2x16"
 ) -> tuple[DataFrame, DataFrame]:
-    """-> (candidate rep pairs, phash_exact star edges)."""
+    """-> (candidate rep pairs, phash_exact star edges), buckets capped at
+    DEFAULT_BUCKET_CAP."""
     reps, star = phash_representatives(features)
     banded = phash_band_rows(reps, mode)
-    return pairs_from_buckets(banded, bucket_cap=bucket_cap), star
+    return pairs_from_buckets(banded, bucket_cap=DEFAULT_BUCKET_CAP), star
 
 
 # --------------------------------------------------------- combined chain

@@ -31,19 +31,23 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col
 
+HEX_DIGITS = 32  # an md5 hex digest
+DSIR_BUCKETS = 4096  # dsir_importance_weights' hashed n-gram buckets
 
-def fraction_to_hex_threshold(fraction: float, digits: int = 32) -> str:
-    """``fraction`` of the [0, 16^digits) hash space as a lowercase-hex
-    literal of exactly ``digits`` chars. A lowercase-hex digest compares
-    lexicographically below it iff its integer value < fraction * 16^d
-    (hex chars order the same as their values; equal-length strings)."""
+
+def fraction_to_hex_threshold(fraction: float) -> str:
+    """``fraction`` of the [0, 16^HEX_DIGITS) hash space as a
+    lowercase-hex literal of exactly HEX_DIGITS chars. A lowercase-hex
+    digest compares lexicographically below it iff its integer value <
+    fraction * 16^HEX_DIGITS (hex chars order the same as their values;
+    equal-length strings)."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    cut = int(round(fraction * (1 << (4 * digits))))
-    if cut >= 1 << (4 * digits):
+    cut = int(round(fraction * (1 << (4 * HEX_DIGITS))))
+    if cut >= 1 << (4 * HEX_DIGITS):
         # p=1.0: 'g' sorts after 'f', so every hex digest compares below
         return "g"
-    return format(cut, "x").rjust(digits, "0")
+    return format(cut, "x").rjust(HEX_DIGITS, "0")
 
 
 def _salted_digest(key: Column, salt: str) -> Column:
@@ -234,7 +238,6 @@ def dsir_importance_weights(
     target: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = 4096,
     salt: str = "dsir",
     carry_cols: tuple[str, ...] = ("lang", "source"),
 ) -> DataFrame:
@@ -259,7 +262,7 @@ def dsir_importance_weights(
 
     Scale shape: the n-gram hashing is a map-only expression; the bucket
     histograms are two hash-aggregates whose OUTPUT is at most
-    ``n_buckets`` rows (the p/q tables and their totals are tiny no
+    DSIR_BUCKETS rows (the p/q tables and their totals are tiny no
     matter the corpus size — the log-ratio table broadcast-joins back to
     the per-(doc, bucket) counts, never a collect). Per-doc weights are
     one more hash-agg keyed by doc. Nothing driver-side, no UDFs. At
@@ -278,7 +281,7 @@ def dsir_importance_weights(
         F.col(id_col).alias("doc_id"),
         target.alias("__is_target"),
         F.explode(
-            _hashed_ngrams(F.col(text_col), n_buckets, salt)
+            _hashed_ngrams(F.col(text_col), DSIR_BUCKETS, salt)
         ).alias("bucket"),
     )
     q = base.groupBy("bucket").agg(
@@ -287,7 +290,7 @@ def dsir_importance_weights(
     p = base.where(F.col("__is_target")).groupBy("bucket").agg(
         F.count(F.lit(1)).cast("double").alias("pc")
     )
-    # totals via an all-rows window over the <= n_buckets histogram rows
+    # totals via an all-rows window over the <= DSIR_BUCKETS histogram rows
     # (never data-sized) — keeps the whole operator one lazy plan
     w_all = Window.partitionBy().rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -301,11 +304,11 @@ def dsir_importance_weights(
             (
                 F.log(
                     (F.coalesce(F.col("pc"), F.lit(0.0)) + F.lit(1.0))
-                    / (F.col("ptot") + F.lit(float(n_buckets)))
+                    / (F.col("ptot") + F.lit(float(DSIR_BUCKETS)))
                 )
                 - F.log(
                     (F.col("qc") + F.lit(1.0))
-                    / (F.col("qtot") + F.lit(float(n_buckets)))
+                    / (F.col("qtot") + F.lit(float(DSIR_BUCKETS)))
                 )
             ).alias("lr"),
         )
@@ -316,7 +319,7 @@ def dsir_importance_weights(
     # weights are bit-deterministic and the DuckDB oracle mirrors the fold
     # with list_sum(list(term ORDER BY bucket)) (ADVICE r02: round-to-4dp
     # alone can still flip within half an ulp of a .00005 boundary).
-    # A doc's term list is bounded by n_buckets (4096) entries, so the
+    # A doc's term list is bounded by DSIR_BUCKETS entries, so the
     # collect_list buffer stays executor-sized at any corpus scale.
     doc_w = (
         base.groupBy("doc_id", "bucket")

@@ -42,6 +42,13 @@ from pyspark.sql import functions as F
 
 from .connected_components import connected_components
 from .lsh import cap_reference_buckets, pairs_from_buckets
+from .segment_synth import (
+    SEG_BANDS,
+    SEG_BUCKET_CAP,
+    SEG_MAX_HAMMING,
+    SEG_MIN_MATCH_FRAC,
+    SEG_REF_BUCKET_CAP,
+)
 from .tiers import tier_attribution
 
 
@@ -74,7 +81,7 @@ def band_slices(h, bands: int):
 
 def segment_band_rows(
     fps: DataFrame,
-    bands: int = 4,
+    bands: int,
     id_col: str = "video_id",
     hashes_col: str = "frame_hashes",
 ) -> DataFrame:
@@ -123,10 +130,10 @@ def match_frac_expr(ha, hb, max_hamming: int):
 
 def segment_near_pairs(
     fps: DataFrame,
-    bands: int = 4,
-    max_hamming: int = 6,
-    min_match_frac: float = 0.5,
-    bucket_cap: int = 64,
+    bands: int,
+    max_hamming: int,
+    min_match_frac: float,
+    bucket_cap: int,
     id_col: str = "video_id",
     hashes_col: str = "frame_hashes",
 ) -> DataFrame:
@@ -228,10 +235,15 @@ def segment_edges(
     id_col: str = "video_id",
     hashes_col: str = "frame_hashes",
     prefix: str = "frame",
-    **near_kwargs,
+    *,
+    bands: int,
+    max_hamming: int,
+    min_match_frac: float,
+    bucket_cap: int,
 ) -> DataFrame:
     """All three edge families over one fingerprint frame, tagged with
-    `kind` for tier attribution (precedence: tier_precedence(prefix))."""
+    `kind` for tier attribution (precedence: tier_precedence(prefix));
+    the near family is ``segment_near_pairs`` with the given knobs."""
     exact = star_edges(
         fps.filter(F.col("file_sha").isNotNull()).select(id_col, "file_sha"),
         ["file_sha"],
@@ -253,9 +265,12 @@ def segment_edges(
     seg_exact = star_edges(seg_sig, ["sig"], f"{prefix}_exact", id_col)
     near = segment_near_pairs(
         fps.filter(F.col("status") == "ok"),
+        bands=bands,
+        max_hamming=max_hamming,
+        min_match_frac=min_match_frac,
+        bucket_cap=bucket_cap,
         id_col=id_col,
         hashes_col=hashes_col,
-        **near_kwargs,
     ).select("src", "dst", F.lit(f"{prefix}_near").alias("kind"))
     return exact.unionByName(seg_exact).unionByName(near)
 
@@ -265,10 +280,10 @@ def segment_dedup_report(
     id_col: str = "video_id",
     hashes_col: str = "frame_hashes",
     prefix: str = "frame",
-    bands: int = 4,
-    max_hamming: int = 6,
-    min_match_frac: float = 0.5,
-    bucket_cap: int = 64,
+    bands: int = SEG_BANDS,
+    max_hamming: int = SEG_MAX_HAMMING,
+    min_match_frac: float = SEG_MIN_MATCH_FRAC,
+    bucket_cap: int = SEG_BUCKET_CAP,
 ) -> dict[str, DataFrame]:
     """Fingerprints -> tagged edges, cluster assignment for EVERY item
     (singletons -> themselves), and per-item tier attribution
@@ -329,10 +344,10 @@ def segment_novelty(
     ref_fps: DataFrame,
     id_col: str = "video_id",
     hashes_col: str = "frame_hashes",
-    bands: int = 4,
-    max_hamming: int = 6,
-    min_match_frac: float = 0.5,
-    ref_bucket_cap: int = 1024,
+    bands: int = SEG_BANDS,
+    max_hamming: int = SEG_MAX_HAMMING,
+    min_match_frac: float = SEG_MIN_MATCH_FRAC,
+    ref_bucket_cap: int = SEG_REF_BUCKET_CAP,
 ) -> DataFrame:
     """Incremental media dedup: one row per BATCH item with its novelty
     verdict against a REFERENCE fingerprint snapshot — the media twin of

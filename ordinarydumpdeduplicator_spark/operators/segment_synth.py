@@ -28,7 +28,7 @@ a content family; ids with (doc_id div 4) % 3 == 2 are solo items):
     v2  re-mux           base hashes,        payload 'payload:<g>:2'
                          (same content, new container -> 'seg_exact')
     v3  g even: noisy    every hash XOR two disjoint low bits
-                         (Hamming 2 <= max_hamming -> 'seg_near')
+                         (Hamming 2 <= SEG_MAX_HAMMING -> 'seg_near')
         g odd:  trim     first n_seg-3 segments only (match_frac
                          2(n-3)/(2n-3) >= 0.5 -> 'seg_near')
     solo                 unique hashes ('solo:<id>') -> 'unique'
@@ -136,9 +136,7 @@ def synthetic_segment_fingerprints(
     )
 
 
-def synthetic_modal_images(
-    docs: DataFrame, id_col: str = "doc_id", max_hamming: int = 4
-) -> DataFrame:
+def synthetic_modal_images(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """The cross-modal probe's IMAGE side: one still per v==1 document,
     whose phash equals one sampled segment hash of its family's
     canonical video — exactly (g even) or within Hamming 1 (g odd), so

@@ -33,6 +33,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _HP_SEED = 0xE1B
+# brute_force_topk's tiling: query blocks x corpus shards
+Q_BLOCKS = 4
+C_SHARDS = 4
+SAMPLE_SIZE = 4096  # hash-ordered k-means training sample (ivf / semdedup)
+PQ_CODES = 256  # codes per PQ subspace (one uint8)
+PQ_REFINE = 4  # ivf_pq_topk re-ranks k * PQ_REFINE ADC candidates exactly
+SKETCH_PLANES = 64  # hyperplanes of the sign sketch
 
 
 def _dot(a, b):
@@ -63,8 +70,6 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    q_blocks: int = 4,
-    c_shards: int = 4,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per vector (excluding self), fully
     distributed — a blocked block-nested-loop over (query block x corpus
@@ -80,7 +85,7 @@ def brute_force_topk(
       top-k (exact: every true global neighbor wins its own tile).
 
     Scale shape: executor memory per task is one tile (n/Q + n/S rows),
-    tuned by ``q_blocks``/``c_shards``; total compute is the same n^2 dot
+    set by Q_BLOCKS/C_SHARDS; total compute is the same n^2 dot
     products an exact answer requires, spread over Q*S independent tasks.
     Shuffled bytes are vectors * (S + Q) replicas — at 10^12 scale use the
     LSH/IVF paths; this operator is the exact baseline the oracle checks."""
@@ -99,14 +104,14 @@ def brute_force_topk(
     qside = base.select(
         "vec_id",
         "vec",
-        F.pmod(F.xxhash64("vec_id"), F.lit(q_blocks)).alias("qb"),
-        F.explode(F.sequence(F.lit(0), F.lit(c_shards - 1))).alias("cs"),
+        F.pmod(F.xxhash64("vec_id"), F.lit(Q_BLOCKS)).alias("qb"),
+        F.explode(F.sequence(F.lit(0), F.lit(C_SHARDS - 1))).alias("cs"),
     )
     cside = base.select(
         "vec_id",
         "vec",
-        F.explode(F.sequence(F.lit(0), F.lit(q_blocks - 1))).alias("qb"),
-        F.pmod(F.xxhash64("vec_id"), F.lit(c_shards)).alias("cs"),
+        F.explode(F.sequence(F.lit(0), F.lit(Q_BLOCKS - 1))).alias("qb"),
+        F.pmod(F.xxhash64("vec_id"), F.lit(C_SHARDS)).alias("cs"),
     )
 
     def tile_topk(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
@@ -288,7 +293,6 @@ def ivf_topk(
     k: int = 5,
     n_cells: int = 64,
     n_probe: int = 8,
-    sample_size: int = 4096,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -302,7 +306,7 @@ def ivf_topk(
     assignment and probe steps are single matmuls per batch. Recall is
     controlled by n_probe and degrades only when true neighbors straddle
     cell boundaries (random noise corpora are the worst case)."""
-    cents = _train_centroids(embeddings, n_cells, sample_size, id_col, vec_col)
+    cents = _train_centroids(embeddings, n_cells, SAMPLE_SIZE, id_col, vec_col)
     spark = embeddings.sparkSession
     b_cents = spark.sparkContext.broadcast(cents)
 
@@ -383,9 +387,6 @@ def ivf_pq_topk(
     n_cells: int = 64,
     n_probe: int = 8,
     m_subspaces: int = 8,
-    n_codes: int = 256,
-    refine: int = 4,
-    sample_size: int = 4096,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -402,7 +403,7 @@ def ivf_pq_topk(
     - Search: per query, probe ``n_probe`` nearest cells; candidates are
       scored by asymmetric distance (ADC): one (batch x 256) dot table
       per subspace, then a code lookup — no candidate vector is read.
-    - Refine: the top ``k * refine`` ADC candidates per query join back
+    - Refine: the top ``k * PQ_REFINE`` ADC candidates per query join back
       to the full vectors for exact cosine; final top-k window. Returned
       ``cosine`` is exact, so downstream thresholds mean the same thing
       they mean for every other top-k operator here.
@@ -410,7 +411,7 @@ def ivf_pq_topk(
     Scale story: 10^12 x 64-dim float32 is ~256 TB of vectors; the PQ
     code frame is ~9 TB and cell-pruned to n_probe/n_cells of that per
     query wave, while the full-vector table is only ever probed at
-    k*refine rows per query (an equi-join on vec_id, not a scan). The
+    k*PQ_REFINE rows per query (an equi-join on vec_id, not a scan). The
     codebooks (m x 256 x dim/m floats + n_cells x dim centroids) are a
     few MB broadcast. The candidate join keys on ``cell``, so shuffle
     parallelism (and skew exposure) is bounded by n_cells — size it
@@ -423,7 +424,7 @@ def ivf_pq_topk(
     # ONE hash-ordered sample collect trains both the coarse quantizer and
     # the PQ codebooks (normalized — queries score against normalized
     # corpus vectors so cosine == dot)
-    smp = _collect_normalized_sample(embeddings, sample_size, id_col, vec_col)
+    smp = _collect_normalized_sample(embeddings, SAMPLE_SIZE, id_col, vec_col)
     cents = _kmeans(smp, n_cells)
     dim = smp.shape[1]
     if dim % m_subspaces != 0:
@@ -431,10 +432,10 @@ def ivf_pq_topk(
     ds = dim // m_subspaces
     books = np.stack(
         [
-            _l2_kmeans(smp[:, m * ds : (m + 1) * ds], n_codes, seed=11 + m)
+            _l2_kmeans(smp[:, m * ds : (m + 1) * ds], PQ_CODES, seed=11 + m)
             for m in range(m_subspaces)
         ]
-    )  # (m, n_codes, ds)
+    )  # (m, PQ_CODES, ds)
     b_cents = spark.sparkContext.broadcast(cents)
     b_books = spark.sparkContext.broadcast(books)
 
@@ -469,7 +470,7 @@ def ivf_pq_topk(
         order = np.argsort(-sims, axis=1, kind="stable")[:, :npp].astype(np.int32)
         return pd.Series(list(order), index=vecs.index)
 
-    t_short = k * refine
+    t_short = k * PQ_REFINE
 
     def adc_cell(key, q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
         """Per-cell ADC scoring (cogroup): ONE (queries x 256) dot table
@@ -597,14 +598,14 @@ def lsh_topk(
     embeddings: DataFrame,
     dim: int,
     k: int = 5,
-    n_planes: int = 64,
+    n_planes: int = SKETCH_PLANES,
     bands: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bucket_cap: int = DEFAULT_SKETCH_BUCKET_CAP,
 ) -> DataFrame:
     """Approximate top-k: candidates share >= 1 of `bands` sketch bands
-    (n_planes/bands bits each), then exact cosine on candidates only.
+    (n_planes/bands bits each), then exact cosine on candidates only;
+    buckets over DEFAULT_SKETCH_BUCKET_CAP members are dropped.
 
     Default 8 bands x 8 bits (64 planes, band_sketch): 8 agreement
     chances keep recall@3 >= 0.9 vs brute force on clustered corpora
@@ -612,7 +613,8 @@ def lsh_topk(
     ~corpus/256 — coarser 4-bit bands have the same recall but
     corpus/16 buckets, whose candidate join blows up at 10^5+ rows."""
     banded = _banded_rows_materialized(
-        embeddings, dim, n_planes, bands, id_col, vec_col, bucket_cap
+        embeddings, dim, n_planes, bands, id_col, vec_col,
+        DEFAULT_SKETCH_BUCKET_CAP,
     )
     a = banded.alias("a")
     b = banded.select(
@@ -696,7 +698,7 @@ def embedding_near_pairs_lsh(
     embeddings: DataFrame,
     dim: int,
     threshold: float = 0.95,
-    n_planes: int = 64,
+    n_planes: int = SKETCH_PLANES,
     bands: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -744,7 +746,7 @@ def semantic_dedup(
     embeddings: DataFrame,
     threshold: float = 0.95,
     n_cells: int = 64,
-    sample_size: int = 4096,
+    sample_size: int = SAMPLE_SIZE,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:

@@ -16,6 +16,13 @@ from pyspark.sql import types as T
 from ..functions.text import tokens_col
 from .text_dedup import normalized_text
 
+# the Gopher token-count and mean-token-length windows (Rae et al. 2021
+# Table A1; mean length in x10 fixed point), shared with the curation
+# funnel's quality stage
+GOPHER_MIN_TOKENS = 20
+GOPHER_MAX_TOKENS = 90
+GOPHER_MIN_MEAN_TOK_LEN_X10 = 30
+GOPHER_MAX_MEAN_TOK_LEN_X10 = 100
 # tiny seeded stopword lists per language for the n-gram/stopword heuristic
 LANG_MARKERS = {
     "en": ["the", "and", "of", "to", "in"],
@@ -350,10 +357,10 @@ def gopher_quality_filter(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_tokens: int = 20,
-    max_tokens: int = 90,
-    min_mean_tok_len_x10: int = 30,
-    max_mean_tok_len_x10: int = 100,
+    min_tokens: int = GOPHER_MIN_TOKENS,
+    max_tokens: int = GOPHER_MAX_TOKENS,
+    min_mean_tok_len_x10: int = GOPHER_MIN_MEAN_TOK_LEN_X10,
+    max_mean_tok_len_x10: int = GOPHER_MAX_MEAN_TOK_LEN_X10,
     top_ngram_num: int = 1,
     top_ngram_den: int = 10,
     dup_ngram_num: int = 1,

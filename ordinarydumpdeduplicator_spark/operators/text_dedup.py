@@ -17,8 +17,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.minhash import band_keys_udf
-from .lsh import caption_band_rows, pairs_from_buckets
+from .lsh import DEFAULT_BUCKET_CAP, caption_band_rows, pairs_from_buckets
 from .verify import verify_caption_pairs
+
+MAX_LEN_DIFF = 5  # token_jaccard_pairs' length blocking, in chars
+BIN_WIDTH = 0.05  # pair_score_histogram's Jaccard bin width
 
 
 def normalized_text(col) -> F.Column:
@@ -145,7 +148,6 @@ def minhash_candidate_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bucket_cap: int = 256,
 ) -> DataFrame:
     """LSH candidate pairs over document text (ids as strings for the
     shared banding machinery; cast back by the caller if needed).
@@ -160,25 +162,23 @@ def minhash_candidate_pairs(
         docs.select(F.col(id_col).cast("string").alias("id"), text_col)
     ).select("id", band_keys_udf(F.col(text_col)).alias("bands"))
     banded = caption_band_rows(sigs)
-    return pairs_from_buckets(banded, bucket_cap=bucket_cap)
+    return pairs_from_buckets(banded, bucket_cap=DEFAULT_BUCKET_CAP)
 
 
 def near_dup_text_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    jaccard_threshold: float = 0.5,
 ) -> DataFrame:
     """Full near-dup pair detection: LSH candidates verified by exact
-    shingle Jaccard / LCS (operators/verify.py)."""
+    shingle Jaccard / LCS (operators/verify.py, at its JACCARD_THRESHOLD
+    and LCS_RATIO — the caption rule)."""
     cands = minhash_candidate_pairs(docs, id_col, text_col)
     corpus = docs.select(
         F.col(id_col).cast("string").alias("image_id"),
         F.col(text_col).alias("caption"),
     )
-    return verify_caption_pairs(
-        cands, corpus, jaccard_threshold=jaccard_threshold
-    ).select(
+    return verify_caption_pairs(cands, corpus).select(
         F.col("src").alias("doc_id_a"), F.col("dst").alias("doc_id_b"), "kind"
     )
 
@@ -188,21 +188,21 @@ def token_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     same_col: str = "lang",
-    max_len_diff: int = 5,
 ) -> DataFrame:
     """SQL-expressible near-dup measure: token-SET intersection/union counts
     for candidate pairs blocked on an equality column (e.g. same lang) and
-    close length. Integer outputs only (hash-stable vs the DuckDB oracle).
+    length within MAX_LEN_DIFF chars. Integer outputs only (hash-stable
+    vs the DuckDB oracle).
 
     The blocking key is COMPOSITE — (blk, length band) with the band width
-    sized to ``max_len_diff + 1`` so any qualifying pair differs by at most
+    sized to ``MAX_LEN_DIFF + 1`` so any qualifying pair differs by at most
     one band: side b explodes into (band-1, band, band+1) and the equi-join
     key carries the length constraint. Per-key pair volume is then bounded
     by the per-(blk, band) population, not per-blk — on a 5-language corpus
     the bare-lang key is ~corpus/5 per block and quadratic at scale. The
     exploded values are distinct, so each ordered pair matches exactly once
     and the result set is identical to the bare-blk join."""
-    band_w = max_len_diff + 1
+    band_w = MAX_LEN_DIFF + 1
     toks = F.array_distinct(
         F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != "")
     )
@@ -227,7 +227,7 @@ def token_jaccard_pairs(
         a.join(b, ["blk", "band"])
         .where(
             (F.col("doc_id_a") < F.col("doc_id_b"))
-            & (F.abs(F.col("len_a") - F.col("len_b")) <= max_len_diff)
+            & (F.abs(F.col("len_a") - F.col("len_b")) <= MAX_LEN_DIFF)
         )
         .select(
             "doc_id_a",
@@ -243,7 +243,6 @@ def simhash_near_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     hamming_threshold: int = 3,
-    bucket_cap: int = 256,
 ) -> DataFrame:
     """SimHash near-duplicate pairs over document text.
 
@@ -290,7 +289,7 @@ def simhash_near_pairs(
     banded = sh.select("id", "simhash", F.explode(entries).alias("e")).select(
         "id", "simhash", F.col("e.band").alias("band"), F.col("e.key").alias("key")
     )
-    cands = pairs_from_buckets(banded, bucket_cap=bucket_cap)
+    cands = pairs_from_buckets(banded, bucket_cap=DEFAULT_BUCKET_CAP)
     sh_a = sh.select(F.col("id").alias("src"), F.col("simhash").alias("sh_a"))
     sh_b = sh.select(F.col("id").alias("dst"), F.col("simhash").alias("sh_b"))
     return (
@@ -337,7 +336,6 @@ def near_dup_text_clusters(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    jaccard_threshold: float = 0.5,
 ) -> DataFrame:
     """End-to-end fuzzy dedup with cluster assignment for EVERY document:
     MinHash-LSH candidates -> exact Jaccard/LCS verify -> connected
@@ -360,10 +358,7 @@ def near_dup_text_clusters(
     broadcasts when the head set is small and shuffle-joins when a
     web-scale corpus makes it large (no unconditional broadcast: on crawl
     data a third of all docs can sit in fuzzy clusters)."""
-    pairs = near_dup_text_pairs(
-        docs, id_col=id_col, text_col=text_col,
-        jaccard_threshold=jaccard_threshold,
-    )
+    pairs = near_dup_text_pairs(docs, id_col=id_col, text_col=text_col)
     from .connected_components import numeric_min_components
 
     clustered = numeric_min_components(
@@ -387,7 +382,6 @@ def near_soft_dedup_weights(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    jaccard_threshold: float = 0.5,
     clusters: DataFrame | None = None,
 ) -> DataFrame:
     """Soft dedup over the FUZZY closure: keep every row, weight it
@@ -405,8 +399,7 @@ def near_soft_dedup_weights(
     (recursive-CTE closure + the same division) is value-exact."""
     if clusters is None:
         clusters = near_dup_text_clusters(
-            docs, id_col=id_col, text_col=text_col,
-            jaccard_threshold=jaccard_threshold,
+            docs, id_col=id_col, text_col=text_col
         )
     return clusters.select(
         "doc_id",
@@ -422,7 +415,6 @@ def top_reclaimable_clusters(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 20,
-    jaccard_threshold: float = 0.5,
     clusters: DataFrame | None = None,
 ) -> DataFrame:
     """The reference's headline report ordering — duplicate groups sorted
@@ -460,8 +452,7 @@ def top_reclaimable_clusters(
         )
     if clusters is None:
         clusters = near_dup_text_clusters(
-            docs, id_col=id_col, text_col=text_col,
-            jaccard_threshold=jaccard_threshold,
+            docs, id_col=id_col, text_col=text_col
         )
     chars = docs.select(
         F.col(id_col).alias("doc_id"),
@@ -503,7 +494,6 @@ def pair_score_histogram(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bin_width: float = 0.05,
 ) -> DataFrame:
     """Empirical S-curve data: every LSH candidate pair scored by EXACT
     shingle Jaccard and bucketed into fixed-width bins — the measured
@@ -516,8 +506,8 @@ def pair_score_histogram(
     Scale shape: candidates are bucket-capped by construction, the
     verify-join ships two string columns bounded by candidate count
     (never bytes), the Jaccard is one Arrow-vectorized UDF pass, and the
-    result collapses to ~1/bin_width rows in a single hash-aggregate.
-    The binning floor(j / w) is the same IEEE double math in Spark and
+    result collapses to ~1/BIN_WIDTH rows in a single hash-aggregate.
+    The binning floor(j / BIN_WIDTH) is the same IEEE double math in Spark and
     DuckDB (n_inter/n_union is an exact small-int division), so the
     oracle is value-exact, not approximately so."""
     from ..functions.minhash import jaccard_udf
@@ -545,13 +535,13 @@ def pair_score_histogram(
     )
     return (
         scored.select(
-            F.floor(F.col("jaccard") / F.lit(bin_width)).alias("bin")
+            F.floor(F.col("jaccard") / F.lit(BIN_WIDTH)).alias("bin")
         )
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
         .select(
             "bin",
-            (F.col("bin") * F.lit(bin_width)).alias("jaccard_lo"),
+            (F.col("bin") * F.lit(BIN_WIDTH)).alias("jaccard_lo"),
             "n_pairs",
         )
     )

@@ -37,6 +37,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import (
+    DEFAULT_SKETCH_BUCKET_CAP,
+    SKETCH_PLANES,
+    embedding_near_pairs_lsh,
+)
 from .text_dedup import near_dup_text_clusters, normalized_text
 
 
@@ -44,7 +49,6 @@ def dedup_tiers(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    jaccard_threshold: float = 0.5,
     clusters: DataFrame | None = None,
 ) -> DataFrame:
     """One row per document: (doc_id, tier, keeper_id).
@@ -62,17 +66,13 @@ def dedup_tiers(
     table). At 100 TB the LSH->verify->CC chain is by far the most
     expensive input and is typically already materialized by the dedup
     pipeline — pass it in rather than recomputing it per report."""
-    return _tiers_frame(
-        docs, id_col, text_col, jaccard_threshold, clusters
-    ).select("doc_id", "tier", "keeper_id")
+    return _tiers_frame(docs, id_col, text_col, clusters).select(
+        "doc_id", "tier", "keeper_id"
+    )
 
 
 def _tiers_frame(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    jaccard_threshold: float = 0.5,
-    clusters: DataFrame | None = None,
+    docs: DataFrame, id_col: str, text_col: str, clusters: DataFrame | None
 ) -> DataFrame:
     """(doc_id, tier, keeper_id, _len) — _len rides along from the first
     projection so dedup_tier_stats doesn't need a third corpus scan and a
@@ -102,8 +102,7 @@ def _tiers_frame(
     )
     if clusters is None:
         clusters = near_dup_text_clusters(
-            docs, id_col=id_col, text_col=text_col,
-            jaccard_threshold=jaccard_threshold,
+            docs, id_col=id_col, text_col=text_col
         )
     clusters = clusters.select("doc_id", "cluster_id")
     joined = (
@@ -135,8 +134,7 @@ def embedding_dedup_tiers(
     dim: int,
     threshold: float = 0.4,
     bands: int = 16,
-    n_planes: int = 64,
-    bucket_cap: int | None = None,
+    bucket_cap: int = DEFAULT_SKETCH_BUCKET_CAP,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     clusters: DataFrame | None = None,
@@ -151,14 +149,14 @@ def embedding_dedup_tiers(
       into components, numeric-min heads — the embedding twin of
       near_dup_text_clusters
 
-    BAND SIZING IS ENFORCED, NOT ADVISORY: each band has n_planes/bands
-    sign bits, so random vectors spread over ~2^bits buckets per band and
-    the expected bucket holds ~corpus / 2^bits rows. The driver-gate
-    default (64 planes / 16 bands = 4 bits = 16 keys) is tuned for the
-    low-threshold small-corpus oracle regime and would COLLAPSE past ~16k
-    vectors (every bucket over bucket_cap dropped, the near tier silently
+    BAND SIZING IS ENFORCED, NOT ADVISORY: each band has
+    SKETCH_PLANES/bands sign bits, so random vectors spread over ~2^bits
+    buckets per band and the expected bucket holds ~corpus / 2^bits rows.
+    The driver-gate default (64 planes / 16 bands = 4 bits = 16 keys) is
+    tuned for the low-threshold small-corpus oracle regime and would
+    COLLAPSE past ~16k vectors (every bucket over bucket_cap dropped, the near tier silently
     empty) — so when the expected bucket load n / 2^bits exceeds
-    bucket_cap / 2, bits-per-band are widened (n_planes = bands * bits)
+    bucket_cap / 2, bits-per-band are widened (bands * bits planes)
     until it doesn't, with a warning. Widening trades recall for bounded
     buckets; recover recall by raising ``bands`` explicitly (e.g. 10^9
     vectors with cap 1024 want >= 20 bits per band). Sizing counts exact
@@ -176,7 +174,6 @@ def embedding_dedup_tiers(
     empty/NULL vectors tier as 'empty' and never enter the sketch path
     (an empty array cannot be sketched)."""
     from .connected_components import numeric_min_components
-    from .similarity import DEFAULT_SKETCH_BUCKET_CAP, embedding_near_pairs_lsh
 
     base = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
@@ -198,13 +195,10 @@ def embedding_dedup_tiers(
         reps = ex.select(
             F.col("exact_keeper").alias("vec_id"), "vec"
         )
-        cap_eff = (
-            bucket_cap if bucket_cap is not None else DEFAULT_SKETCH_BUCKET_CAP
-        )
-        bits = max(1, n_planes // bands)
+        bits = max(1, SKETCH_PLANES // bands)
         n_reps = reps.count()
         widened = bits
-        while n_reps / (1 << widened) > cap_eff / 2 and widened < 24:
+        while n_reps / (1 << widened) > bucket_cap / 2 and widened < 24:
             widened += 1
         if widened != bits:
             import warnings
@@ -212,14 +206,14 @@ def embedding_dedup_tiers(
             warnings.warn(
                 f"embedding_dedup_tiers: widened band keys from {bits} to "
                 f"{widened} bits ({n_reps} representatives vs bucket_cap "
-                f"{cap_eff}) — raise `bands` to recover recall",
+                f"{bucket_cap}) — raise `bands` to recover recall",
                 stacklevel=2,
             )
-            n_planes = bands * widened
-        kw = {} if bucket_cap is None else {"bucket_cap": bucket_cap}
         pairs = embedding_near_pairs_lsh(
-            reps, dim=dim, threshold=threshold, bands=bands,
-            n_planes=n_planes, id_col="vec_id", vec_col="vec", **kw,
+            reps, dim=dim, threshold=threshold,
+            n_planes=SKETCH_PLANES if widened == bits else bands * widened,
+            bands=bands, id_col="vec_id", vec_col="vec",
+            bucket_cap=bucket_cap,
         )
         clusters = numeric_min_components(
             pairs.select(
@@ -442,7 +436,6 @@ def dedup_tier_stats(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    jaccard_threshold: float = 0.5,
     clusters: DataFrame | None = None,
 ) -> DataFrame:
     """Per-tier removal accounting: (tier, n_docs, n_chars) — how many
@@ -450,10 +443,7 @@ def dedup_tier_stats(
     The 100 TB consumer's dashboard row: 'exact removed X%, near removed
     Y% on top'. n_chars sums raw text length (NULL text contributes
     nothing, matching SQL sum semantics)."""
-    tiers = _tiers_frame(
-        docs, id_col=id_col, text_col=text_col,
-        jaccard_threshold=jaccard_threshold, clusters=clusters,
-    )
+    tiers = _tiers_frame(docs, id_col, text_col, clusters)
     return tiers.groupBy("tier").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("_len").alias("n_chars"),

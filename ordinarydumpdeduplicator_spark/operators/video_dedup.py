@@ -26,7 +26,7 @@ never cross-match).
 
 Scale shape (the 100 TB question): fingerprinting is ONE mapInPandas
 pass over the payload column — bytes never enter a shuffle; only
-(video_id, <= n_frames int64 hashes) does, a ~100-byte row regardless of
+(video_id, <= N_FRAMES int64 hashes) does, a ~100-byte row regardless of
 video size. Everything after the decode pass is the modality-agnostic
 built-ins core in operators/segment_dedup.py (banded LSH with bucket
 caps, codegen bit_count verify, CC, tier attribution) — shared with the
@@ -50,6 +50,9 @@ from .segment_dedup import (
     segment_band_rows,
     segment_dedup_report,
 )
+from .segment_synth import SEG_BANDS
+
+N_FRAMES = 8  # frames sampled per video
 
 VIDEO_FP_SCHEMA = (
     "video_id string, status string, file_sha string, "
@@ -57,11 +60,9 @@ VIDEO_FP_SCHEMA = (
 )
 
 
-def video_fingerprints(
-    video: DataFrame, n_frames: int = 8, strict: bool = False
-) -> DataFrame:
+def video_fingerprints(video: DataFrame, strict: bool = False) -> DataFrame:
     """(video_id, bytes) -> one skinny fingerprint row per video:
-    sha256 of the raw payload + up to ``n_frames`` evenly-strided
+    sha256 of the raw payload + up to N_FRAMES evenly-strided
     frame pHashes (functions/phash.phash64 over each decoded frame).
 
     status: ok | broken (valid magic, corrupt body) | unreadable (NULL
@@ -89,8 +90,8 @@ def video_fingerprints(
                     n = len(frames)
                     take = (
                         range(n)
-                        if n <= n_frames
-                        else [k * n // n_frames for k in range(n_frames)]
+                        if n <= N_FRAMES
+                        else [k * n // N_FRAMES for k in range(N_FRAMES)]
                     )
                     hashes = [phash64(frames[i]) for i in take]
                     out.append((vid, "ok", sha, n, hashes))
@@ -102,12 +103,12 @@ def video_fingerprints(
                         "environment"
                     )
                 fake = []
-                for k in range(n_frames):
+                for k in range(N_FRAMES):
                     h = hashlib.blake2b(
                         f"{vid}:{k}".encode(), digest_size=8
                     ).digest()
                     fake.append(int.from_bytes(h, "little", signed=True))
-                out.append((vid, "fake_decode", sha, n_frames, fake))
+                out.append((vid, "fake_decode", sha, N_FRAMES, fake))
             # explicit nullable Int32: pandas would otherwise coerce a
             # [None, int] column to float64 (see verify-skill gotcha)
             yield pd.DataFrame(
@@ -127,17 +128,16 @@ def video_fingerprints(
     )
 
 
-def frame_band_rows(fps: DataFrame, bands: int = 4) -> DataFrame:
-    """Fingerprints -> distinct (video_id, band, key) LSH rows — see
-    segment_dedup.segment_band_rows."""
+def frame_band_rows(fps: DataFrame) -> DataFrame:
+    """Fingerprints -> distinct (video_id, band, key) LSH rows in the
+    segment chain's SEG_BANDS bands — see segment_dedup.segment_band_rows."""
     return segment_band_rows(
-        fps, bands=bands, id_col="video_id", hashes_col="frame_hashes"
+        fps, bands=SEG_BANDS, id_col="video_id", hashes_col="frame_hashes"
     )
 
 
 def video_dedup_report(
     video: DataFrame,
-    n_frames: int = 8,
     fingerprints: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """End-to-end video dedup: fingerprints, tagged edges, cluster
@@ -155,7 +155,7 @@ def video_dedup_report(
     fps = (
         fingerprints
         if fingerprints is not None
-        else video_fingerprints(video, n_frames=n_frames)
+        else video_fingerprints(video)
     )
     return segment_dedup_report(
         fps, id_col="video_id", hashes_col="frame_hashes", prefix="frame"
@@ -183,7 +183,7 @@ def frames_matching_images(
     Output: (video_id, frame_pos, image_id, hamming) — one row per
     matching (sampled frame, image) pair with Hamming(frame_phash,
     image_phash) <= max_hamming. frame_pos is the SAMPLE position
-    (0..n_frames-1), not the source frame index.
+    (0..N_FRAMES-1), not the source frame index.
 
     Scale shape: both sides band into (band, key) buckets via
     band_slices (recall guaranteed within Hamming < bands); the

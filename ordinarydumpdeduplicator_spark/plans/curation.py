@@ -42,10 +42,17 @@ from pyspark.sql import functions as F
 
 from ..operators.decontamination import decontaminate
 from ..operators.sampling import hash60, mixture_thresholds
-from ..operators.text_analysis import token_stats
+from ..operators.text_analysis import (
+    GOPHER_MAX_MEAN_TOK_LEN_X10,
+    GOPHER_MAX_TOKENS,
+    GOPHER_MIN_MEAN_TOK_LEN_X10,
+    GOPHER_MIN_TOKENS,
+    token_stats,
+)
 from ..operators.text_dedup import normalized_text
 
 FUNNEL_STAGES = ["quality", "exact_dedup", "decontamination", "mixture"]
+DECONTAMINATION_N = 4  # eval n-gram length of the decontamination stage
 
 
 def curation_attribution(
@@ -55,11 +62,6 @@ def curation_attribution(
     id_col: str = "doc_id",
     text_col: str = "text",
     stratum_col: str = "lang",
-    min_tokens: int = 20,
-    max_tokens: int = 90,
-    min_mean_tok_len_x10: int = 30,
-    max_mean_tok_len_x10: int = 100,
-    n: int = 4,
     salt: str = "mixr",
 ) -> DataFrame:
     """Per-document funnel attribution: (doc_id, survived) where
@@ -93,15 +95,15 @@ def curation_attribution(
         F.coalesce("total_token_len", F.lit(0)).alias("ttl"),
     )
     q_keep = (
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("n_tokens") <= max_tokens)
+        (F.col("n_tokens") >= GOPHER_MIN_TOKENS)
+        & (F.col("n_tokens") <= GOPHER_MAX_TOKENS)
         & (
             F.col("ttl") * 10
-            >= F.lit(min_mean_tok_len_x10) * F.col("n_tokens")
+            >= F.lit(GOPHER_MIN_MEAN_TOK_LEN_X10) * F.col("n_tokens")
         )
         & (
             F.col("ttl") * 10
-            <= F.lit(max_mean_tok_len_x10) * F.col("n_tokens")
+            <= F.lit(GOPHER_MAX_MEAN_TOK_LEN_X10) * F.col("n_tokens")
         )
     )
     flagged = base.join(ts, "doc_id").withColumn("q_keep", q_keep)
@@ -121,7 +123,7 @@ def curation_attribution(
     # stage 3 — decontamination flag (content fact, computable for every
     # document in the same broadcast pass; only survivors consult it)
     cont = decontaminate(
-        docs, eval_docs, n=n, id_col=id_col, text_col=text_col
+        docs, eval_docs, n=DECONTAMINATION_N, id_col=id_col, text_col=text_col
     ).select("doc_id", "contaminated")
     flagged = flagged.join(cont, "doc_id").select(
         # skinny: text/__k served their purpose (token stats, keeper
@@ -159,13 +161,12 @@ def curation_funnel(
     docs: DataFrame,
     eval_docs: DataFrame,
     targets: dict[str, float],
-    **kwargs,
 ) -> DataFrame:
     """The per-stage accounting: (stage_idx, stage, docs_in, docs_out,
     docs_dropped, chars_out), one row per FUNNEL_STAGES entry, where
     docs_in of stage i+1 == docs_out of stage i. All counters BIGINT —
     hash-exact against the DuckDB oracle."""
-    att = curation_attribution(docs, eval_docs, targets, **kwargs)
+    att = curation_attribution(docs, eval_docs, targets)
     aggs = [F.count(F.lit(1)).cast("long").alias("n0")]
     for s in range(1, 5):
         # coalesce: on an EMPTY corpus sum() is NULL but the funnel row

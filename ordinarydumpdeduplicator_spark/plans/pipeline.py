@@ -42,17 +42,8 @@ from pyspark.sql import functions as F
 from ..operators.connected_components import connected_components
 from ..operators.exact_dedup import key_groups, readable
 from ..operators.features import extract_features
-from ..operators.lsh import (
-    DEFAULT_BUCKET_CAP,
-    PHASH_BAND_MODES,
-    check_caption_params,
-    rep_candidates,
-)
-from ..operators.verify import (
-    JACCARD_THRESHOLD,
-    verify_caption_pairs,
-    verify_phash_pairs,
-)
+from ..operators.lsh import DEFAULT_BUCKET_CAP, PHASH_BAND_MODES, rep_candidates
+from ..operators.verify import verify_caption_pairs, verify_phash_pairs
 
 
 @dataclass
@@ -60,8 +51,6 @@ class PipelineConfig:
     checkpoint_dir: str | None = None  # None -> in-memory cache() only
     bucket_cap: int = DEFAULT_BUCKET_CAP
     phash_band_mode: str = "c2x16"
-    hamming_threshold: int = 8
-    jaccard_threshold: float = JACCARD_THRESHOLD
     run_id: str = "run_0"
     metrics: list[dict] = field(default_factory=list)
 
@@ -75,11 +64,8 @@ def _check_config(cfg: PipelineConfig) -> None:
             f"phash_band_mode must be one of {PHASH_BAND_MODES}, "
             f"got {cfg.phash_band_mode!r}"
         )
-    check_caption_params(cfg.bucket_cap, cfg.jaccard_threshold)
-    if not 0 <= cfg.hamming_threshold <= 64:
-        raise ValueError(
-            f"hamming_threshold must be in [0, 64], got {cfg.hamming_threshold}"
-        )
+    if cfg.bucket_cap < 2:
+        raise ValueError(f"bucket_cap must be >= 2, got {cfg.bucket_cap}")
 
 
 def _partition_rows(path: str) -> dict[str, int]:
@@ -253,14 +239,10 @@ class NearDupPipeline:
             # verify branches pulling it)
             pairs = pairs.localCheckpoint(eager=False)
             cap_near = verify_caption_pairs(
-                pairs.filter("from_caption").select("src", "dst"),
-                images,
-                jaccard_threshold=self.cfg.jaccard_threshold,
+                pairs.filter("from_caption").select("src", "dst"), images
             )
             ph_near = verify_phash_pairs(
-                pairs.filter("from_phash").select("src", "dst"),
-                features,
-                hamming_threshold=self.cfg.hamming_threshold,
+                pairs.filter("from_phash").select("src", "dst"), features
             )
             return star.unionByName(cap_near).unionByName(ph_near)
 

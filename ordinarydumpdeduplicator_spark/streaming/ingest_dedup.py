@@ -99,13 +99,12 @@ def stream_ingest_dedup(
     checkpoint_dir: str,
     n_shards: int = 32,
     bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
-    k_hashes: int = DEFAULT_K_HASHES,
     max_files_per_trigger: int | None = None,
 ):
     """Start the streaming ingest-dedup query over a parquet document
     stream (``doc_id``, ``text``). Returns the StreamingQuery; read the
     deduplicated corpus with ``load_new_docs(spark, state_dir)``."""
-    params = (n_shards, bits_per_shard, k_hashes)
+    params = (n_shards, bits_per_shard, DEFAULT_K_HASHES)
     check_bloom_params(*params)
     new_path = os.path.join(state_dir, "new")
     metrics_path = os.path.join(state_dir, "metrics")
@@ -154,7 +153,7 @@ def stream_ingest_dedup(
             if history is None:
                 history = s.createDataFrame([], "content_sha string")
             new = incremental_new_docs(
-                history, batch_first, "content_sha", *params, flags=flags
+                history, batch_first, "content_sha", flags=flags
             )
             new.write.mode("overwrite").parquet(
                 os.path.join(new_path, epoch)

@@ -382,7 +382,6 @@ def stream_media_novelty(
     prune_min_index_bytes: int = 64 << 20,
     n_shards: int = MEDIA_N_SHARDS,
     bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
-    k_hashes: int = DEFAULT_K_HASHES,
 ):
     """Start the streaming media-novelty query over a parquet payload
     stream (``id_col``, ``bytes``). ``fingerprint_fn`` maps the raw batch
@@ -400,7 +399,7 @@ def stream_media_novelty(
     (state_store.KeyIndex), so a state dir can be resumed under any
     threshold. Returns the StreamingQuery; read results with
     load_media_verdicts / load_reference_fps / load_media_metrics."""
-    params = (n_shards, bits_per_shard, k_hashes)
+    params = (n_shards, bits_per_shard, DEFAULT_K_HASHES)
     check_bloom_params(*params)
     fps_path = os.path.join(state_dir, "fps")
     verdicts_path = os.path.join(state_dir, "verdicts")

@@ -154,7 +154,6 @@ def stream_near_dup_clusters(
     prune_min_state_bytes: int = 64 << 20,
     n_shards: int = STATE_SHARDS,
     bits_per_shard: int = DEFAULT_BITS_PER_SHARD,
-    k_hashes: int = DEFAULT_K_HASHES,
 ):
     """Start the streaming near-dup clustering query.
 
@@ -169,7 +168,7 @@ def stream_near_dup_clusters(
     built at first engagement from the stores themselves and kept
     fresh every batch once it exists (state_store.KeyIndex).
 
-    The near-dup settings are the batch pipeline's defaults
+    The near-dup settings are the batch pipeline's
     (``lsh.DEFAULT_BUCKET_CAP``, ``verify.JACCARD_THRESHOLD``). A
     bloom geometry ``check_bloom_params`` rejects raises ValueError
     before the query starts.
@@ -178,7 +177,7 @@ def stream_near_dup_clusters(
     current assignments with ``load_assignments(spark, state_dir)`` —
     NOT the bare root path: pruning retains the latest prior snapshot as
     replay insurance, so two epochs coexist on disk."""
-    params = (n_shards, bits_per_shard, k_hashes)
+    params = (n_shards, bits_per_shard, DEFAULT_K_HASHES)
     check_bloom_params(*params)
     captions_path = os.path.join(state_dir, "captions")
     assign_path = os.path.join(state_dir, "assign")

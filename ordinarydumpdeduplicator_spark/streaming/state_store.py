@@ -597,7 +597,7 @@ class KeyIndex:
         if not self._engaged or self._snapshot is None:
             return None
         self._flags = _probe_flags(
-            probes, self._blooms(), key_col, *self._params, validate=False
+            probes, self._blooms(), key_col, *self._params
         )
         return self._flags
 

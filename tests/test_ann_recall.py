@@ -98,7 +98,7 @@ def true_jaccard_pairs(doc_rows):
 
 
 def test_near_dup_pairs_equal_exact_shingle_jaccard(docs, true_jaccard_pairs):
-    got = _pairs(near_dup_text_pairs(docs, jaccard_threshold=0.5).collect())
+    got = _pairs(near_dup_text_pairs(docs).collect())
     assert len(true_jaccard_pairs) > 0
     # LSH candidates + exact verify reproduce the exact definition:
     # every true pair found (recall 1.0), nothing extra (precision 1.0)

@@ -55,18 +55,18 @@ def corpus(spark):
     """
     xa, xb, xc = _tone("a"), _tone("b"), _tone("c")
     rng = np.random.default_rng(9)
-    base_a = encode_wav(xa, SR, 2)
+    base_a = encode_wav(xa, 2)
     near = xc[2 * SEG:] + rng.normal(0, 0.002, N - 2 * SEG)
     rows = [
         ("a00", base_a),
         ("a01", base_a),
-        ("a02", encode_wav(xb, SR, 2)),
-        ("a03", encode_wav(xb, SR, 4)),
-        ("a04", encode_wav(xc, SR, 2)),
-        ("a05", encode_wav(near, SR, 2)),
-        ("a06", encode_wav(_tone("d"), SR, 2)),
-        ("a07", encode_wav(_tone("e"), SR, 2)),
-        ("a08", encode_wav(xa, SR, 2)[:40]),
+        ("a02", encode_wav(xb, 2)),
+        ("a03", encode_wav(xb, 4)),
+        ("a04", encode_wav(xc, 2)),
+        ("a05", encode_wav(near, 2)),
+        ("a06", encode_wav(_tone("d"), 2)),
+        ("a07", encode_wav(_tone("e"), 2)),
+        ("a08", encode_wav(xa, 2)[:40]),
         ("a09", None),
         ("a10", b"fLaC-not-a-riff-payload" * 3),
     ]
@@ -75,7 +75,7 @@ def corpus(spark):
 
 @pytest.fixture(scope="module")
 def report(corpus):
-    r = audio_dedup_report(corpus, n_segments=8, min_match_frac=0.4)
+    r = audio_dedup_report(corpus, min_match_frac=0.4)
     return {k: v.toPandas() for k, v in r.items()}
 
 
@@ -202,8 +202,8 @@ def test_segment_novelty_audio(spark, corpus):
 
     ref = audio_fingerprints(corpus)
     batch_rows = [
-        ("b_reenc", encode_wav(_tone("a"), SR, 4)),   # a00 re-encoded
-        ("b_new", encode_wav(_tone("zz"), SR, 2)),
+        ("b_reenc", encode_wav(_tone("a"), 4)),   # a00 re-encoded
+        ("b_new", encode_wav(_tone("zz"), 2)),
     ]
     batch = audio_fingerprints(
         spark.createDataFrame(batch_rows, "audio_id string, bytes binary")

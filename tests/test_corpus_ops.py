@@ -9,9 +9,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from ordinarydumpdeduplicator_spark.operators.bloom_dedup import (
+    DEFAULT_K_HASHES,
     _positions,
     _probe_flags,
-    bloom_probe,
+    bloom_merge,
     bloom_shards,
     incremental_new_docs,
 )
@@ -172,8 +173,8 @@ def test_bloom_no_false_negatives(spark, keyed):
     hist, batch = keyed
     blooms = bloom_shards(hist.select("content_sha"), "content_sha",
                           n_shards=8, bits_per_shard=1 << 12)
-    flagged = bloom_probe(batch, blooms, "content_sha",
-                          n_shards=8, bits_per_shard=1 << 12)
+    flagged = _probe_flags(batch, blooms, "content_sha", 8, 1 << 12,
+                           DEFAULT_K_HASHES)
     hits = {r.content_sha for r in
             flagged.filter("might_contain").collect()}
     true_dups = {f"sha{i}" for i in range(60)}
@@ -210,38 +211,10 @@ def test_bloom_fpp_is_small(spark):
     )
     blooms = bloom_shards(spark_hist, "content_sha",
                           n_shards=8, bits_per_shard=1 << 12)  # ~16 bits/key
-    flagged = bloom_probe(probe_only, blooms, "content_sha",
-                          n_shards=8, bits_per_shard=1 << 12)
+    flagged = _probe_flags(probe_only, blooms, "content_sha", 8, 1 << 12,
+                           DEFAULT_K_HASHES)
     n_hits = flagged.filter("might_contain").count()
     assert n_hits < 200, f"fpp too high: {n_hits}/2000"
-
-
-def test_incremental_new_docs_with_persisted_blooms(spark, keyed, tmp_path):
-    hist, batch = keyed
-    path = str(tmp_path / "blooms")
-    bloom_shards(hist.select("content_sha"), "content_sha",
-                 n_shards=8, bits_per_shard=1 << 12).write.parquet(path)
-    blooms = spark.read.parquet(path)
-    got = incremental_new_docs(
-        hist, batch, "content_sha",
-        n_shards=8, bits_per_shard=1 << 12, blooms=blooms,
-    ).count()
-    assert got == 40
-
-
-def test_bloom_param_mismatch_raises(spark, keyed):
-    hist, batch = keyed
-    blooms = bloom_shards(hist.select("content_sha"), "content_sha",
-                          n_shards=8, bits_per_shard=1 << 12)
-    with pytest.raises(ValueError, match="mismatch"):
-        incremental_new_docs(
-            hist, batch, "content_sha",
-            n_shards=32, bits_per_shard=1 << 12, blooms=blooms,
-        ).count()
-    # a blooms frame without parameter columns is rejected outright
-    with pytest.raises(ValueError, match="parameter columns"):
-        bloom_probe(batch, blooms.select("shard", "bits"), "content_sha",
-                    n_shards=8, bits_per_shard=1 << 12)
 
 
 def test_bloom_invalid_params_raise(spark, keyed):
@@ -261,7 +234,7 @@ def test_sql_bloom_matches_hashlib_reference(spark, params):
     k positions, the build's word rows and the probe's might_contain
     equal a hashlib reference, over random keys, a non-ASCII key, the
     empty string and a NULL key (which sets no bit and probes as a
-    miss). The probed snapshot is two unmerged builds that share
+    miss). The probed snapshot is the merge of two builds that share
     (shard, word) rows, which must test as their union."""
     import random
 
@@ -291,7 +264,7 @@ def test_sql_bloom_matches_hashlib_reference(spark, params):
     if params == (8, 1 << 12, 7):
         shared = {(r.shard, r.word) for r in a.collect()} & {
             (r.shard, r.word) for r in b.collect()}
-        assert shared  # the union below holds two rows for these words
+        assert shared  # the merge below ORs two rows for these words
     words = reference_words(history, params)
 
     def ref_contains(key):
@@ -302,7 +275,7 @@ def test_sql_bloom_matches_hashlib_reference(spark, params):
                    for p in positions)
 
     flags = {r.k: r.might_contain for r in _probe_flags(
-        everything, a.unionByName(b), "k", *params).collect()}
+        everything, bloom_merge(a, b), "k", *params).collect()}
     assert flags == {k: ref_contains(k) for k in keys + [None]}
     assert all(flags[k] for k in history)
 
@@ -331,10 +304,6 @@ def test_pack_sequences_null_text(spark):
 def test_bloom_merge_is_union(spark):
     """OR-merged delta index answers membership exactly like a from-
     scratch build over the union of keys (bloom union == bitwise OR)."""
-    from ordinarydumpdeduplicator_spark.operators.bloom_dedup import (
-        bloom_merge,
-    )
-
     a = spark.createDataFrame([(f"a{i}",) for i in range(300)], "k string")
     b = spark.createDataFrame([(f"b{i}",) for i in range(300)], "k string")
     both = a.unionByName(b)

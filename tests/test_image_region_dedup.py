@@ -46,7 +46,7 @@ def corpus(spark):
 
 @pytest.fixture(scope="module")
 def report(corpus):
-    r = image_region_dedup_report(corpus, grid=4)
+    r = image_region_dedup_report(corpus)
     return {k: v.toPandas() for k, v in r.items()}
 
 
@@ -58,7 +58,7 @@ def test_tile_phashes_bit_exact_vs_crop():
     """Each tile's hash from the shared integral image is bit-identical
     to phash64 of that tile's crop."""
     pixels = _make_pixels(_rng(42, "tilecheck"), 64, 48)
-    got = tile_phashes(pixels, grid=4)
+    got = tile_phashes(pixels)
     ylo, yhi = _bin_edges(48, 4)
     xlo, xhi = _bin_edges(64, 4)
     for ty in range(4):
@@ -181,7 +181,7 @@ def test_empty_input(spark):
 def test_precomputed_fingerprints_reuse(corpus):
     """Production shape: a materialized fingerprint frame skips the
     decode pass and yields identical clusters."""
-    fps = image_region_fingerprints(corpus, grid=4)
+    fps = image_region_fingerprints(corpus)
     r = image_region_dedup_report(corpus.limit(0), fingerprints=fps)
     cl = {x.image_id: x.cluster_id for x in r["clusters"].collect()}
     assert cl["r000000000"] == cl["r000000001"]

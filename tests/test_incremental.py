@@ -114,7 +114,7 @@ def test_incremental_caption_run_equals_batch(spark, tiny_corpus):
 
     # batch reference: caption family only (exact star + verified near)
     feats_all = extract_features(full_images).cache()
-    pairs, star = caption_candidates(feats_all, bucket_cap=256)
+    pairs, star = caption_candidates(feats_all)
     near = verify_caption_pairs(pairs, full_images)
     ref = connected_components(
         star.select("src", "dst").unionByName(near.select("src", "dst"))

@@ -59,7 +59,7 @@ def test_line_dedup_short_lines_never_dropped(spark):
         [(1, "Yes.\nbody one"), (2, "Yes.\nbody two")],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in line_dedup(df, min_line_chars=10).collect()}
+    out = {r["doc_id"]: r for r in line_dedup(df).collect()}
     assert out[1]["clean_text"] == "Yes.\nbody one"  # < 10 chars: kept
     assert out[1]["n_dropped"] == 0
 

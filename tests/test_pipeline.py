@@ -341,10 +341,6 @@ def test_combined_candidates_match_per_family(spark, small_images):
     [
         ("phash_band_mode", "c4x16"),
         ("bucket_cap", 1),
-        ("hamming_threshold", -1),
-        ("hamming_threshold", 65),
-        ("jaccard_threshold", -0.1),
-        ("jaccard_threshold", 1.5),
     ],
 )
 def test_bad_config_raises_before_any_stage(spark, tiny_images, tmp_path, field, bad):

@@ -144,26 +144,35 @@ def test_bloom_dedup_history_join_only_on_hits(spark, queries):
     assert not [n for n in PYTHON_NODES if n in phys], phys
 
 
-def test_bloom_probe_runs_no_python(spark):
+def test_bloom_probe_runs_no_python(spark, tmp_path):
     """The bloom's build, merge and probe are built-in SQL: no plan
-    node of any of them runs a Python worker, and the probe joins the
-    key positions to the snapshot's word rows on (shard, word)."""
+    node of any of them runs a Python worker. The probe joins the key
+    positions straight to a persisted snapshot's word rows on (shard,
+    word): no aggregate sits between the snapshot scan and the join
+    (every snapshot holds one row per (shard, word) already)."""
     from ordinarydumpdeduplicator_spark.operators.bloom_dedup import (
+        DEFAULT_K_HASHES,
+        _probe_flags,
         bloom_merge,
-        bloom_probe,
         bloom_shards,
     )
 
     keys = spark.createDataFrame([("k1",), ("k2",)], "content_sha string")
-    blooms = bloom_shards(keys, "content_sha", n_shards=4,
-                          bits_per_shard=1 << 12)
+    geometry = (4, 1 << 12, DEFAULT_K_HASHES)
+    blooms = bloom_shards(keys, "content_sha", *geometry)
+    path = str(tmp_path / "blooms")
+    blooms.write.parquet(path)
     probe = plan_of(
-        bloom_probe(keys, blooms, "content_sha", n_shards=4,
-                    bits_per_shard=1 << 12)
+        _probe_flags(keys, spark.read.parquet(path), "content_sha", *geometry)
     )
     assert re.search(r"Left keys \[2\]: \[shard#\d+, word#\d+\]\n"
                      r"Right keys \[2\]: \[shard#\d+, word#\d+\]\n"
                      r"Join type: LeftOuter", probe), probe
+    assert "Scan parquet" in probe, probe
+    assert "bit_or" not in probe, probe
+    # an aggregate keyed on (shard, word) would be the snapshot's OR
+    assert not re.search(r"\nKeys \[2\]: \[shard#\d+, word#\d+\]",
+                         probe), probe
     for plan in (probe, plan_of(bloom_merge(blooms, blooms))):
         assert not [n for n in PYTHON_NODES if n in plan], plan
 

@@ -55,7 +55,7 @@ def test_stream_near_dup_matches_batch(spark, tiny_corpus, tmp_path):
 
     full_images = to_spark_images(spark, pdf)
     feats = extract_features(full_images).cache()
-    pairs, star = caption_candidates(feats, bucket_cap=256)
+    pairs, star = caption_candidates(feats)
     near = verify_caption_pairs(pairs, full_images)
     ref = connected_components(
         star.select("src", "dst").unionByName(near.select("src", "dst"))
@@ -108,7 +108,7 @@ def test_replayed_epoch_overwrites_partial_state(spark, tiny_corpus, tmp_path):
     # and the final assignment equals the batch-pipeline reference
     full_images = to_spark_images(spark, pdf)
     feats = extract_features(full_images).cache()
-    pairs, star = caption_candidates(feats, bucket_cap=256)
+    pairs, star = caption_candidates(feats)
     near = verify_caption_pairs(pairs, full_images)
     ref = connected_components(
         star.select("src", "dst").unionByName(near.select("src", "dst"))
@@ -151,7 +151,7 @@ def test_replay_after_prune_keeps_prior_assignments(spark, tiny_corpus, tmp_path
 
     full_images = to_spark_images(spark, pdf)
     feats = extract_features(full_images).cache()
-    pairs, star = caption_candidates(feats, bucket_cap=256)
+    pairs, star = caption_candidates(feats)
     near = verify_caption_pairs(pairs, full_images)
     ref = connected_components(
         star.select("src", "dst").unionByName(near.select("src", "dst"))

@@ -23,6 +23,9 @@ from ordinarydumpdeduplicator_spark.fixtures.generator import (
     _make_pixels,
     _rng,
 )
+from ordinarydumpdeduplicator_spark.operators.bloom_dedup import (
+    DEFAULT_K_HASHES,
+)
 from ordinarydumpdeduplicator_spark.operators.video_dedup import (
     VIDEO_FP_SCHEMA,
     video_fingerprints,
@@ -451,8 +454,8 @@ def test_bloom_snapshot_covers_every_stored_key(spark, tiny_corpus, tmp_path,
             for w in range(4)
         ]
         prunes = [{}] * 4
-    params = (32, 1 << 14, 7)
-    geometry = dict(zip(("n_shards", "bits_per_shard", "k_hashes"), params))
+    params = (32, 1 << 14, DEFAULT_K_HASHES)
+    geometry = dict(n_shards=params[0], bits_per_shard=params[1])
     inp = str(tmp_path / "in")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -471,7 +474,8 @@ def test_bloom_snapshot_covers_every_stored_key(spark, tiny_corpus, tmp_path,
 def _snapshot_words(spark, state, module, params) -> tuple[bool, bool]:
     """(the latest bloom snapshot is in word rows, its words equal the
     hashlib reference's over the declared keys of every committed epoch
-    of the stream's key stores)."""
+    of the stream's key stores, in one row per (shard, word) — the
+    probe joins the snapshot's rows without OR-ing them first)."""
     keys = [
         r.key
         for st in module.KEY_STORES
@@ -482,8 +486,9 @@ def _snapshot_words(spark, state, module, params) -> tuple[bool, bool]:
     snapshot = spark.read.parquet(latest_epoch(os.path.join(state, "blooms")))
     if "word" not in snapshot.columns:
         return False, False
-    got = {(r.shard, r.word): r.bits for r in snapshot.collect()}
-    return True, got == reference_words(keys, params)
+    rows = snapshot.collect()
+    got = {(r.shard, r.word): r.bits for r in rows}
+    return True, len(rows) == len(got) and got == reference_words(keys, params)
 
 
 def _epoch_rows(state: str, skip: str) -> dict:
@@ -525,12 +530,13 @@ def test_parent_format_snapshot_is_rebuilt(spark, tiny_corpus, tmp_path,
             for w in range(3)
         ]
         prune = {}
-    params = (32, 1 << 14, 7)
-    geometry = dict(zip(("n_shards", "bits_per_shard", "k_hashes"), params))
+    params = (32, 1 << 14, DEFAULT_K_HASHES)
+    geometry = dict(n_shards=params[0], bits_per_shard=params[1])
     old_layout = pa.table({
         "shard": pa.array(range(32), pa.int32()),
         "bits": [bytes(params[1] // 8)] * 32,
-        **{c: pa.array([v] * 32, pa.int32()) for c, v in geometry.items()},
+        **{c: pa.array([v] * 32, pa.int32()) for c, v in
+           zip(("n_shards", "bits_per_shard", "k_hashes"), params)},
     })
     runs = {}
     for mode in ("old_layout", "lost"):

@@ -385,8 +385,7 @@ def test_embedding_band_sizing_enforced(spark):
     with _warnings.catch_warnings(record=True) as caught:
         _warnings.simplefilter("always")
         tiers = embedding_dedup_tiers(
-            df, dim=16, threshold=0.95, bands=16, n_planes=64,
-            bucket_cap=256,
+            df, dim=16, threshold=0.95, bands=16, bucket_cap=256,
         )
         got = {
             r.vec_id: (r.tier, r.keeper_id)

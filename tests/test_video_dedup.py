@@ -74,7 +74,7 @@ def corpus(spark):
 
 @pytest.fixture(scope="module")
 def report(corpus):
-    r = video_dedup_report(corpus, n_frames=8)
+    r = video_dedup_report(corpus)
     return {k: v.toPandas() for k, v in r.items()}
 
 
@@ -163,7 +163,7 @@ def test_band_pigeonhole_recall(spark):
     fps = spark.createDataFrame(
         rows, "video_id string, frame_hashes array<long>"
     )
-    banded = frame_band_rows(fps, bands=4).toPandas()
+    banded = frame_band_rows(fps).toPandas()
     keys = {}
     for r in banded.itertuples():
         keys.setdefault(r.video_id, set()).add((r.band, r.key))
@@ -189,7 +189,7 @@ def test_empty_input(spark):
 def test_precomputed_fingerprints_reuse(corpus):
     """Production shape: a materialized fingerprint frame skips the
     decode pass and yields identical clusters."""
-    fps = video_fingerprints(corpus, n_frames=8)
+    fps = video_fingerprints(corpus)
     r = video_dedup_report(corpus.limit(0), fingerprints=fps)
     cl = {x.video_id: x.cluster_id for x in r["clusters"].collect()}
     assert cl["v00"] == cl["v01"] and cl["v04"] == cl["v05"]
@@ -227,7 +227,7 @@ def test_frames_matching_images(spark, corpus):
         ("img_unrelated", int(phash64(_make_pixels(_rng(7, "other"), W, H)))),
     ]
     images = spark.createDataFrame(img_rows, "image_id string, phash long")
-    fps = video_fingerprints(corpus, n_frames=8)
+    fps = video_fingerprints(corpus)
     m = frames_matching_images(fps, images, max_hamming=3).toPandas()
     got = {(r.video_id, r.frame_pos, r.image_id): r.hamming
            for r in m.itertuples()}
@@ -252,7 +252,7 @@ def test_frames_matching_images_plan_has_no_python(spark, corpus):
     images = spark.createDataFrame(
         [("i", 1)], "image_id string, phash long"
     )
-    fps = video_fingerprints(corpus, n_frames=8).localCheckpoint(eager=False)
+    fps = video_fingerprints(corpus).localCheckpoint(eager=False)
     df = frames_matching_images(fps, images)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -266,7 +266,7 @@ def test_segment_novelty_video(spark, corpus):
         segment_novelty,
     )
 
-    ref = video_fingerprints(corpus, n_frames=8)
+    ref = video_fingerprints(corpus)
     batch_rows = [
         ("b_remux", codecs.encode_avi_rgb(_frames("a"), fps=30)),
         ("b_near", codecs.encode_avi_rgb(_noise(_frames("d"), "d")[1:], fps=10)),
@@ -274,8 +274,7 @@ def test_segment_novelty_video(spark, corpus):
         ("b_broken", None),
     ]
     batch = video_fingerprints(
-        spark.createDataFrame(batch_rows, "video_id string, bytes binary"),
-        n_frames=8,
+        spark.createDataFrame(batch_rows, "video_id string, bytes binary")
     )
     out = {r.video_id: r for r in segment_novelty(batch, ref).collect()}
     assert not out["b_remux"].is_novel
